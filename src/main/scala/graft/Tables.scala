@@ -27,6 +27,10 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType}
   * reader sharing the session inherits them, exactly like the UTC
   * session-tz requirement above. A co-hosted reader that needs NTZ
   * inference or rejects nano parquet must use its own SparkSession.
+  *
+  * Those two pins are the only session state a read touches: the native
+  * kernels are typed Columns that need no function registry, and their SQL
+  * names are registered by [[GraftCatalog.registerAll]], not here.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -34,7 +38,6 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    graft.functions.NativeFunctions.ensureRegistered(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Read naive (isAdjustedToUTC=false) µs timestamps directly as
     // session-zone TIMESTAMP instead of TIMESTAMP_NTZ: with UTC pinned the

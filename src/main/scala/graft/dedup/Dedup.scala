@@ -250,9 +250,6 @@ object Dedup {
   def jaccardPairsPrefix(df: DataFrame, id: Column, text: Column,
       minJaccard: Double, blockCols: Seq[Column] = Seq.empty): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // verify uses call_function("sorted_isect_count", …) — keep direct
-    // library use independent of Tables (r21 ADVICE #2 pattern)
-    graft.functions.NativeFunctions.ensureRegistered(df.sparkSession)
     val block = if (blockCols.isEmpty) Seq(lit(1).as("__b")) else
       blockCols.zipWithIndex.map { case (c, i) => c.as(s"__b$i") }
     val toks = graft.Caches.track(
@@ -345,7 +342,7 @@ object Dedup {
       .join(arrays.select(col("doc_id").as("da"), col("__ta").as("ta")), "da")
       .join(arrays.select(col("doc_id").as("db"), col("__ta").as("tb")), "db")
       .select(col("da"), col("db"),
-        call_function("sorted_isect_count", col("ta"), col("tb")).as("i"),
+        TextFunctions.sortedIntersectCount(col("ta"), col("tb")).as("i"),
         size(col("ta")).as("sa"), size(col("tb")).as("sb"))
       .withColumn("jaccard",
         col("i").cast("double") / (col("sa") + col("sb") - col("i")))
@@ -388,7 +385,6 @@ object Dedup {
     */
   def containmentPairsPrefix(df: DataFrame, id: Column, text: Column,
       minContainment: Double, blockCols: Seq[Column] = Seq.empty): DataFrame = {
-    graft.functions.NativeFunctions.ensureRegistered(df.sparkSession)
     val block = if (blockCols.isEmpty) Seq(lit(1).as("__b")) else
       blockCols.zipWithIndex.map { case (c, i) => c.as(s"__b$i") }
     val toks = graft.Caches.track(
@@ -473,7 +469,7 @@ object Dedup {
       .join(arrays.select(col("doc_id").as("da"), col("__ta").as("ta")), "da")
       .join(arrays.select(col("doc_id").as("db"), col("__ta").as("tb")), "db")
       .select(col("da"), col("db"),
-        call_function("sorted_isect_count", col("ta"), col("tb"))
+        TextFunctions.sortedIntersectCount(col("ta"), col("tb"))
           .cast("long").as("i"),
         size(col("ta")).cast("long").as("sa"),
         size(col("tb")).cast("long").as("sb"))
@@ -685,9 +681,6 @@ object Dedup {
       newBands: DataFrame, allBands: DataFrame, allSigs: DataFrame,
       numHashes: Int, minEstJaccard: Double,
       broadcastBatch: Option[Boolean] = None): DataFrame = {
-    // estimateJaccard below builds a call_function("vec_agree", …) — make
-    // direct library use independent of Tables (r21 ADVICE #2 pattern)
-    graft.functions.NativeFunctions.ensureRegistered(newBands.sparkSession)
     val bcast = broadcastBatch.getOrElse {
       val maxBytes = newBands.sparkSession.conf
         .get("graft.dedup.broadcastBatchMaxBytes", (256L << 20).toString).toLong

@@ -2,8 +2,9 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 
-import graft.functions.TextFunctions
+import graft.functions.{LongVecAgree, MinHashFromHashes, MinHashSignature, TextFunctions}
 
 /** MinHash + LSH near-duplicate detection (SURVEY.md D2): the standard
   * shingle → minhash → band → bucket-join pipeline (Broder resemblance),
@@ -36,8 +37,8 @@ object MinHashDedup {
     * then elementwise-min folded. Docs with no shingles get P sentinels.
     */
   def signature(text: Column, numHashes: Int = 64, shingleWidth: Int = 3): Column =
-    call_function("minhash_sig",
-      array_distinct(TextFunctions.shingles(text, shingleWidth)), lit(numHashes))
+    GraftShim.column(MinHashSignature(GraftShim.expression(
+      array_distinct(TextFunctions.shingles(text, shingleWidth))), numHashes))
 
   /** Reference composition of [[signature]] in pure higher-order functions. */
   def signatureRef(text: Column, numHashes: Int = 64, shingleWidth: Int = 3): Column = {
@@ -72,9 +73,9 @@ object MinHashDedup {
     * [[graft.functions.MinHashFromHashes]] kernel over pre-folded hashes.
     */
   def signatureMd5(text: Column, numHashes: Int = 64, shingleWidth: Int = 3): Column =
-    call_function("minhash_sig_h",
-      transform(array_distinct(TextFunctions.shingles(text, shingleWidth)), md5Fold(_)),
-      lit(numHashes))
+    GraftShim.column(MinHashFromHashes(GraftShim.expression(
+      transform(array_distinct(TextFunctions.shingles(text, shingleWidth)), md5Fold(_))),
+      numHashes))
 
   /** Estimated Jaccard from two signatures = fraction of agreeing positions.
     * Hot path is the native [[graft.functions.LongVecAgree]] kernel (r22):
@@ -86,7 +87,8 @@ object MinHashDedup {
     * whole minhash family (d2_minhash_*, d3/d10 LSH, i3/d13 incremental).
     */
   def estimateJaccard(sa: Column, sb: Column, numHashes: Int = 64): Column =
-    call_function("vec_agree", sa, sb).cast("double") / numHashes
+    GraftShim.column(LongVecAgree(GraftShim.expression(sa), GraftShim.expression(sb)))
+      .cast("double") / numHashes
 
   /** (doc_id, sig) signatures, cached — computed once, reused by both the
     * band bucketing and the per-pair estimate join.
@@ -94,10 +96,6 @@ object MinHashDedup {
   def signatures(
       df: DataFrame, id: Column, text: Column,
       numHashes: Int = 64, shingleWidth: Int = 3): DataFrame = {
-    // defensive (r21 ADVICE #2 pattern): signature()/estimateJaccard build
-    // call_function expressions — direct library use on a session that
-    // never touched Tables must not fail analysis
-    graft.functions.NativeFunctions.ensureRegistered(df.sparkSession)
     df.select(id.as("doc_id"), signature(text, numHashes, shingleWidth).as("sig"))
   }
 
@@ -148,7 +146,6 @@ object MinHashDedup {
   private def candidatePairsFrom(
       sigs: DataFrame, numHashes: Int, bands: Int, minEstJaccard: Double,
       bandKey: (Column, Column) => Column = (j, sl) => xxhash64(j, sl)): DataFrame = {
-    graft.functions.NativeFunctions.ensureRegistered(sigs.sparkSession)
     val bd = banded(sigs, numHashes, bands, bandKey)
     val pairs = bd
       .join(bd.select(col("band").as("band_b"), col("band_hash").as("band_hash_b"),

@@ -2,8 +2,9 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 
-import graft.functions.TextFunctions
+import graft.functions.{SimHash64, SimHashFromHashes, TextFunctions}
 
 /** SimHash near-duplicate fingerprinting (Charikar's rounding scheme as used
   * for web-scale dedup): 64-bit signature where bit j is the sign of the sum
@@ -26,7 +27,7 @@ object SimHashDedup {
     * executable spec (bit-equality asserted in DedupSpec).
     */
   def simhash(text: Column): Column =
-    call_function("simhash64", TextFunctions.tokens(text))
+    GraftShim.column(SimHash64(GraftShim.expression(TextFunctions.tokens(text))))
 
   /** Reference higher-order-function composition of [[simhash]] — 64 nested
     * interpreted folds; correct but ~17× slower, kept only as the spec.
@@ -56,9 +57,9 @@ object SimHashDedup {
     * [[graft.functions.SimHash64]] counting kernel.
     */
   def simhashMd5(text: Column): Column =
-    call_function("simhash_h",
+    GraftShim.column(SimHashFromHashes(GraftShim.expression(
       transform(TextFunctions.tokens(text),
-        t => conv(substring(md5(t), 1, 15), 16, 10).cast("long")))
+        t => conv(substring(md5(t), 1, 15), 16, 10).cast("long")))))
 
   /** Hamming distance between two 64-bit signatures. */
   def hamming(a: Column, b: Column): Column =

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -18,47 +19,30 @@ import org.apache.spark.unsafe.types.UTF8String
   * with `element_at(g, i)` — group i at array position i, 1-based, exactly
   * regexp_extract's numbering.
   *
-  * The pattern must be a literal (compiled once per expression instance,
-  * like Spark's own RegExpExtract when the pattern is foldable).
+  * The pattern is a constructor parameter, compiled once per expression
+  * instance (like Spark's own RegExpExtract when the pattern is foldable).
   * CodegenFallback, like [[CharEntropySum]]: the regex engine dominates the
   * row cost; what matters is running it once, not inlining the call.
   *
   * NULL contract: null line → null array (standard null propagation), same
   * as regexp_extract's null → null.
   */
-case class RegexpGroups(subject: Expression, regexp: Expression)
-    extends BinaryExpression with CodegenFallback {
-
-  override def left: Expression = subject
-  override def right: Expression = regexp
+case class RegexpGroups(child: Expression, pattern: String)
+    extends UnaryExpression with CodegenFallback {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "regexp_groups"
 
-  // enforce the documented literal-pattern contract at analysis time (r21
-  // ADVICE #3, mirroring Spark's RegExpExtractBase): a non-foldable or null
-  // regexp would otherwise NPE (or compile nonsense) at first row evaluation
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (subject.dataType != StringType || regexp.dataType != StringType) {
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires string operands, got " +
-          s"${subject.dataType.simpleString} and ${regexp.dataType.simpleString}")
-    } else if (!regexp.foldable || regexp.eval() == null) {
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a non-null literal pattern " +
-          "(it is compiled once per expression instance)")
-    } else {
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    }
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires a string operand, got ${child.dataType.simpleString}")
 
-  @transient private lazy val pattern: java.util.regex.Pattern =
-    java.util.regex.Pattern.compile(
-      regexp.eval(null).asInstanceOf[UTF8String].toString)
+  @transient private lazy val compiled: java.util.regex.Pattern =
+    java.util.regex.Pattern.compile(pattern)
 
-  override def nullSafeEval(s: Any, r: Any): Any = {
-    val m = pattern.matcher(s.asInstanceOf[UTF8String].toString)
+  override def nullSafeEval(s: Any): Any = {
+    val m = compiled.matcher(s.asInstanceOf[UTF8String].toString)
     val n = m.groupCount()
     val out = new Array[Any](n)
     if (m.find()) {
@@ -75,7 +59,6 @@ case class RegexpGroups(subject: Expression, regexp: Expression)
     new GenericArrayData(out)
   }
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(subject = newLeft, regexp = newRight)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 
 /** Text-analysis primitives (SURVEY.md §2.9 + the LLM-pipeline extensions).
   *
@@ -30,7 +31,7 @@ object TextFunctions {
     * as the executable spec (equality asserted in TextFunctionsSpec).
     */
   def shingles(text: Column, n: Int): Column =
-    call_function("word_ngrams", tokens(text), lit(n))
+    GraftShim.column(WordNGrams(GraftShim.expression(tokens(text)), n))
 
   /** Reference higher-order-function composition of [[shingles]]. */
   def shinglesRef(text: Column, n: Int): Column = {
@@ -40,6 +41,21 @@ object TextFunctions {
         i => concat_ws(" ", (0 until n).map(k => element_at(t, i + k)): _*)))
       .otherwise(array().cast("array<string>"))
   }
+
+  /** |A∩B| of two SORTED, duplicate-free array<string> columns — the
+    * allocation-free merge kernel [[SortedStringIntersectCount]]; equals
+    * `size(array_intersect(a, b))` on such inputs (callers own the
+    * `sort_array(array_distinct(...))`).
+    */
+  def sortedIntersectCount(a: Column, b: Column): Column =
+    GraftShim.column(SortedStringIntersectCount(
+      GraftShim.expression(a), GraftShim.expression(b)))
+
+  /** Per-row `struct<n_chars, s_micro>` character-entropy terms — the
+    * [[CharEntropySum]] kernel behind x16 (null text → null struct).
+    */
+  def charEntropySum(text: Column): Column =
+    GraftShim.column(CharEntropySum(GraftShim.expression(text)))
 
   /** Cached (doc_id, term) postings frame: tokenize + explode the corpus
     * ONCE and reuse it across tf/dl/df aggregations. Callers previously

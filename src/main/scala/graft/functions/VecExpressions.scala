@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -194,7 +193,12 @@ case class DoubleVecL2Sq(left: Expression, right: Expression)
   * the zip_with-padded max-length (pad → null → 0), which equals the count
   * of equal positions below min(len) — exactly this loop. Integer count;
   * the caller's `/ numHashes` division is unchanged. Null array → null,
-  * like the fold (zip_with(null,·) → null → aggregate → null).
+  * like the fold (zip_with(null,·) → null → aggregate → null). A null
+  * ELEMENT never counts as agreement, on either side and even against
+  * another null — the fold's `x === y` is null there and lands in
+  * `otherwise(0)`. The generated loop checks `isNullAt` only for an input
+  * whose `ArrayType.containsNull` is true, so minhash signatures
+  * (`containsNull = false`) keep the guard-free loop.
   */
 case class LongVecAgree(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -225,22 +229,28 @@ case class LongVecAgree(left: Expression, right: Expression)
     var acc = 0
     var i = 0
     while (i < n) {
-      if (x.getLong(i) == y.getLong(i)) acc += 1
+      if (!x.isNullAt(i) && !y.isNullAt(i) && x.getLong(i) == y.getLong(i)) acc += 1
       i += 1
     }
     acc
   }
+
+  private def containsNull(e: Expression): Boolean =
+    e.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType].containsNull
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val acc = ctx.freshName("acc")
+      val guard = Seq(a -> left, b -> right).collect {
+        case (v, e) if containsNull(e) => s"!$v.isNullAt($i) && "
+      }.mkString
       s"""
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |int $acc = 0;
          |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.getLong($i) == $b.getLong($i)) $acc++;
+         |  if ($guard$a.getLong($i) == $b.getLong($i)) $acc++;
          |}
          |${ev.value} = $acc;
        """.stripMargin
@@ -460,62 +470,37 @@ case class SortedStringIntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration for the native expressions (Spark 4's public Column
-  * API has no Expression constructor, so they are exposed through the
-  * function registry and invoked with `call_function`).
+/** SQL names of the graft kernels — the `spark.sql` surface only, registered
+  * by [[graft.GraftCatalog.registerAll]]. The DataFrame API builds each
+  * kernel as a typed Column (`GraftShim.column`, see the wrappers in
+  * VectorFunctions, TextFunctions, MinHashDedup, SimHashDedup, IrcParser)
+  * and never looks a name up. A kernel's literal parameter (hash count,
+  * n-gram width, regex pattern, projection matrix) arrives here as a
+  * foldable SQL argument and is evaluated once, at resolution.
   */
 object NativeFunctions {
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "float_vec_dot", exprs => FloatVecDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "float_vec_l2sq", exprs => FloatVecL2Sq(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSignature(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction(
-      "word_ngrams", exprs => WordNGrams(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_sig_h", exprs => MinHashFromHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash_h", exprs => SimHashFromHashes(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "char_entropy_sum", exprs => CharEntropySum(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "double_vec_dot", exprs => DoubleVecDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "vec_l2sq", exprs => DoubleVecL2Sq(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "vec_agree", exprs => LongVecAgree(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sorted_isect_count",
-      exprs => SortedStringIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "regexp_groups", exprs => RegexpGroups(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "float_vec_project", exprs => FloatVecProject(exprs(0), {
-        // the matrix argument must be a literal (it becomes part of the
-        // generated class); evaluated once at resolution
-        val rows = exprs(1).eval().asInstanceOf[ArrayData]
-        (0 until rows.numElements()).map(r =>
-          rows.getArray(r).toDoubleArray().toSeq): Seq[Seq[Double]]
-      }), "built-in")
-    // Spark ships BloomFilterAggregate/BloomFilterMightContain for its
-    // runtime row-level filtering but does NOT expose them in the public
-    // registry — surface them for the BloomPrune operator.
-    reg.createOrReplaceTempFunction(
-      "bloom_filter_agg", exprs =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2)).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction(
-      "might_contain", exprs =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1)), "built-in")
+  private def const[T](e: Expression): T = {
+    val v = if (e.foldable) e.eval() else null
+    require(v != null, s"expected a non-null literal argument, got ${e.sql}")
+    v.asInstanceOf[T]
   }
+
+  val sql: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "float_vec_dot" -> (a => FloatVecDot(a(0), a(1))),
+    "float_vec_l2sq" -> (a => FloatVecL2Sq(a(0), a(1))),
+    "double_vec_dot" -> (a => DoubleVecDot(a(0), a(1))),
+    "vec_l2sq" -> (a => DoubleVecL2Sq(a(0), a(1))),
+    "vec_agree" -> (a => LongVecAgree(a(0), a(1))),
+    "sorted_isect_count" -> (a => SortedStringIntersectCount(a(0), a(1))),
+    "minhash_sig" -> (a => MinHashSignature(a(0), const[Int](a(1)))),
+    "minhash_sig_h" -> (a => MinHashFromHashes(a(0), const[Int](a(1)))),
+    "word_ngrams" -> (a => WordNGrams(a(0), const[Int](a(1)))),
+    "simhash64" -> (a => SimHash64(a(0))),
+    "simhash_h" -> (a => SimHashFromHashes(a(0))),
+    "char_entropy_sum" -> (a => CharEntropySum(a(0))),
+    "regexp_groups" -> (a => RegexpGroups(a(0), const[Any](a(1)).toString)),
+    "float_vec_project" -> (a => FloatVecProject(a(0), {
+      val rows = const[ArrayData](a(1))
+      (0 until rows.numElements()).map(r => rows.getArray(r).toDoubleArray().toSeq)
+    })))
 }

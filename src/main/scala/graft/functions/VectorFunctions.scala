@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 
 /** Vector similarity over `array<float>` embedding columns (SURVEY.md §2.10).
   *
@@ -36,13 +37,24 @@ object VectorFunctions {
     * pairwise loops; `dot` remains the reference composition.
     */
   def dotNative(a: Column, b: Column): Column =
-    call_function("float_vec_dot", a, b)
+    GraftShim.column(FloatVecDot(GraftShim.expression(a), GraftShim.expression(b)))
 
   def cosineNative(a: Column, b: Column): Column =
     dotNative(a, b) / (sqrt(dotNative(a, a)) * sqrt(dotNative(b, b)))
 
   def l2Native(a: Column, b: Column): Column =
-    sqrt(call_function("float_vec_l2sq", a, b))
+    sqrt(GraftShim.column(FloatVecL2Sq(GraftShim.expression(a), GraftShim.expression(b))))
+
+  /** Squared L2 between two array<double|float> columns — the native
+    * [[graft.functions.DoubleVecL2Sq]] kernel behind centroid assignment
+    * (Ann, Pq, the v8/v11 oracle queries). Bit-identical to the interpreted
+    * `aggregate(zip_with(c, x, (c, x) => (x.cast("double") - c)²))` fold
+    * (i-ascending widen-then-double-subtract; d² = (−d)², so operand order
+    * is bit-free), but one loop per row instead of one Catalyst lambda per
+    * element — assignment evaluates k of these per row.
+    */
+  def l2sqNative(a: Column, b: Column): Column =
+    GraftShim.column(DoubleVecL2Sq(GraftShim.expression(a), GraftShim.expression(b)))
 
   /** Codegen'd literal-matrix projection ([[graft.functions.FloatVecProject]]):
     * array<float> → array<double> of length matrix.length, bit-identical to
@@ -50,7 +62,7 @@ object VectorFunctions {
     * (double)x(i) · m(j)(i) accumulation).
     */
   def projectNative(v: Column, matrix: Seq[Seq[Double]]): Column =
-    call_function("float_vec_project", v, typedlit(matrix))
+    GraftShim.column(FloatVecProject(GraftShim.expression(v), matrix))
 
   /** Codegen'd double-array dot ([[graft.functions.DoubleVecDot]]) —
     * bit-identical to `aggregate(zip_with(a, b, _*_), 0.0, _+_)` for
@@ -58,7 +70,7 @@ object VectorFunctions {
     * Expression scaladoc) where the HOF fold would yield NULL.
     */
   def dotNativeD(a: Column, b: Column): Column =
-    call_function("double_vec_dot", a, b)
+    GraftShim.column(DoubleVecDot(GraftShim.expression(a), GraftShim.expression(b)))
 
   /** Euclidean distance, same deterministic fold shape. */
   def l2(a: Column, b: Column): Column =

@@ -2,8 +2,9 @@ package graft.ingest
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 
-import graft.functions.HashFunctions
+import graft.functions.{HashFunctions, RegexpGroups}
 
 /** The reference's parse→normalize→key→dedup chain as one declarative Spark
   * pipeline (SURVEY.md §2.1-§2.6; /root/reference/irclogbot.py:122-142).
@@ -49,7 +50,7 @@ object IrcParser {
     * `element_at(_, i)` — same 1-based numbering as regexp_extract.
     */
   def extractGroups(line: Column): Column =
-    call_function("regexp_groups", line, lit(MsgPattern))
+    GraftShim.column(RegexpGroups(GraftShim.expression(line), MsgPattern))
 
   /** ACTION emote → "/me" rewrite (irclogbot.py:137-138): startswith guard,
     * then str.replace — which replaces EVERY "ACTION " occurrence, not just
@@ -68,10 +69,7 @@ object IrcParser {
     */
   def parse(lines: DataFrame): DataFrame = {
     // native one-pass group extract — the per-group regexp_extract form ran
-    // the same anchored match three times per line (r21); the kernel is
-    // registered session-wide by Tables, but parse must also work on
-    // sessions that never touched the fixture tables (streaming)
-    graft.functions.NativeFunctions.ensureRegistered(lines.sparkSession)
+    // the same anchored match three times per line (r21)
     val line = col("line")
     lines
       .filter(!isPing(line))

@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 
 /** Semi-join pruning via a broadcast Bloom filter — the standard 100 TB
   * technique for shrinking a fact scan BEFORE the shuffle when the filter
@@ -28,12 +31,12 @@ object BloomPrune {
     */
   def pruned(fact: DataFrame, factKey: Column, keys: DataFrame, keyCol: Column,
       expectedItems: Long = 1000000L, numBits: Long = 8000000L): DataFrame = {
-    val bf: Array[Byte] = keys.select(keyCol.as("__k"))
-      .agg(expr(s"bloom_filter_agg(xxhash64(__k), ${expectedItems}L, ${numBits}L)")
-        .as("__bf"))
+    val bf: Array[Byte] = keys
+      .agg(GraftShim.column(new BloomFilterAggregate(
+        GraftShim.expression(xxhash64(keyCol)), Literal(expectedItems), Literal(numBits))
+        .toAggregateExpression()).as("__bf"))
       .collect()(0).getAs[Array[Byte]](0)
-    fact.withColumn("__fk", factKey)
-      .filter(call_function("might_contain", lit(bf), xxhash64(col("__fk"))))
-      .drop("__fk")
+    fact.filter(GraftShim.column(BloomFilterMightContain(
+      Literal(bf), GraftShim.expression(xxhash64(factKey)))))
   }
 }

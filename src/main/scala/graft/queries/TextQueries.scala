@@ -175,7 +175,7 @@ object TextQueries extends QueryGroup {
     // unchanged.
     Q("x16_char_entropy",
       (s, d) => {
-        val e = call_function("char_entropy_sum", col("text"))
+        val e = TextFunctions.charEntropySum(col("text"))
         Tables(s, d, "documents")
           .select(col("doc_id"), e.getField("n_chars").as("n_chars_text"),
             e.getField("s_micro").as("__s"))

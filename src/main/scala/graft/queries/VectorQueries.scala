@@ -94,12 +94,6 @@ object VectorQueries extends QueryGroup {
 
   // ---- V11 oracle-tier PQ (shared by v11_pq_codes / v11_pq_adc_oracle) ----
 
-  // native vec_l2sq kernel (r21): bit-identical to the interpreted
-  // aggregate(zip_with((x,y) => (x−y)²)) fold over these double arrays —
-  // same i-ascending subtract-square-accumulate, and d² = (−d)²
-  private def pqL2D(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    call_function("vec_l2sq", a, b)
-
   /** One row per (vector, subspace): 16-dim double slice (m=4 over d=64). */
   private def pqOracleSubs(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables(s, d, "embeddings")
@@ -117,7 +111,7 @@ object VectorQueries extends QueryGroup {
     val wAssign = Window.partitionBy(col("vec_id"), col("sub"))
       .orderBy(col("dist").asc, col("cid"))
     subs.join(broadcast(cents), "sub")
-      .withColumn("dist", pqL2D(col("cvec"), col("svec")))
+      .withColumn("dist", l2sqNative(col("cvec"), col("svec")))
       .withColumn("rk", row_number().over(wAssign))
       .filter(col("rk") === 1)
   }
@@ -441,12 +435,6 @@ object VectorQueries extends QueryGroup {
     Q("v8_kmeans_oracle",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        // native vec_l2sq kernel (r21): left is the double cvec, right the
-        // float embedding (widened before the double subtract) — the exact
-        // IEEE sequence of the interpreted cast-then-subtract fold, and
-        // d² = (−d)² makes operand order bit-free
-        def l2D(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-          call_function("vec_l2sq", a, b)
         val emb = Tables(s, d, "embeddings").select(col("vec_id"), col("embedding"))
         var cents = emb.filter(col("vec_id") < 4)
           .select(col("vec_id").as("cid"),
@@ -455,7 +443,7 @@ object VectorQueries extends QueryGroup {
         for (_ <- 1 to 2) {
           val assigned = emb.crossJoin(broadcast(cents))
             .withColumn("rk", row_number().over(Window.partitionBy(col("vec_id"))
-              .orderBy(l2D(col("cvec"), col("embedding")).asc, col("cid"))))
+              .orderBy(l2sqNative(col("cvec"), col("embedding")).asc, col("cid"))))
             .filter(col("rk") === 1)
             .select(col("cid"), col("embedding"))
           dims = assigned.select(col("cid"), posexplode(col("embedding")))
@@ -1133,11 +1121,11 @@ object VectorQueries extends QueryGroup {
     Q("v20_random_projection",
       (s, d) => {
         val signs: Seq[Seq[Double]] = (0 until 32).map { j =>
-          (0 until 64).map { i =>
+          Array.tabulate(64) { i =>
             val dig = java.security.MessageDigest.getInstance("MD5")
               .digest(s"${j}_${i}".getBytes("UTF-8"))
             if (((dig(0) >> 4) & 0xf) < 8) 1.0 else -1.0
-          }
+          }.toSeq
         }
         // stage-1 kernel: codegen'd FloatVecProject (bit-identical to the
         // interpreted HOF fold — EngineSpec pins it); norms computed once

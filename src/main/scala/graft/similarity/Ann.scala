@@ -441,28 +441,12 @@ object Ann {
       centroids: DataFrame, threshold: Double): DataFrame =
     pairsWithinClusters(assignCentroids(embeddings, id, vec, centroids), threshold)
 
-  /** Squared L2 between a double-array centroid column and a (float or
-    * double) vector column — the shared assignment metric. Native kernel
-    * ([[graft.functions.DoubleVecL2Sq]], r21): bit-identical to the
-    * interpreted `aggregate(zip_with(cvec, v, (c, x) => (x.cast-c)²))` fold
-    * it replaces (i-ascending widen-then-double-subtract, and d² = (−d)²),
-    * but one tight loop per row instead of one Catalyst lambda per element
-    * — assignment evaluates k of these folds per row, which made the
-    * interpreted form the dominant cost of d7/v7-family assignment.
-    */
-  private def l2sq(cvec: Column, v: Column): Column =
-    call_function("vec_l2sq", cvec, v)
-
   /** EXACT nearest-centroid assignment (the n×k baseline): one broadcast
     * cross join + ranking window, deterministic L2-then-cid tie-break.
     * Output: (cid, vec_id, v).
     */
   def assignCentroids(embeddings: DataFrame, id: Column, vec: Column,
       centroids: DataFrame): DataFrame = {
-    // defensive (r21 ADVICE #2): direct library use on a session that never
-    // touched Tables must not fail analysis with 'undefined function
-    // vec_l2sq' — mirror IrcParser.parse
-    graft.functions.NativeFunctions.ensureRegistered(embeddings.sparkSession)
     // One-row broadcast of the codebook; per-vector argmin is array_min
     // over (dist, cid) structs — identical L2-then-cid tie-break to the
     // ranking-window form this replaces, but with ZERO Exchange (the
@@ -471,7 +455,7 @@ object Ann {
     val cb = centroids.agg(
       collect_list(struct(col("cid"), col("cvec"))).as("cb_arr"))
     val best = array_min(transform(col("cb_arr"), cc =>
-      struct(l2sq(cc.getField("cvec"), col("v")).as("d"),
+      struct(VectorFunctions.l2sqNative(cc.getField("cvec"), col("v")).as("d"),
         cc.getField("cid").as("cid"))))
     embeddings.select(id.as("vec_id"), vec.as("v"))
       .crossJoin(broadcast(cb))
@@ -499,13 +483,12 @@ object Ann {
     */
   def assignCentroidsIvf(embeddings: DataFrame, id: Column, vec: Column,
       centroids: DataFrame, coarse: DataFrame, nProbe: Int): DataFrame = {
-    graft.functions.NativeFunctions.ensureRegistered(embeddings.sparkSession)
     // fine centroid → its coarse cell: k×c rows, codebook-scale (both sides
     // are broadcastable by construction — same posture as Pq codebooks)
     val cellMap = centroids.crossJoin(broadcast(coarse))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("cid")).orderBy(
-          l2sq(col("ccvec"), col("cvec")).asc, col("ccid"))))
+          VectorFunctions.l2sqNative(col("ccvec"), col("cvec")).asc, col("ccid"))))
       .filter(col("rk") === 1)
       .select(col("ccid"), col("cid"), col("cvec"))
     // Probe candidates are restricted to coarse cells that OWN at least one
@@ -535,12 +518,12 @@ object Ann {
     // (= the L2-then-cid tie-break). Zero Exchange in the whole assignment.
     val probes = slice(
       array_sort(transform(col("coarse_arr"), cc =>
-        struct(l2sq(cc.getField("ccvec"), col("v")).as("d"),
+        struct(VectorFunctions.l2sqNative(cc.getField("ccvec"), col("v")).as("d"),
           cc.getField("ccid").as("ccid")))),
       1, nProbe)
     val best = array_min(flatten(transform(probes, p =>
       transform(element_at(col("cell_map"), p.getField("ccid")), fc =>
-        struct(l2sq(fc.getField("cvec"), col("v")).as("d"),
+        struct(VectorFunctions.l2sqNative(fc.getField("cvec"), col("v")).as("d"),
           fc.getField("cid").as("cid"))))))
     embeddings.select(id.as("vec_id"), vec.as("v"))
       .crossJoin(broadcast(aux))

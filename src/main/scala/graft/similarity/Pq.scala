@@ -3,6 +3,8 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions
+
 /** Product quantization (SURVEY §2.10 extension — the embedding-compression
   * tier between int8 scalar quantization (`v10`) and raw float storage).
   *
@@ -39,10 +41,6 @@ object Pq {
     */
   def train(embeddings: DataFrame, id: Column, vec: Column,
       m: Int, k: Int, iters: Int = 2): Array[Array[Array[Double]]] = {
-    // defensive (r21 ADVICE #2): direct library use on a session that never
-    // touched Tables must not fail analysis with 'undefined function
-    // vec_l2sq' — mirror IrcParser.parse
-    graft.functions.NativeFunctions.ensureRegistered(embeddings.sparkSession)
     // ONE init job (TakeOrdered of k full vectors) supplies the dimension
     // AND the k init centroids — the old dim-head / initIds-collect /
     // init-cents-collect trio was three driver round-trips for data this
@@ -113,7 +111,6 @@ object Pq {
     */
   def encode(embeddings: DataFrame, id: Column, vec: Column,
       codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    graft.functions.NativeFunctions.ensureRegistered(embeddings.sparkSession)
     val m = codebooks.length
     val dsub = codebooks.head.head.length
     val codeCols = (0 until m).map { s =>
@@ -166,7 +163,6 @@ object Pq {
       query: Array[Float], codebooks: Array[Array[Array[Double]]],
       topK: Int, shortlist: Int): DataFrame = {
     require(shortlist >= topK, s"PQ: shortlist $shortlist < topK $topK")
-    graft.functions.NativeFunctions.ensureRegistered(embeddings.sparkSession)
     val cand = knnAdc(encoded, id, codes, query, codebooks, shortlist)
       .select(col("vec_id"))
     val qLit = typedLit(query.map(_.toDouble).toSeq)
@@ -175,7 +171,7 @@ object Pq {
       .select(col("vec_id"),
         // native vec_l2sq — bit-identical to the interpreted
         // (x.cast("double") − q)² fold (d² = (−d)²)
-        call_function("vec_l2sq", qLit, col("v")).as("d2"))
+        VectorFunctions.l2sqNative(qLit, col("v")).as("d2"))
       .orderBy(col("d2").asc, col("vec_id"))
       .limit(topK)
   }
@@ -199,5 +195,5 @@ object Pq {
   // element. Train/encode evaluate k of these folds per row — the
   // interpreted form dominated v11_pq_adc's wall time.
   private def l2sqLit(sv: Column, centroid: Array[Double]): Column =
-    call_function("vec_l2sq", typedLit(centroid.toSeq), sv)
+    VectorFunctions.l2sqNative(typedLit(centroid.toSeq), sv)
 }

@@ -40,12 +40,14 @@ object EsShapedSink {
     * `appendPerTask = true` (r22, guide §6 — fewer, larger files): all
     * sends from one transport instance append to ONE spool file instead of
     * one per bulk request. Spark deserializes a fresh instance into every
-    * task closure, so the file is task-local and race-free exactly like
-    * the per-request mode; the spool's file count becomes ∝ tasks instead
-    * of ∝ corpus/bulkSize (at 100 TB the difference between thousands of
-    * files and billions). Content is byte-identical — requests append in
-    * send order. Default stays per-request (the pinned dead-letter /
-    * quarantine granularity).
+    * task closure, so the file is normally task-local; the create-then-
+    * append is still synchronized on the instance, so threads that share
+    * one instance (any caller outside a Spark task) get one file and
+    * whole, unmixed requests instead of racing on the lazy create. The spool's
+    * file count becomes ∝ tasks instead of ∝ corpus/bulkSize (at 100 TB
+    * the difference between thousands of files and billions). Content is
+    * byte-identical — requests append in send order. Default stays
+    * per-request (the pinned dead-letter / quarantine granularity).
     */
   final class SpoolTransport(dir: String, appendPerTask: Boolean = false)
       extends BulkTransport {
@@ -58,7 +60,7 @@ object EsShapedSink {
       // depends on send() throwing, which PrintWriter would swallow.
       val bytes = ndjsonLines.mkString("", "\n", "\n").getBytes(
         java.nio.charset.StandardCharsets.UTF_8)
-      if (appendPerTask) {
+      if (appendPerTask) synchronized {
         if (taskFile == null)
           taskFile = java.nio.file.Files.createTempFile(d, "bulk_", ".ndjson")
         java.nio.file.Files.write(taskFile, bytes,

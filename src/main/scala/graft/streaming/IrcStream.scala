@@ -283,10 +283,15 @@ object IrcStream {
     * PartitionFilter — Spark lists and reads only the matching channel
     * directories (asserted in StreamingSpec) — and the single-column select
     * prunes the scan to the `id` column.
+    *
+    * The read takes the sink's known schema instead of inferring it: a
+    * first batch with no valid record leaves a sink directory holding only
+    * `_SUCCESS`, where inference fails (UNABLE_TO_INFER_SCHEMA) and would
+    * fail every later batch; with the schema given it reads as empty.
     */
   private[graft] def existingIds(spark: SparkSession, targetDir: String,
       channels: Seq[String]): DataFrame =
-    spark.read.parquet(targetDir)
+    spark.read.schema("id STRING, channel STRING").parquet(targetDir)
       .filter(col("channel").isin(channels: _*))
       .select(col("id"))
 

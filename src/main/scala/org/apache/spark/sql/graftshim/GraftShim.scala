@@ -31,6 +31,13 @@ object GraftShim {
   def expression(col: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ColumnNodeToExpressionConverter(col.node)
 
+  /** Public `Column` around a Catalyst expression — how the graft kernels
+    * (graft.functions.*) reach the DataFrame API without a function-registry
+    * entry. Unresolved children resolve in the analyzer like any column.
+    */
+  def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
+    classic.ExpressionUtils.column(e)
+
   /** Resolve the planner strategies an extensions object injects — lets a
     * test assert registration through the real `SparkSessionExtensions`
     * path without tearing down the shared session.

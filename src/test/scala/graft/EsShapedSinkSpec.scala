@@ -126,6 +126,36 @@ class EsShapedSinkSpec extends SparkSuite {
     assert(ids.sorted == Seq("i1", "i2", "i3", "i4", "i5"))
   }
 
+  test("appendPerTask: concurrent sends to one instance keep every line intact") {
+    val dir = Files.createTempDirectory("graft_es_bulk_threads").toString
+    val t = new SpoolTransport(dir, appendPerTask = true)
+    val threads = 8
+    val sends = 50
+    // a request above Files.write's 8 KiB chunk, so unsynchronized appends
+    // could interleave mid-request
+    def line(th: Int, k: Int, j: Int) = s"""{"t":$th,"k":$k,"j":$j,"pad":"${"x" * 5000}"}"""
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val done = (0 until threads).map { th =>
+        pool.submit(new Runnable {
+          def run(): Unit =
+            (0 until sends).foreach(k => t.send(Seq(line(th, k, 0), line(th, k, 1))))
+        })
+      }
+      done.foreach(_.get())
+    } finally pool.shutdown()
+    // one file (the lazy create ran once), and exactly the lines sent
+    assert(Option(new java.io.File(dir).listFiles()).get.length == 1)
+    val lines = spoolLines(dir)
+    val expected = for (th <- 0 until threads; k <- 0 until sends; j <- 0 to 1)
+      yield line(th, k, j)
+    assert(lines.sorted == expected.sorted)
+    // a request's two lines stay adjacent
+    lines.grouped(2).foreach { case Seq(a, b) =>
+      assert(a.replace("\"j\":0", "\"j\":1") == b)
+    }
+  }
+
   test("recordWriter + writeEachWithRetry: poisoned record dead-letters, rest index (K2)") {
     val dir = Files.createTempDirectory("graft_es_retry").toString
     val quarantine = Files.createTempDirectory("graft_es_dlq").toString

@@ -564,7 +564,7 @@ class QualitySignalsSpec extends SparkSuite {
         .select(col("doc_id"), col("len"), col("s"))
         .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     }
-    val e = call_function("char_entropy_sum", col("text"))
+    val e = graft.functions.TextFunctions.charEntropySum(col("text"))
     val got = docs
       .select(col("doc_id"), e.getField("n_chars"), e.getField("s_micro"))
       .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
@@ -576,7 +576,7 @@ class QualitySignalsSpec extends SparkSuite {
     // assertion exercises the difference.
     val nullDoc = Seq((-4L, null.asInstanceOf[String])).toDF("doc_id", "text")
     val kernelRows = nullDoc
-      .select(col("doc_id"), call_function("char_entropy_sum", col("text")).as("e"))
+      .select(col("doc_id"), graft.functions.TextFunctions.charEntropySum(col("text")).as("e"))
       .collect()
     assert(kernelRows.length == 1 && kernelRows.head.isNullAt(1),
       "kernel must null-propagate on null text (row survives, struct null)")

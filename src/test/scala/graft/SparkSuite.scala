@@ -16,7 +16,6 @@ object TestSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    graft.functions.NativeFunctions.ensureRegistered(s)
     s
   }
 }

@@ -492,12 +492,37 @@ class StreamingSpec extends SparkSuite {
     assert(K2Probe.attempts.values.toArray.map(_.asInstanceOf[Integer].intValue).max == 5)
   }
 
+  test("a first batch with no valid PRIVMSG does not poison the sink") {
+    implicit val ctx = sqlCtx
+    val base = Files.createTempDirectory("graft_empty_first").toString
+    val ms = MemoryStream[String]
+    val q = IrcStream.start(ms.toDF(), s"$base/sink", s"$base/ckpt",
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    try {
+      // batch 0: only PING/JOIN traffic — the sink dir gets just _SUCCESS
+      ms.addData("PING :irc.example.net", ":bob!~b@h JOIN #x")
+      q.processAllAvailable()
+      // batch 1: real messages must land (the probe read used to fail
+      // schema inference on the data-less sink dir)
+      ms.addData(":alice!~a@h PRIVMSG #x :m1", ":bob!~b@h PRIVMSG #y :m2")
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(q.exception.isEmpty, q.exception.map(_.getMessage).getOrElse(""))
+    val sink = spark.read.parquet(s"$base/sink")
+    assert(sink.select("nick", "remark").as[(String, String)].collect().sorted.toSeq ==
+      Seq(("alice", "m1"), ("bob", "m2")))
+  }
+
   test("SQL facade: users can run SQL over registered views") {
-    GraftCatalog.registerAll(spark, sf)
-    val n = spark.sql(
+    // a fresh session: kernel names exist only where registerAll put them,
+    // so the shared test session keeps proving the typed-Column path
+    val sqlSession = spark.newSession()
+    GraftCatalog.registerAll(sqlSession, sf)
+    assert(!spark.catalog.functionExists("float_vec_dot"))
+    val n = sqlSession.sql(
       "SELECT count(DISTINCT event_type) FROM events").collect().head.getLong(0)
     assert(n == 5)
-    val knn = spark.sql(
+    val knn = sqlSession.sql(
       """SELECT vec_id, float_vec_dot(embedding, embedding) AS sq
         |FROM embeddings ORDER BY sq DESC, vec_id LIMIT 3""".stripMargin)
     assert(knn.count() == 3) // native function callable straight from SQL

@@ -1,12 +1,22 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 
+import graft.functions.LongVecAgree
 import graft.functions.VectorFunctions._
 
 class VectorFunctionsSpec extends SparkSuite {
 
   private lazy val emb = Tables(spark, sf, "embeddings")
+
+  private def agree(a: Column, b: Column): Column =
+    GraftShim.column(LongVecAgree(GraftShim.expression(a), GraftShim.expression(b)))
+
+  private def agreeFold(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, v) => acc + v)
 
   test("native dot is BIT-identical to the HOF fold (same IEEE sequence)") {
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
@@ -48,18 +58,38 @@ class VectorFunctionsSpec extends SparkSuite {
     val pairs = sigs.select(col("doc_id").as("da"), col("sig").as("sa"))
       .crossJoin(sigs.select(col("doc_id").as("db"), col("sig").as("sb")))
       .filter(col("da") < col("db"))
-    val fold = aggregate(
-      zip_with(col("sa"), col("sb"), (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v)
     val diff = pairs.select(
-      call_function("vec_agree", col("sa"), col("sb")).as("k"),
-      fold.as("f")).filter(col("k") =!= col("f"))
+      agree(col("sa"), col("sb")).as("k"),
+      agreeFold(col("sa"), col("sb")).as("f")).filter(col("k") =!= col("f"))
     assert(diff.count() == 0)
     // null propagation like the fold
-    val n = sigs.select(call_function("vec_agree",
-      lit(null).cast("array<bigint>"), col("sig")).as("k"))
+    val n = sigs.select(agree(lit(null).cast("array<bigint>"), col("sig")).as("k"))
       .filter(col("k").isNotNull)
     assert(n.count() == 0)
+  }
+
+  test("vec_agree: a null element never agrees, matching the fold") {
+    import spark.implicits._
+    val N = Option.empty[Long]
+    // null vs value, null vs null, null vs 0 (an unguarded getLong reads 0
+    // from a null slot), a length mismatch, and an empty side
+    val rows = Seq(
+      (0, Seq(Some(1L), N, Some(3L)), Seq(Some(1L), Some(2L), Some(3L))),
+      (1, Seq(N, N), Seq(N, N)),
+      (2, Seq(N, Some(0L), Some(5L)), Seq(Some(0L), N, Some(5L))),
+      (3, Seq(Some(7L), Some(8L), Some(9L)), Seq(Some(7L), Some(8L))),
+      (4, Seq.empty[Option[Long]], Seq(N))).toDF("i", "a", "b")
+    val want = Seq(2, 0, 1, 2, 0)
+    def counts(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("i"), agree(col("a"), col("b")).as("k"),
+          agreeFold(col("a"), col("b")).as("f"))
+        .orderBy("i").collect().map(r => (r.getInt(1), r.getInt(2))).toSeq
+    // through a shuffle the projection runs whole-stage-codegen'd (the
+    // generated loop with its isNullAt guard) ...
+    assert(counts(rows.repartition(1)) == want.map(k => (k, k)))
+    // ... straight over the local relation the optimizer evaluates it
+    // interpreted (nullSafeEval)
+    assert(counts(rows) == want.map(k => (k, k)))
   }
 
   test("sorted_isect_count on sorted distinct arrays equals array_intersect") {
@@ -71,12 +101,15 @@ class VectorFunctionsSpec extends SparkSuite {
       .crossJoin(arr.select(col("doc_id").as("db"), col("ta").as("tb")))
       .filter(col("da") < col("db"))
     val diff = pairs.select(
-      call_function("sorted_isect_count", col("ta"), col("tb")).as("k"),
+      TextFunctions.sortedIntersectCount(col("ta"), col("tb")).as("k"),
       size(array_intersect(col("ta"), col("tb"))).as("s"))
       .filter(col("k") =!= col("s"))
     assert(diff.count() == 0)
-    // empty-array and self-intersection edges
-    val edge = spark.sql(
+    // empty-array and self-intersection edges, through the SQL facade on a
+    // fresh session (the shared one never registers kernel names)
+    val sqlSession = spark.newSession()
+    GraftCatalog.registerAll(sqlSession, sf)
+    val edge = sqlSession.sql(
       """SELECT sorted_isect_count(cast(array() AS array<string>), array('a')) AS e1,
         |       sorted_isect_count(array('a','b'), array('a','b')) AS e2,
         |       sorted_isect_count(array('a'), array('b')) AS e3""".stripMargin)
