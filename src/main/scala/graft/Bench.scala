@@ -1,9 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus(4)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // Constrained-heap CANARY (r12 verdict #1): SPARK_GRAFT_BENCH_HEAP=2g
     // emulates running the whole bench inside a 2 GiB heap. The JVM heap is
@@ -31,51 +30,16 @@ object Bench {
       math.max(0.05, math.min(0.6,
         0.6 * (target - reserved).toDouble / math.max(1L, actual - reserved)))
     }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    canaryFraction.foreach(f =>
-      builder.config("spark.memory.fraction", f.toString))
-    val spark = builder
-      // ContextCleaner only reclaims finished broadcasts/shuffles when a GC
-      // actually runs; its default periodic-GC interval (30 min) never fires
-      // inside a few-minute bench, so ~300 broadcast exchanges pile up in an
-      // 8 GB heap and the resulting full-GC pause lands on whichever query
-      // is running when the heap fills — deterministically the same victims
-      // (h3/j4_semi in r5-r6) because the query order is fixed. Fire it
-      // every 30 s so cleanup cost is spread instead of ambushing one query.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus,
+      canaryFraction.map(f => "spark.memory.fraction" -> f.toString).toSeq: _*)
     // Warm the JVM/codegen/file-listing paths once so per-query timings
     // measure the queries, not first-touch session setup.
     graft.Tables.names.foreach { t =>
       try graft.Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
     }
-    // Time a full materialization of every query via the noop sink: unlike
-    // `count()` (which lets Catalyst prune projections and skip expression
-    // work), the noop write evaluates every output column. Each query runs
-    // `reps` times and reports the MEDIAN — single-run numbers on this box
-    // have ±50% noise, which drowned round-over-round comparisons.
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        Some(math.rint((System.nanoTime() - t0) / 1e6) / 1e3)
-      } catch { case _: Throwable => None }
-      // Release operator-internal caches after EVERY rep (mirrors
-      // Verify.scala): without this, postings/signature caches from earlier
-      // queries stay pinned for the whole 98-query run and compete with
-      // execution memory — which made round-5's numbers hostage to
-      // cache-manager behavior. Runs after the timestamp is taken, so the
-      // bookkeeping cost is not billed to the query.
-      finally Caches.unpersistAll()
-    }
     // Optional comma-separated name filter for local iteration
     // (SPARK_GRAFT_BENCH_ONLY=d2_simhash,f8_map_functions).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val only = Harness.only("SPARK_GRAFT_BENCH_ONLY")
     // Randomize run order with a logged seed: a fixed alphabetical order
     // means any slow-building heap/host pressure always lands on the same
     // victim queries (h5/h6 in r7), which reads as a per-query regression.
@@ -92,8 +56,12 @@ object Bench {
       .shuffle(SparkEntry.queries.toSeq.sortBy(_._1))
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .filter { case (n, _) => benchAll || !SparkEntry.benchExcluded(n) }
+    // Each query runs `reps` timed noop writes (Harness.timed) and reports
+    // the MEDIAN — single-run numbers on this box have ±50% noise, which
+    // drowned round-over-round comparisons.
     val timed = selected.map { case (name, fn) =>
-      val runs = (1 to reps).flatMap(_ => once(fn))
+      val outcomes = (1 to reps).map(_ => Harness.timed(fn(spark, sfDir)))
+      val runs = outcomes.collect { case Right(sec) => sec }
       // Sweep query-local garbage (broadcasts, codegen classes) OFF this
       // query's bill and BEFORE the next query's clock starts — between
       // queries, not between reps, so steady-state reuse is still measured.
@@ -103,20 +71,25 @@ object Bench {
       val median =
         if (runs.size < reps) -1.0
         else runs.sorted.apply(runs.size / 2)
-      (name, median, runs)
+      (name, median, runs, outcomes.collectFirst { case Left(f) => f })
     }
-    val errors = timed.collect { case (n, t, _) if t < 0 => n }
+    val errors = timed.collect { case (n, t, _, _) if t < 0 => n }
     val ok = timed.filter(_._2 >= 0)
     val qs = timed
-      .map { case (k, v, _) => s"\"" + k + "\":" + v }
+      .map { case (k, v, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // All rep times per query, so a regression report can distinguish "the
     // plan got slower" (all reps high) from "one rep was ambushed" (median
     // dragged by an outlier) without a re-run.
     val repsDetail = timed
-      .map { case (k, _, rs) => s"\"" + k + "\":[" + rs.mkString(",") + "]" }
+      .map { case (k, _, rs, _) => s"\"" + k + "\":[" + rs.mkString(",") + "]" }
       .mkString("{", ",", "}")
     val errsJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // The first failure of each failed query: exception class + first
+    // message line, so the artifact alone says WHY a query has no time.
+    val failuresJson = timed
+      .collect { case (k, _, _, Some(f)) => Harness.quote(k) + ":" + f.json }
+      .mkString("{", ",", "}")
     val total = math.rint(ok.map(_._2).sum * 1000) / 1000
     // Streaming path throughput (parse → watermarked dedup → noop), so
     // streaming regressions show up round-over-round, not only in specs.
@@ -154,7 +127,7 @@ object Bench {
     val streamingJson =
       s"""{"metric":"streaming_ingest","value":$streamRate,"unit":"rows_per_s","rows":100000,"reps":$reps,"reps_detail":[${streamRuns.mkString(",")}]}"""
     val perQueryJson =
-      s"""{"metric":"per_query","unit":"sec","reps":$reps,"seed":$seed,"queries":$qs,"reps_detail":$repsDetail,"errors":$errsJson}"""
+      s"""{"metric":"per_query","unit":"sec","reps":$reps,"seed":$seed,"queries":$qs,"reps_detail":$repsDetail,"errors":$errsJson,"failures":$failuresJson}"""
     // The driver's round artifact keeps only a ~2 KB stdout tail, which
     // truncates the per-query line; the headline (last line, always inside
     // the tail) therefore carries a pointer to the full artifact file plus

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: EXECUTES each query (so AQE finalizes its runtime
   * re-planning) and dumps the FINAL formatted physical plan, so scan pruning
   * (`ReadSchema`/`PushedFilters`), the join strategy AQE actually picked,
@@ -235,7 +233,7 @@ object Explain {
       m.group(1) + "_" +
         lamIds.getOrElseUpdate(m.group(2), lamIds.size + 1) + "#")
     // Scratch paths and bucket-table names carry a per-process pid
-    // component (StorageQueries.scratch/tag, ADVICE r17's concurrent-driver
+    // component (Harness.scratch/tag, ADVICE r17's concurrent-run
     // fix) — mask it so a regeneration from a fresh JVM doesn't churn every
     // storage-query dump.
     val pidRe = "((?:graft|bkt)_[a-z0-9_]*?_\\d+)_p\\d+".r
@@ -249,14 +247,8 @@ object Explain {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Harness.cpus(32)
+    val spark = Harness.session(cpus)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val all = args.isEmpty
     val names = if (all) SparkEntry.queries.keys.toSeq.sorted else args.toSeq

@@ -1,221 +1,274 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Scale-cliff spot probe (round-6 advice #8): run the headline query SHAPES
-  * at ~sf1.0 and check nothing falls off a cliff the sf0.1 bench can't see
-  * (a join strategy flip into a straggler, LSH bucket blow-up, agg spill).
+import graft.streaming.Percolator.{matchDocs, matchDocsPostings, matchDocsSelective}
+
+/** Scale probe: runs registered queries — the actual `SparkEntry.queries`
+  * code — at the base scale factor and at `xf`× it, plus the few shapes
+  * that sweep a dial or need a fixture the registry lacks, each with its
+  * wall time and SHUFFLE BYTES, so scaling claims carry measured exponents
+  * and a cliff the base-scale bench can't see (a join strategy flip into a
+  * straggler, LSH bucket blow-up, agg spill) shows up here first.
   *
-  * No sf1.0 fixture exists, so the inputs are derived IN MEMORY from the
-  * provided sf0.1 parquet by key-offset replication (`xf`=10 copies, join
-  * keys remapped `k -> k*xf + rep` so fan-outs are preserved, never
-  * multiplied). This is a PERFORMANCE probe only — the derived frames carry
-  * no correctness claim and are never written; the differential oracle
-  * remains Verify at the driver's scale.
+  * No larger fixture exists, so the `xf`× tables are derived from the base
+  * ones by key-offset replication ([[Harness.expand]]: facts ×xf with join
+  * keys remapped `k -> k*xf + rep`, so fan-outs are preserved, never
+  * multiplied; dims stay dims) and STAGED to parquet once, untimed. Every
+  * replicated table is written as one file per core: the many-split layout
+  * a real corpus always has (a single-split input would leave every
+  * map-side operator on one core), and once materialized it adds no
+  * exchange to any plan. Registry queries then run end-to-end from disk
+  * through their own `(spark, dir)` entry point, exactly as at base scale.
   *
-  * Deliberate stress choices:
+  * Deliberate density choices:
   *  - documents: each copy appends a distinct token, making every original
-  *    doc a 10-member NEAR-dup family — the dense-bucket case that breaks
-  *    naive LSH (quadratic pair blow-up) at exactly 10× density.
+  *    doc an xf-member NEAR-dup family — the dense-bucket worst case for
+  *    the pair family.
   *  - embeddings: each copy perturbs one rep-indexed dimension, so copies
   *    are near-identical in angle (dense ANN buckets) without being exact
-  *    duplicates; knnJoinLshMd5's corpus-derived nBits must absorb the 10×.
-  *  - customer is NOT replicated (dims stay dims): each customer sees 10×
-  *    the orders, stressing the build side of h3's broadcast choice.
+  *    duplicates.
+  *  - events: BOTH keys remapped — xf× users at the original per-user
+  *    timeline density, not xf× events per user.
+  *  - customer is NOT replicated: each customer sees xf× the orders,
+  *    stressing the build side of h3's broadcast choice.
   *
-  * Output: one JSON line, `{"metric":"sf1_spot", ..., "queries":{...}}`,
-  * also written to BENCH_sf1_spot.json.
+  * Env: `SPARK_GRAFT_SF_DIR` (base, default sf0.1), `SPARK_GRAFT_SCALE_X`
+  * (default 10), `SPARK_GRAFT_CPUS` (default 32), `SPARK_GRAFT_BENCH_REPS`
+  * (registry reps per scale, default 2; the min-wall rep is reported with
+  * its bytes), `SPARK_GRAFT_SCALE_ONLY` (comma-separated entry filter) and
+  * `SPARK_GRAFT_SCALE_OUT` (artifact path, default `BENCH_scale_x<xf>.json`;
+  * a filtered run writes only when it is set).
+  *
+  * Output: one JSON line — `queries` (per registry query: base and xf
+  * seconds and shuffle bytes, sec ratio), `shapes`, `recall`, `rows_out`,
+  * and `failures` (exception class + first message line per failed entry).
+  * This is a PERFORMANCE artifact only — correctness stays with Verify.
   */
 object ScaleProbe {
 
-  /** xf copies with long join keys remapped to stay keys (k*xf+rep). */
-  private def expand(df: DataFrame, xf: Int, keyCols: Seq[String]): DataFrame = {
-    val withRep = df.withColumn("rep", explode(sequence(lit(0L), lit(xf - 1L))))
-    keyCols.foldLeft(withRep)((d, k) =>
-      d.withColumn(k, col(k) * xf + col("rep")))
-  }
+  /** Registry queries run at both scales: the costliest benched queries,
+    * then the headline join, aggregate, window, dedup, vector and pipeline
+    * families.
+    */
+  val Queries: Seq[String] = Seq(
+    "d12_containment_prefix", "d2_jaccard_prefix", "j13_interval_overlap",
+    "v11_pq_adc", "a41_variable_width_histogram", "a41_vw_histogram_approx",
+    "x13_bpe_apply", "j11_fuzzy_join", "j9_bucketed_join",
+    "k1_es_upsert_roundtrip",
+    // m3's doc-level pair enumeration vs its distinct-hash scale twin
+    "m3_phash_pairs", "m3_phash_pairs_distinct",
+    // x34's map-side design must read ZERO shuffle bytes at both scales;
+    // d14's span shuffle + keyed join-back must step linearly
+    "x34_html_extract", "d14_dup_span_removal",
+    "a38_frequent_pairs", "a51_ks_test", "t31_percolate_selective",
+    "x36_curation_from_html",
+    "h1_pricing_summary", "j2_shuffle_join", "h3_shipping_priority",
+    "d2_minhash_lsh", "v9_knn_join_md5", "a12_heavy_hitters_mg",
+    "d6_dup_span", "x13_bpe_merges", "x18_shuffle_shard", "v19_maxsim",
+    "o3_topk_per_group", "o4_topk_native", "x28_pagerank_prior",
+    "w12_attribution", "t40_significant_text", "v20_random_projection",
+    "x33_domain_reweight")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val xf = sys.env.getOrElse("SPARK_GRAFT_SCALE_X", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus(32)
+    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
+    val spark = Harness.session(cpus)
+    val only = Harness.only("SPARK_GRAFT_SCALE_ONLY")
+    def wanted(name: String) = only.forall(_.contains(name))
+    val failures = mutable.LinkedHashMap.empty[String, Harness.Failure]
 
-    def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
-    // The sf0.1 fixtures are single-row-group parquet (one input split), so
-    // a bare explode leaves the entire derived corpus in ONE partition —
-    // and any purely map-side operator then runs on one core, which is the
-    // opposite of the layout it faces at scale (100 TB = thousands of
-    // splits). For the MAP-SIDE-KERNEL corpora (docs: minhash/simhash
-    // signatures, manifest digests; emb: distance kernels) a repartition
-    // to executor width is fixture realism: it models the many-split input
-    // a real corpus always has. (Pinned in r12: the map-side IVF
-    // assignment measured 70.7 s at 30× on the 1-partition input vs 30.7 s
-    // for the shuffling version it replaced — the Exchange had been
-    // providing the parallelism the input lacked; with realistic splits
-    // d7 exact fell 223 s → 22 s at 30×.)
-    //
-    // The SHUFFLE-FIRST shapes (h1/j2/h3 aggs+joins, d6's span groupBy)
-    // get NO repartition: their first operator already redistributes, so
-    // input layout cannot starve them, and a user repartition only inserts
-    // a second full exchange of the corpus (measured: j2 10.4 s → 82.5 s
-    // at 30× with the exchange in the lineage). Per-shape input layout is
-    // the honest emulation, not a tuning knob.
-    val nPart = cpus.toInt
-    val lineitem = expand(Tables(spark, sfDir, "lineitem"), xf, Seq("l_orderkey")).drop("rep")
-    val orders = expand(Tables(spark, sfDir, "orders"), xf, Seq("o_orderkey")).drop("rep")
-    val customer = Tables(spark, sfDir, "customer")
-    val docsRaw = expand(Tables(spark, sfDir, "documents"), xf, Seq("doc_id"))
-      .withColumn("text", concat(col("text"), lit(" variant"), col("rep"))).drop("rep")
-    val docs = docsRaw.repartition(nPart)
-    // linear-growth corpus for the prefix-family probes (shapes below):
-    // token-level family salting (family = rep div 2) makes each 2-member
-    // family a vocabulary island — true pairs ∝ xf, df per term flat
-    val docsLinear = expand(Tables(spark, sfDir, "documents"), xf, Seq("doc_id"))
+    // ---- shuffle-byte listener: read = local + remote fetched bytes ----
+    val readB = new AtomicLong(0L)
+    val writeB = new AtomicLong(0L)
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val m = e.stageInfo.taskMetrics
+        if (m != null) {
+          readB.addAndGet(
+            m.shuffleReadMetrics.localBytesRead + m.shuffleReadMetrics.remoteBytesRead)
+          writeB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          ()
+        }
+      }
+    })
+    // Drain the async listener bus by POLLING the counters until they stop
+    // moving (a fixed sleep let late stage-completed events land after the
+    // reset and be credited to the NEXT run on a loaded machine): 400 ms of
+    // quiet with a 5 s cap — stage events arrive in bursts ms apart, and
+    // the cap bounds a pathological firehose without hanging the probe.
+    def settle(): Unit = {
+      var prev = (readB.get(), writeB.get())
+      var quietMs = 0
+      var waitedMs = 0
+      while (quietMs < 400 && waitedMs < 5000) {
+        Thread.sleep(100); waitedMs += 100
+        val cur = (readB.get(), writeB.get())
+        if (cur == prev) quietMs += 100 else { quietMs = 0; prev = cur }
+      }
+    }
+    /** One measured run: (wall seconds, shuffle read B, shuffle write B). */
+    def run(df: => DataFrame): Either[Harness.Failure, (Double, Long, Long)] = {
+      System.gc()
+      settle() // flush straggler events onto the PREVIOUS reading
+      readB.set(0L); writeB.set(0L)
+      Harness.timed(df).map { sec => settle(); (sec, readB.get(), writeB.get()) }
+    }
+    /** An untimed side measurement; a failure is recorded under `name`. */
+    def attempt[T](name: String)(body: => T): Option[T] =
+      try Some(body)
+      catch { case t: Throwable => failures(name) = Harness.Failure(t); None }
+      finally Caches.unpersistAll()
+
+    // ---- stage the xf× tables (untimed) ----
+    val xfDir = Harness.scratch(s"graft_scale_x$xf", sfDir)
+    def stage(name: String, df: DataFrame): Unit =
+      df.write.mode("overwrite").parquet(s"$xfDir/$name.parquet")
+    def stageReplicated(name: String, df: DataFrame): Unit =
+      stage(name, df.drop("rep").repartition(cpus))
+    def replicated(name: String, keys: String*) =
+      Harness.expand(Tables(spark, sfDir, name), xf, keys)
+    Seq("region", "nation", "customer", "supplier", "part")
+      .foreach(t => stage(t, Tables(spark, sfDir, t)))
+    stageReplicated("lineitem", replicated("lineitem", "l_orderkey"))
+    stageReplicated("orders", replicated("orders", "o_orderkey"))
+    stageReplicated("events", replicated("events", "event_id", "user_id"))
+    stageReplicated("documents", replicated("documents", "doc_id")
+      .withColumn("text", concat(col("text"), lit(" variant"), col("rep"))))
+    stageReplicated("embeddings", replicated("embeddings", "vec_id")
+      .withColumn("embedding", transform(col("embedding"), (x, i) =>
+        when(i === col("rep").cast("int"), x + lit(0.01f)).otherwise(x))))
+    // The LINEAR-growth fixture of the prefix family: the documents fixture
+    // above grows TRUE pairs ∝ xf² (every doc becomes an xf-member family),
+    // so its wall step conflates plan cost with output volume. Here each
+    // rep's tokens are salted with a family id (rep div 2): reps (0,1),
+    // (2,3), … form disjoint 2-member near-dup families with DISJOINT
+    // vocabularies — pairs and candidates grow ∝ xf, vocabulary grows with
+    // the corpus, per-term df stays flat (a web corpus growing by crawl).
+    // A wall step ≳ xf here is PLAN cost, not output volume.
+    stageReplicated("documents_linear", replicated("documents", "doc_id")
       .withColumn("text", concat(
         array_join(transform(graft.functions.TextFunctions.tokens(col("text")),
           t => concat(t, lit("g"), (col("rep") / 2).cast("long"))), " "),
-        lit(" variant"), col("rep")))
-      .drop("rep").repartition(nPart)
-    val emb = expand(Tables(spark, sfDir, "embeddings"), xf, Seq("vec_id"))
-      .withColumn("embedding",
-        transform(col("embedding"), (x, i) =>
-          when(i === col("rep").cast("int"), x + lit(0.01f)).otherwise(x)))
-      .drop("rep").repartition(nPart)
-    // events ×10: BOTH keys remapped, so each copy is its own user universe
-    // with the original per-user timeline density — 10× users, not 10×
-    // events-per-user (which would misrepresent the workload's key shape).
-    // Shuffle-first consumers (windows partition immediately), so no
-    // layout repartition.
-    val events = expand(Tables(spark, sfDir, "events"), xf,
-      Seq("event_id", "user_id")).drop("rep")
+        lit(" variant"), col("rep"))))
+    // j11 at xf× vocabulary: distinct customer names, each copy carrying its
+    // rep digits TRIPLED (" r777"), so any two distinct suffixes differ by
+    // ≥ 2 edits — cross-copy names never form distance-1 pairs, and the true
+    // pair set is exactly x copies of the originals.
+    def names(x: Int): DataFrame =
+      Tables(spark, sfDir, "customer").select(col("c_name")).distinct()
+        .withColumn("rep", explode(sequence(lit(0L), lit(x - 1L))))
+        .select(concat(col("c_name"), lit(" r"),
+          repeat(col("rep").cast("string"), 3)).as("c_name"))
+    stage("customer_names", names(xf).repartition(cpus))
+    println(s"[scaleprobe] staged xf=$xf tables at $xfDir")
 
-    // r18 d13 staging (UNTIMED, before the probe list is built): 95% of the
-    // derived corpus's minhash signatures + xxhash64-key bands persisted to
-    // parquet once — the maintained index a production dedup owns (engine
-    // hash family; the registry query's md5 flavor is the oracle tier). The
-    // probe below then times ONLY what an arriving batch costs against it.
-    val d13Idx = s"${System.getProperty("java.io.tmpdir")}" +
-      s"/graft_probe_mhidx_p${ProcessHandle.current().pid()}"
-    // Crash-safe scratch cleanup (r19 advice residue): the pid suffix means
-    // a killed run is never overwritten by the next one, so staged indexes
-    // leaked unboundedly in java.io.tmpdir whenever a probe died mid-run.
-    // A shutdown hook removes both scratch roots on EVERY exit path
-    // (exception, SIGTERM, success); the happy-path cleanup at the end of
-    // main stays because it also drops the bucket-table catalog entries
-    // while the session is still alive.
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rmq(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rmq)
-        f.delete(); ()
-      }
-      rmq(new java.io.File(d13Idx))
-      rmq(new java.io.File(s"${System.getProperty("java.io.tmpdir")}" +
-        s"/graft_probe_bkt_p${ProcessHandle.current().pid()}"))
-    }))
-    graft.dedup.MinHashDedup.signatures(
-        docs.filter(pmod(col("doc_id"), lit(20L)) =!= 0),
-        col("doc_id"), col("text"))
-      .write.mode("overwrite").parquet(s"$d13Idx/sigs")
-    graft.dedup.MinHashDedup.banded(spark.read.parquet(s"$d13Idx/sigs"), 64, 8)
-      .write.mode("overwrite").parquet(s"$d13Idx/bands")
-    // r19 twin staging (r18 verdict #7 — the streaming loop's store-growth
-    // axis): the SAME batch probed against a 1× and an xf× store whose
-    // TRUE-match yield is held constant, so the wall delta isolates pure
-    // store cost. Family split on the replicated corpus (original family =
-    // doc_id div xf): the batch is the rep-0 member of every 20th family;
-    // both stores exclude those families entirely (so candidates ≈ band
-    // noise in both), the 1× store holds only rep-0 members of the other
-    // families, the xf× store holds ALL their reps. Claim under test: wall
-    // ~flat while the store grows xf× — the store contributes a columnar
-    // band-index scan + candidate-bounded signature lookups, never a
-    // shuffle (d13_stream_store1x_shape vs d13_stream_storeNx_shape).
-    val fam = expr(s"doc_id div $xf")
-    val otherFams = docs.filter(pmod(fam, lit(20L)) =!= 0)
-    graft.dedup.MinHashDedup.signatures(
-        otherFams.filter(pmod(col("doc_id"), lit(xf.toLong)) === 0),
-        col("doc_id"), col("text"))
-      .write.mode("overwrite").parquet(s"$d13Idx/sigs1x")
-    graft.dedup.MinHashDedup.banded(spark.read.parquet(s"$d13Idx/sigs1x"), 64, 8)
-      .write.mode("overwrite").parquet(s"$d13Idx/bands1x")
-    graft.dedup.MinHashDedup.signatures(otherFams, col("doc_id"), col("text"))
-      .write.mode("overwrite").parquet(s"$d13Idx/sigsNx")
-    graft.dedup.MinHashDedup.banded(spark.read.parquet(s"$d13Idx/sigsNx"), 64, 8)
-      .write.mode("overwrite").parquet(s"$d13Idx/bandsNx")
+    val docs = Tables(spark, xfDir, "documents")
+    val emb = Tables(spark, xfDir, "embeddings")
 
-    // j9 bucket-dial probe support (shape entries below): write both fact
-    // sides bucketed on the join key at the given bucket count, join
-    // shuffle-free, aggregate. Table/dir names carry bucket count + pid;
-    // dirs are removed with the d13 index at the end of main.
+    // d13 staging: 95% of the corpus's minhash signatures + xxhash64-key
+    // bands persisted once — the maintained index a production dedup owns;
+    // d13_incremental_shape times ONLY what an arriving 5% batch costs
+    // against it. The twin pair probes the SAME batch against a 1× and an
+    // xf× store whose TRUE-match yield is held constant, so the wall delta
+    // isolates pure store cost: families split on original doc (doc_id div
+    // xf), the batch is the rep-0 member of every 20th family, both stores
+    // exclude those families (candidates ≈ band noise), the 1× store holds
+    // only rep-0 members of the others, the xf× store ALL their reps. Claim
+    // under test: wall ~flat while the store grows xf× — the store adds a
+    // band-index scan + candidate-bounded signature lookups, never a shuffle.
+    val idx = s"$xfDir/mhidx"
+    def stageIndex(name: String, corpus: DataFrame): Unit = {
+      graft.dedup.MinHashDedup.signatures(corpus, col("doc_id"), col("text"))
+        .write.mode("overwrite").parquet(s"$idx/sigs$name")
+      graft.dedup.MinHashDedup.banded(spark.read.parquet(s"$idx/sigs$name"), 64, 8)
+        .write.mode("overwrite").parquet(s"$idx/bands$name")
+    }
+    val family = expr(s"doc_id div $xf")
+    val otherFams = docs.filter(pmod(family, lit(20L)) =!= 0)
+    stageIndex("", docs.filter(pmod(col("doc_id"), lit(20L)) =!= 0))
+    stageIndex("1x", otherFams.filter(pmod(col("doc_id"), lit(xf.toLong)) === 0))
+    stageIndex("Nx", otherFams)
+    def d13Probe(batch: DataFrame, store: String): DataFrame =
+      graft.dedup.Dedup.incrementalMinhashPairsBanded(batch,
+        col("doc_id"), col("text"),
+        spark.read.parquet(s"$idx/sigs$store"),
+        spark.read.parquet(s"$idx/bands$store"))
+    val familyBatch = docs.filter(pmod(col("doc_id"), lit(xf.toLong)) === 0 &&
+      pmod(family, lit(20L)) === 0)
+
+    // j9 bucket dial: write both fact sides bucketed on the join key at the
+    // given count, join shuffle-free, aggregate.
     def nextPow2(n: Int): Int = Integer.highestOneBit(math.max(1, n - 1)) * 2
     val dialBuckets = nextPow2(math.max(8, 8 * xf / 10))
     val pid = ProcessHandle.current().pid()
-    val j9Base = s"${System.getProperty("java.io.tmpdir")}/graft_probe_bkt_p$pid"
     def j9Probe(nBuckets: Int): DataFrame = {
       graft.operators.Bucketing.writeBucketed(
-        orders.select(col("o_orderkey"), col("o_orderpriority")),
+        Tables(spark, xfDir, "orders")
+          .select(col("o_orderkey"), col("o_orderpriority")),
         s"probe_bkt_orders_${nBuckets}_p$pid", nBuckets, "o_orderkey",
-        path = Some(s"$j9Base/orders_$nBuckets"))
+        path = Some(s"$xfDir/bkt/orders_$nBuckets"))
       graft.operators.Bucketing.writeBucketed(
-        lineitem.select(col("l_orderkey").as("o_orderkey"),
+        Tables(spark, xfDir, "lineitem").select(col("l_orderkey").as("o_orderkey"),
           col("l_extendedprice"), col("l_discount")),
         s"probe_bkt_lineitem_${nBuckets}_p$pid", nBuckets, "o_orderkey",
-        path = Some(s"$j9Base/lineitem_$nBuckets"))
-      // The derived orders side COMPRESSES under the 10 MB broadcast bar
-      // even at 15 M rows, so Spark would quietly flip to a broadcast join
-      // and the probe would measure nothing about bucket co-location; at
-      // 100 TB no fact side broadcasts. Pin the at-scale strategy for the
-      // probe's session (restored after — registry queries are untouched).
-      val prevBt = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-      val prevAqeBt =
-        spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+        path = Some(s"$xfDir/bkt/lineitem_$nBuckets"))
+      // The derived orders side COMPRESSES under the 10 MB broadcast bar, so
+      // Spark would quietly flip to a broadcast join and the probe would
+      // measure nothing about bucket co-location; at 100 TB no fact side
+      // broadcasts. Pin the at-scale strategy for the probe (restored after
+      // — registry queries are untouched).
+      val confs = Seq("spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold")
+      val prev = confs.map(k => k -> spark.conf.getOption(k))
+      confs.foreach(spark.conf.set(_, "-1"))
       try {
         val joined = graft.operators.Bucketing.bucketJoin(spark,
             s"probe_bkt_orders_${nBuckets}_p$pid",
             s"probe_bkt_lineitem_${nBuckets}_p$pid", "o_orderkey")
           .groupBy(col("o_orderpriority"))
           .agg(count(lit(1)).as("n_items"),
-            sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-              .as("revenue_cents"))
+            sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100)
+              .cast("long")).as("revenue_cents"))
         // read-side evidence: the bucketed scans feed the SortMergeJoin
         // pre-partitioned, so the ONLY shuffle Exchange in the plan belongs
         // to the 5-row groupBy (no broadcast anywhere)
         val plan = joined.queryExecution.executedPlan.toString
-        val nEx = "Exchange".r.findAllIn(plan).size
-        val nB = "BroadcastExchange".r.findAllIn(plan).size
-        println(s"[scaleprobe] j9 buckets=$nBuckets join-plan exchanges=$nEx " +
-          s"broadcasts=$nB (expect 1/0: the groupBy; the join is " +
-          "bucket-co-located)")
-        // run the expensive work INSIDE the conf pins and hand the harness
-        // a 5-row LOCAL frame — its noop save must not re-execute the join
+        println(s"[scaleprobe] j9 buckets=$nBuckets join-plan exchanges=" +
+          s"${"Exchange".r.findAllIn(plan).size} broadcasts=" +
+          s"${"BroadcastExchange".r.findAllIn(plan).size} (expect 1/0: the " +
+          "groupBy; the join is bucket-co-located)")
+        // run the expensive work INSIDE the conf pins and hand the harness a
+        // 5-row LOCAL frame — its noop save must not re-execute the join
         // with the restored (broadcast-happy) session confs
         val out = joined.collect()
         spark.createDataFrame(
           spark.sparkContext.parallelize(out.toIndexedSeq), joined.schema)
-      } finally {
-        prevBt.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-        prevAqeBt.fold(
-          spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold"))(
-          spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", _))
+      } finally prev.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
       }
     }
 
-    // percolator probe support (shape entries below): an n-query store —
-    // every query is 2-term conjunctive; 1 in 200 pairs two real corpus
-    // tokens (matchable), the rest pair a real token with a synthetic
-    // "alert<i>" term that no document contains (never matches, which is
-    // the alerting fleet's steady state; the scan cost is identical).
+    // Percolator fleet: an n-query store — every query is 2-term
+    // conjunctive; 1 in 200 pairs two real corpus tokens (matchable), the
+    // rest pair a real token with a synthetic "alert<i>" term no document
+    // contains (the alerting fleet's steady state; the scan cost is the
+    // same). Three matcher forms: the ROW form (broadcast store, stateless
+    // scan — store-linear per doc by construction, so the 1k/10k pair
+    // measures the slope); the naive POSTINGS join, kept at 1k/10k as the
+    // documented anti-pattern (on this fixture's ~30-term vocabulary every
+    // real term is hot, so its candidate space is ~docs × queries / |vocab|);
+    // the SELECTIVE form, which anchors each query on its lowest-df term, so
+    // the df-0 "alert" fleets generate ZERO candidates and its wall should
+    // stay ~flat from 1k to 100k.
     def percolateStore(nQueries: Int): DataFrame = {
       val vocab = Tables(spark, sfDir, "documents")
         .select(explode(graft.functions.TextFunctions.tokens(col("text")))
@@ -231,192 +284,52 @@ object ScaleProbe {
         spark.range(nQueries).select(col("id").as("query_id"),
             explode(array(t1, t2)).as("term")))
     }
-    def percolateProbe(nQueries: Int): DataFrame =
-      graft.streaming.Percolator.matchDocs(
-        docs.select(col("doc_id"), col("text")), percolateStore(nQueries))
-    // r20 (the dispatch crossover, r19 verdict #6): the SAME fleet through
-    // the two large-store forms. The NAIVE postings join measured WORSE
-    // than the row form and store-linear (23 s @ 1k, 206 s @ 10k, task
-    // failure @ 100k): on this fixture's ~30-term vocabulary every real
-    // term is hot, so the any-shared-term candidate space is
-    // ~docs × queries / |vocab| — kept at 1k/10k as the documented
-    // anti-pattern. The SELECTIVE form anchors each query on its
-    // lowest-df term (the 199-in-200 "alert<i>" fleets anchor on a
-    // df-0 term and generate ZERO candidates), so its wall should be
-    // ~flat: the fixed corpus-df aggregate plus Σ_q df(anchor_q).
-    def percolatePostingsProbe(nQueries: Int): DataFrame =
-      graft.streaming.Percolator.matchDocsPostings(
-        docs.select(col("doc_id"), col("text")), percolateStore(nQueries))
-    def percolateSelectiveProbe(nQueries: Int): DataFrame =
-      graft.streaming.Percolator.matchDocsSelective(
-        docs.select(col("doc_id"), col("text")), percolateStore(nQueries))
+    def percolate(matcher: (DataFrame, DataFrame) => DataFrame,
+        nQueries: Int): DataFrame =
+      matcher(docs.select(col("doc_id"), col("text")), percolateStore(nQueries))
 
-    // j11 at xf× vocabulary (see the j11_fuzzy_shape entry): distinct
-    // customer names, each copy carrying its rep digits TRIPLED (" r777"),
-    // so any two distinct suffixes differ by ≥ 2 edits (same-length reps
-    // differ in ≥ 3 tripled positions; different-length reps differ by ≥ 3
-    // length) — cross-copy names never form distance-1 pairs, and the true
-    // pair set is exactly xf copies of the originals.
-    def j11At(x: Int): DataFrame =
-      graft.operators.FuzzyJoin.editDistance1Pairs(
-        Tables(spark, sfDir, "customer").select(col("c_name")).distinct()
-          .withColumn("rep", explode(sequence(lit(0L), lit(x - 1L))))
-          .select(concat(col("c_name"), lit(" r"),
-            repeat(col("rep").cast("string"), 3)).as("c_name"))
-          .repartition(nPart))
+    // d7 codebooks: the fine one (every 250th vector) crosses the
+    // ivfFromCentroids dial at probe density, so the auto-select must track
+    // the IVF shape, not the exact one; IVF's coarse level is every 2000th.
+    def codebook(every: Long, id: String, vec: String): DataFrame =
+      emb.filter(pmod(col("vec_id"), lit(every)) === 0)
+        .select(col("vec_id").as(id),
+          transform(col("embedding"), _.cast("double")).as(vec))
+    val docsLinear = Tables(spark, xfDir, "documents_linear")
+    val blocks = Seq(col("lang"), col("source"))
 
-    // Thunks, not frames: the components probe runs its label-propagation
-    // actions during construction, so the clock must wrap the call itself.
-    val probes: Seq[(String, () => DataFrame)] = Seq[(String, () => DataFrame)](
-      "h1_shape" -> (() => lineitem
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(cents(col("l_quantity"))).as("sum_qty_cents"),
-          sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-            .as("sum_disc_price_cents"),
-          count(lit(1)).as("n"))),
-      "j2_shape" -> (() => lineitem
-        .join(orders, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"),
-          sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-            .as("revenue_cents"))),
-      "h3_shape" -> (() => customer
-        .filter(col("c_mktsegment") === "BUILDING")
-        .join(orders, col("c_custkey") === col("o_custkey"))
-        .join(lineitem, col("o_orderkey") === col("l_orderkey"))
-        .filter(col("l_shipdate") > col("o_orderdate"))
-        .groupBy(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-          .as("revenue_cents"))
-        .orderBy(col("revenue_cents").desc, col("o_orderkey"))
-        .limit(20)),
-      "d2_minhash_lsh_shape" -> (() => graft.dedup.MinHashDedup.candidatePairs(
-        docs, col("doc_id"), col("text"))),
-      // r13 addition: EXACT AllPairs prefix filtering at 10× dense
-      // duplication — every original doc becomes a 10-member family at
-      // J ≈ 0.98, the worst-case candidate density for t=0.8. Structural
-      // claim under test: the candidate stream stays ~family-pair-sized
-      // (prefixes hold each doc's rarest ~sz/5 bigrams) instead of the full
-      // Σ df² postings pair space, and the map-side array-intersect verify
-      // absorbs the rest. A super-linear result here means the prefix
-      // window or the length filter regressed.
-      // r18 addition: incremental dedup of a 5% batch against the persisted
-      // 95% signature index (d13's shape). Structural claim under test:
-      // shingle/hash/band work is paid only for the BATCH; the store
-      // contributes a band-index scan + the candidate-bounded signature
-      // joins — so wall time must sit far under the full-recompute twin
-      // (d2_minhash_lsh_shape, same corpus) and track batch size, not
-      // corpus size. The 100 TB posture for daily ingest dedup.
-      "d13_incremental_shape" -> (() =>
-        graft.dedup.Dedup.incrementalMinhashPairsBanded(
-          docs.filter(pmod(col("doc_id"), lit(20L)) === 0),
-          col("doc_id"), col("text"),
-          spark.read.parquet(s"$d13Idx/sigs"),
-          spark.read.parquet(s"$d13Idx/bands"))),
-      // r19 (r18 verdict #7): the same constant-yield batch against the 1×
-      // and xf× stores (staging comment above). The PAIR is the claim: a
-      // ~flat wall across the two means the grown store costs only its
-      // scan; a widening gap means a shuffle crept onto the store side.
-      "d13_stream_store1x_shape" -> (() =>
-        graft.dedup.Dedup.incrementalMinhashPairsBanded(
-          docs.filter(pmod(col("doc_id"), lit(xf.toLong)) === 0 &&
-            pmod(expr(s"doc_id div $xf"), lit(20L)) === 0),
-          col("doc_id"), col("text"),
-          spark.read.parquet(s"$d13Idx/sigs1x"),
-          spark.read.parquet(s"$d13Idx/bands1x"))),
-      "d13_stream_storeNx_shape" -> (() =>
-        graft.dedup.Dedup.incrementalMinhashPairsBanded(
-          docs.filter(pmod(col("doc_id"), lit(xf.toLong)) === 0 &&
-            pmod(expr(s"doc_id div $xf"), lit(20L)) === 0),
-          col("doc_id"), col("text"),
-          spark.read.parquet(s"$d13Idx/sigsNx"),
-          spark.read.parquet(s"$d13Idx/bandsNx"))),
-      "d2_prefix_shape" -> (() => graft.dedup.Dedup.jaccardPairsPrefix(
-        docs, col("doc_id"), col("text"), 0.8)),
-      // r20 (r19 verdict #3): the LINEAR-growth fixture for the prefix
-      // family. The replication fixture above grows TRUE pairs ∝ xf²
-      // (every original doc becomes an xf-member near-dup family), so its
-      // wall step conflates plan cost with output volume — d12's 1.70 step
-      // at 30× tracked candidates exactly. Here the corpus grows by adding
-      // NEW documents instead: each rep's tokens are salted with a
-      // family id (rep div 2), so reps (0,1), (2,3), … form disjoint
-      // 2-member near-dup families with DISJOINT vocabularies — true pairs
-      // and candidates grow ∝ xf (one pair per family), vocabulary grows
-      // with the corpus, per-term df stays flat (the real shape of a web
-      // corpus growing by crawl, where new pages bring new vocabulary).
-      // A wall step ≳ xf-ratio here is PLAN cost, not output volume.
+    // Thunks, not frames: some shapes run actions during construction, so
+    // the clock must wrap the call itself.
+    val shapes: Seq[(String, () => DataFrame)] = Seq[(String, () => DataFrame)](
+      "d13_incremental_shape" -> (() => d13Probe(
+        docs.filter(pmod(col("doc_id"), lit(20L)) === 0), "")),
+      "d13_stream_store1x_shape" -> (() => d13Probe(familyBatch, "1x")),
+      "d13_stream_storeNx_shape" -> (() => d13Probe(familyBatch, "Nx")),
       "d2_prefix_linear_shape" -> (() => graft.dedup.Dedup.jaccardPairsPrefix(
         docsLinear, col("doc_id"), col("text"), 0.8)),
       "d12_prefix_linear_shape" -> (() =>
         graft.dedup.Dedup.containmentPairsPrefix(
           docsLinear, col("doc_id"), col("text"), 0.8)),
-      // the same operator under the PRODUCTION blocking the d2 registry
-      // query uses (lang × source): per-block df collapses ~20×, candidate
-      // volume ~400× — the delta between these two probes measures exactly
-      // how much the prefix family depends on token-universe size, the
-      // honest boundary of the technique (see BASELINE.md r13).
+      // the prefix family under the production blocking (lang × source) on
+      // the dense replicated corpus: per-block df collapses ~20×, so the
+      // pair measures how much the technique depends on token-universe size
       "d2_prefix_blocked_shape" -> (() => graft.dedup.Dedup.jaccardPairsPrefix(
-        docs, col("doc_id"), col("text"), 0.8,
-        Seq(col("lang"), col("source")))),
-      // r17 addition: the containment twin (r16's new scale path) under the
-      // same production blocking. Structural claim under test: the
-      // asymmetric prefix(S) ⋈ full-postings join — the part the jaccard
-      // twin doesn't have — stays bounded by the prefix-term semi-join
-      // prune + per-block df at 10× density; a super-linear result means
-      // the probe-side prune or the sz guard regressed. (Unblocked, the
-      // full-postings side inherits the same low-entropy boundary as
-      // d2_prefix_shape — blocking or LSH is the documented rule there.)
+        docs, col("doc_id"), col("text"), 0.8, blocks)),
       "d12_containment_prefix_blocked_shape" -> (() =>
         graft.dedup.Dedup.containmentPairsPrefix(
-          docs, col("doc_id"), col("text"), 0.8,
-          Seq(col("lang"), col("source")))),
-      // r15 addition: the registry d2 shape (blocked exact postings
-      // Jaccard; auto-prune flips ON at this 50k-doc size) under BOTH pair
-      // aggregation strategies — the sort/window form that replaced the
-      // hash aggregate this round vs the retained hash form. Structural
-      // claim under test: the sort form's extra full-width pair-stream
-      // exchange stays ~linear at 10× density (its rows are two longs),
-      // i.e. robustness under pressure was not bought with a scale cliff.
+          docs, col("doc_id"), col("text"), 0.8, blocks)),
+      // exact blocked Jaccard under BOTH pair-count strategies: the sort
+      // form's extra pair-stream exchange must stay ~linear at xf× density
       "d2_jaccard_sortagg_shape" -> (() => graft.dedup.Dedup.jaccardPairs(
-        docs, col("doc_id"), col("text"), 0.5,
-        Seq(col("lang"), col("source")))),
+        docs, col("doc_id"), col("text"), 0.5, blocks)),
       "d2_jaccard_hashagg_shape" -> (() => graft.dedup.Dedup.jaccardPairs(
-        docs, col("doc_id"), col("text"), 0.5,
-        Seq(col("lang"), col("source")), sortAgg = false)),
-      // r13 addition: interval-overlap join at 10×. expand() remaps only
-      // l_orderkey, so each part keeps its key and sees 10× the lineitems —
-      // per-(part, bin) density grows 10× and the TRUE overlap-pair count
-      // grows ~100× (quadratic in density — semantic output growth, not an
-      // operator cliff; same bookkeeping as m3's doc-level enumeration).
-      // The structural claim under test: the join stays a (partkey, bin)
-      // hash join — no BNLJ/cartesian flip, no dedup shuffle — so wall
-      // time tracks the candidate/output volume and nothing worse.
-      "j13_interval_shape" -> (() => {
-        def iv(p: String) = lineitem.select(
-            col("l_partkey").as(s"${p}part"), col("l_suppkey").as(s"${p}supp"),
-            (col("l_orderkey") * 10 + col("l_linenumber")).cast("long").as(s"${p}id"),
-            datediff(col("l_shipdate").cast("date"),
-              to_date(lit("1970-01-01"))).cast("long").as(s"${p}lo"),
-            col("l_quantity").cast("long").as(s"${p}q"))
-          .withColumn(s"${p}hi", col(s"${p}lo") + col(s"${p}q"))
-          .drop(s"${p}q")
-        graft.operators.RangeJoin.intervalOverlap(
-            iv("a"), "alo", "ahi", iv("b"), "blo", "bhi", 32L,
-            Seq(("apart", "bpart")))
-          .filter(col("asupp") =!= col("bsupp") && col("aid") < col("bid"))
-      }),
-      // r22 (r21 verdict #7): fuzzy self-join at xf× vocabulary. Each copy
-      // appends a 3-char rep-distinct suffix, so cross-copy names sit at
-      // edit distance ≥ 3 and NEVER pair: the true pair set is exactly xf
-      // copies of the original distance-1 pairs. The claim under test is
-      // the r19 finding that the candidate stream — O(names × length)
-      // deletion-neighborhood keys, never the O(n²) pair space — is the
-      // cost: wall should track the xf× key volume, and rows_out (printed
-      // below) pins that output grew xf× and not quadratically.
-      "j11_fuzzy_shape" -> (() => j11At(xf)),
-      // the round-8 addition: pairs → connected components at 10× density —
-      // every original doc is a 10-member family, so the label-propagation
+        docs, col("doc_id"), col("text"), 0.5, blocks, sortAgg = false)),
+      // fuzzy self-join at xf× vocabulary: the candidate stream (names ×
+      // length deletion keys, never the pair space) is the cost, so wall
+      // should track the xf× key volume (rows_out pins output grew xf×)
+      "j11_fuzzy_shape" -> (() => graft.operators.FuzzyJoin.editDistance1Pairs(
+        Tables(spark, xfDir, "customer_names"))),
+      // pairs → connected components at xf× density: the label-propagation
       // rounds (logged) must stay ~graph-diameter flat, not grow with xf
       "d3_components_shape" -> (() => {
         val pairs = graft.dedup.MinHashDedup.candidatePairs(
@@ -426,363 +339,72 @@ object ScaleProbe {
         println(s"[scaleprobe] d3_components_shape rounds=$rounds")
         labels
       }),
-      "v9_knn_join_shape" -> (() => graft.similarity.Ann.knnJoinLshMd5(
-        emb, col("vec_id"), col("embedding"), k = 5)),
-      // r19 (r18 verdict #6): the j9 bucket-count DIAL, measured. The
-      // committed 30× step attributed j9's 4.44× wall over 3× data to the
-      // one-time bucketed WRITE sorting 18 M rows into a FIXED 8 buckets
-      // (per-bucket sort leaves memory and spills); the documented
-      // production dial is buckets ∝ data. Two shapes over the SAME
-      // derived tables: fixed 8 vs next-pow2(8·xf/10) (8 at 10×, 32 at
-      // 30×). Claims under test: (a) the dialed write's per-bucket sort
-      // fits memory again, so its wall at 30× drops toward the linear
-      // step; (b) the read-side join is Exchange-free at EITHER bucket
-      // count (exchange count printed; only the final groupBy exchanges).
+      // fixed 8 buckets vs next-pow2(8·xf/10): the dialed write's
+      // per-bucket sort must fit memory again, and the read-side join is
+      // Exchange-free at EITHER count
       "j9_bucket_fixed8_shape" -> (() => j9Probe(8)),
       "j9_bucket_dial_shape" -> (() => j9Probe(dialBuckets)),
-      // r19 stretch (r18 verdict #8): percolator at the ES alerting-fleet
-      // store size. t23/t31 gate correctness on a 10×2-term store; these
-      // probe the ROW-form matcher (Percolator.matchDocs — broadcast store,
-      // stateless scan) at 10³ and 10⁴ registered queries over the 10×
-      // corpus. Per-doc cost is store-linear BY CONSTRUCTION, so the pair
-      // measures the slope; queries are mostly non-matching (one synthetic
-      // term each — the realistic alerting posture) with a seeded matchable
-      // handful so the hit path executes. The store row is ~60 B compiled
-      // (two terms + id), so 10⁴ queries broadcast at ~1 MB: the 8 GB
-      // broadcast ceiling sits near 10⁸ registered queries — far beyond any
-      // alerting fleet; past it (or past where the scan slope hurts) the
-      // documented fallback is t23's postings-join form, whose cost scales
-      // with MATCHING pairs instead of docs × queries.
-      "t31_percolate_1k_shape" -> (() => percolateProbe(1000)),
-      "t31_percolate_10k_shape" -> (() => percolateProbe(10000)),
-      "t31_postings_1k_shape" -> (() => percolatePostingsProbe(1000)),
-      "t31_postings_10k_shape" -> (() => percolatePostingsProbe(10000)),
-      "t31_selective_1k_shape" -> (() => percolateSelectiveProbe(1000)),
-      "t31_selective_10k_shape" -> (() => percolateSelectiveProbe(10000)),
-      "t31_selective_100k_shape" -> (() => percolateSelectiveProbe(100000)),
-      // round-9 additions: the MG sketch must absorb 10× stream length with
-      // the same ≤k driver state (candidate count bounded by construction),
-      // and PQ at scale trains on a SAMPLE (the production posture — the
-      // codebook is a distribution estimate, not a corpus function) before
-      // encoding + ADC-searching the full 10× corpus
-      "a12_mg_shape" -> (() => graft.operators.HeavyHitters.exactViaSketch(
-        docs.select(explode(
-          graft.functions.TextFunctions.tokens(col("text"))).as("term")),
-        col("term"), phi = 200, k = 256)),
-      // round-9 quality-signal additions: span coverage under DENSE
-      // duplication (every original 8-span occurs in all 10 copies, so the
-      // dup table is ~the whole span stream — worst case for the join-back),
-      // and BPE pair counting over a 10× token stream (vocab grows only by
-      // the per-rep variant tokens; the agg must absorb the stream, the
-      // 1-row winner broadcast is scale-free)
-      "d6_dup_span_shape" -> (() => graft.dedup.Dedup.dupSpanCoverage(
-        docsRaw, col("doc_id"), col("text"), k = 8)),
-      // r19: the removal twin (d14) under the same dense duplication — d6's
-      // span window plus the per-doc position collect + one doc_id-keyed
-      // join-back with a map-side positional excision. Structural claim
-      // under test: the extra stages stay keyed by doc_id (removed-position
-      // sets bounded by doc length, never a pair space), so the delta over
-      // d6_dup_span_shape is ~the join-back, linear in corpus size.
-      "d14_span_removal_shape" -> (() => graft.dedup.Dedup.dupSpanRemoval(
-        docsRaw, col("doc_id"), col("text"), k = 8)),
-      // rounds=20 (real tokenizers run thousands; 3 was round 9's smoke
-      // depth): with the every-10-rounds seq checkpoint, wall time must stay
-      // ~linear in rounds and the plan tree bounded — a super-linear result
-      // here means the lineage truncation regressed
-      "x13_bpe_shape" -> (() => {
-        val vocab = docs.select(explode(
-          graft.functions.TextFunctions.tokens(col("text"))).as("word"))
-          .groupBy(col("word")).agg(count(lit(1)).as("c"))
-        graft.pipeline.Bpe.merges(vocab, rounds = 20)
-      }),
-      // d7 under 10× density: every original vector becomes a 10-member
-      // near-identical angular family, so within-cluster pair work is the
-      // dense case; the centroid count is the dial that keeps clusters
-      // bounded at scale
-      "d7_semantic_shape" -> (() => {
-        val cents = emb.filter(pmod(col("vec_id"), lit(250L)) === 0)
-          .select(col("vec_id").as("cid"),
-            transform(col("embedding"), _.cast("double")).as("cvec"))
-        graft.similarity.Ann.semanticDedupPairs(
-          emb, col("vec_id"), col("embedding"), cents, threshold = 0.4)
-      }),
-      // d7 with IVF-ASSISTED assignment — the named fix for the n×k
-      // assignment wall the 10× probe pinned (22.4 s, dominated by exact
-      // argmin over k ∝ corpus centroids). Coarse = every 8th fine centroid
-      // (c ≈ k/8), nProbe=2: per-vector work drops from k to c + 2·k/c
-      // candidates. Same pair stage; the probe's delta vs d7_semantic_shape
-      // IS the assignment saving, and it must widen with xf.
-      // d7 through the REGISTERED auto-select (r20 verdict #6): at probe
-      // density the fine codebook (every 250th vector) crosses the
-      // ivfFromCentroids=64 dial, so this must track d7_semantic_ivf_shape,
-      // not d7_semantic_shape — the probe pair IS the evidence the dial
-      // picks the IVF branch at 10×/30×.
-      "d7_semantic_auto_shape" -> (() => {
-        val cents = emb.filter(pmod(col("vec_id"), lit(250L)) === 0)
-          .select(col("vec_id").as("cid"),
-            transform(col("embedding"), _.cast("double")).as("cvec"))
-        graft.similarity.Ann.semanticDedupPairsAuto(
-          emb, col("vec_id"), col("embedding"), cents, threshold = 0.4)
-      }),
-      "d7_semantic_ivf_shape" -> (() => {
-        val cents = emb.filter(pmod(col("vec_id"), lit(250L)) === 0)
-          .select(col("vec_id").as("cid"),
-            transform(col("embedding"), _.cast("double")).as("cvec"))
-        val coarse = emb.filter(pmod(col("vec_id"), lit(2000L)) === 0)
-          .select(col("vec_id").as("ccid"),
-            transform(col("embedding"), _.cast("double")).as("ccvec"))
-        graft.similarity.Ann.semanticDedupPairsIvf(
-          emb, col("vec_id"), col("embedding"), cents, coarse,
-          nProbe = 2, threshold = 0.4)
-      }),
-      // m3 under 10× low-entropy payloads: the corpus collapses onto few
-      // distinct phashes, which ran the doc-level pair enumeration at 459 s
-      // (a measured cliff, kept on record in BASELINE.md). The scale path
-      // enumerates candidates over DISTINCT hashes, so multiplicity costs
-      // nothing — this probe pins that it stays in seconds.
-      "m3_phash_shape" -> (() => {
-        implicit val sp = spark
-        val media = graft.multimodal.Multimodal.toMedia(docs, "doc_id", "text")
-        graft.multimodal.Multimodal.phashPairsDistinct(
-          graft.multimodal.Multimodal.perceptualHash(media), maxHamming = 2)
-      }),
-      // x18 manifest under xf: the r11 verdict pinned the old flat digest as
-      // OOM-by-construction (one collect_list buffer per shard). The
-      // hierarchical prefix digest must scale ~linearly in corpus size with
-      // bounded buffers — a super-linear result here means a roll-up level
-      // collapsed back into an unbounded aggregation.
-      "x18_manifest_shape" -> (() => graft.pipeline.DataSplit.shardManifest(
-        docs.select(col("doc_id"),
-          graft.functions.TextFunctions.tokenCount(col("text")).as("n_tok")),
-        col("doc_id"), nShards = 8,
-        sums = Seq("n_tokens" -> col("n_tok")))),
-      "v11_pq_shape" -> (() => {
-        val sample = emb.filter(pmod(col("vec_id"), lit(10L)) === 0)
-        val cb = graft.similarity.Pq.train(
-          sample, col("vec_id"), col("embedding"), m = 4, k = 16)
-        val enc = graft.similarity.Pq.encode(
-          emb, col("vec_id"), col("embedding"), cb)
-        val query = emb.filter(col("vec_id") === 0)
-          .select(col("embedding")).head().getSeq[Float](0).toArray
-        graft.similarity.Pq.knnAdcRerank(enc, emb, col("vec_id"),
-          col("embedding"), col("codes"), query, cb,
-          topK = 10, shortlist = 1000)
-      }),
-      // r17 addition: ColBERT MaxSim late interaction at 10× via the
-      // shortlist (retrieve-then-rerank) path — the 100 TB posture of
-      // v19_maxsim. Doc "bags" are 8 consecutive embedding rows; the query
-      // is 4 broadcast token vectors. Structural claim under test: stage 1
-      // is one mean-pool aggregate + broadcast cosine + TakeOrdered over
-      // 10× docs (linear), and stage 2's exact MaxSim fan-out is bounded by
-      // shortlist × |q| regardless of corpus size — wall time must track
-      // the pooled scan, not the token cross-product.
-      "v19_maxsim_shape" -> (() => {
-        val docToks = emb.select((col("vec_id") / 8).cast("long").as("doc"),
-          col("embedding"))
-        val q = emb.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("qt"), col("embedding").as("qv"))
-        graft.similarity.Ann.maxsimTopK(docToks, col("doc"), col("embedding"),
-          q, col("qt"), col("qv"), k = 50, shortlist = 200)
-      }),
-      // r14 addition: the per-group top-k pair at 10× — the window
-      // composition shuffles ALL 10× rows and sorts each of the 5 groups on
-      // ≤5 cores (per-group parallelism = group count), while the native
-      // heap operator prunes to k per group per input partition map-side
-      // and shuffles only partitions × groups × k candidates. The delta IS
-      // TopKPerGroup's scale claim, measured; the conf-gated rank-limit
-      // rewrite produces the native plan from the window syntax, so its
-      // win equals this delta by construction (plan equality pinned in
-      // TopKNativeSpec).
-      "o3_window_topk_shape" -> (() => {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("o_orderpriority"))
-          .orderBy(cents(col("o_totalprice")).desc, col("o_orderkey"))
-        orders.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 10).drop("rn")
-      }),
-      "o4_native_topk_shape" -> (() => graft.operators.TopK.perGroup(
-        orders, 10, group = Seq(col("o_orderpriority")),
-        order = Seq(cents(col("o_totalprice")).desc, col("o_orderkey")))),
+      "t31_percolate_1k_shape" -> (() => percolate(matchDocs, 1000)),
+      "t31_percolate_10k_shape" -> (() => percolate(matchDocs, 10000)),
+      "t31_postings_1k_shape" -> (() => percolate(matchDocsPostings, 1000)),
+      "t31_postings_10k_shape" -> (() => percolate(matchDocsPostings, 10000)),
+      "t31_selective_1k_shape" -> (() => percolate(matchDocsSelective, 1000)),
+      "t31_selective_10k_shape" -> (() => percolate(matchDocsSelective, 10000)),
+      "t31_selective_100k_shape" -> (() => percolate(matchDocsSelective, 100000)),
+      // d7 exact vs registered auto-select vs IVF-assisted assignment
+      // (nProbe=2: per-vector work drops from k to c + 2·k/c candidates)
+      "d7_semantic_shape" -> (() => graft.similarity.Ann.semanticDedupPairs(
+        emb, col("vec_id"), col("embedding"), codebook(250L, "cid", "cvec"),
+        threshold = 0.4)),
+      "d7_semantic_auto_shape" -> (() =>
+        graft.similarity.Ann.semanticDedupPairsAuto(emb, col("vec_id"),
+          col("embedding"), codebook(250L, "cid", "cvec"), threshold = 0.4)),
+      "d7_semantic_ivf_shape" -> (() =>
+        graft.similarity.Ann.semanticDedupPairsIvf(emb, col("vec_id"),
+          col("embedding"), codebook(250L, "cid", "cvec"),
+          codebook(2000L, "ccid", "ccvec"), nProbe = 2, threshold = 0.4)))
 
-      // x28's scale concern is explicit: the edge-derivation window
-      // partitions by event_type (5 groups), so at 10× each partition's
-      // sort is 10× — the one low-cardinality window in the registry —
-      // and each power iteration is a join + v-keyed agg over 10× edges.
-      "x28_pagerank_shape" -> (() => {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
-        val edges = events
-          .select(col("event_type"), col("ts"), col("event_id"),
-            col("user_id").as("u"))
-          .withColumn("v", lead(col("u"), 1).over(w))
-          .filter(col("v").isNotNull && col("v") =!= col("u"))
-          .groupBy(col("u"), col("v")).agg(count(lit(1)).as("cnt"))
-        val out = edges.groupBy(col("u")).agg(sum(col("cnt")).as("outc"))
-        val nodes = events.select(col("user_id").as("node")).distinct()
-        val nN = math.max(1L, nodes.count())
-        def step(r: DataFrame): DataFrame = {
-          val contrib = edges.join(out, "u")
-            .join(r.withColumnRenamed("node", "u"), "u")
-            .select(col("v"), expr("(rank * cnt) div outc").as("c"))
-            .groupBy(col("v")).agg(sum(col("c")).as("sc"))
-          nodes.join(contrib.withColumnRenamed("v", "node"), Seq("node"), "left")
-            .select(col("node"), (lit(150000000000000L / nN)
-              + expr("(85 * coalesce(sc, 0)) div 100")).as("rank"))
-        }
-        step(step(step(nodes.select(col("node"),
-            lit(1000000000000000L / nN).as("rank")))))
-          .orderBy(col("rank").desc, col("node")).limit(20)
-      }),
-
-      // w12's shape is the GOOD scale case (per-user window: 10× keys,
-      // constant per-key size) — probe pins that it scales linearly.
-      "w12_attribution_shape" -> (() => {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-        events.select(col("event_id"), col("user_id"), col("event_type"),
-            expr("unix_micros(ts)").as("us"))
-          .withColumn("click_us",
-            last(when(col("event_type") === "click", col("us")),
-              ignoreNulls = true).over(w))
-          .filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"),
-            (col("us") - col("click_us")).as("gap_us"))
-      }),
-
-      // t40: md5-hash dedup window (10× hash groups, all singletons on the
-      // variant-suffixed corpus) + the map-side array_distinct token agg.
-      "t40_sigtext_shape" -> (() => {
-        val keep = org.apache.spark.sql.expressions.Window
-          .partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-        val uniq = docs.withColumn("rn", row_number().over(keep))
-          .filter(col("rn") === 1)
-        val tf = graft.functions.TextFunctions.tokens(col("text"))
-        val toks = uniq.select(array_contains(tf, "join").as("fg"),
-          explode(array_distinct(tf)).as("term"))
-        val nn = uniq.agg(count(lit(1)).cast("long").as("n_bg"),
-          sum(when(array_contains(tf, "join"), 1L).otherwise(0L)).as("n_fg"))
-        toks.groupBy(col("term"))
-          .agg(count(lit(1)).as("df_bg"),
-            sum(when(col("fg"), 1L).otherwise(0L)).as("df_fg"))
-          .filter(col("df_fg") >= 5).crossJoin(broadcast(nn))
-          .withColumn("fr", col("df_fg").cast("double") / col("n_fg").cast("double"))
-          .withColumn("br", col("df_bg").cast("double") / col("n_bg").cast("double"))
-          .withColumn("chi2", (col("fr") - col("br")) * (col("fr") - col("br"))
-            / (col("fr") + col("br")))
-          .orderBy(col("chi2").desc, col("term")).limit(25)
-      }),
-
-      // r17 addition: JL random-projection retrieval at 10× embeddings —
-      // v20's shape. Structural claim under test: stage 1 is a map-side
-      // 32-fold projection + broadcast 1-row query + TakeOrdered(100) over
-      // 10× vectors (linear, no corpus shuffle), and stage 2's exact
-      // rerank is shortlist-bounded regardless of corpus size. The sign
-      // matrix is a plan literal, so there is no join to flip strategies.
-      "v20_jl_shape" -> (() => {
-        val signs: Seq[Seq[Double]] = (0 until 32).map { j =>
-          (0 until 64).map { i =>
-            val dig = java.security.MessageDigest.getInstance("MD5")
-              .digest(s"${j}_${i}".getBytes("UTF-8"))
-            if (((dig(0) >> 4) & 0xf) < 8) 1.0 else -1.0
-          }
-        }
-        def dotD(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-          graft.functions.VectorFunctions.dotNativeD(a, b)
-        val p = emb.select(col("vec_id"), col("embedding"),
-          graft.functions.VectorFunctions
-            .projectNative(col("embedding"), signs).as("p"))
-          .withColumn("pn", sqrt(dotD(col("p"), col("p"))))
-        val q = p.filter(col("vec_id") === 0)
-          .select(col("p").as("qp"), col("pn").as("qn"),
-            col("embedding").as("qv"))
-        p.filter(col("vec_id") =!= 0)
-          .crossJoin(broadcast(q))
-          .select(col("vec_id"), col("embedding"), col("qv"),
-            (dotD(col("p"), col("qp")) / (col("pn") * col("qn"))).as("pc"))
-          .orderBy(col("pc").desc, col("vec_id"))
-          .limit(100)
-          .select(col("vec_id"),
-            graft.functions.VectorFunctions.cosineNative(
-              col("embedding"), col("qv")).as("c"))
-          .orderBy(col("c").desc, col("vec_id"))
-          .limit(10)
-      }),
-
-      // r17 addition: DoReMi EG reweighting over 10× docs — x33's shape.
-      // Structural claim under test: ONE partial-aggregable corpus pass
-      // builds the (domain × shard) micro-sum summary and everything after
-      // runs on that tiny table, so wall time tracks the scan. (source is
-      // NOT replicated by expand(), so domain count stays fixed while the
-      // per-domain mass grows 10× — the realistic direction.)
-      "x33_reweight_shape" -> (() => {
-        val base = docsRaw
-          .select(col("doc_id"), col("source"), length(col("text")).as("nc"),
-            size(filter(split(col("text"), " "), t => t =!= lit("")))
-              .as("nw"))
-          .filter(col("nw") > 0)
-        val b = base.select(col("source").as("domain"),
-          (conv(substring(md5(concat(lit("shard:"),
-            col("doc_id").cast("string"))), 1, 15), 16, 10)
-            .cast("long") % 3).as("sh"),
-          floor(col("nc").cast("double") / col("nw") * lit(1000000.0)
-            + lit(0.5)).cast("long").as("xm"))
-        val cells = b.groupBy(col("domain"), col("sh"))
-          .agg(sum(col("xm")).as("sm"), count(lit(1)).as("n"))
-          .withColumn("m",
-            round(col("sm").cast("double") / lit(1000000.0) / col("n"), 6))
-        val piv = cells.groupBy(col("domain")).agg(
-          max(when(col("sh") === 0, col("m"))).as("m1"),
-          max(when(col("sh") === 1, col("m"))).as("m2"),
-          max(when(col("sh") === 2, col("m"))).as("m3"),
-          round(sum(col("sm")).cast("double") / lit(1000000.0)
-            / sum(col("n")), 6).as("ref_loss"))
-        def a(prev: org.apache.spark.sql.Column, m: String) =
-          floor(prev.cast("double") *
-            exp(greatest(coalesce(col(m), col("ref_loss")) - col("ref_loss"),
-              lit(0.0))) + lit(0.5)).cast("long")
-        val chain = piv
-          .withColumn("a1", a(lit(1000000L), "m1"))
-          .withColumn("a2", a(col("a1"), "m2"))
-          .withColumn("a3", a(col("a2"), "m3"))
-        chain.crossJoin(broadcast(chain.agg(sum(col("a3")).as("tot"))))
-          .select(col("domain"),
-            round(col("a3").cast("double") / col("tot").cast("double"), 6)
-              .as("weight"))
-      }))
-
-    // Optional comma-separated shape filter for local iteration (mirrors
-    // Bench's SPARK_GRAFT_BENCH_ONLY). Filtered runs are for attribution
-    // only — the committed artifacts always carry the full shape set.
-    val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val timed = probes.filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, mk) =>
-      val t0 = System.nanoTime()
-      val sec =
-        try {
-          mk().write.mode("overwrite").format("noop").save()
-          math.rint((System.nanoTime() - t0) / 1e6) / 1e3
-        } catch { case t: Throwable =>
-          println(s"[scaleprobe] $name FAILED: $t"); -1.0
-        }
-        finally Caches.unpersistAll()
-      System.gc()
-      println(s"[scaleprobe] $name: ${sec}s")
-      name -> sec
+    // warm the file-listing/codegen paths once per dir
+    Tables.names.foreach { t =>
+      try { Tables(spark, sfDir, t).count(); Tables(spark, xfDir, t).count(); () }
+      catch { case _: Throwable => () }
     }
-    val qs = timed.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
 
-    // LSH candidate RECALL at scale (r11 verdict item #7): cost scaling was
-    // measured, quality scaling was not — and the replicated corpus's dense
-    // buckets are exactly where recall quietly degrades. Ground truth is
-    // anchored, not all-pairs (all-pairs exact Jaccard is the quadratic
-    // blow-up the LSH exists to avoid): ~1% of docs are anchors, their
-    // exact shingle-Jaccard >= 0.8 partners over the whole corpus are the
-    // true pairs, and recall is the fraction of those the banded candidate
-    // stream (minEstJaccard=0, same dial as the fixture spec) surfaces.
-    val recallJson =
-      if (only.forall(_.contains("d2_minhash_recall"))) {
+    def mb(r: Either[Harness.Failure, (Double, Long, Long)]) =
+      r.fold(_ => "-", v => s"${v._2 / 1048576}MB")
+    val queries = Queries.filter(wanted).map { name =>
+      val fn = SparkEntry.queries(name)
+      // min wall over the reps, with that run's bytes (bytes are
+      // plan-determined; the min wall is the least-contended reading); any
+      // failed rep fails the entry
+      def best(tag: String, dir: String) = {
+        val rs = (1 to reps).map(_ => run(fn(spark, dir)))
+        val r = rs.collectFirst { case Left(f) => Left(f) }
+          .getOrElse(Right(rs.collect { case Right(v) => v }.minBy(_._1)))
+        r.left.foreach(f => failures(s"$name@$tag") = f)
+        r
+      }
+      val base = best("base", sfDir)
+      val scaled = best("xf", xfDir)
+      println(s"[scaleprobe] $name base=${base.fold(_ => -1.0, _._1)}s " +
+        s"xf=${scaled.fold(_ => -1.0, _._1)}s shuffleR ${mb(base)} -> ${mb(scaled)}")
+      (name, base, scaled)
+    }
+    val shapeRuns = shapes.filter { case (n, _) => wanted(n) }.map { case (name, mk) =>
+      val r = run(mk())
+      r.left.foreach(f => failures(name) = f)
+      println(s"[scaleprobe] $name: ${r.fold(f => s"FAILED $f", v => s"${v._1}s")}")
+      (name, r)
+    }
+
+    // LSH candidate RECALL at scale: the replicated corpus's dense buckets
+    // are exactly where recall quietly degrades. Ground truth is anchored,
+    // not all-pairs (that is the quadratic blow-up LSH exists to avoid):
+    // ~1% of docs are anchors, their exact shingle-Jaccard >= 0.8 partners
+    // over the whole corpus are the true pairs, and recall is the fraction
+    // the banded candidate stream (minEstJaccard=0) surfaces.
+    val recallJson = (if (!wanted("d2_minhash_recall")) None
+      else attempt("d2_minhash_recall") {
         val toks = docs.select(col("doc_id"),
             explode(graft.functions.TextFunctions.shingles(col("text"), 3)).as("t"))
           .distinct()
@@ -807,65 +429,58 @@ object ScaleProbe {
           .select(col("da"), col("db"))
         val total = exact.count()
         val hit = exact.join(cand, Seq("da", "db"), "semi").count()
-        Caches.unpersistAll()
         val recall = if (total == 0) -1.0 else hit.toDouble / total
         println(s"[scaleprobe] d2_minhash_lsh_recall=$recall ($hit/$total anchored true pairs)")
         s""","recall":{"d2_minhash_lsh":$recall,"true_pairs":$total,"recalled":$hit}"""
-      } else ""
+      }).getOrElse("")
 
-    // rows-out for the two "the candidate/output stream IS the cost"
-    // claims (r21 verdict #7): pin output growth next to the wall number so
-    // the linear-wall claim is checkable — j11 output must grow ~xf× (the
-    // suffix construction makes cross-copy pairs impossible), j13 ~xf²
-    // (per-(part, bin) density, semantic output growth).
-    val rowsJson =
-      if (only.forall(s => s.contains("j11_fuzzy_shape") ||
-          s.contains("j13_interval_shape"))) {
-        val j11Base = j11At(1).count()
-        val j11X = j11At(xf).count()
-        def j13 = {
-          def iv(p: String) = lineitem.select(
-              col("l_partkey").as(s"${p}part"), col("l_suppkey").as(s"${p}supp"),
-              (col("l_orderkey") * 10 + col("l_linenumber")).cast("long").as(s"${p}id"),
-              datediff(col("l_shipdate").cast("date"),
-                to_date(lit("1970-01-01"))).cast("long").as(s"${p}lo"),
-              col("l_quantity").cast("long").as(s"${p}q"))
-            .withColumn(s"${p}hi", col(s"${p}lo") + col(s"${p}q"))
-            .drop(s"${p}q")
-          graft.operators.RangeJoin.intervalOverlap(
-              iv("a"), "alo", "ahi", iv("b"), "blo", "bhi", 32L,
-              Seq(("apart", "bpart")))
-            .filter(col("asupp") =!= col("bsupp") && col("aid") < col("bid"))
-        }
-        val j13X = j13.count()
+    // rows-out for the two "the candidate/output stream IS the cost" claims:
+    // j11 output must grow ~xf× (the suffix construction makes cross-copy
+    // pairs impossible), j13 ~xf² (per-(part, bin) density grows xf×).
+    val rowsJson = (if (!wanted("rows_out")) None
+      else attempt("rows_out") {
+        val j11Base = graft.operators.FuzzyJoin.editDistance1Pairs(names(1)).count()
+        val j11X = graft.operators.FuzzyJoin.editDistance1Pairs(
+          Tables(spark, xfDir, "customer_names")).count()
+        val j13X = SparkEntry.queries("j13_interval_overlap")(spark, xfDir).count()
         println(s"[scaleprobe] rows_out: j11 base=$j11Base xf=$j11X, j13 xf=$j13X")
         s""","rows_out":{"j11_base":$j11Base,"j11_xf":$j11X,"j13_xf":$j13X}"""
-      } else ""
+      }).getOrElse("")
 
-    val json =
-      s"""{"metric":"sf1_spot","unit":"sec","xf":$xf,"base_sf":"$sfDir","cpus":$cpus,"queries":$qs$recallJson$rowsJson}"""
+    def part(prefix: String, r: Either[Harness.Failure, (Double, Long, Long)]) =
+      r match {
+        case Right((sec, rb, wb)) =>
+          s""""${prefix}sec":$sec,"${prefix}shuffle_read_b":$rb,"${prefix}shuffle_write_b":$wb"""
+        case Left(_) => s""""${prefix}sec":-1"""
+      }
+    val qJson = queries.map { case (name, base, scaled) =>
+      val ratio = (for { a <- base; b <- scaled }
+        yield math.rint(b._1 / a._1 * 100) / 100).getOrElse(-1.0)
+      s""""$name":{${part("base_", base)},${part("xf_", scaled)},"sec_ratio":$ratio}"""
+    }.mkString("{", ",", "}")
+    val sJson = shapeRuns.map { case (name, r) => s""""$name":{${part("", r)}}""" }
+      .mkString("{", ",", "}")
+    val fJson = failures.map { case (k, f) => Harness.quote(k) + ":" + f.json }
+      .mkString("{", ",", "}")
+    val json = s"""{"metric":"scale","unit":"sec","xf":$xf,"base_sf":"$sfDir",""" +
+      s""""cpus":$cpus,"reps":$reps,"queries":$qJson,"shapes":$sJson""" +
+      s"""$recallJson$rowsJson,"failures":$fJson}"""
     println(json)
-    // A filtered run never overwrites the committed artifact — partial shape
-    // sets must not masquerade as a full probe. An explicit SPOT_OUT target
-    // is the escape hatch (mirrors Bench's SPARK_GRAFT_BENCH_OUT): the
-    // caller asked for the partial artifact somewhere else on purpose.
-    if (only.isEmpty || sys.env.contains("SPARK_GRAFT_SPOT_OUT")) {
+    // A filtered run never overwrites the full artifact — partial entry
+    // sets must not masquerade as a full probe — unless SCALE_OUT asks for
+    // the partial artifact somewhere on purpose (Bench's BENCH_OUT contract).
+    if (only.isEmpty || sys.env.contains("SPARK_GRAFT_SCALE_OUT")) {
       val w = new java.io.PrintWriter(
-        sys.env.getOrElse("SPARK_GRAFT_SPOT_OUT", "BENCH_sf1_spot.json"), "UTF-8")
+        sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", s"BENCH_scale_x$xf.json"), "UTF-8")
       try w.println(json) finally w.close()
     }
-    // the staged d13 index is a ~corpus-sized parquet scratch — remove on
-    // exit (ADVICE r18: the pid suffix meant runs never overwrote each
-    // other, so leaked indexes accumulated unboundedly in java.io.tmpdir)
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete(); ()
-    }
-    rm(new java.io.File(d13Idx))
     Seq(8, dialBuckets).distinct.foreach { nb =>
       spark.sql(s"DROP TABLE IF EXISTS probe_bkt_orders_${nb}_p$pid")
       spark.sql(s"DROP TABLE IF EXISTS probe_bkt_lineitem_${nb}_p$pid")
     }
-    rm(new java.io.File(j9Base))
+    // the staged tables are multi-GB scratch; a killed run is covered by the
+    // shutdown hook Harness.scratch registered
+    Harness.deleteRec(new java.io.File(xfDir))
     spark.stop()
   }
 }

@@ -61,19 +61,15 @@ object Dedup {
     * with evidence on a Zipf-hot natural corpus, where per-term skew would
     * favor expansion.
     *
-    * Optional `pruneSingletons`: prefilter the postings to terms with
-    * df ≥ 2 before the quadratic self-join — result-preserving (a df=1 term
-    * can't form a pair; set sizes still count every shingle). On a
-    * Zipf-distributed REAL corpus hapax terms are ~half the postings, so
-    * this is the standard win; on the synthetic fixture it measured 1.5×
-    * SLOWER (the extra aggregate+join shuffle outweighs the few rows
-    * saved), hence default off below `autoPruneDocs`. When the corpus
-    * exceeds `autoPruneDocs` documents (a cheap `df.count()` probe —
-    * metadata-only on a parquet source) the prune flips ON automatically:
-    * at that size the hapax savings dominate and an unpruned self-join is
-    * the spill hazard the r12 driver run measured. Pass
-    * `pruneSingletons = true` to force it, or `autoPruneDocs <= 0` to
-    * disable the probe (fully lazy — no job at construction time).
+    * Singleton prune: above [[AutoPruneDocs]] documents (a cheap
+    * `df.count()` probe — metadata-only on a parquet source) the postings
+    * are prefiltered to terms with df ≥ 2 before the quadratic self-join —
+    * result-preserving (a df=1 term can't form a pair; set sizes still
+    * count every shingle). On a Zipf-distributed REAL corpus hapax terms
+    * are ~half the postings, and at that size an unpruned self-join is the
+    * spill hazard the r12 bench run measured; below it the prune measured
+    * 1.5× SLOWER on the synthetic fixture (the extra aggregate+join shuffle
+    * outweighs the few rows saved), so small inputs stay unpruned.
     *
     * Memory-pressure hardening (r12 verdict #1): the postings are
     * explicitly repartitioned on the join keys into
@@ -90,11 +86,8 @@ object Dedup {
     */
   def jaccardPairs(df: DataFrame, id: Column, text: Column,
       minJaccard: Double, blockCols: Seq[Column] = Seq.empty,
-      pruneSingletons: Boolean = false,
-      autoPruneDocs: Long = 20000L,
       sortAgg: Boolean = true): DataFrame =
-    pairIntersections(df, id, text, blockCols, pruneSingletons, autoPruneDocs,
-        sortAgg)
+    pairIntersections(df, id, text, blockCols, sortAgg)
       .withColumn("jaccard", col("i").cast("double") / (col("sa") + col("sb") - col("i")))
       .filter(col("jaccard") >= minJaccard)
       .select(col("da"), col("db"), col("jaccard"))
@@ -108,11 +101,8 @@ object Dedup {
     */
   def containmentPairs(df: DataFrame, id: Column, text: Column,
       minContainment: Double, blockCols: Seq[Column] = Seq.empty,
-      pruneSingletons: Boolean = false,
-      autoPruneDocs: Long = 20000L,
       sortAgg: Boolean = true): DataFrame =
-    pairIntersections(df, id, text, blockCols, pruneSingletons, autoPruneDocs,
-        sortAgg)
+    pairIntersections(df, id, text, blockCols, sortAgg)
       .withColumn("containment",
         col("i").cast("double") / least(col("sa"), col("sb")))
       .withColumn("jaccard", col("i").cast("double") / (col("sa") + col("sb") - col("i")))
@@ -120,10 +110,15 @@ object Dedup {
       .select(col("da"), col("db"), col("i"), col("sa"), col("sb"),
         col("containment"), col("jaccard"))
 
+  /** Corpus size above which [[pairIntersections]] prunes singleton terms
+    * (see [[jaccardPairs]]).
+    */
+  private val AutoPruneDocs = 20000L
+
   /** Shared exact shingle-intersection core of [[jaccardPairs]] /
-    * [[containmentPairs]]: distinct bigram postings (blocked, optionally
-    * singleton-pruned, term-repartitioned — see the r12/r13 pressure notes)
-    * self-joined to (da, db, i, sa, sb) pair rows.
+    * [[containmentPairs]]: distinct bigram postings (blocked, singleton-
+    * pruned above [[AutoPruneDocs]], term-repartitioned — see the r12/r13
+    * pressure notes) self-joined to (da, db, i, sa, sb) pair rows.
     *
     * `sortAgg` (default ON — r14 verdict #1, the third consecutive driver
     * window to flag this family under host contention): counts the pair
@@ -145,8 +140,7 @@ object Dedup {
     * stays available (`sortAgg = false`) for the equality spec.
     */
   private def pairIntersections(df: DataFrame, id: Column, text: Column,
-      blockCols: Seq[Column], pruneSingletons: Boolean,
-      autoPruneDocs: Long, sortAgg: Boolean = true): DataFrame = {
+      blockCols: Seq[Column], sortAgg: Boolean): DataFrame = {
     val block = if (blockCols.isEmpty) Seq(lit(1).as("__b")) else
       blockCols.zipWithIndex.map { case (c, i) => c.as(s"__b$i") }
     // cached via the session-visible registry: reused by the self-join's two
@@ -160,9 +154,7 @@ object Dedup {
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val bnames = toks.columns.filter(_.startsWith("__b"))
     val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val prune = pruneSingletons ||
-      (autoPruneDocs > 0L && df.count() > autoPruneDocs)
-    val toksShared = if (!prune) toks else {
+    val toksShared = if (df.count() <= AutoPruneDocs) toks else {
       val shared = toks.groupBy(col("term") +: bnames.map(col): _*)
         .agg(count(lit(1)).as("__df"))
         .filter(col("__df") >= 2)
@@ -233,7 +225,7 @@ object Dedup {
     * than [[jaccardPairs]] on the synthetic near-uniform token distribution
     * — at t=0.5 the prefix is still sz/2+1 tokens and rare-first pruning has
     * nothing to bite on, so the df-join + per-doc window overhead dominates
-    * (exactly the pruneSingletons finding above). The crossover is a Zipf
+    * (exactly the singleton-prune finding above). The crossover is a Zipf
     * corpus and/or a higher threshold, where the baseline's Σ df² pair
     * stream explodes and the prefix index shrinks (t=0.8 indexes ~sz/5 —
     * asserted structurally in DedupFacadeSpec). Keep [[jaccardPairs]] as the

@@ -71,8 +71,8 @@ object Bpe {
     * analysis time) linear in rounds on EVERY round, i.e. quadratic total.
     * Truncating the seq lineage with an eager localCheckpoint every N rounds
     * caps plan depth at N merges; result-identical (checkpointing changes
-    * execution, never values), probed at rounds=20 in ScaleProbe's
-    * x13_bpe_shape.
+    * execution, never values), probed at rounds=20 by the scale probe's
+    * former x13_bpe_shape (BENCH_sf1_spot.json).
     */
   def merges(vocab: DataFrame, rounds: Int, checkpointEvery: Int = 10): DataFrame =
     trainFold(vocab, rounds, checkpointEvery)._2

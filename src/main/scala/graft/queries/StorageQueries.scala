@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.Harness.{deleteRec, scratch, tag}
 import graft.Tables
 import graft.operators.Bucketing
 
@@ -22,53 +23,6 @@ import graft.operators.Bucketing
 object StorageQueries extends QueryGroup {
 
   private def cents(c: Column): Column = round(c * 100).cast("long")
-
-  /** Temp namespace per (sf dir, JVM): the sf-dir hash keeps sf0.001 tests /
-    * sf0.01 verify / sf0.1 bench apart within a session; the pid component
-    * keeps CONCURRENT drivers (Verify ‖ Bench, parallel bench reps — ADVICE
-    * r17) from racing on the same scratch directory or table name. Reruns
-    * within one JVM intentionally reuse the path (overwrite mode measures
-    * steady state, and k1's spool dedupes by cleaning first).
-    */
-  private[graft] def tag(d: String): String =
-    s"${d.hashCode & 0x7fffffff}_p${ProcessHandle.current().pid()}"
-
-  /** Scratch dir under java.io.tmpdir, deleted on JVM exit so per-run
-    * full-table copies don't accumulate across driver invocations.
-    */
-  private val cleanupRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[graft] def scratch(prefix: String, d: String): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/${prefix}_${tag(d)}"
-    if (cleanupRegistered.add(p))
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => deleteRec(new java.io.File(p))))
-    p
-  }
-
-  /** [[scratch]] rooted at the memory-backed filesystem when one exists
-    * (the k1 `EsShapedSink.scratchRoot` precedent, r22 for d13): for a
-    * query whose GATE checks round-trip CONTENT — not tmpdir disk latency —
-    * a disk-backed scratch store only adds the I/O-latency ambush two
-    * driver windows measured on k1 (BASELINE.md r16) and this round's
-    * probes reproduced on d13 (a 21.8 s first rep on a loaded window vs a
-    * 4.6 s quiet median — the store write was the variance). The parquet
-    * round-trip (encode, file layout, read-back schema) is identical
-    * either way. Same shutdown-hook cleanup.
-    */
-  private[graft] def scratchFast(prefix: String, d: String): String = {
-    val root = graft.sinks.EsShapedSink.scratchRoot
-    val p = s"$root/${prefix}_${tag(d)}"
-    if (cleanupRegistered.add(p))
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => deleteRec(new java.io.File(p))))
-    p
-  }
-  private def deleteRec(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRec)
-    f.delete(); ()
-  }
 
   def all: Seq[Q] = Seq(
 
@@ -224,11 +178,12 @@ object StorageQueries extends QueryGroup {
       (s, d) => {
         // memory-backed when available (EsShapedSink.scratchRoot): the gate
         // checks wire content + upsert semantics, not tmpdir disk latency.
-        // Routed through scratchFast (r22) so the spool dir gets the same
+        // Routed through `scratch` (r22) so the spool dir gets the same
         // shutdown-hook cleanup as every other scratch — the bare
         // scratchRoot/tag path leaked one tmpfs dir per JVM (2 GB of stale
         // /dev/shm spools found from prior driver runs).
-        val spool = scratchFast("graft_esspool", d)
+        val spool = scratch("graft_esspool", d,
+          graft.sinks.EsShapedSink.scratchRoot)
         // reruns (bench reps) must not accumulate spool files
         val dir = new java.io.File(spool)
         if (dir.exists) dir.listFiles.foreach(f => { f.delete(); () })

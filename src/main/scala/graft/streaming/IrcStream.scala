@@ -304,12 +304,21 @@ object IrcStream {
       lines: DataFrame, targetDir: String, checkpointDir: String,
       watermark: String = "10 minutes",
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
+    startDeduped(lines, checkpointDir, watermark, trigger)(
+      (b, id) => upsertBatch(b, id, targetDir))
+
+  /** The chain every `start*` shares: raw lines → records → watermarked
+    * dedup → `batch` on each micro-batch (update mode, checkpointed).
+    */
+  private def startDeduped(lines: DataFrame, checkpointDir: String,
+      watermark: String, trigger: Trigger)(
+      batch: (DataFrame, Long) => Unit): StreamingQuery =
     deduped(records(lines), watermark)
       .writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch((b: DataFrame, id: Long) => upsertBatch(b, id, targetDir))
+      .foreachBatch(batch)
       .start()
 
   /** Streaming rollup maintenance — [[graft.operators.IncrementalAgg]]'s
@@ -408,13 +417,8 @@ object IrcStream {
       lines: DataFrame, rollupDir: String, checkpointDir: String,
       watermark: String = "10 minutes",
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    deduped(records(lines), watermark)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch((b: DataFrame, id: Long) => rollupBatch(b, id, rollupDir))
-      .start()
+    startDeduped(lines, checkpointDir, watermark, trigger)(
+      (b, id) => rollupBatch(b, id, rollupDir))
 
   /** The reference's ACTUAL write loop, end-to-end (irclogbot.py:46-59):
     * stream → parse → dedup → per-RECORD sink write with bounded retry →
@@ -429,14 +433,8 @@ object IrcStream {
       onDrop: org.apache.spark.sql.Row => Unit = _ => (),
       watermark: String = "10 minutes",
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    deduped(records(lines), watermark)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch((b: DataFrame, _: Long) =>
-        graft.sinks.IrcSink.writeEachWithRetry(b, write, maxAttempts, onDrop): Unit)
-      .start()
+    startDeduped(lines, checkpointDir, watermark, trigger)((b, _) =>
+      graft.sinks.IrcSink.writeEachWithRetry(b, write, maxAttempts, onDrop): Unit)
 
   /** Liveness signal (the heartbeat-file analog, keep_alive.py:19-32): logs
     * batch progress; a supervisor watches for silence instead of mtime.

@@ -109,6 +109,45 @@ class EngineSpec extends SparkSuite {
     assert(bad.count() == 0)
   }
 
+  test("centroid: ragged vectors in one group fail with the equal-length contract") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("g", IntegerType),
+      StructField("v", ArrayType(FloatType, containsNull = false))))
+    val rows = Seq(Row(1, Seq(1f, 2f)), Row(1, Seq(1f, 2f, 3f)))
+    // one row per partition: the lengths meet in merge; one partition: in reduce
+    Seq(2, 1).foreach { slices =>
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), schema)
+      val e = intercept[Exception] {
+        df.groupBy(col("g"))
+          .agg(graft.functions.CentroidAgg.centroid(col("v")).as("c")).collect()
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("must have the same length")),
+        s"slices=$slices: $e")
+    }
+  }
+
+  test("centroid: a null vector element fails instead of reading as 0.0") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("g", IntegerType),
+      StructField("v", ArrayType(FloatType, containsNull = true))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row(1, Seq(1f, 2f)), Row(1, Seq(3f, null))), 2), schema)
+    val e = intercept[Exception] {
+      df.groupBy(col("g"))
+        .agg(graft.functions.CentroidAgg.centroid(col("v")).as("c")).collect()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("must have no null elements")),
+      e.toString)
+    // the interpreted path (the query above runs the generated code)
+    val v = org.apache.spark.sql.catalyst.expressions.Literal.create(
+      Seq(3f, null), ArrayType(FloatType, containsNull = true))
+    intercept[IllegalArgumentException](graft.functions.NonNullElements(v).eval())
+  }
+
   test("IVF knn degrades to exact search at nProbe=ncentroids; partial probe is consistent") {
     // NB the fixture embeddings are near-noise from any single query's view
     // (top-10 cosines ≈ 0.3 spread over ~7 labels — verified by inspection),

@@ -103,7 +103,7 @@ class OperatorSpec extends SparkSuite {
     // the only hashpartitioning Exchange allowed is the post-join groupBy's.
     val q = graft.queries.Registry.byName("j9_bucketed_join")
     assert(q.run(spark, sf).count() == 5)
-    val t = graft.queries.StorageQueries.tag(sf)
+    val t = graft.Harness.tag(sf)
     withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = Bucketing.bucketJoin(spark, s"bkt_orders_$t", s"bkt_lineitem_$t", "o_orderkey")
       joined.count()
@@ -116,7 +116,7 @@ class OperatorSpec extends SparkSuite {
   test("s7_partitioned_prune reads only the 7 filtered day partitions of 30") {
     val q = graft.queries.Registry.byName("s7_partitioned_prune")
     assert(q.run(spark, sf).count() > 0)
-    val out = graft.queries.StorageQueries.scratch("graft_part", sf)
+    val out = graft.Harness.scratch("graft_part", sf)
     // filter-only probe (no shuffle → no AQE wrapper hiding the scan node)
     val pruned = spark.read.parquet(out)
       .filter(col("event_date").between(lit("2024-01-10"), lit("2024-01-16")))
@@ -170,7 +170,7 @@ class OperatorSpec extends SparkSuite {
     val q = graft.queries.Registry.byName("s8_compaction")
     val rows = q.run(spark, sf).count()
     assert(rows > 0)
-    val out = graft.queries.StorageQueries.scratch("graft_compact", sf)
+    val out = graft.Harness.scratch("graft_compact", sf)
     val spans = spark.read.parquet(out)
       .groupBy(col("_metadata.file_path").as("f"))
       .agg(min(col("event_id")).as("lo"), max(col("event_id")).as("hi"))
@@ -233,7 +233,7 @@ class OperatorSpec extends SparkSuite {
     // join in the plan may be a SortMergeJoin/ShuffledHashJoin (either
     // would exchange the corpus-sized store). Hints make this shape
     // input-size-independent; this pin catches a silent hint regression.
-    val idx = graft.queries.StorageQueries.scratch("graft_plan_mhidx", sf)
+    val idx = graft.Harness.scratch("graft_plan_mhidx", sf)
     val docs = Tables(spark, sf, "documents")
     graft.dedup.MinHashDedup.signatures(
         docs.filter(pmod(col("doc_id"), lit(2)) === 0), col("doc_id"), col("text"))

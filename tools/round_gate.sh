@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # One-command local round gate: everything the driver checks, in order.
 #
-#   tools/round_gate.sh           # full gate (sf0.01 verify, tests, bench check)
+#   tools/round_gate.sh           # full gate (sf0.01 verify, tests, bench
+#                                 # check, heap canary, scale smoke)
 #   tools/round_gate.sh --quick   # sf0.001 verify + tests only (iteration loop)
 #
 # Exit non-zero on the first failing stage. Run it QUIET (no concurrent sbt/
@@ -65,5 +66,25 @@ if [[ "${1:-}" != "--quick" ]]; then
   # factor=1.0 rather than self-normalizing — so the bests here must be
   # 2g-canary bests, not clean-window bests.
   python3 tools/check_bench.py --allow-missing "$canary_out" tools/bench_baseline_2g.json
+
+  # Scale smoke: the one scale main at xf=2 on the smallest fixture, so a
+  # registry entry or kept shape that stops running at scale fails here
+  # instead of rotting until the next full probe. One rep per scale: the
+  # stage checks that entries run, not their timings.
+  echo "== scale smoke (ScaleProbe xf=2, sf0.001)"
+  scale_out=$(mktemp /tmp/graft_scale.XXXXXX.json)
+  if ! SPARK_GRAFT_SCALE_X=2 SPARK_GRAFT_SF_DIR="$(dirname "$SF")/sf0.001" \
+       SPARK_GRAFT_CPUS=4 SPARK_GRAFT_BENCH_REPS=1 \
+       SPARK_GRAFT_SCALE_OUT="$scale_out" \
+       sbt -batch "runMain graft.ScaleProbe" >/tmp/graft_scale.log 2>&1; then
+    tail -20 /tmp/graft_scale.log; echo "scale smoke run FAILED"; exit 1
+  fi
+  python3 - "$scale_out" <<'PY'
+import json, sys
+failures = json.load(open(sys.argv[1]))["failures"]
+for name, f in failures.items():
+    print(f"{name}: {f['class']}: {f['message']}")
+sys.exit(1 if failures else 0)
+PY
 fi
 echo "GATE GREEN"
