@@ -21,9 +21,16 @@ import org.apache.spark.sql.DataFrame
   * signature for a bookkeeping concern. Caches whose lifecycle is already
   * internal to one call (cached AND unpersisted inside, like
   * `Dedup.components`) don't go through here.
+  *
+  * The registry is PER THREAD: [[unpersistAll]] releases only the caches
+  * the calling thread tracked, so two callers sharing one session (a
+  * stream's `foreachBatch` thread next to a query thread) never release
+  * each other's live frames. Every caller builds, consumes and releases on
+  * one thread.
   */
 object Caches {
-  private val live = mutable.ListBuffer.empty[DataFrame]
+  private val live = ThreadLocal.withInitial[mutable.ListBuffer[DataFrame]](
+    () => mutable.ListBuffer.empty[DataFrame])
 
   def track(df: DataFrame): DataFrame =
     track(df, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -38,17 +45,19 @@ object Caches {
     * consumer, measured in the noise at clean-window scale).
     */
   def track(df: DataFrame,
-      level: org.apache.spark.storage.StorageLevel): DataFrame = synchronized {
+      level: org.apache.spark.storage.StorageLevel): DataFrame = {
     df.persist(level)
-    live += df
+    live.get += df
     df
   }
 
-  /** Unpersist every tracked cache (non-blocking) and clear the registry. */
-  def unpersistAll(): Unit = synchronized {
-    live.foreach(_.unpersist(false))
-    live.clear()
+  /** Unpersist every cache this thread tracked (non-blocking) and clear its
+    * registry.
+    */
+  def unpersistAll(): Unit = {
+    live.get.foreach(_.unpersist(false))
+    live.get.clear()
   }
 
-  private[graft] def snapshot: Seq[DataFrame] = synchronized(live.toList)
+  private[graft] def snapshot: Seq[DataFrame] = live.get.toList
 }

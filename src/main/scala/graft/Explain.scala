@@ -57,7 +57,7 @@ object Explain {
       ("""Contract note: connected components over the exact-Jaccard pair set
         |— inherits d2_jaccard_neardup's block-quadratic truth-definition
         |plan. The scale path is d3_dedup_groups_lsh (banded pairs → same
-        |pointer-jumping components). Excluded from the benched set since
+        |min-label-propagation components). Excluded from the benched set since
         |late r15 (SparkEntry.benchExcluded).""".stripMargin),
     "d10_dedup_yield" ->
       ("""Contract note: yield report over the exact-Jaccard cluster set —

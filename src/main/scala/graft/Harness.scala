@@ -96,15 +96,12 @@ object Harness {
   private val cleanupRegistered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Scratch dir `<root>/<prefix>_<tag(d)>`, deleted on JVM exit (also on a
-    * killed or failed run) so per-run table copies never accumulate.
-    * `root` defaults to java.io.tmpdir; pass
-    * [[graft.sinks.EsShapedSink.scratchRoot]] (memory-backed when one
-    * exists) when the caller checks round-trip CONTENT, not disk latency.
+  /** Scratch dir `<java.io.tmpdir>/<prefix>_<tag(d)>`, deleted on JVM exit
+    * (also on a killed or failed run) so per-run table copies never
+    * accumulate.
     */
-  def scratch(prefix: String, d: String,
-      root: String = System.getProperty("java.io.tmpdir")): String = {
-    val p = s"$root/${prefix}_${tag(d)}"
+  def scratch(prefix: String, d: String): String = {
+    val p = s"${System.getProperty("java.io.tmpdir")}/${prefix}_${tag(d)}"
     if (cleanupRegistered.add(p))
       Runtime.getRuntime.addShutdownHook(
         new Thread(() => deleteRec(new java.io.File(p))))

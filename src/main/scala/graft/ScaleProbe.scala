@@ -405,10 +405,9 @@ object ScaleProbe {
     // the banded candidate stream (minEstJaccard=0) surfaces.
     val recallJson = (if (!wanted("d2_minhash_recall")) None
       else attempt("d2_minhash_recall") {
-        val toks = docs.select(col("doc_id"),
+        val toks = graft.Caches.track(docs.select(col("doc_id"),
             explode(graft.functions.TextFunctions.shingles(col("text"), 3)).as("t"))
-          .distinct()
-        graft.Caches.track(toks.cache())
+          .distinct())
         val anchor = pmod(col("doc_id"), lit(97L)) === 0
         val sizes = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
         val exact = toks.filter(anchor).select(col("doc_id").as("da"), col("t"))

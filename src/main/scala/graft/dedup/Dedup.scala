@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{HashFunctions, TextFunctions}
 
-/** One front door for the dedup family (the LLM-pipeline operator set):
-  * exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding-cosine —
-  * pick by cost/quality; all return either a deduped frame or candidate
-  * pairs with a score, on the same column conventions.
+/** One front door for the dedup family (the LLM-pipeline operator set)
+  * beyond the candidate-pair generators of [[MinHashDedup]] /
+  * [[SimHashDedup]] / `graft.similarity.Ann`: exact dedup, exact n-gram
+  * Jaccard and containment pairs, incremental MinHash against a persisted
+  * index, clustering and span-level dedup — all on the same column
+  * conventions (pairs are (da, db, score) with `da` < `db`).
   */
 object Dedup {
 
@@ -29,24 +31,6 @@ object Dedup {
     df.groupBy(TextFunctions.fingerprint(text).as("fp"))
       .agg(sort_array(collect_list(id)).as("doc_ids"), count(lit(1)).as("n"))
       .filter(col("n") > 1)
-
-  /** MinHash-LSH near-dup candidate pairs (estimated Jaccard). */
-  def minhashPairs(df: DataFrame, id: Column, text: Column,
-      minEstJaccard: Double = 0.5): DataFrame =
-    MinHashDedup.candidatePairs(df, id, text, minEstJaccard = minEstJaccard)
-
-  /** [[minhashPairs]] with the md5 hash family — cross-engine reproducible
-    * (the variant the differential oracle checks); xxhash64 default is
-    * cheaper per shingle.
-    */
-  def minhashPairsMd5(df: DataFrame, id: Column, text: Column,
-      minEstJaccard: Double = 0.5): DataFrame =
-    MinHashDedup.candidatePairsMd5(df, id, text, minEstJaccard = minEstJaccard)
-
-  /** SimHash near-dup candidate pairs (Hamming distance). */
-  def simhashPairs(df: DataFrame, id: Column, text: Column,
-      maxHamming: Int = 3): DataFrame =
-    SimHashDedup.candidatePairs(df, id, text, maxHamming)
 
   /** Exact n-gram Jaccard pairs within (blockCols) blocks.
     *
@@ -141,25 +125,14 @@ object Dedup {
     */
   private def pairIntersections(df: DataFrame, id: Column, text: Column,
       blockCols: Seq[Column], sortAgg: Boolean): DataFrame = {
-    val block = if (blockCols.isEmpty) Seq(lit(1).as("__b")) else
-      blockCols.zipWithIndex.map { case (c, i) => c.as(s"__b$i") }
-    // cached via the session-visible registry: reused by the self-join's two
-    // sides AND the size aggregate; callers release with Caches.unpersistAll()
-    val toks = graft.Caches.track(
-      df.select((id.as("doc_id") +: block) :+
-        explode(TextFunctions.bigrams(text)).as("term"): _*)
-      .distinct(),
-      // serialized: the postings cache must not thrash the unified region
-      // under memory pressure (Caches.track scaladoc; r15 verdict #1c)
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val bnames = toks.columns.filter(_.startsWith("__b"))
+    val (toks, bnames) = blockedPostings(df, id, text, blockCols)
     val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val toksShared = if (df.count() <= AutoPruneDocs) toks else {
       val shared = toks.groupBy(col("term") +: bnames.map(col): _*)
         .agg(count(lit(1)).as("__df"))
         .filter(col("__df") >= 2)
         .drop("__df")
-      toks.join(shared, "term" +: bnames.toSeq)
+      toks.join(shared, "term" +: bnames)
     }
     val parts = math.max(
       df.sparkSession.sessionState.conf.numShufflePartitions, 64)
@@ -193,6 +166,92 @@ object Dedup {
     pairCounts
       .join(sizes.select(col("doc_id").as("da"), col("sz").as("sa")), "da")
       .join(sizes.select(col("doc_id").as("db"), col("sz").as("sb")), "db")
+  }
+
+  /** Distinct (doc_id, __b…, term) bigram postings, one `__b<i>` column per
+    * block column (a constant `__b` when unblocked), and the block column
+    * names. Cached via the session-visible registry, serialized so the
+    * postings cache does not thrash the unified region under memory
+    * pressure (Caches.track scaladoc; r15 verdict #1c): every caller reads
+    * it from a self-join's two sides AND its size aggregate. Callers
+    * release it with Caches.unpersistAll().
+    */
+  private def blockedPostings(df: DataFrame, id: Column, text: Column,
+      blockCols: Seq[Column]): (DataFrame, Seq[String]) = {
+    val block = if (blockCols.isEmpty) Seq(lit(1).as("__b")) else
+      blockCols.zipWithIndex.map { case (c, i) => c.as(s"__b$i") }
+    val toks = graft.Caches.track(
+      df.select((id.as("doc_id") +: block) :+
+        explode(TextFunctions.bigrams(text)).as("term"): _*)
+      .distinct(),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    (toks, toks.columns.filter(_.startsWith("__b")).toSeq)
+  }
+
+  /** Shared front of the prefix-filter operators: every posting of
+    * [[blockedPostings]] with its doc's distinct-bigram count `sz`, the
+    * term's block-local document frequency `__tdf`, and `__rn`, its rank in
+    * ONE global rare-first (__tdf asc, term) order per doc. Returned
+    * UNCACHED with the block column names: each caller cuts its prefix,
+    * projects the candidate-join row and caches what its join reads twice.
+    *
+    * Both callers key the candidate join on xxhash64(term) (`__th`), not
+    * the bigram string: the shuffled row shrinks to (doc_id, 8-byte key,
+    * sz, rank) and the exchange hashes/compares longs instead of strings.
+    * Row-identical by construction — equal terms always hash equal (no
+    * candidate is ever LOST), and a cross-term collision only adds a
+    * candidate the exact verify ([[verifiedIntersections]]) kills. The
+    * ranking itself stays on the true strings, so collision odds never
+    * touch which tokens form a prefix.
+    */
+  private def rankedPostings(df: DataFrame, id: Column, text: Column,
+      blockCols: Seq[Column]): (DataFrame, Seq[String]) = {
+    val (toks, bnames) = blockedPostings(df, id, text, blockCols)
+    val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+    val dfreq = toks.groupBy(col("term") +: bnames.map(col): _*)
+      .agg(count(lit(1)).as("__tdf"))
+    val w = Window.partitionBy(col("doc_id"))
+      .orderBy(col("__tdf"), col("term"))
+    val ranked = toks
+      .join(dfreq, "term" +: bnames)
+      .join(sizes, "doc_id")
+      .withColumn("__rn", row_number().over(w))
+    (ranked, bnames)
+  }
+
+  /** Exact verify back of the prefix-filter operators: candidate pairs
+    * (da, db) → (da, db, i, sa, sb) with i = |A∩B| over the docs' distinct
+    * bigram sets and sa/sb their sizes.
+    *
+    * The token arrays are derived map-side from the source rows — no corpus
+    * shuffle — and deliberately NOT cached (r21): the da/db joins each
+    * re-tokenize one map-side pass, but caching this frame materializes the
+    * full bigram arrays (text-width × corpus) next to the postings and
+    * prefix caches, and the 30× probe measured the added storage pressure
+    * costing more than the saved pass (d2 54.7 → 69.2 s at xf=30 with the
+    * cache; reverted). A candidate-id semi-join prune of this frame
+    * (tokenize only candidate docs) was measured and REVERTED too (r22) —
+    * it requires caching the candidates (millions of rows on a dense
+    * corpus), and that cache cost d2 5.2 → 8.7 s / d12 6.5 → 13.8 s
+    * same-session.
+    *
+    * Arrays are SORTED once per doc (r22) so the per-pair intersect is the
+    * allocation-free sorted_isect_count merge kernel instead of
+    * array_intersect's per-pair hash-set build — |A∩B| is identical by
+    * construction (sorted + duplicate-free inputs), and the pair stream is
+    * where the row count lives (7.5M candidate evaluations on the d12
+    * fixture).
+    */
+  private def verifiedIntersections(cands: DataFrame, df: DataFrame,
+      id: Column, text: Column): DataFrame = {
+    val arrays = df.select(id.as("doc_id"),
+      sort_array(array_distinct(TextFunctions.bigrams(text))).as("__ta"))
+    cands
+      .join(arrays.select(col("doc_id").as("da"), col("__ta").as("ta")), "da")
+      .join(arrays.select(col("doc_id").as("db"), col("__ta").as("tb")), "db")
+      .select(col("da"), col("db"),
+        TextFunctions.sortedIntersectCount(col("ta"), col("tb")).as("i"),
+        size(col("ta")).as("sa"), size(col("tb")).as("sb"))
   }
 
   /** Exact n-gram Jaccard pairs by PREFIX FILTERING (Bayardo et al. 2007
@@ -241,48 +300,19 @@ object Dedup {
     */
   def jaccardPairsPrefix(df: DataFrame, id: Column, text: Column,
       minJaccard: Double, blockCols: Seq[Column] = Seq.empty): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val block = if (blockCols.isEmpty) Seq(lit(1).as("__b")) else
-      blockCols.zipWithIndex.map { case (c, i) => c.as(s"__b$i") }
-    val toks = graft.Caches.track(
-      df.select((id.as("doc_id") +: block) :+
-        explode(TextFunctions.bigrams(text)).as("term"): _*)
-      .distinct(),
-      // serialized: the postings cache must not thrash the unified region
-      // under memory pressure (Caches.track scaladoc; r15 verdict #1c)
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val bnames = toks.columns.filter(_.startsWith("__b")).toSeq
-    val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val dfreq = toks.groupBy(col("term") +: bnames.map(col): _*)
-      .agg(count(lit(1)).as("__tdf"))
+    val (ranked, bnames) = rankedPostings(df, id, text, blockCols)
     // rare-first prefix: keep each doc's (sz − ⌈t·sz⌉ + 1) lowest-df tokens
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("__tdf"), col("term"))
     val alpha = ceil(col("sz") * lit(minJaccard) - lit(1e-9))
-    val pre = toks
-      .join(dfreq, "term" +: bnames)
-      .join(sizes, "doc_id")
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= col("sz") - alpha + 1)
-      // Candidate-join key is xxhash64(term), not the bigram string: the
-      // shuffled prefix row shrinks to (doc_id, 8-byte key, sz, rank) and
-      // the exchange hashes/compares longs instead of strings. Row-identical
-      // by construction — equal terms always hash equal (no candidate is
-      // ever LOST), and a cross-term collision only adds a candidate the
-      // exact array-intersect verify below kills. Prefix SELECTION (df
-      // order, sz) stays on the true strings above, so collision odds
-      // never touch which tokens form a prefix. __rn (the token's rank in
-      // the shared global (df, term) order) rides along for the positional
-      // filter below.
-      .select(col("doc_id") +: xxhash64(col("term")).as("__th") +:
-        col("sz") +: col("__rn") +: bnames.map(col): _*)
     // Both sides of the candidate self-join ARE this frame; without a cache
     // the whole postings→dfreq→sizes→prefix-window subtree runs TWICE (the
     // r21 plan showed two Window nodes over duplicated join trees — the
     // same gap containmentPairsPrefix's `ranked` cache closed in r16).
-    // Serialized, same rationale as the toks cache.
+    // Serialized, same rationale as the postings cache.
     val preC = graft.Caches.track(
-      pre, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      ranked.filter(col("__rn") <= col("sz") - alpha + 1)
+        .select(col("doc_id") +: xxhash64(col("term")).as("__th") +:
+          col("sz") +: col("__rn") +: bnames.map(col): _*),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val right = preC.select(col("doc_id").as("db") +: col("__th").as("__thb") +:
       col("sz").as("szb") +: col("__rn").as("__rnb") +:
       bnames.map(b => col(b).as(s"${b}_r")): _*)
@@ -311,31 +341,7 @@ object Dedup {
         lengthOk && posOk)(_ && _)
     val cands = preC.join(right, joinCond)
       .select(col("doc_id").as("da"), col("db")).distinct()
-    // exact verify: token arrays derived map-side from the source rows —
-    // deliberately NOT cached (r21): the da/db joins each re-tokenize one
-    // map-side pass, but caching this frame materializes the full bigram
-    // arrays (text-width × corpus) next to the toks and prefix caches, and
-    // the 30× probe measured the added storage pressure costing more than
-    // the saved pass (d2 54.7 → 69.2 s at xf=30 with the cache; reverted).
-    // r22 NOTE: a candidate-id semi-join prune of this frame (tokenize only
-    // candidate docs) was measured and REVERTED — it requires caching
-    // `cands` (millions of rows on a dense corpus, so the cache is not
-    // cheap), and that cache cost d2 5.2 → 8.7 s / d12 6.5 → 13.8 s
-    // same-session.
-    // r22: arrays are SORTED once per doc (inside the broadcast-side
-    // projection) so the per-pair exact intersect is the allocation-free
-    // sorted_isect_count merge kernel instead of array_intersect's
-    // per-pair hash-set build — |A∩B| is identical by construction
-    // (sorted + duplicate-free inputs), and the pair stream is where the
-    // row count lives (7.5M candidate evaluations on the d12 fixture).
-    val arrays = df.select(id.as("doc_id"),
-      sort_array(array_distinct(TextFunctions.bigrams(text))).as("__ta"))
-    cands
-      .join(arrays.select(col("doc_id").as("da"), col("__ta").as("ta")), "da")
-      .join(arrays.select(col("doc_id").as("db"), col("__ta").as("tb")), "db")
-      .select(col("da"), col("db"),
-        TextFunctions.sortedIntersectCount(col("ta"), col("tb")).as("i"),
-        size(col("ta")).as("sa"), size(col("tb")).as("sb"))
+    verifiedIntersections(cands, df, id, text)
       .withColumn("jaccard",
         col("i").cast("double") / (col("sa") + col("sb") - col("i")))
       .filter(col("jaccard") >= minJaccard)
@@ -377,43 +383,19 @@ object Dedup {
     */
   def containmentPairsPrefix(df: DataFrame, id: Column, text: Column,
       minContainment: Double, blockCols: Seq[Column] = Seq.empty): DataFrame = {
-    val block = if (blockCols.isEmpty) Seq(lit(1).as("__b")) else
-      blockCols.zipWithIndex.map { case (c, i) => c.as(s"__b$i") }
-    val toks = graft.Caches.track(
-      df.select((id.as("doc_id") +: block) :+
-        explode(TextFunctions.bigrams(text)).as("term"): _*)
-      .distinct(),
-      // serialized: the postings cache must not thrash the unified region
-      // under memory pressure (Caches.track scaladoc; r15 verdict #1c)
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val bnames = toks.columns.filter(_.startsWith("__b")).toSeq
-    val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val dfreq = toks.groupBy(col("term") +: bnames.map(col): _*)
-      .agg(count(lit(1)).as("__tdf"))
+    val (rankedAll, bnames) = rankedPostings(df, id, text, blockCols)
     // rare-first prefix of the would-be SMALLER side: the first
     // sz − ⌈t·sz⌉ + 1 tokens in (df asc, term) order (ε only relaxes)
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("__tdf"), col("term"))
     val alpha = ceil(col("sz") * lit(minContainment) - lit(1e-9))
-    // Rank ALL postings once in the shared global (df asc, term) order and
-    // cache the compact projection: the prefix side is a filter over it and
-    // the full-postings container side reuses it verbatim — the container
-    // side needs the SAME ranks anyway for the positional filter below, so
-    // the window that jaccardPairsPrefix pays only on its prefix side is
-    // here paid once and read twice (serialized cache, same rationale as
-    // the toks cache).
+    // Cache the WHOLE ranking: the prefix side is a filter over it and the
+    // full-postings container side reuses it verbatim — the container side
+    // needs the SAME ranks anyway for the positional filter below, so the
+    // window that jaccardPairsPrefix pays only on its prefix side is here
+    // paid once and read twice (serialized, same rationale as the postings
+    // cache).
     val ranked = graft.Caches.track(
-      toks
-        .join(dfreq, "term" +: bnames)
-        .join(sizes, "doc_id")
-        .withColumn("__rn", row_number().over(w))
-        // Candidate-join key is xxhash64(term) — see [[jaccardPairsPrefix]]:
-        // equal terms always hash equal so no candidate is lost, a
-        // cross-term collision only adds one the exact verify kills, and
-        // the shuffled row shrinks to (doc_id, 8-byte key, sz, rank).
-        // Prefix selection stays on the true strings above.
-        .select(col("doc_id") +: xxhash64(col("term")).as("__th") +:
-          col("sz") +: col("__rn") +: bnames.map(col): _*),
+      rankedAll.select(col("doc_id") +: xxhash64(col("term")).as("__th") +:
+        col("sz") +: col("__rn") +: bnames.map(col): _*),
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val pre = ranked.filter(col("__rn") <= col("sz") - alpha + 1)
     // full postings on the container side (with sizes, for the sz guard),
@@ -448,23 +430,9 @@ object Dedup {
       .select(least(col("doc_id"), col("db")).as("da"),
         greatest(col("doc_id"), col("db")).as("db"))
       .distinct()
-    // exact verify: token arrays derived map-side from the source rows —
-    // NOT cached, same 30×-measured reasoning as jaccardPairsPrefix's
-    // verify stage (the wide bigram-array cache costs more in storage
-    // pressure than the one saved tokenization pass). The candidate-id
-    // semi-join prune was likewise measured and reverted (see there).
-    // Sorted arrays + the sorted_isect_count merge kernel, same r22
-    // rationale as jaccardPairsPrefix's verify (|A∩B| identical).
-    val arrays = df.select(id.as("doc_id"),
-      sort_array(array_distinct(TextFunctions.bigrams(text))).as("__ta"))
-    cands
-      .join(arrays.select(col("doc_id").as("da"), col("__ta").as("ta")), "da")
-      .join(arrays.select(col("doc_id").as("db"), col("__ta").as("tb")), "db")
-      .select(col("da"), col("db"),
-        TextFunctions.sortedIntersectCount(col("ta"), col("tb"))
-          .cast("long").as("i"),
-        size(col("ta")).cast("long").as("sa"),
-        size(col("tb")).cast("long").as("sb"))
+    verifiedIntersections(cands, df, id, text)
+      .select(col("da"), col("db"), col("i").cast("long").as("i"),
+        col("sa").cast("long").as("sa"), col("sb").cast("long").as("sb"))
       .withColumn("containment",
         col("i").cast("double") / least(col("sa"), col("sb")))
       .withColumn("jaccard",
@@ -473,13 +441,6 @@ object Dedup {
       .select(col("da"), col("db"), col("i"), col("sa"), col("sb"),
         col("containment"), col("jaccard"))
   }
-
-  /** Embedding-cosine near-dup pairs (exact baseline; LSH/IVF pruned
-    * variants live in graft.similarity.Ann).
-    */
-  def embeddingPairs(df: DataFrame, id: Column, vec: Column,
-      minCosine: Double): DataFrame =
-    graft.similarity.Ann.pairsExact(df, id, vec, minCosine)
 
   /** Connected components over the undirected candidate-pair graph — the
     * CLUSTER-FORMATION step every near-dup pipeline needs after pair
@@ -539,145 +500,111 @@ object Dedup {
     (labels, iter)
   }
 
-  /** Incremental near-dup for append-only ingest: candidate pairs of a NEW
-    * batch against an EXISTING signature store plus within the batch itself,
-    * without re-pairing the existing corpus against itself. `existingSigs`
-    * is the persisted (doc_id, sig) frame (maintained by compaction at
-    * scale); new signatures are banded and joined against the existing
-    * bands + themselves. Returns the same (da, db, est_jaccard) schema as
-    * [[minhashPairs]], with `da` < `db`.
-    */
-  def incrementalMinhashPairs(
-      newDocs: DataFrame, id: Column, text: Column,
-      existingSigs: DataFrame,
-      numHashes: Int = 64, bands: Int = 8,
-      minEstJaccard: Double = 0.5): DataFrame =
-    incrementalPairsFrom(
-      graft.Caches.track(MinHashDedup.signatures(newDocs, id, text, numHashes)),
-      existingSigs, numHashes, bands, minEstJaccard)
-
-  /** [[incrementalMinhashPairs]] with the md5 hash family and string band
-    * keys — cross-engine reproducible, so the append-only production shape
-    * sits under the differential oracle (i3_incremental_minhash): the result
-    * equals the FULL corpus's md5-LSH pairs restricted to pairs involving at
-    * least one new doc, because newBands ⊆ allBands makes the band-collision
-    * criterion identical on that slice. `existingSigs` must carry md5-family
-    * signatures (MinHashDedup.signatureMd5).
-    */
-  def incrementalMinhashPairsMd5(
-      newDocs: DataFrame, id: Column, text: Column,
-      existingSigs: DataFrame,
-      numHashes: Int = 64, bands: Int = 8,
-      minEstJaccard: Double = 0.5): DataFrame =
-    incrementalPairsFrom(
-      graft.Caches.track(newDocs.select(id.as("doc_id"),
-        MinHashDedup.signatureMd5(text, numHashes).as("sig"))),
-      existingSigs, numHashes, bands, minEstJaccard, MinHashDedup.stringBandKey)
-
-  /** [[incrementalMinhashPairsMd5]] against PRE-BANDED persisted stores —
-    * the index-MAINTENANCE shape (r17 verdict #4): `storeSigs` = (doc_id,
-    * sig) and `storeBands` = (doc_id, band, band_hash) are persisted tables
-    * (parquet here; bucketed by band_hash at scale so the probe join is
-    * co-partitioned). The new batch's signatures are computed ONCE (cost ∝
-    * batch), banded, and probed against the stored bands — the existing
-    * corpus is never re-shingled, re-hashed, re-banded, or paired against
-    * itself; its signatures are touched only by the candidate-bounded
-    * estimate join. After emitting pairs the caller appends (newSigs,
-    * newBands) to the stores — the maintenance step DedupFacadeSpec pins
-    * (batch-by-batch chaining from an empty store ≡ one-shot recompute).
-    */
-  /** Engine-default (xxhash64) flavor of
-    * [[incrementalMinhashPairsBandedMd5]]: same persisted-store contract
-    * with the fast hash family and 8-byte xxhash64 band keys — the
-    * production path (the md5 flavor exists to sit under the DuckDB
-    * oracle). `storeBands` must carry xxhash64 band keys
-    * (MinHashDedup.banded with the default bandKey).
+  /** Incremental near-dup against PRE-BANDED persisted stores — the
+    * index-MAINTENANCE shape (r17 verdict #4) for append-only ingest:
+    * candidate pairs of a NEW batch against the stored corpus plus within
+    * the batch itself, never re-pairing the stored corpus against itself.
+    * `storeSigs` = (doc_id, sig) and `storeBands` = (doc_id, band,
+    * band_hash) are persisted tables (parquet here; bucketed by band_hash
+    * at scale so the probe join is co-partitioned). The new batch's
+    * signatures are computed ONCE (cost ∝ batch), banded, and probed
+    * against the stored bands — the existing corpus is never re-shingled,
+    * re-hashed, re-banded, or paired against itself; its signatures are
+    * touched only by the candidate-bounded estimate join. After emitting
+    * pairs the caller appends (newSigs, newBands) to the stores — the
+    * maintenance step DedupFacadeSpec pins (batch-by-batch chaining from an
+    * empty store ≡ one-shot recompute).
+    *
+    * Engine-default hash family with 8-byte xxhash64 band keys — the
+    * production path; `storeBands` must carry MinHashDedup.longBandKey
+    * band keys (MinHashDedup.banded's default). Returns the same (da, db,
+    * est_jaccard) schema as [[MinHashDedup.candidatePairs]], with `da` <
+    * `db`.
     */
   def incrementalMinhashPairsBanded(
       newDocs: DataFrame, id: Column, text: Column,
       storeSigs: DataFrame, storeBands: DataFrame,
       numHashes: Int = 64, bands: Int = 8,
-      minEstJaccard: Double = 0.5,
-      broadcastBatch: Option[Boolean] = None): DataFrame = {
-    val newSigs = graft.Caches.track(
-      MinHashDedup.signatures(newDocs, id, text, numHashes))
-    val newBands = MinHashDedup.banded(newSigs, numHashes, bands)
-    incrementalPairsCore(newBands,
-      storeBands.select(col("doc_id"), col("band"), col("band_hash"))
-        .union(newBands),
-      storeSigs.select(col("doc_id"), col("sig")).union(newSigs),
-      numHashes, minEstJaccard, broadcastBatch)
-  }
+      minEstJaccard: Double = 0.5): DataFrame =
+    incrementalPairs(MinHashDedup.signatures(newDocs, id, text, numHashes),
+      storeSigs, storeBands, numHashes, bands, minEstJaccard,
+      MinHashDedup.longBandKey)
 
+  /** [[incrementalMinhashPairsBanded]] with the md5 hash family and string
+    * band keys — cross-engine reproducible, so the append-only production
+    * shape sits under the differential oracle (i3_incremental_minhash,
+    * d13_incremental_minhash): the result equals the FULL corpus's md5-LSH
+    * pairs restricted to pairs involving at least one new doc, because
+    * newBands ⊆ allBands makes the band-collision criterion identical on
+    * that slice. The stores must carry md5-family signatures
+    * (MinHashDedup.signatureMd5) and string band keys
+    * (MinHashDedup.stringBandKey).
+    */
   def incrementalMinhashPairsBandedMd5(
       newDocs: DataFrame, id: Column, text: Column,
       storeSigs: DataFrame, storeBands: DataFrame,
       numHashes: Int = 64, bands: Int = 8,
-      minEstJaccard: Double = 0.5,
-      broadcastBatch: Option[Boolean] = None): DataFrame = {
-    val newSigs = graft.Caches.track(newDocs.select(id.as("doc_id"),
-      MinHashDedup.signatureMd5(text, numHashes).as("sig")))
-    val newBands =
-      MinHashDedup.banded(newSigs, numHashes, bands, MinHashDedup.stringBandKey)
+      minEstJaccard: Double = 0.5): DataFrame =
+    incrementalPairs(newDocs.select(id.as("doc_id"),
+        MinHashDedup.signatureMd5(text, numHashes).as("sig")),
+      storeSigs, storeBands, numHashes, bands, minEstJaccard,
+      MinHashDedup.stringBandKey)
+
+  /** Largest batch band table [[incrementalPairs]] broadcasts (~64 B/row):
+    * far under the 8 GB broadcast hard cap and default driver memory.
+    */
+  private val BroadcastBatchMaxBytes = 256L << 20
+
+  /** The one body of the incremental flavors: bands the batch signatures
+    * `newSigs` with `bandKey` and probes stored ∪ batch bands.
+    *
+    * The batch posture is selected from the batch's own size — one
+    * batch-proportional `count()` of the band table (the signatures it
+    * forces are cached and reused by the main plan) against
+    * [[BroadcastBatchMaxBytes]]. Small batches (daily/hourly ingest slices)
+    * broadcast and probe the store MAP-SIDE; large ones (backfills,
+    * whole-day replays) fall back to a plain shuffled hash join on (band,
+    * band_hash) instead of dying at the broadcast ceiling — same rows
+    * either way (DedupSpec pins broadcast ≡ shuffle ≡ this choice).
+    */
+  private def incrementalPairs(newSigs: DataFrame,
+      storeSigs: DataFrame, storeBands: DataFrame,
+      numHashes: Int, bands: Int, minEstJaccard: Double,
+      bandKey: (Column, Column) => Column): DataFrame = {
+    val sigs = graft.Caches.track(newSigs)
+    val newBands = MinHashDedup.banded(sigs, numHashes, bands, bandKey)
     incrementalPairsCore(newBands,
       storeBands.select(col("doc_id"), col("band"), col("band_hash"))
         .union(newBands),
-      storeSigs.select(col("doc_id"), col("sig")).union(newSigs),
-      numHashes, minEstJaccard, broadcastBatch)
+      storeSigs.select(col("doc_id"), col("sig")).union(sigs),
+      numHashes, minEstJaccard,
+      bcast = newBands.count() * 64L <= BroadcastBatchMaxBytes)
   }
 
-  private def incrementalPairsFrom(
-      newSigs: DataFrame, existingSigs: DataFrame,
-      numHashes: Int, bands: Int, minEstJaccard: Double,
-      bandKey: (Column, Column) => Column =
-        (j, sl) => org.apache.spark.sql.functions.xxhash64(j, sl)): DataFrame = {
-    val allSigs = existingSigs.select(col("doc_id"), col("sig")).union(newSigs)
-    val newBands = MinHashDedup.banded(newSigs, numHashes, bands, bandKey)
-    val allBands = MinHashDedup.banded(allSigs, numHashes, bands, bandKey)
-    incrementalPairsCore(newBands, allBands, allSigs, numHashes, minEstJaccard)
-  }
-
-  /** Shared tail of the incremental flavors. Scale shape (the reason this
-    * is NOT the plain pairs join): the BATCH band side is broadcast, so the
-    * store's band index is probed MAP-SIDE — the store is scanned, never
-    * shuffled (at rest the store would be bucketed by band_hash and the
-    * probe is bucket-local either way); and the signature lookups are
+  /** Probe of the incremental flavors. Scale shape (the reason this is NOT
+    * the plain pairs join): with `bcast` the BATCH band side is broadcast,
+    * so the store's band index is probed MAP-SIDE — the store is scanned,
+    * never shuffled (at rest the store would be bucketed by band_hash and
+    * the probe is bucket-local either way); and the signature lookups are
     * pruned to candidate ids by broadcast semi-joins before any join, so
     * the store's signature table is also scanned with a map-side filter,
     * never exchanged. Candidate volume is batch-proportional by LSH
     * construction, which is what makes both broadcasts legal. Net: the only
     * corpus-proportional work is two columnar index scans — everything
     * shuffled is ∝ batch (measured: ScaleProbe d13_incremental_shape).
+    * Without `bcast` both joins are left to the planner (AQE is free to
+    * re-promote them).
     *
-    * Contract notes (ADVICE r18/r19): (a) `broadcastBatch = None` (the
-    * default) AUTO-SELECTS the batch posture from the batch's own size —
-    * one batch-proportional `count()` of the band table (the signatures it
-    * forces are cached and reused by the main plan), compared at a
-    * conservative ~64 B/row against `graft.dedup.broadcastBatchMaxBytes`
-    * (default 256 MB, far under the 8 GB broadcast hard cap and default
-    * driver memory). Small batches (daily/hourly ingest slices) broadcast
-    * and probe the store MAP-SIDE; large ones (backfills, whole-day
-    * replays) fall back to a plain shuffled hash join on (band, band_hash)
-    * instead of dying at the broadcast ceiling — same rows either way
-    * (DedupSpec pins Some(true) ≡ Some(false); the id-prune semi-joins
-    * follow the same selection, with AQE free to re-promote). Explicit
-    * Some(…) skips the count — the fully-lazy path. (b) The candidate
-    * frame is a TRACKED cache consumed by three dependent subplans (two
-    * broadcast id-prunes + the join spine) that execute concurrently; the
-    * former eager `count()` that pre-materialized it is gone (r19 advice
-    * residue) — BlockManager's per-block getOrElseUpdate locking already
-    * guarantees each cached partition is computed once, with concurrent
-    * readers blocking on the lock instead of recomputing.
+    * The candidate frame is a TRACKED cache consumed by three dependent
+    * subplans (two id-prunes + the join spine) that execute concurrently;
+    * BlockManager's per-block getOrElseUpdate locking guarantees each
+    * cached partition is computed once, with concurrent readers blocking on
+    * the lock instead of recomputing (r19 advice residue: no eager
+    * `count()` pre-materializes it).
     */
-  private def incrementalPairsCore(
+  private[graft] def incrementalPairsCore(
       newBands: DataFrame, allBands: DataFrame, allSigs: DataFrame,
-      numHashes: Int, minEstJaccard: Double,
-      broadcastBatch: Option[Boolean] = None): DataFrame = {
-    val bcast = broadcastBatch.getOrElse {
-      val maxBytes = newBands.sparkSession.conf
-        .get("graft.dedup.broadcastBatchMaxBytes", (256L << 20).toString).toLong
-      newBands.count() * 64L <= maxBytes
-    }
+      numHashes: Int, minEstJaccard: Double, bcast: Boolean): DataFrame = {
     // oriented (new_id, other) candidates; tracked (persisted) — reused
     // three times below (ADVICE r18: track() already persists; the former
     // inner .cache() double-persisted and warned)
@@ -708,48 +635,6 @@ object Dedup {
           .as("est_jaccard"))
       .filter(col("est_jaccard") >= minEstJaccard)
       .distinct()
-  }
-
-  /** [[components]] with pointer jumping (path shortcutting): each round
-    * does the neighbor-min step AND then re-points every label at its
-    * label's label — O(log diameter) rounds instead of O(diameter), at the
-    * price of one extra labels⋈labels shuffle per round. Same output
-    * contract; equality with [[components]] asserted in DedupFacadeSpec.
-    * Prefer this at scale when clusters can be long chains (e.g. temporal
-    * near-dup drift); prefer [[components]] when clusters are shallow
-    * (typical LSH candidate graphs) and rounds are already ≤ 3.
-    */
-  def componentsFast(pairs: DataFrame, nodes: DataFrame, maxIters: Int = 20): DataFrame = {
-    val p = pairs.select(col("da"), col("db")).cache()
-    val edges = p.select(col("da").as("a"), col("db").as("b"))
-      .union(p.select(col("db").as("a"), col("da").as("b")))
-      .cache()
-    var labels = nodes.select(col("node"), col("node").as("comp"))
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIters) {
-      val nmin = edges.join(labels, col("b") === col("node"))
-        .groupBy(col("a")).agg(min(col("comp")).as("ncomp"))
-      val l1 = labels.join(nmin, col("node") === col("a"), "left_outer")
-        .select(col("node"), col("comp").as("prev"),
-          least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"))
-      // pointer jump: comp(v) ← comp(comp(v)); labels only ever move down
-      // within the component, so the shortcut is safe and halves chains
-      val next = l1.as("x")
-        .join(l1.select(col("node").as("n2"), col("comp").as("c2")),
-          col("x.comp") === col("n2"), "left_outer")
-        .select(col("x.node").as("node"), col("x.prev").as("prev"),
-          coalesce(col("c2"), col("x.comp")).as("comp"))
-        .cache()
-      changed = next.filter(col("comp") =!= col("prev")).count()
-      labels.unpersist()
-      labels = next.select(col("node"), col("comp"))
-      iter += 1
-    }
-    edges.unpersist()
-    p.unpersist()
-    require(changed == 0, s"componentsFast did not converge in $maxIters rounds")
-    labels
   }
 
   /** One-call near-dup dedup: cluster the candidate pairs, keep the min-id

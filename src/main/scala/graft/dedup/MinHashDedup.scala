@@ -100,11 +100,11 @@ object MinHashDedup {
   }
 
   /** (doc_id, band, band_hash) — one row per band per document. `bandKey`
-    * maps the band's sub-signature to the bucket key: xxhash64 (8-byte,
-    * engine default) or the comma-joined string form (oracle-mirrorable).
+    * maps the band's sub-signature to the bucket key: [[longBandKey]]
+    * (engine default) or [[stringBandKey]] (oracle-mirrorable).
     */
   def banded(sigs: DataFrame, numHashes: Int, bands: Int,
-      bandKey: (Column, Column) => Column = (j, sl) => xxhash64(j, sl)): DataFrame = {
+      bandKey: (Column, Column) => Column = longBandKey): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rows = numHashes / bands
     sigs.select(col("doc_id"),
@@ -113,6 +113,9 @@ object MinHashDedup {
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "band_hash")
   }
+
+  /** Band bucket key as xxhash64 of (band index, sub-signature): 8 bytes. */
+  val longBandKey: (Column, Column) => Column = (j, sl) => xxhash64(j, sl)
 
   /** Band bucket key as the sub-signature itself, comma-joined — larger than
     * the xxhash64 key but exactly reproducible in the DuckDB oracle.
@@ -145,7 +148,7 @@ object MinHashDedup {
 
   private def candidatePairsFrom(
       sigs: DataFrame, numHashes: Int, bands: Int, minEstJaccard: Double,
-      bandKey: (Column, Column) => Column = (j, sl) => xxhash64(j, sl)): DataFrame = {
+      bandKey: (Column, Column) => Column = longBandKey): DataFrame = {
     val bd = banded(sigs, numHashes, bands, bandKey)
     val pairs = bd
       .join(bd.select(col("band").as("band_b"), col("band_hash").as("band_hash_b"),

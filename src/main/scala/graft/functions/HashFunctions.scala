@@ -11,10 +11,9 @@ import org.apache.spark.sql.functions._
   * v1 includes the timestamp, v2 (logbot_roundrobin.py:50-54) excludes it so
   * the same message seen by two bots seconds apart collides.
   *
-  * Engine keys here are *not* blake2b: for oracle-checked queries we use md5
-  * (bit-identical in DuckDB), and for engine-internal fast paths xxhash64
-  * (codegen'd, 8 bytes like the reference digest). Bit-exact blake2b compat
-  * lives in [[Blake2b]] behind the scalatest goldens only.
+  * Engine keys here are *not* blake2b: they are md5 (bit-identical in
+  * DuckDB, so every keyed query sits under the oracle). Bit-exact blake2b
+  * compat lives in [[Blake2b]] behind the scalatest goldens only.
   */
 object HashFunctions {
 
@@ -23,11 +22,6 @@ object HashFunctions {
     */
   def contentKey(cols: Column*): Column =
     md5(concat_ws("|", cols.map(_.cast("string")): _*))
-
-  /** Engine-internal fast key: 64-bit xxhash (whole-stage codegen'd), same
-    * 8-byte width as the reference's blake2b digest_size=8.
-    */
-  def contentKey64(cols: Column*): Column = xxhash64(cols: _*)
 
   /** v1-shaped key: fields including the (second-truncated) event time. */
   def keyV1(channel: Column, nick: Column, posted: Column, remark: Column): Column =

@@ -71,13 +71,11 @@ object TextFunctions {
     * drivers like Verify/Bench, a leak in a long-lived session).
     * Note searchText's `lower(text)` postings are a DIFFERENT plan from
     * h8_bm25/t4_tfidf's raw-text postings, so a session using both holds
-    * two cached copies; pass `cache = false` to opt out entirely.
+    * two cached copies.
     */
-  def postings(docs: DataFrame, id: Column, text: Column,
-      cache: Boolean = true): DataFrame = {
-    val p = docs.select(id.as("doc_id"), explode(tokens(text)).as("term"))
-    if (cache) graft.Caches.track(p) else p
-  }
+  def postings(docs: DataFrame, id: Column, text: Column): DataFrame =
+    graft.Caches.track(
+      docs.select(id.as("doc_id"), explode(tokens(text)).as("term")))
 
   val stopwords: Seq[String] =
     Seq("the", "a", "of", "and", "to", "in", "is", "for", "on", "with")
@@ -85,27 +83,12 @@ object TextFunctions {
   def stopwordCount(toks: Column): Column =
     size(filter(toks, t => t.isin(stopwords: _*)))
 
-  /** Quality heuristics for training-data filtering: token count, mean token
-    * length, stopword ratio, alphanumeric ratio. Cheap, fully codegen'd.
-    */
-  def charsPerToken(text: Column): Column =
-    length(text).cast("double") / tokenCount(text)
-
-  def stopwordRatio(text: Column): Column =
-    stopwordCount(tokens(text)).cast("double") / tokenCount(text)
-
   /** Document fingerprint: md5 over the whitespace-normalized lowercase text.
     * Exact-dup detection key (reference analog: blake2b content id,
     * /root/reference/utils.py:125-136).
     */
   def fingerprint(text: Column): Column =
     md5(lower(regexp_replace(trim(text), "\\s+", " ")))
-
-  /** 64-bit rolling-style fingerprint for engine-internal use (xxhash64 of
-    * the normalized text — codegen'd, 8 bytes).
-    */
-  def fingerprint64(text: Column): Column =
-    xxhash64(lower(regexp_replace(trim(text), "\\s+", " ")))
 
   /** Heuristic language ID over latin-script stopword votes + CJK detection.
     * Approximate by design (n-gram profile heuristic, SURVEY north-star);

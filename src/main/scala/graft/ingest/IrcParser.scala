@@ -40,13 +40,11 @@ object IrcParser {
 
   def isPing(line: Column): Column = line.contains("PING :")
 
-  def extractGroup(line: Column, group: Int): Column =
-    regexp_extract(line, MsgPattern, group)
-
   /** All five MsgPattern capture groups in ONE regex pass (r21 —
     * [[graft.functions.RegexpGroups]]): per-group semantics identical to
-    * [[extractGroup]] (first match; no match or unmatched group → ""), but
-    * the line is matched once instead of once per group. Read groups with
+    * `regexp_extract(line, MsgPattern, i)` (first match; no match or
+    * unmatched group → ""), but the line is matched once instead of once
+    * per group. Read groups with
     * `element_at(_, i)` — same 1-based numbering as regexp_extract.
     */
   def extractGroups(line: Column): Column =

@@ -250,20 +250,23 @@ object DedupQueries extends QueryGroup {
     // D2/I — INCREMENTAL near-dup, the append-only production shape: a new
     // batch's signatures banded against an existing signature STORE plus
     // themselves — the corpus is never re-paired against itself. Parity
-    // split: even doc_ids are the store (pre-computed md5 signatures), odd
-    // doc_ids are the arriving batch. Because newBands ⊆ allBands under the
-    // same band key, the result is EXACTLY the full corpus's md5-LSH pairs
-    // restricted to pairs involving ≥1 new doc — which is what the oracle
-    // computes (the d2_minhash_md5 pipeline + that restriction).
+    // split: even doc_ids are the store (pre-computed md5 signatures and
+    // their string-keyed bands, in memory — d13 is the same probe against a
+    // parquet round-trip), odd doc_ids are the arriving batch. Because
+    // newBands ⊆ allBands under the same band key, the result is EXACTLY
+    // the full corpus's md5-LSH pairs restricted to pairs involving ≥1 new
+    // doc — which is what the oracle computes (the d2_minhash_md5 pipeline
+    // + that restriction).
     Q("i3_incremental_minhash",
       (s, d) => {
         val docs = Tables(s, d, "documents")
         val store = graft.Caches.track(
           docs.filter(pmod(col("doc_id"), lit(2)) === 0)
             .select(col("doc_id"), MinHashDedup.signatureMd5(col("text")).as("sig")))
-        Dedup.incrementalMinhashPairsMd5(
+        Dedup.incrementalMinhashPairsBandedMd5(
           docs.filter(pmod(col("doc_id"), lit(2)) === 1),
-          col("doc_id"), col("text"), store)
+          col("doc_id"), col("text"), store,
+          MinHashDedup.banded(store, 64, 8, MinHashDedup.stringBandKey))
           .orderBy(col("da"), col("db"))
       },
       Some(s"""WITH $md5LshEstSql
@@ -289,12 +292,7 @@ object DedupQueries extends QueryGroup {
     Q("d13_incremental_minhash",
       (s, d) => {
         val docs = Tables(s, d, "documents")
-        // memory-backed when available (k1 precedent, r22): the gate checks
-        // the index's parquet round-trip CONTENT, not tmpdir disk latency —
-        // a disk-backed store measured a 21.8 s first rep on a loaded
-        // window against a 4.6 s quiet median
-        val idx = graft.Harness.scratch("graft_mhidx", d,
-          graft.sinks.EsShapedSink.scratchRoot)
+        val idx = graft.Harness.scratch("graft_mhidx", d)
         docs.filter(pmod(col("doc_id"), lit(2)) === 0)
           .select(col("doc_id"), MinHashDedup.signatureMd5(col("text")).as("sig"))
           .write.mode("overwrite").parquet(s"$idx/sigs")
@@ -387,7 +385,7 @@ object DedupQueries extends QueryGroup {
     Q("d3_dedup_groups_lsh",
       (s, d) => {
         val docs = Tables(s, d, "documents")
-        val pairs = graft.dedup.Dedup.minhashPairsMd5(
+        val pairs = MinHashDedup.candidatePairsMd5(
           docs, col("doc_id"), col("text"))
         graft.dedup.Dedup.dedupGroups(docs, col("doc_id"), pairs)
           .orderBy(col("doc_id"))
@@ -446,7 +444,7 @@ object DedupQueries extends QueryGroup {
     Q("d5_dedup_apply",
       (s, d) => {
         val docs = Tables(s, d, "documents")
-        val pairs = graft.dedup.Dedup.minhashPairsMd5(
+        val pairs = MinHashDedup.candidatePairsMd5(
           docs, col("doc_id"), col("text"))
         graft.dedup.Dedup.keepRepresentatives(docs, col("doc_id"), pairs)
           .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
@@ -569,7 +567,7 @@ object DedupQueries extends QueryGroup {
     Q("d10_dedup_yield_lsh",
       (s, d) => {
         val docs = Tables(s, d, "documents")
-        val pairs = graft.dedup.Dedup.minhashPairsMd5(
+        val pairs = MinHashDedup.candidatePairsMd5(
           docs, col("doc_id"), col("text"))
         graft.dedup.Dedup.dedupGroups(docs, col("doc_id"), pairs)
           .groupBy(col("comp")).agg(count(lit(1)).as("sz"))

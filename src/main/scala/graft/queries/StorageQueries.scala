@@ -176,14 +176,7 @@ object StorageQueries extends QueryGroup {
     // exchange, the d1 shape.
     Q("k1_es_upsert_roundtrip",
       (s, d) => {
-        // memory-backed when available (EsShapedSink.scratchRoot): the gate
-        // checks wire content + upsert semantics, not tmpdir disk latency.
-        // Routed through `scratch` (r22) so the spool dir gets the same
-        // shutdown-hook cleanup as every other scratch — the bare
-        // scratchRoot/tag path leaked one tmpfs dir per JVM (2 GB of stale
-        // /dev/shm spools found from prior driver runs).
-        val spool = scratch("graft_esspool", d,
-          graft.sinks.EsShapedSink.scratchRoot)
+        val spool = scratch("graft_esspool", d)
         // reruns (bench reps) must not accumulate spool files
         val dir = new java.io.File(spool)
         if (dir.exists) dir.listFiles.foreach(f => { f.delete(); () })

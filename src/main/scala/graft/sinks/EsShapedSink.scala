@@ -73,22 +73,6 @@ object EsShapedSink {
     }
   }
 
-  /** Scratch root for spool directories that only need to outlive one query:
-    * prefer a memory-backed filesystem (`/dev/shm` on Linux) over the disk
-    * tmpdir. The k1 round-trip gate verifies NDJSON CONTENT and upsert
-    * semantics, not disk latency — and a per-rep full-table spool through
-    * `java.io.tmpdir` was flagged as an I/O ambush victim in two consecutive
-    * driver windows (r15 rep-3 20.9 s, r16 all reps ≤34.7 s vs isolated
-    * median 1.85 s, BASELINE.md r16). Falls back to tmpdir where no
-    * writable `/dev/shm` exists; durability-sensitive callers (dead-letter
-    * quarantine) should keep passing an explicit on-disk dir.
-    */
-  def scratchRoot: String = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) shm.getAbsolutePath
-    else System.getProperty("java.io.tmpdir")
-  }
-
   /** Minimal RFC 8259 string escaping — enough for the five document fields;
     * non-ASCII passes through (the wire is UTF-8, like the reference's
     * `txt.encode("utf-8")`).

@@ -409,17 +409,6 @@ object IrcStream {
     spark.read.parquet(s"$rollupDir/v=${vs.max}")
   }
 
-  /** Stream → parse → dedup → incremental rollup view (ST + IncrementalAgg
-    * composition). The record sink keeps full fidelity elsewhere; this
-    * maintains the always-fresh aggregate a dashboard/alert reads.
-    */
-  def startRollup(
-      lines: DataFrame, rollupDir: String, checkpointDir: String,
-      watermark: String = "10 minutes",
-      trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    startDeduped(lines, checkpointDir, watermark, trigger)(
-      (b, id) => rollupBatch(b, id, rollupDir))
-
   /** The reference's ACTUAL write loop, end-to-end (irclogbot.py:46-59):
     * stream → parse → dedup → per-RECORD sink write with bounded retry →
     * drop (dead-letter). Use when the sink is a record-level client (the ES

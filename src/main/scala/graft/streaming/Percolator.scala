@@ -121,32 +121,37 @@ object Percolator {
       .select(col("query_id"), col("doc_id"))
   }
 
-  /** Store-size AUTO-DISPATCH (r19 verdict #6): row form under the dial,
-    * rarest-term-anchored [[matchDocsSelective]] above it. The dial
-    * `graft.percolator.rowFormMaxQueries` defaults to 1000: the row form's
-    * wall is store-linear (10.5 s @ 1k → 84.9 s @ 10k registered queries
-    * on the 10× corpus — BENCH_percolate_spot.json), while the selective
-    * form pays a ~fixed corpus-df aggregate plus candidate volume
-    * Σ_q df(anchor_q), so its wall is ~flat in fleet size; the measured
-    * crossover sits low in the 1k–10k decade (BASELINE.md r20). The store
-    * is small relative to the corpus by contract, so the one dispatch
-    * `count()` is cheap; all forms emit identical rows, so the dial is a
-    * pure cost choice.
+  /** Largest query store [[percolate]] / [[startPercolate]] match with the
+    * row form: its wall is store-linear (10.5 s @ 1k → 84.9 s @ 10k
+    * registered queries on the 10× corpus — BENCH_percolate_spot.json),
+    * while the selective form pays a ~fixed corpus-df aggregate plus
+    * candidate volume Σ_q df(anchor_q), so its wall is ~flat in fleet size;
+    * the measured crossover sits low in the 1k–10k decade (BASELINE.md
+    * r20).
     */
-  def percolate(docs: DataFrame, store: DataFrame): DataFrame = {
-    val maxQ = docs.sparkSession.conf
-      .get("graft.percolator.rowFormMaxQueries", "1000").toLong
-    if (store.count() <= maxQ) matchDocs(docs, store)
-    else matchDocsSelective(docs, store)
-  }
+  private val RowFormMaxQueries = 1000L
+
+  /** Store-size AUTO-DISPATCH (r19 verdict #6): the row form up to
+    * [[RowFormMaxQueries]] queries, the rarest-term-anchored
+    * [[matchDocsSelective]] above. The store is small relative to the
+    * corpus by contract, so the one dispatch `count()` is cheap; all forms
+    * emit identical rows, so the choice is pure cost.
+    */
+  private def matcher(store: DataFrame): DataFrame => DataFrame =
+    if (store.count() <= RowFormMaxQueries) matchDocs(_, store)
+    else matchDocsSelective(_, store)
+
+  /** [[matchDocs]] or [[matchDocsSelective]] by the store's size. */
+  def percolate(docs: DataFrame, store: DataFrame): DataFrame =
+    matcher(store)(docs)
 
   /** Streaming percolation at FLEET scale (r19 verdict stretch #9): the
     * [[percolate]] dispatch applied per micro-batch. The row form streams
     * directly (stateless map-side plan), but the selective
-    * (rarest-term-anchored) form — what [[matchDocsSelective]] dispatches
-    * past the dial; NOT the kept-as-anti-pattern postings join (ADVICE r20
-    * #4) — needs a per-batch aggregation: inside foreachBatch each micro-batch is a
-    * plain batch plan, so BOTH forms stay state-store-free by construction
+    * (rarest-term-anchored) form — what [[percolate]] dispatches past
+    * [[RowFormMaxQueries]]; NOT the kept-as-anti-pattern postings join
+    * (ADVICE r20 #4) — needs a per-batch aggregation: inside foreachBatch
+    * each micro-batch is a plain batch plan, so BOTH forms stay state-store-free by construction
     * (no watermark, no keyed state; StreamingSpec asserts
     * `stateOperators` is empty). Hits land under `hitsDir/b<batchId>`
     * with overwrite — the DedupStream replay-idempotence posture: a
@@ -157,15 +162,11 @@ object Percolator {
   def startPercolate(docs: DataFrame, store: DataFrame,
       hitsDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val maxQ = docs.sparkSession.conf
-      .get("graft.percolator.rowFormMaxQueries", "1000").toLong
-    val rowForm = store.count() <= maxQ
+    val matchBatch = matcher(store)
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val hits = if (rowForm) matchDocs(b, store)
-                   else matchDocsSelective(b, store)
-        hits.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        matchBatch(b).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$hitsDir/b$batchId")
       }
   }

@@ -93,7 +93,7 @@ class DedupFacadeSpec extends SparkSuite {
     graft.Caches.unpersistAll() // isolate from caches of earlier tests
     val docs = Tables(spark, sf, "documents").limit(50)
     Dedup.jaccardPairs(docs, col("doc_id"), col("text"), 0.5).count()
-    Dedup.minhashPairs(docs, col("doc_id"), col("text")).count()
+    MinHashDedup.candidatePairs(docs, col("doc_id"), col("text")).count()
     val tracked = graft.Caches.snapshot
     assert(tracked.size == 2, s"expected 2 tracked caches, got ${tracked.size}")
     assert(tracked.forall(_.storageLevel != StorageLevel.NONE), "caches not pinned")
@@ -101,12 +101,12 @@ class DedupFacadeSpec extends SparkSuite {
     assert(tracked.forall(_.storageLevel == StorageLevel.NONE), "caches survived release")
     assert(graft.Caches.snapshot.isEmpty)
     // operators stay correct after release (re-cache on next use)
-    assert(Dedup.minhashPairs(docs, col("doc_id"), col("text")).count() >= 0)
+    assert(MinHashDedup.candidatePairs(docs, col("doc_id"), col("text")).count() >= 0)
     graft.Caches.unpersistAll()
   }
 
-  test("Dedup.incrementalMinhashPairs finds new-vs-existing and new-vs-new dups, " +
-    "never existing-vs-existing") {
+  test("Dedup.incrementalMinhashPairsBanded finds new-vs-existing and new-vs-new " +
+    "dups, never existing-vs-existing") {
     val existing = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again"),
       (2L, "the quick brown fox jumps over the lazy dog again"), // dup of 1 (NOT re-paired)
@@ -118,8 +118,8 @@ class DedupFacadeSpec extends SparkSuite {
       (11L, "brand new content with no duplicate anywhere at all"),
       (12L, "brand new content with no duplicate anywhere at all")) // dup of 11
       .toDF("doc_id", "text")
-    val got = Dedup.incrementalMinhashPairs(fresh, col("doc_id"), col("text"),
-        existingSigs)
+    val got = Dedup.incrementalMinhashPairsBanded(fresh, col("doc_id"), col("text"),
+        existingSigs, MinHashDedup.banded(existingSigs, 64, 8))
       .select("da", "db").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((1L, 10L), (2L, 10L), (11L, 12L))) // no (1,2): not re-paired
   }
@@ -162,19 +162,22 @@ class DedupFacadeSpec extends SparkSuite {
     val storeSigs = MinHashDedup.signatures(store, col("doc_id"), col("text"))
     val storeBands = MinHashDedup.banded(storeSigs, 64, 8)
     val batch = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-    def run(bc: Option[Boolean]) = Dedup.incrementalMinhashPairsBanded(
-        batch, col("doc_id"), col("text"), storeSigs, storeBands,
-        broadcastBatch = bc)
-      .select("da", "db", "est_jaccard")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val a = run(Some(true))
-    graft.Caches.unpersistAll()
-    val b = run(Some(false))
-    graft.Caches.unpersistAll()
-    // r19 advice residue: None auto-selects from the batch's size (this
-    // small batch lands on the broadcast side) — same rows either way.
-    val c = run(None)
-    graft.Caches.unpersistAll()
+    val newSigs = MinHashDedup.signatures(batch, col("doc_id"), col("text"))
+    val newBands = MinHashDedup.banded(newSigs, 64, 8)
+    def rows(pairs: org.apache.spark.sql.DataFrame) = {
+      val r = pairs.select("da", "db", "est_jaccard")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      graft.Caches.unpersistAll()
+      r
+    }
+    def core(bcast: Boolean) = rows(Dedup.incrementalPairsCore(newBands,
+      storeBands.union(newBands), storeSigs.union(newSigs), 64, 0.5, bcast))
+    val a = core(bcast = true)
+    val b = core(bcast = false)
+    // r19 advice residue: the public entry selects from the batch's size
+    // (this small batch lands on the broadcast side) — same rows either way.
+    val c = rows(Dedup.incrementalMinhashPairsBanded(
+      batch, col("doc_id"), col("text"), storeSigs, storeBands))
     assert(a == b && a == c && a.nonEmpty)
   }
 
@@ -186,23 +189,37 @@ class DedupFacadeSpec extends SparkSuite {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L))
   }
 
-  test("Dedup.componentsFast equals components on chains, cliques and fixture pairs") {
-    // 8-node chain (worst case for plain propagation) + 3-clique + singleton
-    val pairs = ((1L to 7L).map(i => (i, i + 1)) ++ Seq((20L, 21L), (21L, 22L), (20L, 22L)))
-      .toDF("da", "db")
-    val nodes = ((1L to 8L) ++ Seq(20L, 21L, 22L) :+ 99L).toDF("node")
+  test("Dedup.components: chains, cliques and fixture pairs match a driver-side " +
+    "union-find") {
+    // min-id component of every node by union-find over collected pairs
+    def reference(pairs: Seq[(Long, Long)], nodes: Seq[Long]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)
+      def find(n: Long): Long = if (parent(n) == n) n else find(parent(n))
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      nodes.map(n => n -> find(n)).toMap
+    }
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val slow = toMap(Dedup.components(pairs, nodes))
-    val fast = toMap(Dedup.componentsFast(pairs, nodes))
-    assert(fast == slow)
-    assert(fast(8L) == 1L && fast(22L) == 20L && fast(99L) == 99L)
-    // fixture candidate graph: both algorithms agree end-to-end
+    // 8-node chain (worst case for plain propagation) + 3-clique + singleton
+    val chain = (1L to 7L).map(i => (i, i + 1)) ++
+      Seq((20L, 21L), (21L, 22L), (20L, 22L))
+    val chainNodes = (1L to 8L) ++ Seq(20L, 21L, 22L) :+ 99L
+    val got = toMap(Dedup.components(chain.toDF("da", "db"), chainNodes.toDF("node")))
+    assert(got == reference(chain, chainNodes))
+    assert(got(8L) == 1L && got(22L) == 20L && got(99L) == 99L)
+    // fixture candidate graph
     val docs = Tables(spark, sf, "documents")
     val jp = Dedup.jaccardPairs(docs, col("doc_id"), col("text"), 0.5,
       Seq(col("lang"), col("source")))
-    val n = docs.select(col("doc_id").as("node"))
-    assert(toMap(Dedup.componentsFast(jp, n)) == toMap(Dedup.components(jp, n)))
+    val jpRows = jp.select("da", "db").as[(Long, Long)].collect().toSeq
+    val ids = docs.select("doc_id").as[Long].collect().toSeq
+    assert(jpRows.nonEmpty, "fixture has no Jaccard pairs — test is vacuous")
+    assert(toMap(Dedup.components(jp, docs.select(col("doc_id").as("node")))) ==
+      reference(jpRows, ids))
+    graft.Caches.unpersistAll()
   }
 
   test("Dedup.components: empty pair set leaves every node its own component") {

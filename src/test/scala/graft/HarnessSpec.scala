@@ -24,6 +24,22 @@ class HarnessSpec extends SparkSuite {
     assert(f.json.startsWith("{\"class\":"))
   }
 
+  test("Caches: unpersistAll on another thread leaves this thread's caches live") {
+    import org.apache.spark.storage.StorageLevel
+    val df = Caches.track(spark.range(17).toDF("caches_thread_scope"))
+    var other: Throwable = null
+    val t = new Thread(() =>
+      try Caches.unpersistAll() catch { case e: Throwable => other = e })
+    t.start()
+    t.join()
+    assert(other == null, s"unpersistAll threw on another thread: $other")
+    assert(df.storageLevel != StorageLevel.NONE, "released by another thread")
+    assert(Caches.snapshot.contains(df))
+    Caches.unpersistAll()
+    assert(df.storageLevel == StorageLevel.NONE, "survived its own thread's release")
+    assert(Caches.snapshot.isEmpty)
+  }
+
   test("timed: a successful run returns the wall seconds") {
     val r = Harness.timed(spark.range(100).toDF("x"))
     assert(r.exists(_ >= 0.0), r.toString)

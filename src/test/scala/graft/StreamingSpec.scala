@@ -13,6 +13,13 @@ class StreamingSpec extends SparkSuite {
 
   private def sqlCtx = classic.sqlContext
 
+  /** `store` plus 1000 queries whose only term occurs in no document: past
+    * the percolator's 1000-query row-form limit, with the same hits.
+    */
+  private def fleet(store: org.apache.spark.sql.DataFrame) =
+    store.unionByName((1000L until 2000L)
+      .map(i => (i, Seq(s"zzzunseen$i"), 1)).toDF("query_id", "q_terms", "n_terms"))
+
   test("streaming parse + watermarked dedup drops the cross-bot duplicate (ST3)") {
     implicit val ctx = sqlCtx
     val ms = MemoryStream[String]
@@ -781,20 +788,13 @@ class StreamingSpec extends SparkSuite {
       Seq((99L, Seq("zzzunseen", "the"), 2)).toDF("query_id", "q_terms", "n_terms"))
     assert(pairs(graft.streaming.Percolator.matchDocsSelective(docs, withDead))
       == row)
-    // dial below the store size → selective (rarest-term) form; above →
-    // row form. Both
-    // must return the same rows, so dispatch is pinned as pure cost choice.
-    val prev = spark.conf.getOption("graft.percolator.rowFormMaxQueries")
+    // a fleet past the 1000-query row-form limit → selective (rarest-term)
+    // form; the 10-query store → row form. Both must return the same rows,
+    // so dispatch is pinned as pure cost choice.
     try {
-      spark.conf.set("graft.percolator.rowFormMaxQueries", "1")
+      assert(pairs(graft.streaming.Percolator.percolate(docs, fleet(store))) == row)
       assert(pairs(graft.streaming.Percolator.percolate(docs, store)) == row)
-      spark.conf.set("graft.percolator.rowFormMaxQueries", "100000")
-      assert(pairs(graft.streaming.Percolator.percolate(docs, store)) == row)
-    } finally {
-      store.unpersist()
-      prev.fold(spark.conf.unset("graft.percolator.rowFormMaxQueries"))(
-        spark.conf.set("graft.percolator.rowFormMaxQueries", _))
-    }
+    } finally store.unpersist()
   }
 
   test("streaming percolation at fleet scale: selective (rarest-term-anchored) " +
@@ -814,13 +814,11 @@ class StreamingSpec extends SparkSuite {
       .select(col("doc_id"), col("text")).as[(Long, String)].collect()
     val chunks = docs.grouped(math.max(1, docs.length / 3 + 1)).toSeq
     val base = java.nio.file.Files.createTempDirectory("graft_perc").toString
-    val prev = spark.conf.getOption("graft.percolator.rowFormMaxQueries")
     try {
-      // dial forced BELOW the store size → the postings form runs per batch
-      spark.conf.set("graft.percolator.rowFormMaxQueries", "1")
+      // a fleet past the row-form limit → the selective form runs per batch
       val ms = MemoryStream[(Long, String)]
       val q = graft.streaming.Percolator.startPercolate(
-          ms.toDF().toDF("doc_id", "text"), store,
+          ms.toDF().toDF("doc_id", "text"), fleet(store),
           s"$base/hits", s"$base/ckpt").start()
       chunks.foreach { c => ms.addData(c.toIndexedSeq); q.processAllAvailable() }
       // state-free by construction: foreachBatch runs batch plans only
@@ -834,11 +832,7 @@ class StreamingSpec extends SparkSuite {
           Tables(spark, sf, "documents"), store)
         .as[(Long, Long)].collect().toSet
       assert(streamed == batch && streamed.nonEmpty)
-    } finally {
-      store.unpersist()
-      prev.fold(spark.conf.unset("graft.percolator.rowFormMaxQueries"))(
-        spark.conf.set("graft.percolator.rowFormMaxQueries", _))
-    }
+    } finally store.unpersist()
   }
 
   test("stream-static enrichment: broadcast dim join inside the micro-batch " +

@@ -36,6 +36,7 @@ sbt -batch test
 if [[ "${1:-}" != "--quick" && -f BENCH_full.json ]]; then
   echo "== bench artifact check (committed BENCH_full.json vs baseline)"
   python3 tools/test_check_bench.py
+  python3 tools/test_plan_diff.py
   python3 -m unittest discover -s perfbench/tests
   python3 tools/check_bench.py BENCH_full.json
 fi
