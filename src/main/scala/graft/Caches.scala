@@ -19,8 +19,10 @@ import org.apache.spark.sql.DataFrame
   *
   * Deliberately coarse-grained: per-operator handles would leak into every
   * signature for a bookkeeping concern. Caches whose lifecycle is already
-  * internal to one call (cached AND unpersisted inside, like
-  * `Dedup.components`) don't go through here.
+  * internal to one call (cached AND unpersisted inside, like the pair and
+  * edge frames of `Dedup.components`) don't go through here; an operator
+  * that drops a tracked cache before returning (a superseded
+  * label-propagation round) hands it to [[release]].
   *
   * The registry is PER THREAD: [[unpersistAll]] releases only the caches
   * the calling thread tracked, so two callers sharing one session (a
@@ -57,6 +59,12 @@ object Caches {
   def unpersistAll(): Unit = {
     live.get.foreach(_.unpersist(false))
     live.get.clear()
+  }
+
+  /** Unpersist one cache this thread tracked and stop tracking it. */
+  private[graft] def release(df: DataFrame): Unit = {
+    df.unpersist(false)
+    live.get -= df
   }
 
   private[graft] def snapshot: Seq[DataFrame] = live.get.toList

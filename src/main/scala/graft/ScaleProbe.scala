@@ -8,7 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.streaming.Percolator.{matchDocs, matchDocsPostings, matchDocsSelective}
+import graft.streaming.Percolator.{matchDocs, matchDocsSelective}
 
 /** Scale probe: runs registered queries — the actual `SparkEntry.queries`
   * code — at the base scale factor and at `xf`× it, plus the few shapes
@@ -261,14 +261,11 @@ object ScaleProbe {
     // conjunctive; 1 in 200 pairs two real corpus tokens (matchable), the
     // rest pair a real token with a synthetic "alert<i>" term no document
     // contains (the alerting fleet's steady state; the scan cost is the
-    // same). Three matcher forms: the ROW form (broadcast store, stateless
+    // same). Two matcher forms: the ROW form (broadcast store, stateless
     // scan — store-linear per doc by construction, so the 1k/10k pair
-    // measures the slope); the naive POSTINGS join, kept at 1k/10k as the
-    // documented anti-pattern (on this fixture's ~30-term vocabulary every
-    // real term is hot, so its candidate space is ~docs × queries / |vocab|);
-    // the SELECTIVE form, which anchors each query on its lowest-df term, so
-    // the df-0 "alert" fleets generate ZERO candidates and its wall should
-    // stay ~flat from 1k to 100k.
+    // measures the slope); the SELECTIVE form, which anchors each query on
+    // its lowest-df term, so the df-0 "alert" fleets generate ZERO
+    // candidates and its wall should stay ~flat from 1k to 100k.
     def percolateStore(nQueries: Int): DataFrame = {
       val vocab = Tables(spark, sfDir, "documents")
         .select(explode(graft.functions.TextFunctions.tokens(col("text")))
@@ -288,13 +285,14 @@ object ScaleProbe {
         nQueries: Int): DataFrame =
       matcher(docs.select(col("doc_id"), col("text")), percolateStore(nQueries))
 
-    // d7 codebooks: the fine one (every 250th vector) crosses the
-    // ivfFromCentroids dial at probe density, so the auto-select must track
-    // the IVF shape, not the exact one; IVF's coarse level is every 2000th.
-    def codebook(every: Long, id: String, vec: String): DataFrame =
-      emb.filter(pmod(col("vec_id"), lit(every)) === 0)
-        .select(col("vec_id").as(id),
-          transform(col("embedding"), _.cast("double")).as(vec))
+    // d7 codebook: every 250th vector — past semanticDedupPairs' 64-centroid
+    // switch at probe density, so the registered entry must track the IVF
+    // shape, not the exact one. The IVF branch's coarse level (every 8th
+    // centroid in cid order) is then every 2000th vector.
+    def codebook(): DataFrame =
+      emb.filter(pmod(col("vec_id"), lit(250L)) === 0)
+        .select(col("vec_id").as("cid"),
+          transform(col("embedding"), _.cast("double")).as("cvec"))
     val docsLinear = Tables(spark, xfDir, "documents_linear")
     val blocks = Seq(col("lang"), col("source"))
 
@@ -346,23 +344,19 @@ object ScaleProbe {
       "j9_bucket_dial_shape" -> (() => j9Probe(dialBuckets)),
       "t31_percolate_1k_shape" -> (() => percolate(matchDocs, 1000)),
       "t31_percolate_10k_shape" -> (() => percolate(matchDocs, 10000)),
-      "t31_postings_1k_shape" -> (() => percolate(matchDocsPostings, 1000)),
-      "t31_postings_10k_shape" -> (() => percolate(matchDocsPostings, 10000)),
       "t31_selective_1k_shape" -> (() => percolate(matchDocsSelective, 1000)),
       "t31_selective_10k_shape" -> (() => percolate(matchDocsSelective, 10000)),
       "t31_selective_100k_shape" -> (() => percolate(matchDocsSelective, 100000)),
-      // d7 exact vs registered auto-select vs IVF-assisted assignment
-      // (nProbe=2: per-vector work drops from k to c + 2·k/c candidates)
-      "d7_semantic_shape" -> (() => graft.similarity.Ann.semanticDedupPairs(
-        emb, col("vec_id"), col("embedding"), codebook(250L, "cid", "cvec"),
-        threshold = 0.4)),
-      "d7_semantic_auto_shape" -> (() =>
-        graft.similarity.Ann.semanticDedupPairsAuto(emb, col("vec_id"),
-          col("embedding"), codebook(250L, "cid", "cvec"), threshold = 0.4)),
-      "d7_semantic_ivf_shape" -> (() =>
-        graft.similarity.Ann.semanticDedupPairsIvf(emb, col("vec_id"),
-          col("embedding"), codebook(250L, "cid", "cvec"),
-          codebook(2000L, "ccid", "ccvec"), nProbe = 2, threshold = 0.4)))
+      // d7 exact vs registered (size-selected) vs IVF-assisted assignment
+      // (2 probes: per-vector work drops from k to c + 2·k/c candidates)
+      "d7_semantic_shape" -> (() => graft.similarity.Ann.semanticDedupPairsCore(
+        emb, col("vec_id"), col("embedding"), codebook(), threshold = 0.4,
+        ivf = false)),
+      "d7_semantic_auto_shape" -> (() => graft.similarity.Ann.semanticDedupPairs(
+        emb, col("vec_id"), col("embedding"), codebook(), threshold = 0.4)),
+      "d7_semantic_ivf_shape" -> (() => graft.similarity.Ann.semanticDedupPairsCore(
+        emb, col("vec_id"), col("embedding"), codebook(), threshold = 0.4,
+        ivf = true)))
 
     // warm the file-listing/codegen paths once per dir
     Tables.names.foreach { t =>

@@ -456,6 +456,10 @@ object Dedup {
     * (near-dup clusters are shallow). At 100 TB swap in the
     * large-star/small-star alternation (O(log n) rounds, same contract).
     *
+    * The returned labels read the last round's cache, which is tracked in
+    * [[graft.Caches]]: release it with `Caches.unpersistAll()` once the
+    * result is consumed. Every earlier round's cache is released inside.
+    *
     * @param pairs candidate pairs with columns (da, db)
     * @param nodes one row per node, single column `node` (includes
     *              singletons, which keep their own id as component)
@@ -478,6 +482,10 @@ object Dedup {
       .union(p.select(col("db").as("a"), col("da").as("b")))
       .cache()
     var labels = nodes.select(col("node"), col("node").as("comp"))
+    // the previous round's cached frame: released once the next round has
+    // materialized from it; the last one stays tracked in Caches, because
+    // the returned labels read from it
+    var round: Option[DataFrame] = None
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIters) {
@@ -485,12 +493,13 @@ object Dedup {
         .groupBy(col("a")).agg(min(col("comp")).as("ncomp"))
       // carry the previous label through the update so convergence is a
       // plain filter on the materialized frame — no extra join per round
-      val next = labels.join(nmin, col("node") === col("a"), "left_outer")
-        .select(col("node"), col("comp").as("prev"),
-          least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"))
-        .cache()
+      val next = graft.Caches.track(
+        labels.join(nmin, col("node") === col("a"), "left_outer")
+          .select(col("node"), col("comp").as("prev"),
+            least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp")))
       changed = next.filter(col("comp") =!= col("prev")).count()
-      labels.unpersist()
+      round.foreach(graft.Caches.release)
+      round = Some(next)
       labels = next.select(col("node"), col("comp"))
       iter += 1
     }

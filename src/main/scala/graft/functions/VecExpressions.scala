@@ -6,9 +6,10 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
 
 /** Native Catalyst expressions for the vector hot path (SURVEY.md §7.3's
-  * optional perf tier): whole-stage-codegen'd float-array dot product and
-  * squared L2 distance. ~100× faster than the interpreted higher-order-
-  * function fold at large pair counts, while producing **bit-identical**
+  * optional perf tier): whole-stage-codegen'd float-array dot product
+  * (squared L2 is [[DoubleVecL2Sq]] below). ~100× faster than the
+  * interpreted higher-order-function fold at large pair counts, while
+  * producing **bit-identical**
   * results to [[VectorFunctions.dot]]: float multiply → widen to double →
   * double accumulation in index order — the same IEEE op sequence the DuckDB
   * oracle replicates.
@@ -45,49 +46,6 @@ case class FloatVecDot(left: Expression, right: Expression)
          |double $acc = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  $acc += (double) ($a.getFloat($i) * $b.getFloat($i));
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Squared L2 distance with the same determinism contract. */
-case class FloatVecL2Sq(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "float_vec_l2sq"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val d = (x.getFloat(i) - y.getFloat(i)).toDouble
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = (double) ($a.getFloat($i) - $b.getFloat($i));
-         |  $acc += $d * $d;
          |}
          |${ev.value} = $acc;
        """.stripMargin
@@ -487,7 +445,6 @@ object NativeFunctions {
 
   val sql: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "float_vec_dot" -> (a => FloatVecDot(a(0), a(1))),
-    "float_vec_l2sq" -> (a => FloatVecL2Sq(a(0), a(1))),
     "double_vec_dot" -> (a => DoubleVecDot(a(0), a(1))),
     "vec_l2sq" -> (a => DoubleVecL2Sq(a(0), a(1))),
     "vec_agree" -> (a => LongVecAgree(a(0), a(1))),

@@ -42,9 +42,6 @@ object VectorFunctions {
   def cosineNative(a: Column, b: Column): Column =
     dotNative(a, b) / (sqrt(dotNative(a, a)) * sqrt(dotNative(b, b)))
 
-  def l2Native(a: Column, b: Column): Column =
-    sqrt(GraftShim.column(FloatVecL2Sq(GraftShim.expression(a), GraftShim.expression(b))))
-
   /** Squared L2 between two array<double|float> columns — the native
     * [[graft.functions.DoubleVecL2Sq]] kernel behind centroid assignment
     * (Ann, Pq, the v8/v11 oracle queries). Bit-identical to the interpreted
@@ -71,15 +68,6 @@ object VectorFunctions {
     */
   def dotNativeD(a: Column, b: Column): Column =
     GraftShim.column(DoubleVecDot(GraftShim.expression(a), GraftShim.expression(b)))
-
-  /** Euclidean distance, same deterministic fold shape. */
-  def l2(a: Column, b: Column): Column =
-    sqrt(aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = (x - y).cast("double"); d * d
-      }),
-      lit(0.0),
-      (acc, v) => acc + v))
 
   /** Sign-bit LSH bucket for approximate NN: hash each dimension's
     * contribution with a seeded deterministic pseudo-hyperplane (no RNG —

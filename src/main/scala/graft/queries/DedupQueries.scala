@@ -820,11 +820,10 @@ object DedupQueries extends QueryGroup {
         val cents = emb.filter(col("vec_id") < 8)
           .select(col("vec_id").as("cid"),
             transform(col("embedding"), _.cast("double")).as("cvec"))
-        // Auto-selected posture (r20 verdict #6): exact assignment at this
-        // fixture's 8 centroids (below the ivfFromCentroids dial, so the
-        // plan — and the oracle hash — is byte-identical to the exact form);
-        // IVF-assisted assignment once the codebook crosses the dial.
-        graft.similarity.Ann.semanticDedupPairsAuto(
+        // Assignment is chosen by codebook size: exact at this fixture's 8
+        // centroids (at most 64, so the oracle pins the exact branch);
+        // IVF-assisted once the codebook outgrows that.
+        graft.similarity.Ann.semanticDedupPairs(
           emb, col("vec_id"), col("embedding"), cents, threshold = 0.4)
           .select(col("cid"), col("va"), col("vb"), round(col("cos"), 6).as("cos"))
           .orderBy(col("cid"), col("va"), col("vb"))

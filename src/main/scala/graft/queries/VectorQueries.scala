@@ -488,7 +488,7 @@ object VectorQueries extends QueryGroup {
 
     // V6 — sign-LSH ANN candidate pairs (rows-only: the bucket family is
     // xxhash64-seeded, not DuckDB-expressible; recall vs pairsExact is
-    // asserted in AnnSpec).
+    // asserted in EngineSpec).
     Q("v6_ann_lsh_pairs",
       (s, d) => graft.similarity.Ann.pairsLsh(
         Tables(s, d, "embeddings"), col("vec_id"), col("embedding"),

@@ -18,6 +18,12 @@ import graft.functions.VectorFunctions
   *    projections; only same-bucket (or Hamming-adjacent bucket) pairs are
   *    scored. At 100 TB the bucket column doubles as the shuffle/partition
   *    key, so candidate scoring is bucket-local and never all-pairs.
+  *
+  * One implementation per job beneath those fronts: every same-key pair
+  * stage (LSH buckets, semantic-dedup clusters) is [[sameKeyPairs]], every
+  * broadcast-codebook argmin (IVF lists, centroid assignment) is
+  * [[nearestCentroid]], and [[semanticDedupPairs]] is the one semantic-dedup
+  * entry — it picks exact or IVF-assisted assignment by codebook size.
   */
 object Ann {
 
@@ -193,13 +199,14 @@ object Ann {
       .limit(k)
   }
 
-  /** (vec_id, v, nrm) with the L2 norm precomputed once per vector — the
-    * same `sqrt(dot(v,v))` the pairwise cosine would otherwise recompute
-    * per PAIR (2/3 of the FLOPs in an all-pairs scan).
+  /** (keys…, vec_id, v, nrm) with the L2 norm precomputed once per vector
+    * — the same `sqrt(dot(v,v))` the pairwise cosine would otherwise
+    * recompute per PAIR (2/3 of the FLOPs in an all-pairs scan).
     */
-  def normed(embeddings: DataFrame, id: Column, vec: Column): DataFrame =
-    embeddings.select(id.as("vec_id"), vec.as("v"),
-      sqrt(VectorFunctions.dotNative(vec, vec)).as("nrm"))
+  private def normed(embeddings: DataFrame, id: Column, vec: Column,
+      keys: Column*): DataFrame =
+    embeddings.select(keys :+ id.as("vec_id") :+ vec.as("v") :+
+      sqrt(VectorFunctions.dotNative(vec, vec)).as("nrm"): _*)
 
   /** Bucket assignment: nBits sign bits packed into a long. */
   def bucketed(embeddings: DataFrame, id: Column, vec: Column,
@@ -209,11 +216,12 @@ object Ann {
 
   /** LSH candidate pairs: score only same-bucket pairs. Recall < 1 by
     * design; raise by lowering nBits (bigger buckets) or multi-probing.
-    * Verified against pairsExact recall in AnnSpec.
+    * Verified against pairsExact recall in EngineSpec.
     */
   def pairsLsh(embeddings: DataFrame, id: Column, vec: Column,
       threshold: Double, nBits: Int = 8): DataFrame =
-    pairsBucketed(bucketed(embeddings, id, vec, nBits), threshold)
+    sameKeyPairs(bucketed(embeddings, id, vec, nBits), "bucket", threshold)
+      .select(col("va"), col("vb"), col("cos"))
 
   /** [[pairsLsh]] with the md5 hyperplane family
     * ([[VectorFunctions.signLshBucketMd5]]) — every op DuckDB-mirrorable, so
@@ -222,10 +230,11 @@ object Ann {
     */
   def pairsLshMd5(embeddings: DataFrame, id: Column, vec: Column,
       threshold: Double, nBits: Int = 8): DataFrame =
-    pairsBucketed(
+    sameKeyPairs(
       embeddings.select(id.as("vec_id"), vec.as("v"),
         VectorFunctions.signLshBucketMd5(vec, nBits).as("bucket")),
-      threshold)
+      "bucket", threshold)
+      .select(col("va"), col("vb"), col("cos"))
 
   /** Bucket-count sizing for the LSH knn-join: enough sign bits that the
     * EXPECTED bucket holds ~`targetBucketSize` vectors, clamped to [1, 24].
@@ -278,22 +287,24 @@ object Ann {
       .filter(col("rk") <= k)
   }
 
-  /** Same-bucket pair scoring shared by the LSH families: the bucket column
-    * is the shuffle key, norms are per-side, the pair loop is one dot.
+  /** Same-key pair scoring — the one pair stage of the LSH families
+    * (key `bucket`) and semantic dedup (key `cid`): the key column is the
+    * hash-join key, norms are per-side ([[normed]]), the pair loop is one
+    * dot, and the threshold sits in the condition AFTER the cheap va < vb,
+    * so the dot never evaluates for the mirrored half (see pairsExact).
+    * `keyed` carries (key, vec_id, v). Output: (key, va, vb, cos).
     */
-  private def pairsBucketed(bk: DataFrame, threshold: Double): DataFrame = {
-    val withNorm = bk.withColumn("nrm",
-      sqrt(VectorFunctions.dotNative(col("v"), col("v"))))
-    val a = withNorm.select(col("bucket"), col("vec_id").as("va"),
+  private def sameKeyPairs(keyed: DataFrame, key: String,
+      threshold: Double): DataFrame = {
+    val e = normed(keyed, col("vec_id"), col("v"), col(key))
+    val a = e.select(col(key), col("vec_id").as("va"),
       col("v").as("ea"), col("nrm").as("na"))
-    val b = withNorm.select(col("bucket").as("bucket_b"), col("vec_id").as("vb"),
+    val b = e.select(col(key).as(s"${key}_b"), col("vec_id").as("vb"),
       col("v").as("eb"), col("nrm").as("nb"))
     val cos = VectorFunctions.dotNative(col("ea"), col("eb")) / (col("na") * col("nb"))
-    // bucket equality is the hash-join key; va < vb short-circuits before
-    // the dot (see pairsExact)
-    a.join(b, col("bucket") === col("bucket_b") && col("va") < col("vb") &&
+    a.join(b, col(key) === col(s"${key}_b") && col("va") < col("vb") &&
         cos >= threshold)
-      .select(col("va"), col("vb"), cos.as("cos"))
+      .select(col(key), col("va"), col("vb"), cos.as("cos"))
   }
 
   /** IVF coarse codebook from any cluster/label column: one centroid per
@@ -345,11 +356,13 @@ object Ann {
         lit(1.0) - VectorFunctions.cosineNative(col("v"), col("cvec"))).as("i"))
       .collect().head.getDouble(0)
 
-  /** Inverted-file assignment: each vector → its nearest centroid's list.
+  /** Nearest-centroid argmin against a broadcast codebook — the one
+    * assignment kernel behind [[ivfIndex]] and [[assignCentroids]].
     * Centroids are broadcast as ONE array row; the per-vector argmin is
-    * array_min over (dist, cid) structs — the same (1-cos)-then-cid
-    * tie-break as the ranking-window form it replaces, with zero Exchange
-    * (map-side, like [[assignCentroids]], r12).
+    * array_min over (`dist(v, cvec)`, cid) structs — the dist-then-cid
+    * tie-break of the ranking-window form it replaced, with zero Exchange
+    * (the window shuffled the n×k expanded frame just to pick per-vector
+    * minima from a broadcast side, r12). Output: (vec_id, v, cid).
     *
     * Empty-codebook contract (ADVICE r12): the one-row collect_list
     * aggregate yields an empty array for an empty `centroids`, whose
@@ -359,18 +372,26 @@ object Ann {
     * A real codebook (kmeans / train output) never produces a null cid, so
     * the filter is a no-op null check on the hot path.
     */
-  def ivfIndex(embeddings: DataFrame, id: Column, vec: Column,
-      centroids: DataFrame): DataFrame = {
+  private def nearestCentroid(embeddings: DataFrame, id: Column, vec: Column,
+      centroids: DataFrame, dist: (Column, Column) => Column): DataFrame = {
     val cb = centroids.agg(
       collect_list(struct(col("cid"), col("cvec"))).as("cb_arr"))
     val best = array_min(transform(col("cb_arr"), cc =>
-      struct((lit(1.0) - VectorFunctions.cosineNative(col("v"),
-        cc.getField("cvec"))).as("d"), cc.getField("cid").as("cid"))))
+      struct(dist(col("v"), cc.getField("cvec")).as("d"),
+        cc.getField("cid").as("cid"))))
     embeddings.select(id.as("vec_id"), vec.as("v"))
       .crossJoin(broadcast(cb))
       .select(col("vec_id"), col("v"), best.getField("cid").as("cid"))
       .filter(col("cid").isNotNull)
   }
+
+  /** Inverted-file assignment: each vector → its nearest centroid's list by
+    * 1 − cosine ([[nearestCentroid]]). Output: (vec_id, v, cid).
+    */
+  def ivfIndex(embeddings: DataFrame, id: Column, vec: Column,
+      centroids: DataFrame): DataFrame =
+    nearestCentroid(embeddings, id, vec, centroids,
+      (v, c) => lit(1.0) - VectorFunctions.cosineNative(v, c))
 
   /** IVF top-k: score only vectors whose list is among the query's `nProbe`
     * nearest centroids — the classic recall/cost dial (nProbe = ncentroids
@@ -423,15 +444,40 @@ object Ann {
       .limit(k)
   }
 
+  /** Fine-codebook size above which [[semanticDedupPairs]] switches to
+    * IVF-assisted assignment.
+    */
+  private val IvfFromCentroids = 64
+  /** Coarse cells each vector probes on the IVF branch. */
+  private val NProbe = 2
+  /** The IVF branch's coarse codebook is every `CoarseStride`-th fine
+    * centroid in cid order.
+    */
+  private val CoarseStride = 8
+
   /** SemDeDup-shape semantic dedup (Abbas et al. 2023): assign every
-    * embedding to its nearest centroid (broadcast seed set, deterministic
+    * embedding to its nearest centroid (broadcast codebook, deterministic
     * L2-then-cid tie-break), then compute EXACT cosine pairs only WITHIN a
     * cluster — the cluster id plays the blocking role the band key plays in
     * MinHash-LSH, confining the quadratic pair space to cluster-sized
     * blocks. At 100 TB the centroid count grows with the corpus
     * (k ∝ n / target cluster size, same dial as [[derivedNBits]]) so
-    * per-cluster work stays ~constant; the assignment itself is one
-    * broadcast join + ranking window, map-side heavy.
+    * per-cluster work stays ~constant.
+    *
+    * Assignment is chosen by codebook size (r20 verdict #6 — the d13
+    * auto-select precedent applied to d7): the exact n×k argmin
+    * ([[assignCentroids]]) while the codebook has at most 64 centroids;
+    * above, IVF-assisted ([[assignCentroidsIvf]]) with a coarse codebook of
+    * every 8th fine centroid in cid order, probing 2 cells — the recipe the
+    * 10×/30× probes measured at 7.3× over exact (BASELINE.md r11). The size
+    * check is one bounded action over the codebook: `limit(65)` caps its
+    * scan instead of re-executing the centroids frame's whole upstream
+    * lineage for an exact count (r21 ADVICE #5). Because k ∝ n / target
+    * cluster size at scale, a corpus big enough to cross 64 centroids is
+    * exactly the one whose n×k exact assignment has hit the wall the probes
+    * pinned. The d7 fixture runs 8 centroids, so the oracle gate pins the
+    * exact branch; QualitySignalsSpec pins both branches against
+    * [[semanticDedupPairsCore]].
     *
     * `centroids`: (cid, cvec: array<double>). Output: (cid, va, vb, cos)
     * for pairs with cosine ≥ threshold — drop the higher id per pair for
@@ -439,30 +485,38 @@ object Ann {
     */
   def semanticDedupPairs(embeddings: DataFrame, id: Column, vec: Column,
       centroids: DataFrame, threshold: Double): DataFrame =
-    pairsWithinClusters(assignCentroids(embeddings, id, vec, centroids), threshold)
+    semanticDedupPairsCore(embeddings, id, vec, centroids, threshold,
+      ivf = centroids.limit(IvfFromCentroids + 1).count() > IvfFromCentroids)
 
-  /** EXACT nearest-centroid assignment (the n×k baseline): one broadcast
-    * cross join + ranking window, deterministic L2-then-cid tie-break.
+  /** [[semanticDedupPairs]] with the assignment branch given, not chosen:
+    * exact when `ivf` is false, else IVF-assisted over the derived coarse
+    * codebook (its global row_number runs over k codebook rows, never the
+    * corpus). Both branches share the within-cluster pair stage.
+    */
+  private[graft] def semanticDedupPairsCore(embeddings: DataFrame, id: Column,
+      vec: Column, centroids: DataFrame, threshold: Double,
+      ivf: Boolean): DataFrame = {
+    val assigned =
+      if (!ivf) assignCentroids(embeddings, id, vec, centroids)
+      else {
+        val coarse = centroids
+          .withColumn("__rk", row_number().over(Window.orderBy(col("cid"))))
+          .filter(pmod(col("__rk") - 1, lit(CoarseStride)) === 0)
+          .select(col("cid").as("ccid"), col("cvec").as("ccvec"))
+        assignCentroidsIvf(embeddings, id, vec, centroids, coarse, NProbe)
+      }
+    sameKeyPairs(assigned, "cid", threshold)
+  }
+
+  /** EXACT nearest-centroid assignment (the n×k baseline) by squared L2
+    * ([[nearestCentroid]], deterministic L2-then-cid tie-break).
     * Output: (cid, vec_id, v).
     */
   def assignCentroids(embeddings: DataFrame, id: Column, vec: Column,
-      centroids: DataFrame): DataFrame = {
-    // One-row broadcast of the codebook; per-vector argmin is array_min
-    // over (dist, cid) structs — identical L2-then-cid tie-break to the
-    // ranking-window form this replaces, but with ZERO Exchange (the
-    // window shuffled the n×k expanded frame just to pick per-vector
-    // minima from a broadcast side; same fix as the IVF path, r12).
-    val cb = centroids.agg(
-      collect_list(struct(col("cid"), col("cvec"))).as("cb_arr"))
-    val best = array_min(transform(col("cb_arr"), cc =>
-      struct(VectorFunctions.l2sqNative(cc.getField("cvec"), col("v")).as("d"),
-        cc.getField("cid").as("cid"))))
-    embeddings.select(id.as("vec_id"), vec.as("v"))
-      .crossJoin(broadcast(cb))
-      .select(best.getField("cid").as("cid"), col("vec_id"), col("v"))
-      // empty-codebook → empty result, not null-cid rows (see ivfIndex)
-      .filter(col("cid").isNotNull)
-  }
+      centroids: DataFrame): DataFrame =
+    nearestCentroid(embeddings, id, vec, centroids,
+      (v, c) => VectorFunctions.l2sqNative(c, v))
+      .select(col("cid"), col("vec_id"), col("v"))
 
   /** IVF-ASSISTED assignment — the scale path past the n×k wall the 10×
     * probe pinned (22.4 s, all in exact assignment): a two-level coarse
@@ -476,7 +530,7 @@ object Ann {
     * Same output contract and tie-break as [[assignCentroids]]; recall < 1
     * by construction (a vector whose true cell is not among its nProbe
     * coarse probes gets its best PROBED cell). Equality at nProbe = c and
-    * fixture agreement at small nProbe are asserted in AnnSpec.
+    * fixture agreement at small nProbe are asserted in QualitySignalsSpec.
     *
     * @param coarse (ccid, ccvec: array<double>) coarse codebook; at scale,
     *               a k-means over the fine centroids themselves
@@ -528,76 +582,7 @@ object Ann {
     embeddings.select(id.as("vec_id"), vec.as("v"))
       .crossJoin(broadcast(aux))
       .select(best.getField("cid").as("cid"), col("vec_id"), col("v"))
-      // empty-codebook → empty result, not null-cid rows (see ivfIndex)
+      // empty-codebook → empty result, not null-cid rows (see nearestCentroid)
       .filter(col("cid").isNotNull)
-  }
-
-  /** [[semanticDedupPairs]] with IVF-assisted assignment — identical pair
-    * stage, assignment recall traded per [[assignCentroidsIvf]].
-    */
-  def semanticDedupPairsIvf(embeddings: DataFrame, id: Column, vec: Column,
-      centroids: DataFrame, coarse: DataFrame, nProbe: Int,
-      threshold: Double): DataFrame =
-    pairsWithinClusters(
-      assignCentroidsIvf(embeddings, id, vec, centroids, coarse, nProbe),
-      threshold)
-
-  /** Posture AUTO-SELECT between the exact and IVF-assisted assignment
-    * (r20 verdict #6 — the d13 auto-select precedent applied to d7): exact
-    * argmin while the fine codebook stays at or below
-    * `spark.graft.semdedup.ivfFromCentroids` (default 64) centroids; above
-    * it, IVF-assisted with a coarse codebook of every
-    * `spark.graft.semdedup.coarseStride`-th (default 8) fine centroid in
-    * cid order, probing `spark.graft.semdedup.nProbe` (default 2) cells —
-    * the recipe the 10×/30× probes measured at 7.3× over exact
-    * (BASELINE.md r11). The codebook-count probe is one bounded action over
-    * a codebook-scale frame (same posture as the kmeans driver loop), and
-    * the coarse derivation's global row_number runs over k codebook rows,
-    * never the corpus. Because k ∝ n / target-cluster-size at scale, a
-    * corpus big enough to cross the dial is exactly the one whose n×k
-    * exact assignment has hit the wall the probes pinned. Below the dial
-    * the plan is BYTE-IDENTICAL to [[semanticDedupPairs]] (the d7 fixture
-    * runs 8 centroids, so the oracle gate pins the exact branch; AnnSpec
-    * pins branch selection and the above-dial equality with the explicit
-    * IVF form).
-    */
-  def semanticDedupPairsAuto(embeddings: DataFrame, id: Column, vec: Column,
-      centroids: DataFrame, threshold: Double): DataFrame = {
-    val conf = embeddings.sparkSession.conf
-    val dial = conf.get("spark.graft.semdedup.ivfFromCentroids", "64").toInt
-    val nProbe = conf.get("spark.graft.semdedup.nProbe", "2").toInt
-    val stride = conf.get("spark.graft.semdedup.coarseStride", "8").toInt
-    // bounded probe (r21 ADVICE #5): the dial check only needs to know
-    // whether the codebook exceeds `dial` rows — limit(dial+1) caps the
-    // action's scan at dial+1 rows instead of re-executing the centroids
-    // frame's entire upstream lineage for an exact count
-    if (centroids.limit(dial + 1).count() <= dial)
-      semanticDedupPairs(embeddings, id, vec, centroids, threshold)
-    else {
-      val coarse = centroids
-        .withColumn("__rk", row_number().over(Window.orderBy(col("cid"))))
-        .filter(pmod(col("__rk") - 1, lit(stride)) === 0)
-        .select(col("cid").as("ccid"), col("cvec").as("ccvec"))
-      semanticDedupPairsIvf(embeddings, id, vec, centroids, coarse, nProbe,
-        threshold)
-    }
-  }
-
-  /** Within-cluster exact cosine pairs over an assigned (cid, vec_id, v)
-    * frame — the blocking-keyed pair stage shared by the semantic-dedup
-    * variants.
-    */
-  private def pairsWithinClusters(assignedRaw: DataFrame, threshold: Double): DataFrame = {
-    val assigned = assignedRaw.select(col("cid"), col("vec_id"), col("v"),
-      sqrt(VectorFunctions.dotNative(col("v"), col("v"))).as("nrm"))
-    val a = assigned.select(col("cid"), col("vec_id").as("va"),
-      col("v").as("ea"), col("nrm").as("na"))
-    val b = assigned.select(col("cid").as("cid_b"), col("vec_id").as("vb"),
-      col("v").as("eb"), col("nrm").as("nb"))
-    val cos = VectorFunctions.dotNative(col("ea"), col("eb")) / (col("na") * col("nb"))
-    // cid equi-key drives the join; threshold sits in the condition AFTER
-    // the id test (same short-circuit discipline as pairsExact)
-    a.join(b, col("cid") === col("cid_b") && col("va") < col("vb") && cos >= threshold)
-      .select(col("cid"), col("va"), col("vb"), cos.as("cos"))
   }
 }

@@ -47,42 +47,16 @@ object Percolator {
         === col("n_terms"))
       .select(col("query_id"), col("doc_id"))
 
-  /** [[matchDocs]] in the POSTINGS-JOIN form (t23's shape) over the same
-    * compiled store — the large-fleet path: per-doc cost in the row form is
-    * a nested loop over the WHOLE store (wall ∝ docs × queries; measured
-    * store-linear, 11.0 s @ 1k → 86.9 s @ 10k registered queries on the
-    * 10× corpus — BENCH_percolate_spot.json), while here the store explodes
-    * back to (query_id, term) and joins the doc-side postings on TERM, so
-    * cost tracks term hits, not the store size a doc never matches.
-    * The conjunctive AND is the per-(query, doc) distinct-term count
-    * reaching n_terms. Same rows as [[matchDocs]] by construction
-    * (StreamingSpec pins equality on the same store). No broadcast hint:
-    * AQE promotes the store side when it is small; past the broadcast
-    * ceiling the join degrades to a shuffled hash join instead of dying.
-    */
-  def matchDocsPostings(docs: DataFrame, store: DataFrame): DataFrame = {
-    val qt = store.select(col("query_id"), col("n_terms"),
-      explode(col("q_terms")).as("term"))
-    docs
-      .select(col("doc_id"), explode(TextFunctions.tokens(col("text")))
-        .as("term"))
-      .distinct()
-      .join(qt, "term")
-      .groupBy(col("query_id"), col("doc_id"), col("n_terms"))
-      .agg(count(lit(1)).as("hit"))
-      .filter(col("hit") === col("n_terms"))
-      .select(col("query_id"), col("doc_id"))
-  }
-
   /** The LARGE-FLEET scale path: rarest-term anchoring (what ES's
     * percolator actually does with its `query_terms` extraction — each
     * registered query is only tested against documents containing its most
-    * selective term). The naive [[matchDocsPostings]] join materializes a
-    * candidate row for EVERY (query, doc) pair sharing ANY term, which on
-    * a hot-vocabulary corpus is ~docs × queries / |vocab| — measured
+    * selective term). A plain postings join on every query term would
+    * materialize a candidate row for EVERY (query, doc) pair sharing ANY
+    * term, ~docs × queries / |vocab| on a hot-vocabulary corpus — measured
     * catastrophically super-linear (206 s at a 10k fleet, task failure at
     * 100k on the 10× corpus; BENCH_percolate_spot.json r20) BECAUSE the
-    * fixture's ~30-term vocabulary makes every real term hot. Here:
+    * fixture's ~30-term vocabulary makes every real term hot; it lost to
+    * both the row form and this one at every fleet size measured. Here:
     *
     *   1. corpus df per term (one postings aggregate — t3's shape);
     *   2. each query anchors on its LOWEST-df term (df 0 — a term no
@@ -149,8 +123,7 @@ object Percolator {
     * [[percolate]] dispatch applied per micro-batch. The row form streams
     * directly (stateless map-side plan), but the selective
     * (rarest-term-anchored) form — what [[percolate]] dispatches past
-    * [[RowFormMaxQueries]]; NOT the kept-as-anti-pattern postings join
-    * (ADVICE r20 #4) — needs a per-batch aggregation: inside foreachBatch
+    * [[RowFormMaxQueries]] — needs a per-batch aggregation: inside foreachBatch
     * each micro-batch is a plain batch plan, so BOTH forms stay state-store-free by construction
     * (no watermark, no keyed state; StreamingSpec asserts
     * `stateOperators` is empty). Hits land under `hitsDir/b<batchId>`

@@ -230,6 +230,22 @@ class DedupFacadeSpec extends SparkSuite {
     assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
   }
 
+  test("Dedup.components: no cached plan of the call outlives " +
+    "Caches.unpersistAll") {
+    // every label-propagation round caches its frame; superseded rounds are
+    // released inside, the last one by the caller's unpersistAll
+    graft.Caches.unpersistAll()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val pairs = (1L to 7L).map(i => (i, i + 1)).toDF("da", "db")
+    val got = Dedup.components(pairs, (1L to 8L).toDF("node"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (1L to 8L).map(_ -> 1L).toMap)
+    graft.Caches.unpersistAll()
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"${left.size} cached RDDs outlived the call")
+  }
+
   test("Dedup.dedupGroups marks exactly one representative per cluster") {
     val docs = Seq((10L, "x"), (11L, "x"), (12L, "y")).toDF("doc_id", "text")
     val pairs = Seq((10L, 11L)).toDF("da", "db")

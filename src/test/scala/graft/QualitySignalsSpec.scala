@@ -431,36 +431,45 @@ class QualitySignalsSpec extends SparkSuite {
     assert(ivf == exact && ivf.nonEmpty)
   }
 
-  test("semanticDedupPairsAuto: exact branch below the dial, IVF branch above") {
-    // Below spark.graft.semdedup.ivfFromCentroids (default 64) the auto
-    // path must return the exact form's rows bit-for-bit (this is what
-    // keeps d7's oracle hash pinned); with the dial forced to 0 it must
-    // return exactly what the explicit IVF form returns for the derived
-    // stride-8 coarse codebook (here: the single min-cid centroid).
+  test("semanticDedupPairs: exact branch below the dial, IVF branch above") {
+    // At most 64 centroids the entry must return the exact branch's rows
+    // bit-for-bit (this is what keeps d7's oracle hash pinned); past 64 it
+    // must return exactly the IVF branch's rows, and the IVF branch must
+    // cluster by the derived coarse codebook — every 8th centroid in cid
+    // order, 2 probes.
+    import graft.similarity.Ann
     val emb = Tables(spark, sf, "embeddings")
-    val cents = emb.filter(col("vec_id") < 8)
+    def codebook(n: Int) = emb.filter(col("vec_id") < n)
       .select(col("vec_id").as("cid"),
         transform(col("embedding"), _.cast("double")).as("cvec"))
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select(col("cid"), col("va"), col("vb"), round(col("cos"), 6).as("c"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSet
-    val exact = rows(graft.similarity.Ann.semanticDedupPairs(
-      emb, col("vec_id"), col("embedding"), cents, threshold = 0.4))
-    val auto = rows(graft.similarity.Ann.semanticDedupPairsAuto(
-      emb, col("vec_id"), col("embedding"), cents, threshold = 0.4))
-    assert(auto == exact && auto.nonEmpty)
-    try {
-      spark.conf.set("spark.graft.semdedup.ivfFromCentroids", "0")
-      val coarse = cents.orderBy(col("cid")).limit(1)
-        .select(col("cid").as("ccid"), col("cvec").as("ccvec"))
-      val ivf = rows(graft.similarity.Ann.semanticDedupPairsIvf(
-        emb, col("vec_id"), col("embedding"), cents, coarse, nProbe = 2,
-        threshold = 0.4))
-      val autoIvf = rows(graft.similarity.Ann.semanticDedupPairsAuto(
-        emb, col("vec_id"), col("embedding"), cents, threshold = 0.4))
-      assert(autoIvf == ivf && autoIvf.nonEmpty)
-    } finally spark.conf.unset("spark.graft.semdedup.ivfFromCentroids")
+    def core(cents: org.apache.spark.sql.DataFrame, ivf: Boolean) =
+      rows(Ann.semanticDedupPairsCore(emb, col("vec_id"), col("embedding"),
+        cents, threshold = 0.4, ivf = ivf))
+    def auto(cents: org.apache.spark.sql.DataFrame) =
+      rows(Ann.semanticDedupPairs(emb, col("vec_id"), col("embedding"),
+        cents, threshold = 0.4))
+    val small = codebook(8)
+    val exact = core(small, ivf = false)
+    assert(auto(small) == exact && exact.nonEmpty)
+    val big = codebook(72)
+    val ivf = core(big, ivf = true)
+    assert(auto(big) == ivf && ivf.nonEmpty)
+    // the fixture separates the branches, so the equality above says which
+    // one ran
+    assert(ivf != core(big, ivf = false))
+    // cids 0..71 are contiguous, so every 8th in cid order is cid % 8 == 0
+    val coarse = big.filter(pmod(col("cid"), lit(8L)) === 0)
+      .select(col("cid").as("ccid"), col("cvec").as("ccvec"))
+    val assigned = Ann.assignCentroidsIvf(emb, col("vec_id"),
+        col("embedding"), big, coarse, nProbe = 2)
+      .select(col("vec_id"), col("cid"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(ivf.forall { case (c, va, vb, _) =>
+      assigned(va) == c && assigned(vb) == c })
   }
 
   test("IVF-assisted assignment: single probe assigns every vector, high agreement") {

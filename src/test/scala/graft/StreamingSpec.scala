@@ -762,7 +762,7 @@ class StreamingSpec extends SparkSuite {
     t23.foreach { case (qid, n) => assert(byQuery.getOrElse(qid, 0L) == n) }
   }
 
-  test("percolator auto-dispatch: postings form ≡ row form on the same " +
+  test("percolator auto-dispatch: selective form ≡ row form on the same " +
       "store, and the dial routes each side of the crossover") {
     implicit val ctx = sqlCtx
     val w = org.apache.spark.sql.expressions.Window
@@ -779,9 +779,8 @@ class StreamingSpec extends SparkSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long)].collect().toSet
     val row = pairs(graft.streaming.Percolator.matchDocs(docs, store))
-    val post = pairs(graft.streaming.Percolator.matchDocsPostings(docs, store))
     val sel = pairs(graft.streaming.Percolator.matchDocsSelective(docs, store))
-    assert(row == post && row == sel && row.nonEmpty)
+    assert(row == sel && row.nonEmpty)
     // a query whose anchor term appears in NO document can never match —
     // the selective form must generate zero candidates for it, not fail
     val withDead = store.unionByName(

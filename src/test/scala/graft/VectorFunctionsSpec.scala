@@ -31,15 +31,6 @@ class VectorFunctionsSpec extends SparkSuite {
     assert(selfCos.filter(col("c") =!= 1.0).count() == 0)
   }
 
-  test("l2 native matches fold") {
-    val a = emb.filter(col("vec_id") === 1).select(col("embedding").as("a"))
-    val pair = emb.filter(col("vec_id") === 2).select(col("embedding").as("b"))
-      .crossJoin(a)
-    val r = pair.select(l2(col("a"), col("b")).as("fold"),
-      l2Native(col("a"), col("b")).as("native")).collect().head
-    assert(r.getDouble(0) == r.getDouble(1))
-  }
-
   test("sign-LSH bucket is deterministic and within range") {
     val b1 = emb.select(signLshBucket(col("embedding"), 8).as("b")).collect().map(_.getLong(0))
     val b2 = emb.select(signLshBucket(col("embedding"), 8).as("b")).collect().map(_.getLong(0))
@@ -90,6 +81,73 @@ class VectorFunctionsSpec extends SparkSuite {
     // ... straight over the local relation the optimizer evaluates it
     // interpreted (nullSafeEval)
     assert(counts(rows) == want.map(k => (k, k)))
+  }
+
+  // Seeded generated vectors for the FloatVecDot / DoubleVecL2Sq contracts:
+  // null arrays, empty and ragged arrays, and NaN / ±0.0 / ±Inf among
+  // ordinary values. Elements are never null — the kernels' documented
+  // input contract.
+  private lazy val kernelRows = {
+    import spark.implicits._
+    val rng = new scala.util.Random(11)
+    val special = Seq(Float.NaN, 0.0f, -0.0f, Float.PositiveInfinity,
+      Float.NegativeInfinity)
+    def elem(): Float =
+      if (rng.nextInt(4) == 0) special(rng.nextInt(special.size))
+      else (rng.nextGaussian() * 3).toFloat
+    def vec(len: Int): Option[Seq[Float]] =
+      if (rng.nextInt(10) == 0) None else Some(Seq.fill(len)(elem()))
+    Seq.tabulate(400) { i =>
+      val len = rng.nextInt(6)
+      def other() = if (rng.nextBoolean()) len else rng.nextInt(6)
+      (i, vec(len), vec(other()), vec(other()).map(_.map(_.toDouble)),
+        vec(other()).map(_.map(_.toDouble)))
+    }.toDF("i", "fa", "fb", "da", "db")
+  }
+
+  /** Kernel vs its interpreted fold over the first min(len) elements (the
+    * kernels' documented truncation); null when either array is null.
+    */
+  private def kernelVsFold(kernel: (Column, Column) => Column,
+      fold: (Column, Column) => Column, a: String, b: String) = {
+    val n = least(size(col(a)), size(col(b)))
+    def agree(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("i"), kernel(col(a), col(b)).as("k"),
+        when(col(a).isNotNull && col(b).isNotNull,
+          fold(slice(col(a), lit(1), n), slice(col(b), lit(1), n))).as("f"))
+      .orderBy("i").collect()
+      .map { r =>
+        def bits(j: Int): Option[Long] =
+          if (r.isNullAt(j)) None
+          else Some(java.lang.Double.doubleToLongBits(r.getDouble(j)))
+        (bits(1), bits(2))
+      }
+    // codegen'd through a shuffle, interpreted over the local relation
+    for (rows <- Seq(agree(kernelRows.repartition(2)), agree(kernelRows))) {
+      val bad = rows.zipWithIndex.filter { case ((k, f), _) => k != f }
+      assert(bad.isEmpty, s"kernel ≠ fold at rows ${bad.take(5).toSeq}")
+      val vals = rows.flatMap(_._1).map(java.lang.Double.longBitsToDouble)
+      // the generator reaches every case it is meant to
+      assert(rows.exists(_._1.isEmpty) && vals.exists(_.isNaN) &&
+        vals.exists(_.isInfinite) && vals.contains(0.0))
+    }
+  }
+
+  test("float_vec_dot kernel contract on generated vectors: bit-equal to " +
+      "the fold, ragged truncates, null array → null") {
+    kernelVsFold(dotNative, dot, "fa", "fb")
+  }
+
+  test("vec_l2sq kernel contract on generated vectors: bit-equal to the " +
+      "fold for float×double and double×double, ragged truncates, null → null") {
+    val fold = (c: Column, x: Column) => aggregate(
+      zip_with(c, x, (c, x) => {
+        val d = x.cast("double") - c.cast("double"); d * d
+      }),
+      lit(0.0), (acc, v) => acc + v)
+    // centroid assignment's orientation: double codebook left, float vector right
+    kernelVsFold(l2sqNative, fold, "da", "fa")
+    kernelVsFold(l2sqNative, fold, "da", "db")
   }
 
   test("sorted_isect_count on sorted distinct arrays equals array_intersect") {

@@ -37,6 +37,8 @@ if [[ "${1:-}" != "--quick" && -f BENCH_full.json ]]; then
   echo "== bench artifact check (committed BENCH_full.json vs baseline)"
   python3 tools/test_check_bench.py
   python3 tools/test_plan_diff.py
+  python3 tools/test_knob_census.py
+  python3 tools/knob_census.py
   python3 -m unittest discover -s perfbench/tests
   python3 tools/check_bench.py BENCH_full.json
 fi
