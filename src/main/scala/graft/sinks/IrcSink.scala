@@ -16,15 +16,30 @@ import org.apache.spark.sql.functions._
 object IrcSink {
 
   /** Append records (schema: channel, nick, remark, posted, id) with
-    * day-partition column derived from `posted`.
+    * day-partition column derived from `posted`: one parquet file per
+    * (channel, day) per call.
     */
   def append(records: DataFrame, path: String): Unit =
+    appendPartitioned(records.withColumn("day", date_format(col("posted"), "yyyy-MM-dd")), path)
+
+  /** The one writer of the (channel × day) layout, shared with
+    * [[graft.streaming.IrcStream.upsertBatch]]: hash-repartition on the
+    * partition columns so each (channel, day) lands in exactly one write
+    * task, hence one file. Without it every write task emits a file for
+    * each (channel, day) it holds. The count is explicit
+    * (`spark.sql.shuffle.partitions`): AQE would coalesce a column-only
+    * repartition of a small batch into one task that writes every file
+    * serially.
+    */
+  private[graft] def appendPartitioned(records: DataFrame, path: String): Unit = {
+    val tasks = records.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     records
-      .withColumn("day", date_format(col("posted"), "yyyy-MM-dd"))
+      .repartition(tasks, col("channel"), col("day"))
       .write
       .partitionBy("channel", "day")
       .mode(SaveMode.Append)
       .parquet(path)
+  }
 
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
@@ -73,7 +88,9 @@ object IrcSink {
     * sweeps anything that slipped past it. Work is per-(channel,day)
     * partition; ids never collide across channels (channel is hashed into
     * the id), so compaction parallelizes per partition with no global
-    * shuffle barrier.
+    * shuffle barrier. It keeps its own write rather than
+    * [[appendPartitioned]]'s: its input is the whole table, and one task per
+    * (channel, day) would serialize the largest partition.
     */
   def compact(spark: SparkSession, path: String, outPath: String): Unit = {
     val w = Window.partitionBy(col("id"))

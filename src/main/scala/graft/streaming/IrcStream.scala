@@ -23,8 +23,10 @@ import graft.ingest.IrcParser
   * closed by the sink-side anti-join in [[upsertBatch]] — exact over ALL
   * time, and partition-PRUNED: ids embed the channel, so the probe reads
   * only the id column of the sink CHANNEL partitions the batch touches
-  * (never other channels, never non-id columns). Cost tracks the batch's
-  * channel footprint, not sink size; [[graft.sinks.IrcSink.compact]] is a
+  * (never other channels' data, never non-id columns). The probe still
+  * reads every file of each touched channel, and each batch adds one file
+  * per touched (channel, day), so a batch's cost grows with the history of
+  * the channels it touches; [[graft.sinks.IrcSink.compact]] is a
   * storage-side sweep, not a correctness dependency.
   */
 object IrcStream {
@@ -225,20 +227,24 @@ object IrcStream {
     * and re-insert (the round-6 bug). Ids embed the channel
     * (IrcParser.record: keyV2(channel, nick, remark)), so channel-pruning is
     * EXACT — a duplicate can only ever live in its own channel's partitions —
-    * and the probe still never scans other channels' data.
+    * and the probe never scans other channels' data.
     *
-    * Scale contract: a micro-batch covers a handful of channels, so the
-    * anti-join's read side is those channels' directories, never the whole
-    * table. A channel's full history is wider than one day's, but the probe
-    * reads ONLY the `id` column (column-pruned parquet scan), so its cost is
-    * the channel's id footprint, not its data. If even that grows hot,
-    * [[graft.sinks.IrcSink.compact]] remains the storage-side sweep; the
-    * correctness of THIS path no longer depends on it.
-    * The layout matches [[graft.sinks.IrcSink.append]]; batch schema must
-    * carry `channel` and a NON-NULL `posted` (the partition keys' sources —
-    * a null `posted` would land in the Hive default partition and be
-    * enforced fatal below, since every source stamps `posted` from
-    * current_timestamp or wire time).
+    * Cost per batch: one job collects the batch's channels and fills the
+    * persisted batch that the anti-join and the write reuse; a batch with
+    * no record stops there. [[existingIds]] starts no listing job while
+    * every touched channel holds at most
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` days (one
+    * per batch past that), and the write
+    * ([[graft.sinks.IrcSink.appendPartitioned]]) adds one file per touched
+    * (channel, day). What still grows: the probe reads every file
+    * of each touched channel, all days, so its cost grows with the number
+    * of batches that wrote to the channel. [[graft.sinks.IrcSink.compact]]
+    * is the storage-side sweep; the correctness of THIS path does not
+    * depend on it.
+    * Batch schema must carry `channel` and a NON-NULL `posted` (the
+    * partition keys' sources — a null `posted` would land in the Hive
+    * default partition and is enforced fatal below, since every source
+    * stamps `posted` from current_timestamp or wire time).
     */
   def upsertBatch(batch: DataFrame, batchId: Long, targetDir: String): Unit = {
     val spark = batch.sparkSession
@@ -254,46 +260,85 @@ object IrcStream {
           .otherwise(raise_error(lit(
             "upsertBatch: null `posted` or null/empty `channel` — every record " +
               "must carry a non-null timestamp and a non-empty channel"))))
-    // Explicit existence probe, NOT a broad catch: a transient FS error while
-    // reading the sink must fail the batch (so it's retried) rather than
-    // silently skip the anti-join and write duplicate ids.
-    val target = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(target)) {
-      // persisted: the frame feeds the partition probe, the anti-join and
-      // the write — one parse instead of three
-      fresh.persist()
-      try {
-        // The batch's channel footprint, collected to the driver: bounded by
-        // (channels in batch), i.e. tiny — this is partition METADATA, not
-        // data.
-        val channels = fresh.select(col("channel")).distinct()
-          .collect().map(_.getString(0)).toSeq
-        fresh.join(existingIds(spark, targetDir, channels), Seq("id"), "left_anti")
-          .write.partitionBy("channel", "day").mode("append").parquet(targetDir)
-      } finally fresh.unpersist()
-    } else // first batch: sink dir absent
-      fresh.write.partitionBy("channel", "day").mode("append").parquet(targetDir)
+    // persisted: the channel collect below materializes the micro-batch
+    // once; the anti-join and the write read it back
+    fresh.persist()
+    try {
+      // The batch's channel footprint, collected to the driver: bounded by
+      // (channels in batch × partitions), i.e. tiny — this is partition
+      // METADATA, not data. Distinct per partition, then on the driver: no
+      // shuffle, so one job.
+      val str = org.apache.spark.sql.Encoders.STRING
+      val channels = fresh.select(col("channel")).as(str)
+        .mapPartitions(_.toSet.iterator)(str)
+        .collect().distinct.toSeq
+      if (channels.nonEmpty)
+        graft.sinks.IrcSink.appendPartitioned(
+          fresh.join(existingIds(spark, targetDir, channels), Seq("id"), "left_anti"),
+          targetDir)
+    } finally fresh.unpersist()
   }
 
   /** Ids already present in the sink, restricted to the given channels —
     * ALL days of those channels, because the v2 id excludes time and a late
-    * duplicate may stamp a different day (see [[upsertBatch]]). `channel` is
-    * a partition column of the sink layout, so the `isin` filter is a
-    * PartitionFilter — Spark lists and reads only the matching channel
-    * directories (asserted in StreamingSpec) — and the single-column select
-    * prunes the scan to the `id` column.
+    * duplicate may stamp a different day (see [[upsertBatch]]).
+    *
+    * Listing: Spark lists a directory with more children than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` with a
+    * distributed job, one task per child, so `spark.read.parquet(targetDir)`
+    * starts one on every batch once the sink holds more channels than that.
+    * Instead the driver lists the sink root and each touched channel's
+    * directory. While every touched channel holds at most `threshold` day
+    * directories, Spark reads the touched channel directories, with
+    * `basePath` = the sink root, in unioned groups of at most `threshold`:
+    * each group is listed on the driver and no listing job starts. Once a
+    * touched channel holds more days, listing it would start a job of its
+    * own, one per such channel, so the probe reads the whole sink instead,
+    * as one relation, which Spark lists with one job once the sink holds
+    * more than `threshold` channels. (Reading such a channel's day
+    * directories in groups would avoid the job, but plans a relation per
+    * `threshold` days and measured slower than the whole-sink read.)
+    * `channel` stays a partition column, so the `isin` filter is a
+    * PartitionFilter over the listed directories (asserted in StreamingSpec)
+    * and the single-column select prunes the scan to the `id` column. When
+    * no directory matches (or the sink does not exist yet) the probe is an
+    * empty local relation: nothing is read, and the optimizer drops an
+    * anti-join against it.
+    *
+    * Explicit existence check, NOT a broad catch: a transient FS error while
+    * listing or reading the sink must fail the batch (so it's retried)
+    * rather than silently skip the anti-join and write duplicate ids.
     *
     * The read takes the sink's known schema instead of inferring it: a
-    * first batch with no valid record leaves a sink directory holding only
-    * `_SUCCESS`, where inference fails (UNABLE_TO_INFER_SCHEMA) and would
-    * fail every later batch; with the schema given it reads as empty.
+    * sink directory that holds only `_SUCCESS` makes inference fail
+    * (UNABLE_TO_INFER_SCHEMA); with the schema given it reads as empty.
     */
   private[graft] def existingIds(spark: SparkSession, targetDir: String,
-      channels: Seq[String]): DataFrame =
-    spark.read.schema("id STRING, channel STRING").parquet(targetDir)
-      .filter(col("channel").isin(channels: _*))
-      .select(col("id"))
+      channels: Seq[String]): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(targetDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val wanted = channels.toSet
+    val dirs =
+      if (!fs.exists(root)) Seq.empty
+      else fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
+        .filter { p =>
+          val n = p.getName
+          n.startsWith("channel=") && wanted(
+            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+              .unescapePathName(n.stripPrefix("channel=")))
+        }
+    val threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    val reader = spark.read.schema("id STRING, channel STRING").option("basePath", targetDir)
+    val reads =
+      if (dirs.exists(d => fs.listStatus(d).count(_.isDirectory) > threshold))
+        Seq(reader.parquet(targetDir))
+      else dirs.grouped(math.max(1, threshold))
+        .map(g => reader.parquet(g.map(_.toString): _*)).toSeq
+    reads.reduceOption(_ union _)
+      .fold(spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+        new org.apache.spark.sql.types.StructType().add("id", "string")))(
+        _.filter(col("channel").isin(channels: _*)).select(col("id")))
+  }
 
   /** Run the full pipeline: raw lines → records → dedup → upsert sink.
     * Restart with the same checkpointLocation resumes exactly where the
@@ -434,9 +479,24 @@ object IrcStream {
       override def onQueryStarted(e: QueryStartedEvent): Unit =
         println(s"[graft-stream] started ${e.id}")
       override def onQueryProgress(e: QueryProgressEvent): Unit =
-        println(s"[graft-stream] alive ${e.progress.id} batch=${e.progress.batchId} " +
-          s"rows=${e.progress.numInputRows}")
+        println(aliveLine(e.progress))
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
         println(s"[graft-stream] terminated ${e.id} err=${e.exception.getOrElse("none")}")
     })
+
+  /** The phases of `durationMs` the heartbeat reports, in print order. */
+  private val HeartbeatPhases =
+    Seq("addBatch", "queryPlanning", "walCommit", "commitOffsets", "triggerExecution")
+
+  /** The heartbeat's `alive` line: where the batch's time went (the
+    * `durationMs` phases it ran) and how big each state operator is.
+    */
+  private[graft] def aliveLine(p: org.apache.spark.sql.streaming.StreamingQueryProgress): String = {
+    val phases = HeartbeatPhases.flatMap(k =>
+      Option(p.durationMs.get(k)).map(ms => s" $k=${ms}ms"))
+    val state = p.stateOperators.map(o =>
+      s" state[${o.operatorName}]=${o.numRowsTotal}rows/${o.memoryUsedBytes}B")
+    s"[graft-stream] alive ${p.id} batch=${p.batchId} rows=${p.numInputRows}" +
+      phases.mkString + state.mkString
+  }
 }

@@ -2,8 +2,10 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.streaming.IrcStream
 
@@ -258,6 +260,131 @@ class StreamingSpec extends SparkSuite {
     assert(spark.read.parquet(dir).count() == 4)
   }
 
+  /** Spark jobs started while `f` runs, with its result. */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = f
+      org.apache.spark.ListenerBusDrain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Every file under `dir` (relative paths), sorted. */
+  private def filesUnder(dir: String): Seq[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val s = Files.walk(root)
+    try s.filter(Files.isRegularFile(_)).map(p => root.relativize(p).toString)
+      .toArray.map(_.toString).sorted.toSeq
+    finally s.close()
+  }
+
+  private def mkRecords(rows: Seq[(String, String, String, String, String)]) =
+    rows.toDF("id", "channel", "nick", "remark", "p")
+      .withColumn("posted", to_timestamp(col("p"))).drop("p")
+
+  test("one upsert adds exactly one parquet file per (channel, day) it touches") {
+    val dir = Files.createTempDirectory("graft_upsert_files").toString + "/sink"
+    val pairs = Seq(("#x", "2024-01-01"), ("#x", "2024-01-02"), ("#y", "2024-01-01"))
+    // A micro-batch arrives hash-partitioned on id by the stream's dedup
+    // state; eight ids per (channel, day) put every pair's rows in at least
+    // two of four such partitions.
+    def batch(tag: String) = mkRecords(for {
+      (ch, day) <- pairs; i <- 0 until 8
+    } yield (s"$tag$ch$day-$i", ch, "n", s"$tag m$i", s"$day 10:00:0$i"))
+      .repartition(4, col("id"))
+    def parquetFiles = filesUnder(dir).filter(_.endsWith(".parquet"))
+    for ((tag, id) <- Seq("a" -> 0L, "b" -> 1L)) { // absent sink, then a probed one
+      val b = batch(tag)
+      val spread = b.withColumn("part", spark_partition_id())
+        .groupBy(col("channel"), date_format(col("posted"), "yyyy-MM-dd"))
+        .agg(countDistinct("part").as("parts"))
+        .select("parts").as[Long].collect()
+      assert(spread.length == pairs.size && spread.forall(_ >= 2),
+        s"each pair must span >= 2 input partitions: $spread")
+      val before = if (id == 0L) Seq.empty else parquetFiles
+      IrcStream.upsertBatch(b, id, dir)
+      assert(parquetFiles.size - before.size == pairs.size,
+        s"batch $tag added ${parquetFiles.diff(before).mkString(", ")}")
+    }
+    assert(spark.read.parquet(dir).count() == 2 * 8 * pairs.size)
+  }
+
+  test("the existing-id probe over 35 of 40 channels starts no Spark job") {
+    val dir = Files.createTempDirectory("graft_probe_jobs").toString + "/sink"
+    val channels = (0 until 40).map(i => s"#c$i")
+    val wanted = channels.take(35)
+    val days = (0 until 40).map(d => java.time.LocalDate.of(2024, 1, 1).plusDays(d).toString)
+    def write(chDays: Seq[(String, String)], id: Long) = IrcStream.upsertBatch(
+      mkRecords(chDays.map { case (ch, d) => (s"$ch-$d", ch, "n", s"m $d", s"$d 10:00:00") }),
+      id, dir)
+    def probeIds() = {
+      val (probe, jobs) = jobsDuring(IrcStream.existingIds(spark, dir, wanted))
+      (probe.as[String].collect().sorted.toSeq, jobs)
+    }
+    write(for (ch <- channels; d <- days.take(2)) yield (ch, d), 0L)
+    // 40 channel directories exceed Spark's parallel-discovery threshold
+    // (32): a whole-sink read would list them with a distributed job
+    val (young, youngJobs) = probeIds()
+    assert(youngJobs == 0, s"building the probe ran $youngJobs Spark job(s)")
+    assert(young == (for (ch <- wanted; d <- days.take(2)) yield s"$ch-$d").sorted)
+    // three channels reach 40 day directories: listing each of them would
+    // start a job, so the probe lists the whole sink with one
+    write(for (ch <- channels.take(3); d <- days.drop(2)) yield (ch, d), 1L)
+    val aged = (young ++ (for (ch <- channels.take(3); d <- days.drop(2)) yield s"$ch-$d")).sorted
+    val (agedIds, agedJobs) = probeIds()
+    assert(agedJobs <= 1, s"building the probe ran $agedJobs Spark job(s)")
+    assert(agedIds == aged)
+    // a threshold of 0 (list every directory with a job) is a valid setting
+    val threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    spark.conf.set(threshold, "0")
+    try assert(probeIds()._1 == aged) finally spark.conf.unset(threshold)
+  }
+
+  test("a no-data micro-batch into an existing sink writes nothing and runs at most one job") {
+    implicit val ctx = sqlCtx
+    val base = Files.createTempDirectory("graft_upsert_empty").toString
+    val sink = s"$base/sink"
+    // per batch: jobs the upsert ran, and whether it left the sink's files as they were
+    val perBatch = scala.collection.concurrent.TrieMap.empty[Long, (Int, Boolean)]
+    val ms = MemoryStream[String]
+    val q = IrcStream.deduped(IrcStream.records(ms.toDF()))
+      .writeStream.outputMode("update")
+      .option("checkpointLocation", s"$base/ckpt")
+      .trigger(Trigger.ProcessingTime(0))
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        val before = if (Files.exists(java.nio.file.Paths.get(sink))) filesUnder(sink) else Nil
+        val (_, jobs) = jobsDuring(IrcStream.upsertBatch(b, id, sink))
+        perBatch(id) = (jobs, filesUnder(sink) == before)
+      }
+      .start()
+    // the data batch advances the watermark, and the stream follows it with
+    // a no-data batch that evicts dedup state (an idle trigger also reports
+    // a progress, with the id of the batch it did not run, so sum per id)
+    def noData = q.recentProgress.groupBy(_.batchId).collect {
+      case (id, ps) if ps.map(_.numInputRows).sum == 0 && perBatch.contains(id) => id
+    }
+    try {
+      ms.addData(":alice!~a@h PRIVMSG #x :m1", ":bob!~b@h PRIVMSG #y :m2")
+      q.processAllAvailable()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (noData.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally q.stop()
+    assert(noData.nonEmpty, "the stream ran no no-data batch")
+    for (id <- noData) {
+      val (jobs, unchanged) = perBatch(id)
+      assert(jobs <= 1, s"no-data batch $id ran $jobs Spark jobs")
+      assert(unchanged, s"no-data batch $id changed the sink's files")
+    }
+  }
+
   test("upsert drops a same-id duplicate arriving on a DIFFERENT day (K1/ST7 cross-day)") {
     // the exact case the v2 time-less id creates: original at 23:55, the
     // cross-bot duplicate stamped past midnight — day-pruned probing missed
@@ -389,6 +516,71 @@ class StreamingSpec extends SparkSuite {
     assert(sink.select("id").distinct().count() == 3)
     assert(sink.select("nick").as[String].collect().sorted.toSeq ==
       Seq("alice", "bob", "carol"))
+  }
+
+  test("a crash after the sink write but before the offset commit replays " +
+      "into the sink exactly once (K1/ST7 crash-replay)") {
+    implicit val ctx = sqlCtx
+    val base = Files.createTempDirectory("graft_crash_replay").toString
+    val (sink, ckpt) = (s"$base/sink", s"$base/ckpt")
+    val ms = MemoryStream[String]
+    var crashed = false
+    // the batch carrying the second chunk commits its sink files, then dies
+    // before the stream commits its offsets: the restart must replay it.
+    // (Batch ids alone do not find it: a watermark advance adds no-data
+    // batches in between.)
+    val q1 = IrcStream.deduped(IrcStream.records(ms.toDF()))
+      .writeStream.outputMode("update")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.ProcessingTime(0))
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        IrcStream.upsertBatch(b, id, sink)
+        if (!crashed && spark.read.parquet(sink).filter(col("remark") === "m3").count() > 0) {
+          crashed = true
+          throw new IllegalStateException("crash between sink write and offset commit")
+        }
+      }
+      .start()
+    try {
+      ms.addData(":alice!~a@h PRIVMSG #x :m1", ":bob!~b@h PRIVMSG #y :m2")
+      q1.processAllAvailable()
+      ms.addData(":alice!~a@h PRIVMSG #x :m1", ":carol!~c@h PRIVMSG #x :m3",
+        ":dave!~d@h PRIVMSG #z :m4")
+      intercept[StreamingQueryException](q1.processAllAvailable())
+    } finally q1.stop()
+    assert(crashed, "the second chunk's batch never ran")
+
+    val q2 = IrcStream.start(ms.toDF(), sink, ckpt, trigger = Trigger.ProcessingTime(0))
+    try {
+      ms.addData(":erin!~e@h PRIVMSG #y :m5", "PING :server")
+      q2.processAllAvailable()
+    } finally q2.stop()
+    assert(q2.exception.isEmpty, q2.exception.map(_.getMessage).getOrElse(""))
+    val row = spark.read.parquet(sink).agg(count(lit(1)), countDistinct("id")).head()
+    // m1..m5: five distinct valid keys, each exactly once
+    assert((row.getLong(0), row.getLong(1)) == (5L, 5L))
+  }
+
+  test("heartbeat alive line reports the batch's phase durations and state size") {
+    implicit val ctx = sqlCtx
+    val ms = MemoryStream[String]
+    ms.addData(":alice!~a@h PRIVMSG #x :m1", ":bob!~b@h PRIVMSG #y :m2",
+      ":alice!~a@h PRIVMSG #x :m1")
+    val q = IrcStream.deduped(IrcStream.records(ms.toDF()))
+      .writeStream.format("memory").queryName("heartbeat_out")
+      .outputMode("append").start()
+    // a watermark advance may add a no-data batch after the data batch
+    val p = try { q.processAllAvailable(); q.recentProgress.find(_.numInputRows > 0).get }
+      finally q.stop()
+    val line = IrcStream.aliveLine(p)
+    assert(line.startsWith(s"[graft-stream] alive ${p.id} batch=${p.batchId} rows=3 "), line)
+    for (k <- Seq("addBatch", "queryPlanning", "walCommit", "commitOffsets", "triggerExecution")) {
+      assert(p.durationMs.containsKey(k), s"progress lacks $k")
+      assert(line.contains(s" $k=${p.durationMs.get(k)}ms"), line)
+    }
+    val op = p.stateOperators.head
+    assert(op.numRowsTotal == 2L && op.memoryUsedBytes > 0L)
+    assert(line.endsWith(s" state[${op.operatorName}]=2rows/${op.memoryUsedBytes}B"), line)
   }
 
   test("transformWithState keeps per-nick running counts (ST6, Spark-4 state API)") {

@@ -2,7 +2,8 @@
 # One-command local round gate: everything the driver checks, in order.
 #
 #   tools/round_gate.sh           # full gate (sf0.01 verify, tests, bench
-#                                 # check, heap canary, scale smoke)
+#                                 # check, ingest exactly-once smoke, heap
+#                                 # canary, scale smoke)
 #   tools/round_gate.sh --quick   # sf0.001 verify + tests only (iteration loop)
 #
 # Exit non-zero on the first failing stage. Run it QUIET (no concurrent sbt/
@@ -44,6 +45,23 @@ if [[ "${1:-}" != "--quick" && -f BENCH_full.json ]]; then
 fi
 
 if [[ "${1:-}" != "--quick" ]]; then
+  # Ingest exactly-once smoke: one untraced perfbench ingest run through
+  # IrcStream.start. Its own output check (sink rows = distinct ids = the
+  # generator's distinct keys) is the ingest oracle; the stage fails unless
+  # the result line reads correct with no failed operation.
+  echo "== ingest exactly-once smoke (perfbench ingest, seed 1)"
+  ingest_out=$(mktemp /tmp/graft_ingest.XXXXXX.out)
+  if ! python3 perfbench/run.py --workload ingest --seed 1 --seconds 12 --trace 0 \
+       >"$ingest_out" 2>"$ingest_out.err"; then
+    tail -20 "$ingest_out" "$ingest_out.err"; echo "perfbench ingest run FAILED"; exit 1
+  fi
+  python3 - "$(tail -1 "$ingest_out")" <<'PY'
+import json, sys
+r = json.loads(sys.argv[1])
+print(f"ingest: correct={r['correct']} failed={r['failed']} attempted={r['attempted']}")
+sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)
+PY
+
   # Constrained-heap canary over the pressure-sensitive pair-stream family
   # (r14 verdict #1: three consecutive driver windows ambushed these) —
   # driver bench config (cpus=4) with a 2 GiB-equivalent unified region.
