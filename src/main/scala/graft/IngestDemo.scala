@@ -45,7 +45,7 @@ object IngestDemo {
     sinks.IrcSink.append(sink, s"$base/table")
     sinks.IrcSink.append(sink, s"$base/table") // replayed append
     sinks.IrcSink.compact(spark, s"$base/table", s"$base/table_compacted")
-    val table = sinks.IrcSink.read(spark, s"$base/table_compacted")
+    val table = spark.read.parquet(s"$base/table_compacted")
     println(s"DEMO_COMPACTED_ROWS=${table.count()} (from ${spark.read.parquet(s"$base/table").count()} appended)")
 
     // The ES query-surface analog over the sink: filter + full-text search.

@@ -320,8 +320,9 @@ object ScaleProbe {
       // form's extra pair-stream exchange must stay ~linear at xf× density
       "d2_jaccard_sortagg_shape" -> (() => graft.dedup.Dedup.jaccardPairs(
         docs, col("doc_id"), col("text"), 0.5, blocks)),
-      "d2_jaccard_hashagg_shape" -> (() => graft.dedup.Dedup.jaccardPairs(
-        docs, col("doc_id"), col("text"), 0.5, blocks, sortAgg = false)),
+      "d2_jaccard_hashagg_shape" -> (() => graft.dedup.Dedup.jaccardOf(
+        graft.dedup.Dedup.pairIntersections(
+          docs, col("doc_id"), col("text"), blocks, sortAgg = false), 0.5)),
       // fuzzy self-join at xf× vocabulary: the candidate stream (names ×
       // length deletion keys, never the pair space) is the cost, so wall
       // should track the xf× key volume (rows_out pins output grew xf×)

@@ -69,9 +69,14 @@ object Dedup {
     * (BASELINE.md r13).
     */
   def jaccardPairs(df: DataFrame, id: Column, text: Column,
-      minJaccard: Double, blockCols: Seq[Column] = Seq.empty,
-      sortAgg: Boolean = true): DataFrame =
-    pairIntersections(df, id, text, blockCols, sortAgg)
+      minJaccard: Double, blockCols: Seq[Column] = Seq.empty): DataFrame =
+    jaccardOf(pairIntersections(df, id, text, blockCols, sortAgg = true), minJaccard)
+
+  /** [[jaccardPairs]]' scoring of [[pairIntersections]] rows: (da, db,
+    * jaccard) for the pairs at or above `minJaccard`.
+    */
+  private[graft] def jaccardOf(pairs: DataFrame, minJaccard: Double): DataFrame =
+    pairs
       .withColumn("jaccard", col("i").cast("double") / (col("sa") + col("sb") - col("i")))
       .filter(col("jaccard") >= minJaccard)
       .select(col("da"), col("db"), col("jaccard"))
@@ -84,9 +89,8 @@ object Dedup {
     * postings/blocking machinery and scale shape as [[jaccardPairs]].
     */
   def containmentPairs(df: DataFrame, id: Column, text: Column,
-      minContainment: Double, blockCols: Seq[Column] = Seq.empty,
-      sortAgg: Boolean = true): DataFrame =
-    pairIntersections(df, id, text, blockCols, sortAgg)
+      minContainment: Double, blockCols: Seq[Column] = Seq.empty): DataFrame =
+    pairIntersections(df, id, text, blockCols, sortAgg = true)
       .withColumn("containment",
         col("i").cast("double") / least(col("sa"), col("sb")))
       .withColumn("jaccard", col("i").cast("double") / (col("sa") + col("sb") - col("i")))
@@ -104,8 +108,9 @@ object Dedup {
     * pruned above [[AutoPruneDocs]], term-repartitioned — see the r12/r13
     * pressure notes) self-joined to (da, db, i, sa, sb) pair rows.
     *
-    * `sortAgg` (default ON — r14 verdict #1, the third consecutive driver
-    * window to flag this family under host contention): counts the pair
+    * `sortAgg` (what [[jaccardPairs]] and [[containmentPairs]] pass — r14
+    * verdict #1, the third consecutive bench window to flag this family
+    * under host contention): counts the pair
     * stream with an Exchange(da, db) + external Sort + Window pass instead
     * of a partial/final HashAggregate. The hash form's per-task map over
     * the (da, db) key space is what cliffs under memory pressure — each
@@ -120,10 +125,15 @@ object Dedup {
     * a pair collapses map-side only when its shared terms land in the
     * same term-partition. Measured sf0.1 (cpus=4, reps=3): clean-window
     * parity (d2 1.6 s both forms); 1g-heap canary — where the hash form's
-    * first rep pays 2.7 s — the sort form holds steady. The hash form
-    * stays available (`sortAgg = false`) for the equality spec.
+    * first rep pays 2.7 s — the sort form holds steady. The sort form is
+    * not the faster one on a roomy heap: the committed BENCH_sf1_spot.json
+    * (10×, 32 cores) has `d2_jaccard_sortagg_shape` 12.889 s against
+    * `d2_jaccard_hashagg_shape` 11.616 s. It is kept because it degrades
+    * linearly under the constrained-heap canary where the hash form cliffs.
+    * The hash form (`sortAgg = false`) stays as the reference DedupSpec
+    * checks the sort form against, and as ScaleProbe's comparison shape.
     */
-  private def pairIntersections(df: DataFrame, id: Column, text: Column,
+  private[graft] def pairIntersections(df: DataFrame, id: Column, text: Column,
       blockCols: Seq[Column], sortAgg: Boolean): DataFrame = {
     val (toks, bnames) = blockedPostings(df, id, text, blockCols)
     val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("sz"))

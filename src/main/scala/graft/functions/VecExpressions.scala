@@ -1,9 +1,34 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StringType}
+
+/** The binary array kernels: both operands must be arrays whose element
+  * type is one of `elementTypes`. Each kernel reads elements at a fixed
+  * width (`getFloat`, `getDouble`, `getLong`, `getUTF8String`), so an
+  * operand of another element type must fail analysis; left unchecked, it
+  * passes analysis and the kernel fails at run time (a
+  * NullPointerException in generated code over a columnar scan, a
+  * ClassCastException over literal arrays). Serializable, so a kernel that
+  * ships to an executor carries `elementTypes` along (Java deserialization
+  * needs a no-argument constructor on the first non-serializable parent).
+  */
+abstract class BinaryArrayKernel(elementTypes: DataType*)
+    extends BinaryExpression with Serializable {
+  override def checkInputDataTypes(): TypeCheckResult = {
+    def ok(e: Expression): Boolean = e.dataType match {
+      case ArrayType(t, _) => elementTypes.contains(t)
+      case _ => false
+    }
+    if (ok(left) && ok(right)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires array<${elementTypes.map(_.simpleString).mkString("|")}> " +
+        s"operands, got ${left.dataType.simpleString} and ${right.dataType.simpleString}")
+  }
+}
 
 /** Native Catalyst expressions for the vector hot path (SURVEY.md §7.3's
   * optional perf tier): whole-stage-codegen'd float-array dot product
@@ -18,7 +43,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
   * non-null (embedding fixtures and any sane vector column satisfy this).
   */
 case class FloatVecDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryArrayKernel(FloatType) {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "float_vec_dot"
@@ -75,32 +100,17 @@ case class FloatVecDot(left: Expression, right: Expression)
   * handled symmetrically on either side.
   */
 case class DoubleVecL2Sq(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryArrayKernel(DoubleType, FloatType) {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_l2sq"
 
   private def isFloat(e: Expression): Boolean = e.dataType match {
-    case org.apache.spark.sql.types.ArrayType(FloatType, _) => true
+    case ArrayType(FloatType, _) => true
     case _ => false
   }
   private lazy val leftIsFloat: Boolean = isFloat(left)
   private lazy val rightIsFloat: Boolean = isFloat(right)
-
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(e: Expression): Boolean = e.dataType match {
-      case org.apache.spark.sql.types.ArrayType(DoubleType | FloatType, _) => true
-      case _ => false
-    }
-    if (ok(left) && ok(right)) {
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    } else {
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<double|float> operands, got " +
-          s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-    }
-  }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -159,26 +169,10 @@ case class DoubleVecL2Sq(left: Expression, right: Expression)
   * (`containsNull = false`) keep the guard-free loop.
   */
 case class LongVecAgree(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryArrayKernel(LongType) {
 
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
   override def prettyName: String = "vec_agree"
-
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(e: Expression): Boolean = e.dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, _) => true
-      case _ => false
-    }
-    if (ok(left) && ok(right)) {
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    } else {
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<bigint> operands, got " +
-          s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-    }
-  }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -194,7 +188,7 @@ case class LongVecAgree(left: Expression, right: Expression)
   }
 
   private def containsNull(e: Expression): Boolean =
-    e.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType].containsNull
+    e.dataType.asInstanceOf[ArrayType].containsNull
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -230,7 +224,7 @@ case class LongVecAgree(left: Expression, right: Expression)
   * the fold yields NULL — the contracts deliberately diverge there.
   */
 case class DoubleVecDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryArrayKernel(DoubleType) {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "double_vec_dot"
@@ -294,7 +288,7 @@ case class FloatVecProject(child: Expression, matrix: Seq[Seq[Double]])
   @transient private lazy val flat: Array[Double] = matrix.flatten.toArray
 
   override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = false)
+    ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "float_vec_project"
 
   override def nullSafeEval(a: Any): Any = {
@@ -364,26 +358,10 @@ case class FloatVecProject(child: Expression, matrix: Seq[Seq[Double]])
   * array_distinct composition).
   */
 case class SortedStringIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryArrayKernel(StringType) {
 
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
   override def prettyName: String = "sorted_isect_count"
-
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(e: Expression): Boolean = e.dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StringType, _) => true
-      case _ => false
-    }
-    if (ok(left) && ok(right)) {
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    } else {
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<string> operands, got " +
-          s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-    }
-  }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]

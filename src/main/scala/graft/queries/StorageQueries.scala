@@ -189,10 +189,7 @@ object StorageQueries extends QueryGroup {
           .withColumn("id", md5(concat_ws("|", col("channel"), col("nick"),
             date_format(col("posted"), "yyyy-MM-dd'T'HH:mm:ss"), col("remark"))))
         graft.sinks.EsShapedSink.writeBulk(recs,
-          // per-task spool files (r22, §6): file count ∝ tasks, not
-          // ∝ rows/bulkSize — the 500-action bulk batching is unchanged
-          new graft.sinks.EsShapedSink.SpoolTransport(spool,
-            appendPerTask = true))
+          new graft.sinks.EsShapedSink.SpoolTransport(spool))
         val docSchema = org.apache.spark.sql.types.StructType(
           Seq("channel", "nick", "posted", "remark", "id").map(
             org.apache.spark.sql.types.StructField(_,

@@ -11,9 +11,9 @@ import org.apache.spark.sql.{DataFrame, Row}
   * exactly the `_bulk` NDJSON wire shape) is pure and golden-testable; the
   * transport is a tiny serializable trait a production deployment implements
   * with an HTTP client and tests implement with a local spool directory.
-  * Retry/drop semantics reuse [[IrcSink.writeEachWithRetry]] (MAX_RETRIES=5,
-  * then dead-letter — irclogbot.py:46-59), so a poisoned record costs only
-  * itself.
+  * Retry/drop semantics reuse [[IrcSink.writeEachWithRetry]]
+  * ([[IrcSink.MaxRetries]] attempts, then dead-letter — irclogbot.py:46-59),
+  * so a poisoned record costs only itself.
   *
   * Scale contract: documents are rendered and sent per-partition (executor-
   * side, no driver round-trip); a bulk request's size is bounded by
@@ -24,7 +24,8 @@ object EsShapedSink {
   /** Where records land: the reference pins index=irclog, doc_type=irc. */
   final case class IndexSpec(index: String = "irclog", docType: String = "irc")
 
-  /** Transport seam: production = HTTP POST to `/_bulk`; tests = local spool.
+  /** Transport seam: production = HTTP POST to `/_bulk`; egress-free use =
+    * [[SpoolTransport]].
     * Must be serializable (instances ship to executors) and idempotent under
     * replay — the id is the content key, so re-sending an action is the
     * upsert the reference already relies on.
@@ -33,24 +34,18 @@ object EsShapedSink {
     def send(ndjsonLines: Seq[String]): Unit
   }
 
-  /** Spool transport for egress-free use: each `send` appends its lines to a
-    * uniquely-named file under `dir` (one file per bulk request, so no
-    * cross-task write races). Doubles as a dead-letter quarantine.
-    *
-    * `appendPerTask = true` (r22, guide §6 — fewer, larger files): all
-    * sends from one transport instance append to ONE spool file instead of
-    * one per bulk request. Spark deserializes a fresh instance into every
-    * task closure, so the file is normally task-local; the create-then-
-    * append is still synchronized on the instance, so threads that share
-    * one instance (any caller outside a Spark task) get one file and
-    * whole, unmixed requests instead of racing on the lazy create. The spool's
-    * file count becomes ∝ tasks instead of ∝ corpus/bulkSize (at 100 TB
-    * the difference between thousands of files and billions). Content is
-    * byte-identical — requests append in send order. Default stays
-    * per-request (the pinned dead-letter / quarantine granularity).
+  /** Spool transport for egress-free use: all sends from one instance
+    * append to ONE spool file under `dir`, created on the first send (r22,
+    * guide §6 — fewer, larger files). Spark deserializes a fresh instance
+    * into every task closure, so the file is normally task-local and the
+    * spool's file count is ∝ tasks, not ∝ corpus/bulkSize (at 100 TB the
+    * difference between thousands of files and billions). The
+    * create-then-append is synchronized on the instance, so threads that
+    * share one instance (any caller outside a Spark task) get one file and
+    * whole, unmixed requests in send order. Doubles as a dead-letter
+    * quarantine.
     */
-  final class SpoolTransport(dir: String, appendPerTask: Boolean = false)
-      extends BulkTransport {
+  final class SpoolTransport(dir: String) extends BulkTransport {
     @transient private var taskFile: java.nio.file.Path = null
     def send(ndjsonLines: Seq[String]): Unit = {
       val d = java.nio.file.Paths.get(dir)
@@ -60,14 +55,11 @@ object EsShapedSink {
       // depends on send() throwing, which PrintWriter would swallow.
       val bytes = ndjsonLines.mkString("", "\n", "\n").getBytes(
         java.nio.charset.StandardCharsets.UTF_8)
-      if (appendPerTask) synchronized {
+      synchronized {
         if (taskFile == null)
           taskFile = java.nio.file.Files.createTempFile(d, "bulk_", ".ndjson")
         java.nio.file.Files.write(taskFile, bytes,
           java.nio.file.StandardOpenOption.APPEND)
-      } else {
-        java.nio.file.Files.write(
-          java.nio.file.Files.createTempFile(d, "bulk_", ".ndjson"), bytes)
       }
       ()
     }

@@ -41,15 +41,18 @@ object IrcSink {
       .parquet(path)
   }
 
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** The reference's MAX_RETRIES (irclogbot.py:46-59): write attempts per
+    * record before it is dead-lettered.
+    */
+  val MaxRetries = 5
 
   /** K2 — per-RECORD bounded retry → drop (dead-letter), the reference's ES
-    * write loop semantics (irclogbot.py:46-59: ≤ 5 attempts per record, then
-    * the record is discarded and the bot moves on). Spark's task-level retry
-    * would instead fail the WHOLE batch on a poisoned record; this runs the
-    * per-record side-effecting `write` (the ES-client analog) inside
-    * foreachPartition so one bad record costs only itself.
+    * write loop semantics (irclogbot.py:46-59: ≤ [[MaxRetries]] attempts
+    * per record, then the record is discarded and the bot moves on).
+    * Spark's task-level retry would instead fail the WHOLE batch on a
+    * poisoned record; this runs the per-record side-effecting `write` (the
+    * ES-client analog) inside foreachPartition so one bad record costs only
+    * itself.
     *
     * Distributed contract: `write` must be serializable and idempotent-safe
     * under replay (the surrounding sink is upsert-by-id). Counts come back
@@ -61,7 +64,6 @@ object IrcSink {
   def writeEachWithRetry(
       records: DataFrame,
       write: org.apache.spark.sql.Row => Unit,
-      maxAttempts: Int = 5,
       onDrop: org.apache.spark.sql.Row => Unit = _ => ()): (Long, Long) = {
     val sc = records.sparkSession.sparkContext
     val ok = sc.longAccumulator("sink_written")
@@ -70,7 +72,7 @@ object IrcSink {
       rows.foreach { r =>
         var attempts = 0
         var done = false
-        while (!done && attempts < maxAttempts) {
+        while (!done && attempts < MaxRetries) {
           try { write(r); done = true }
           catch { case scala.util.control.NonFatal(_) => attempts += 1 }
         }
@@ -95,7 +97,7 @@ object IrcSink {
   def compact(spark: SparkSession, path: String, outPath: String): Unit = {
     val w = Window.partitionBy(col("id"))
       .orderBy(col("posted"), col("nick"), col("remark"))
-    read(spark, path)
+    spark.read.parquet(path)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn")

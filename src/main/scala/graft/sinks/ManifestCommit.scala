@@ -13,7 +13,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * new and some old, and every reader sees the torn state. This is the one
   * durability semantic the plain-directory stand-ins (k1 upsert, s15
   * dynamic overwrite — each idempotent per partition, none atomic across
-  * partitions) did not replicate.
+  * partitions) did not replicate. Users: `s17_manifest_commit` and the
+  * streaming rollup view ([[graft.streaming.IrcStream.rollupBatch]]).
   *
   * Protocol (the Iceberg/Delta-log idea reduced to its kernel, zero deps):
   *

@@ -61,23 +61,24 @@ object IrcStream {
       .option("port", port)
       .load()
 
-  /** Watermarked exact dedup by content id (ST3): state is bounded by the
-    * watermark; a duplicate arriving later than `watermark` after the
+  /** How long the stream's dedup state holds an id. A duplicate that
+    * arrives later than this after the original reaches the sink, where
+    * [[upsertBatch]]'s anti-join (or, for [[startWithRecordSink]], the ES
+    * upsert by id) drops it, so this sizes the state; it does not decide
+    * correctness.
+    */
+  private val DedupWatermark = "10 minutes"
+
+  /** Watermarked exact dedup by content id (ST3): state is bounded by
+    * [[DedupWatermark]]; a duplicate arriving later than that after the
     * original can reach the sink, where [[upsertBatch]] still drops it —
     * regardless of which DAY the late copy's processing-time stamp lands on
     * (the v2 id excludes time, so the sink probe prunes on channel only).
     */
-  def deduped(parsed: DataFrame, watermark: String = "10 minutes"): DataFrame =
+  def deduped(parsed: DataFrame): DataFrame =
     parsed
-      .withWatermark("posted", watermark)
+      .withWatermark("posted", DedupWatermark)
       .dropDuplicatesWithinWatermark("id")
-
-  /** Tumbling-window message counts (ST4, the streaming date_histogram). */
-  def hourlyCounts(recs: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    recs
-      .withWatermark("posted", watermark)
-      .groupBy(window(col("posted"), "1 hour"), col("channel"))
-      .agg(count(lit(1)).as("n"))
 
   /** Stream-stream inner join with watermarked time-range correlation: pair
     * each left event with right events for the same key within `maxGapSec`
@@ -120,11 +121,13 @@ object IrcStream {
       .groupBy(session_window(col("posted"), gap), col("nick"))
       .agg(count(lit(1)).as("n"))
 
-  /** Sliding-window message counts (ST5, second half): overlapping windows
-    * of `size` advancing every `slide` — each record contributes to
-    * size/slide windows (the ES `date_histogram` with overlapping buckets /
-    * moving-average surface). Batch mirror: `w5_sliding_window` in
-    * WindowQueries, oracle-paired against a DuckDB window-start series.
+  /** Windowed message counts per channel: windows of `size` advancing
+    * every `slide`, so each record counts in size/slide windows (the ES
+    * `date_histogram` with overlapping buckets / moving-average surface,
+    * ST5's second half). `slide == size` is the tumbling form (ST4, the
+    * streaming date_histogram): `window(c, d)` is `window(c, d, d)`.
+    * Batch mirror: `w5_sliding_window` in WindowQueries, oracle-paired
+    * against a DuckDB window-start series.
     */
   def slidingCounts(recs: DataFrame, size: String = "10 minutes",
       slide: String = "1 minute", watermark: String = "10 minutes"): DataFrame =
@@ -347,18 +350,16 @@ object IrcStream {
     */
   def start(
       lines: DataFrame, targetDir: String, checkpointDir: String,
-      watermark: String = "10 minutes",
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    startDeduped(lines, checkpointDir, watermark, trigger)(
+    startDeduped(lines, checkpointDir, trigger)(
       (b, id) => upsertBatch(b, id, targetDir))
 
   /** The chain every `start*` shares: raw lines → records → watermarked
     * dedup → `batch` on each micro-batch (update mode, checkpointed).
     */
   private def startDeduped(lines: DataFrame, checkpointDir: String,
-      watermark: String, trigger: Trigger)(
-      batch: (DataFrame, Long) => Unit): StreamingQuery =
-    deduped(records(lines), watermark)
+      trigger: Trigger)(batch: (DataFrame, Long) => Unit): StreamingQuery =
+    deduped(records(lines))
       .writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
@@ -372,103 +373,56 @@ object IrcStream {
     * merges with the stored rollup, so maintaining the materialized view
     * costs O(batch + rollup keys) per trigger, never O(history).
     *
-    * Durability/idempotence: the merged rollup lands as a VERSIONED
-    * snapshot dir `v=<batchId>`, and the merge base is the max version
-    * STRICTLY BELOW the current batchId — so a replayed batch (restart
-    * after crash) overwrites its own partial/complete snapshot from the
-    * same base instead of double-counting, and a crash mid-write leaves the
-    * previous version intact. Versions older than the two most recent are
-    * pruned after a successful write. Feed it the DEDUPED stream: in-batch
-    * duplicate ids are dropped here, cross-batch exact dedup is the record
-    * sink's job (this view trades that for never re-reading history).
+    * The view is a [[graft.sinks.ManifestCommit]] table: batch `batchId`
+    * publishes snapshot `batchId`, merged from the newest published
+    * snapshot STRICTLY BELOW it. A replayed batch (restart after a crash)
+    * therefore re-merges from the same base and replaces its own snapshot
+    * instead of double-counting, and a crash before the publish leaves
+    * only an unpublished staging dir that is never read or merged from.
+    * After the publish the two newest snapshots are kept and crash
+    * leftovers older than `vacuum`'s in-flight guard are reclaimed. Read
+    * the view with `ManifestCommit.read`. A batch that has nothing to
+    * merge from and no record publishes nothing (`ManifestCommit` rejects
+    * a snapshot that staged no data file), so every published snapshot
+    * holds rows. Feed it the DEDUPED stream: in-batch duplicate
+    * ids are dropped here, cross-batch exact dedup is the record sink's job
+    * (this view trades that for never re-reading history).
     */
   def rollupBatch(batch: DataFrame, batchId: Long, rollupDir: String): Unit = {
+    import graft.operators.IncrementalAgg
+    import graft.sinks.ManifestCommit
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(rollupDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val delta = graft.operators.IncrementalAgg.state(
+    val delta = IncrementalAgg.state(
       batch.dropDuplicates("id")
         .select(col("channel"),
           date_format(col("posted"), "yyyy-MM-dd HH:00:00").as("hour"),
           length(col("remark")).cast("long").as("bytes")),
       Seq(col("channel"), col("hour")), col("bytes"))
-    // Merge base = newest COMMITTED version strictly below this batch: a
-    // torn snapshot (crash mid-write — v= dir present, no _SUCCESS marker)
-    // must never be merged from, or the corruption would propagate into
-    // every later version. The strictly-below rule makes replay idempotent:
-    // a restarted batch re-merges from the same base and overwrites its own
-    // partial/complete dir.
-    val base = committedVersions(fs, rollupDir).filter(_ < batchId).sorted.lastOption
-    val merged = base match {
-      case Some(v) => graft.operators.IncrementalAgg.merge(
-        spark.read.parquet(s"$rollupDir/v=$v"), delta, Seq("channel", "hour"))
-      case None => delta
+    val base = ManifestCommit.snapshots(spark, rollupDir).filter(_ < batchId).lastOption
+      .map(ManifestCommit.readAt(spark, rollupDir, _))
+    if (base.nonEmpty || !delta.isEmpty) {
+      ManifestCommit.commit(
+        base.fold(delta)(IncrementalAgg.merge(_, delta, Seq("channel", "hour"))),
+        rollupDir, batchId)
+      ManifestCommit.expire(spark, rollupDir, keep = 2)
+      ManifestCommit.vacuum(spark, rollupDir)
     }
-    merged.write.mode("overwrite").parquet(s"$rollupDir/v=$batchId")
-    // The retention below and readRollup both key off the _SUCCESS marker.
-    // A deployment that disables markers
-    // (mapreduce.fileoutputcommitter.marksuccessfuljobs=false, typical with
-    // cloud committers) would make the just-written dir look torn — the
-    // prune would delete EVERY version including this one and readRollup
-    // would never serve again. The write above returned without throwing,
-    // which is exactly the commit condition the marker encodes, so create
-    // it ourselves when the committer didn't.
-    val marker = new org.apache.hadoop.fs.Path(s"$rollupDir/v=$batchId/_SUCCESS")
-    if (!fs.exists(marker)) fs.create(marker, true).close()
-    // Retention: after the successful write (which re-listing now sees),
-    // keep exactly the two most recent committed snapshots; everything else
-    // — older committed versions AND any torn dirs left by crashes — is
-    // dead weight and is pruned. The just-written version is committed by
-    // construction (marker guaranteed above), so steady state is exactly
-    // 2 dirs.
-    val keep = committedVersions(fs, rollupDir).sorted.takeRight(2).toSet
-    allVersions(fs, rollupDir).filterNot(keep).foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$rollupDir/v=$v"), true))
-  }
-
-  private def allVersions(fs: org.apache.hadoop.fs.FileSystem,
-      rollupDir: String): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(rollupDir)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("v=") => n.drop(2).toLong }
-  }
-
-  /** Versions whose write COMMITTED (the parquet job's _SUCCESS marker —
-    * written last, so its presence means the snapshot is complete).
-    */
-  private def committedVersions(fs: org.apache.hadoop.fs.FileSystem,
-      rollupDir: String): Seq[Long] =
-    allVersions(fs, rollupDir).filter(v =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$rollupDir/v=$v/_SUCCESS")))
-
-  /** Current rollup state: the highest COMMITTED version — a torn snapshot
-    * dir (no _SUCCESS) is never served.
-    */
-  def readRollup(spark: SparkSession, rollupDir: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(rollupDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = committedVersions(fs, rollupDir)
-    require(vs.nonEmpty, s"readRollup: no committed versions under $rollupDir")
-    spark.read.parquet(s"$rollupDir/v=${vs.max}")
   }
 
   /** The reference's ACTUAL write loop, end-to-end (irclogbot.py:46-59):
-    * stream → parse → dedup → per-RECORD sink write with bounded retry →
-    * drop (dead-letter). Use when the sink is a record-level client (the ES
-    * analog) rather than a bulk file store; [[start]] is the bulk-parquet
-    * form. A poisoned record costs only itself, never the batch.
+    * stream → parse → dedup → per-RECORD sink write with bounded retry
+    * ([[graft.sinks.IrcSink.MaxRetries]]) → drop (dead-letter). Use when
+    * the sink is a record-level client (the ES analog) rather than a bulk
+    * file store; [[start]] is the bulk-parquet form. A poisoned record
+    * costs only itself, never the batch.
     */
   def startWithRecordSink(
       lines: DataFrame, checkpointDir: String,
       write: org.apache.spark.sql.Row => Unit,
-      maxAttempts: Int = 5,
       onDrop: org.apache.spark.sql.Row => Unit = _ => (),
-      watermark: String = "10 minutes",
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    startDeduped(lines, checkpointDir, watermark, trigger)((b, _) =>
-      graft.sinks.IrcSink.writeEachWithRetry(b, write, maxAttempts, onDrop): Unit)
+    startDeduped(lines, checkpointDir, trigger)((b, _) =>
+      graft.sinks.IrcSink.writeEachWithRetry(b, write, onDrop): Unit)
 
   /** Liveness signal (the heartbeat-file analog, keep_alive.py:19-32): logs
     * batch progress; a supervisor watches for silence instead of mtime.

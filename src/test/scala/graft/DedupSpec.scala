@@ -267,24 +267,24 @@ class DedupFacadeSpec extends SparkSuite {
   test("Dedup.jaccardPairs: sort-based pair aggregate (default) equals the " +
       "hash-aggregate form, values included — blocked and unblocked") {
     val docs = Tables(spark, sf, "documents")
+    // jaccardPairs and containmentPairs both score the rows of this core:
+    // every (da, db, i, sa, sb) pair row, with no threshold, is identical
+    // under both pair-count strategies
+    def core(blocks: Seq[org.apache.spark.sql.Column], sortAgg: Boolean) =
+      Dedup.pairIntersections(docs, col("doc_id"), col("text"), blocks, sortAgg)
+        .select("da", "db", "i", "sa", "sb").collect().map(_.toSeq).toSet
+    for (blocks <- Seq(Seq.empty, Seq(col("lang"), col("source")))) {
+      val sorted = core(blocks, sortAgg = true)
+      assert(sorted.nonEmpty && sorted == core(blocks, sortAgg = false))
+    }
+    // and the public entry is the sort form, scored
     def toSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1),
         math.round(r.getDouble(2) * 1e9))).toSet
-    val sorted = toSet(Dedup.jaccardPairs(docs, col("doc_id"), col("text"), 0.5))
-    val hashed = toSet(Dedup.jaccardPairs(docs, col("doc_id"), col("text"), 0.5,
-      sortAgg = false))
-    assert(sorted == hashed && sorted.nonEmpty)
-    val sortedB = toSet(Dedup.jaccardPairs(docs, col("doc_id"), col("text"), 0.5,
-      Seq(col("lang"), col("source"))))
-    val hashedB = toSet(Dedup.jaccardPairs(docs, col("doc_id"), col("text"), 0.5,
-      Seq(col("lang"), col("source")), sortAgg = false))
-    assert(sortedB == hashedB)
-    // containment shares the core: same equality through its extra columns
-    val cs = Dedup.containmentPairs(docs, col("doc_id"), col("text"), 0.8)
-      .collect().map(_.toSeq).toSet
-    val ch = Dedup.containmentPairs(docs, col("doc_id"), col("text"), 0.8,
-      sortAgg = false).collect().map(_.toSeq).toSet
-    assert(cs == ch)
+    val hashed = toSet(Dedup.jaccardOf(Dedup.pairIntersections(
+      docs, col("doc_id"), col("text"), Seq.empty, sortAgg = false), 0.5))
+    assert(toSet(Dedup.jaccardPairs(docs, col("doc_id"), col("text"), 0.5)) == hashed &&
+      hashed.nonEmpty)
   }
 
   test("Dedup.jaccardPairsPrefix equals jaccardPairs: pairs AND jaccard values, " +

@@ -2,10 +2,24 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.sinks.{EsShapedSink, IrcSink}
-import graft.sinks.EsShapedSink.{IndexSpec, SpoolTransport}
+import graft.sinks.EsShapedSink.{BulkTransport, IndexSpec, SpoolTransport}
+
+/** A bulk transport that records each request's lines, in send order, in a
+  * JVM-static queue: Spark ships a fresh copy of the transport into every
+  * task, and local-mode tasks share this JVM.
+  */
+class RecordingTransport extends BulkTransport {
+  def send(ndjsonLines: Seq[String]): Unit = { RecordingTransport.sent.add(ndjsonLines); () }
+}
+
+object RecordingTransport {
+  val sent = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+}
 
 /** The ES-DSL adapter contract (irclogbot.py:50-51): index/doc_type/id
   * mapping, `_bulk` NDJSON wire shape, and the retry/drop write loop —
@@ -88,25 +102,24 @@ class EsShapedSinkSpec extends SparkSuite {
   }
 
   test("writeBulk spools partition-grouped bulk requests with every action present") {
-    val dir = Files.createTempDirectory("graft_es_bulk").toString
     val recs = mkRecords(
       ("i1", "#x", "a", "m1", "2024-01-01 10:00:00"),
       ("i2", "#x", "b", "m2", "2024-01-01 10:00:01"),
       ("i3", "#y", "c", "m3", "2024-01-01 10:00:02"),
       ("i4", "#y", "d", "m4", "2024-01-01 10:00:03"),
       ("i5", "#z", "e", "m5", "2024-01-01 10:00:04")).repartition(1)
-    EsShapedSink.writeBulk(recs, new SpoolTransport(dir),
+    RecordingTransport.sent.clear()
+    EsShapedSink.writeBulk(recs, new RecordingTransport,
       IndexSpec("irclog", "irc"), bulkSize = 2)
-    // one partition, 5 actions, bulkSize 2 -> 3 bulk request files
-    assert(Option(new java.io.File(dir).listFiles()).get.length == 3)
-    val lines = spoolLines(dir)
-    assert(lines.size == 10) // action + source per record
-    val ids = lines.filter(_.contains("\"_index\""))
+    // one partition, 5 actions, bulkSize 2 -> requests of 2, 2 and 1 actions
+    val sends = RecordingTransport.sent.asScala.toSeq
+    assert(sends.map(_.size / 2) == Seq(2, 2, 1)) // action + source per record
+    val ids = sends.flatten.filter(_.contains("\"_index\""))
       .map(l => "\"_id\":\"(\\w+)\"".r.findFirstMatchIn(l).get.group(1))
     assert(ids.sorted == Seq("i1", "i2", "i3", "i4", "i5"))
   }
 
-  test("writeBulk appendPerTask: one spool file per task, content identical") {
+  test("writeBulk: one spool file per task, content identical") {
     val dir = Files.createTempDirectory("graft_es_bulk_task").toString
     val recs = mkRecords(
       ("i1", "#x", "a", "m1", "2024-01-01 10:00:00"),
@@ -114,8 +127,7 @@ class EsShapedSinkSpec extends SparkSuite {
       ("i3", "#y", "c", "m3", "2024-01-01 10:00:02"),
       ("i4", "#y", "d", "m4", "2024-01-01 10:00:03"),
       ("i5", "#z", "e", "m5", "2024-01-01 10:00:04")).repartition(1)
-    EsShapedSink.writeBulk(recs,
-      new SpoolTransport(dir, appendPerTask = true),
+    EsShapedSink.writeBulk(recs, new SpoolTransport(dir),
       IndexSpec("irclog", "irc"), bulkSize = 2)
     // one partition, 3 bulk requests -> ONE file (§6: files ∝ tasks)
     assert(Option(new java.io.File(dir).listFiles()).get.length == 1)
@@ -126,9 +138,9 @@ class EsShapedSinkSpec extends SparkSuite {
     assert(ids.sorted == Seq("i1", "i2", "i3", "i4", "i5"))
   }
 
-  test("appendPerTask: concurrent sends to one instance keep every line intact") {
+  test("SpoolTransport: concurrent sends to one instance keep every line intact") {
     val dir = Files.createTempDirectory("graft_es_bulk_threads").toString
-    val t = new SpoolTransport(dir, appendPerTask = true)
+    val t = new SpoolTransport(dir)
     val threads = 8
     val sends = 50
     // a request above Files.write's 8 KiB chunk, so unsynchronized appends
@@ -174,7 +186,7 @@ class EsShapedSinkSpec extends SparkSuite {
     })
     val dlq = new SpoolTransport(quarantine)
     val (ok, dropped) = IrcSink.writeEachWithRetry(
-      recs, writer, maxAttempts = 5,
+      recs, writer,
       onDrop = r => dlq.send(EsShapedSink.renderAction(r)))
     assert(ok == 2 && dropped == 1)
     val sent = spoolLines(dir)

@@ -42,7 +42,7 @@ class SinkSpec extends SparkSuite {
       ("#y", "bob", "m2", "2024-01-02 11:00:00", "id2")), path)
     val dirs = new java.io.File(path).listFiles().map(_.getName).filter(_.startsWith("channel="))
     assert(dirs.toSet == Set("channel=%23x", "channel=%23y") || dirs.toSet == Set("channel=#x", "channel=#y"))
-    val back = IrcSink.read(spark, path)
+    val back = spark.read.parquet(path)
     assert(back.count() == 2)
     assert(back.columns.toSet == Set("channel", "nick", "remark", "posted", "id", "day"))
   }
@@ -57,11 +57,10 @@ class SinkSpec extends SparkSuite {
     val (ok, dropped) = IrcSink.writeEachWithRetry(
       recs,
       r => K2Probe.write(r.getAs[String]("nick"), r.getAs[String]("id")),
-      maxAttempts = 5,
       onDrop = r => K2Probe.deadLetter(r.getAs[String]("id")))
     assert(ok == 2 && dropped == 1)
     assert(K2Probe.written.keySet.toArray.toSet == Set[Any]("id1", "id3"))
-    assert(K2Probe.attempts.get("id2") == 5) // exactly maxAttempts, then gave up
+    assert(K2Probe.attempts.get("id2") == IrcSink.MaxRetries) // exactly MAX_RETRIES, then gave up
     assert(K2Probe.dead.contains("id2")) // dead-letter hook saw the record
   }
 
@@ -85,7 +84,7 @@ class SinkSpec extends SparkSuite {
     IrcSink.append(records(
       ("#x", "alice", "m1", "2024-01-03 09:00:00", "id1")), path) // way-late dup
     IrcSink.compact(spark, path, s"$base/compacted")
-    val out = IrcSink.read(spark, s"$base/compacted")
+    val out = spark.read.parquet(s"$base/compacted")
     assert(out.count() == 2)
     val kept = out.filter(col("id") === "id1")
       .select(date_format(col("posted"), "yyyy-MM-dd HH:mm:ss")).as[String].collect()

@@ -99,7 +99,7 @@ class StreamingSpec extends SparkSuite {
       ":a!~a@h PRIVMSG #x :m1",
       ":b!~b@h PRIVMSG #x :m2",
       ":c!~c@h PRIVMSG #y :m3")
-    val q = IrcStream.hourlyCounts(IrcStream.records(ms.toDF()))
+    val q = IrcStream.slidingCounts(IrcStream.records(ms.toDF()), "1 hour", "1 hour")
       .writeStream.format("memory").queryName("window_out")
       .outputMode("complete").start()
     q.processAllAvailable()
@@ -127,107 +127,124 @@ class StreamingSpec extends SparkSuite {
     assert(sink.select("id").distinct().count() == 3)
   }
 
+  /** Rollup-test rows: (id, channel, nick, remark, posted). */
+  private def rollupRows(rows: (String, String, String, String, String)*) =
+    rows.toSeq.toDF("id", "channel", "nick", "remark", "p")
+      .withColumn("posted", to_timestamp(col("p"))).drop("p")
+
+  /** The rollup view's current (channel, hour, n, sum_cents) rows. */
+  private def rollupView(dir: String) =
+    graft.sinks.ManifestCommit.read(spark, dir)
+      .select("channel", "hour", "n", "sum_cents")
+      .as[(String, String, Long, Long)].collect().toSet
+
   test("streaming rollup: batches merge to the full recompute; replay can't double-count") {
     val dir = Files.createTempDirectory("graft_rollup").toString + "/view"
-    def mk(rows: (String, String, String, String, String)*) =
-      rows.toSeq.toDF("id", "channel", "nick", "remark", "p")
-        .withColumn("posted", to_timestamp(col("p"))).drop("p")
-    val b0 = mk(
+    val b0 = rollupRows(
       ("id1", "#x", "alice", "hello", "2024-01-01 10:05:00"),
       ("id2", "#x", "bob", "worlds", "2024-01-01 10:40:00"),
       ("id3", "#y", "carol", "hey", "2024-01-01 10:10:00"))
-    val b1 = mk(
+    val b1 = rollupRows(
       ("id4", "#x", "alice", "again", "2024-01-01 10:50:00"),
       ("id5", "#x", "dave", "more text", "2024-01-01 11:02:00"))
     IrcStream.rollupBatch(b0, 0L, dir)
     IrcStream.rollupBatch(b1, 1L, dir)
     // crash-replay of batch 1: same batchId must NOT double-count
     IrcStream.rollupBatch(b1, 1L, dir)
-    val got = IrcStream.readRollup(spark, dir)
-      .select("channel", "hour", "n", "sum_cents")
-      .as[(String, String, Long, Long)].collect().toSet
     // full recompute over all records: #x 10h = hello(5)+worlds(6)+again(5),
     // #x 11h = more text(9), #y 10h = hey(3)
-    assert(got == Set(
+    assert(rollupView(dir) == Set(
       ("#x", "2024-01-01 10:00:00", 3L, 16L),
       ("#x", "2024-01-01 11:00:00", 1L, 9L),
       ("#y", "2024-01-01 10:00:00", 1L, 3L)))
-    // only the two most recent versions are retained
-    val vs = new java.io.File(dir).list().toSeq.filter(_.startsWith("v="))
-    assert(vs.toSet == Set("v=0", "v=1"))
+    // only the two most recent snapshots are retained
+    assert(graft.sinks.ManifestCommit.snapshots(spark, dir) == Seq(0L, 1L))
   }
 
   test("streaming rollup: kill-mid-batch leaves a torn snapshot that is never " +
       "served or merged; replay recovers and retention stays exactly 2") {
+    import graft.sinks.ManifestCommit
     val dir = Files.createTempDirectory("graft_rollup_chaos").toString + "/view"
-    def mk(rows: (String, String, String, String, String)*) =
-      rows.toSeq.toDF("id", "channel", "nick", "remark", "p")
-        .withColumn("posted", to_timestamp(col("p"))).drop("p")
     IrcStream.rollupBatch(
-      mk(("id1", "#x", "alice", "hello", "2024-01-01 10:05:00")), 0L, dir)
+      rollupRows(("id1", "#x", "alice", "hello", "2024-01-01 10:05:00")), 0L, dir)
     IrcStream.rollupBatch(
-      mk(("id2", "#x", "bob", "worlds", "2024-01-01 10:40:00")), 1L, dir)
-    // crash mid-write of batch 2: the v=2 dir exists with a stray part file
-    // but the job never reached its _SUCCESS marker (written last)
-    val torn = new java.io.File(dir, "v=2")
-    torn.mkdirs()
-    java.nio.file.Files.write(
-      new java.io.File(torn, "part-00000.parquet").toPath, Array[Byte](1, 2, 3))
-    // the torn snapshot is not served: reads come from committed v=1
-    val before = IrcStream.readRollup(spark, dir)
-      .select("channel", "hour", "n", "sum_cents")
-      .as[(String, String, Long, Long)].collect().toSet
-    assert(before == Set(("#x", "2024-01-01 10:00:00", 2L, 11L)))
+      rollupRows(("id2", "#x", "bob", "worlds", "2024-01-01 10:40:00")), 1L, dir)
+    // crash mid-commit of batch 2: its attempt staged data and wrote the tmp
+    // manifest, but never renamed it into place. The staged part claims a
+    // huge count, so merging from it or serving it would show.
+    val torn = s"$dir/snap_2_deadbeef"
+    Seq(("#x", "2024-01-01 10:00:00", 1000L, 1000L, 1L, 1L))
+      .toDF("channel", "hour", "n", "sum_cents", "min_cents", "max_cents")
+      .write.parquet(torn)
+    val tornPart = new java.io.File(torn).list().filter(_.startsWith("part-")).head
+    val tmp = new java.io.File(dir, "_manifest_2.deadbeef.tmp")
+    Files.write(tmp.toPath,
+      s"snapshot\tsnap_2_deadbeef\n$tornPart\t0".getBytes("UTF-8"))
+    // old enough for vacuum's in-flight guard to treat them as crash leftovers
+    val old = System.currentTimeMillis() - 48L * 3600 * 1000
+    assert(new java.io.File(torn).setLastModified(old) && tmp.setLastModified(old))
+    // the torn attempt is not served: reads come from published snapshot 1
+    assert(ManifestCommit.snapshots(spark, dir) == Seq(0L, 1L))
+    assert(rollupView(dir) == Set(("#x", "2024-01-01 10:00:00", 2L, 11L)))
     // the restarted stream replays batch 2: the merge base must be the
-    // committed v=1 (never the torn dir), and the overwrite must heal v=2
+    // published snapshot 1 (never the torn attempt), and the replay's own
+    // publish heals snapshot 2 and reclaims the torn leftovers
     IrcStream.rollupBatch(
-      mk(("id3", "#y", "carol", "hey", "2024-01-01 10:10:00")), 2L, dir)
-    val after = IrcStream.readRollup(spark, dir)
-      .select("channel", "hour", "n", "sum_cents")
-      .as[(String, String, Long, Long)].collect().toSet
-    assert(after == Set(
+      rollupRows(("id3", "#y", "carol", "hey", "2024-01-01 10:10:00")), 2L, dir)
+    assert(rollupView(dir) == Set(
       ("#x", "2024-01-01 10:00:00", 2L, 11L),
       ("#y", "2024-01-01 10:00:00", 1L, 3L)))
-    // retention after the healing write: exactly the two newest committed
-    assert(new java.io.File(dir).list().toSeq.filter(_.startsWith("v=")).toSet
-      == Set("v=1", "v=2"))
-    // steady state stays exactly 2 dirs as more batches land (ADVICE r9:
-    // the old pre-write listing would have retained 3)
+    assert(!new java.io.File(torn).exists() && !tmp.exists(),
+      "torn attempt not reclaimed")
+    // retention after the healing write: exactly the two newest snapshots
+    assert(ManifestCommit.snapshots(spark, dir) == Seq(1L, 2L))
+    // steady state stays exactly 2 snapshots as more batches land
     IrcStream.rollupBatch(
-      mk(("id4", "#x", "dave", "more", "2024-01-01 11:02:00")), 3L, dir)
-    assert(new java.io.File(dir).list().toSeq.filter(_.startsWith("v=")).toSet
-      == Set("v=2", "v=3"))
+      rollupRows(("id4", "#x", "dave", "more", "2024-01-01 11:02:00")), 3L, dir)
+    assert(ManifestCommit.snapshots(spark, dir) == Seq(2L, 3L))
   }
 
   test("streaming rollup: survives committers that skip _SUCCESS markers " +
       "(retention must not prune the just-written version)") {
     // mapreduce.fileoutputcommitter.marksuccessfuljobs=false is typical
-    // with S3/cloud committers. Retention and readRollup key off the
-    // marker, so rollupBatch must create it itself when the committer
-    // didn't — otherwise the post-write prune deletes EVERY version
-    // (including the one just written) and the view is lost.
+    // with S3/cloud committers. The view's commit audits the staged part
+    // files and publishes a manifest, so it must serve and retain the same
+    // two snapshots without the marker.
     val dir = Files.createTempDirectory("graft_rollup_nomark").toString + "/view"
-    def mk(rows: (String, String, String, String, String)*) =
-      rows.toSeq.toDF("id", "channel", "nick", "remark", "p")
-        .withColumn("posted", to_timestamp(col("p"))).drop("p")
     val conf = spark.sparkContext.hadoopConfiguration
     val prev = conf.get("mapreduce.fileoutputcommitter.marksuccessfuljobs")
     conf.set("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
     try {
       IrcStream.rollupBatch(
-        mk(("id1", "#x", "alice", "hello", "2024-01-01 10:05:00")), 0L, dir)
+        rollupRows(("id1", "#x", "alice", "hello", "2024-01-01 10:05:00")), 0L, dir)
       IrcStream.rollupBatch(
-        mk(("id2", "#x", "bob", "worlds", "2024-01-01 10:40:00")), 1L, dir)
-      val got = IrcStream.readRollup(spark, dir)
-        .select("channel", "hour", "n", "sum_cents")
-        .as[(String, String, Long, Long)].collect().toSet
-      assert(got == Set(("#x", "2024-01-01 10:00:00", 2L, 11L)))
-      assert(new java.io.File(dir).list().toSeq.filter(_.startsWith("v=")).toSet
-        == Set("v=0", "v=1"))
+        rollupRows(("id2", "#x", "bob", "worlds", "2024-01-01 10:40:00")), 1L, dir)
+      IrcStream.rollupBatch(
+        rollupRows(("id3", "#x", "carol", "hey", "2024-01-01 10:10:00")), 2L, dir)
+      assert(rollupView(dir) == Set(("#x", "2024-01-01 10:00:00", 3L, 14L)))
+      assert(graft.sinks.ManifestCommit.snapshots(spark, dir) == Seq(1L, 2L))
+      assert(!new java.io.File(dir).list().exists(_.startsWith("snap_0_")),
+        "expired snapshot's staged data survived")
     } finally {
       if (prev == null) conf.unset("mapreduce.fileoutputcommitter.marksuccessfuljobs")
       else conf.set("mapreduce.fileoutputcommitter.marksuccessfuljobs", prev)
     }
+  }
+
+  test("streaming rollup: an empty first batch publishes nothing and the " +
+      "next batch reads back the recompute") {
+    val dir = Files.createTempDirectory("graft_rollup_empty").toString + "/view"
+    val b1 = rollupRows(
+      ("id1", "#x", "alice", "hello", "2024-01-01 10:05:00"),
+      ("id2", "#y", "bob", "worlds", "2024-01-01 10:40:00"))
+    // a no-data micro-batch first: nothing to merge from, nothing to publish
+    IrcStream.rollupBatch(b1.limit(0), 0L, dir)
+    assert(graft.sinks.ManifestCommit.snapshots(spark, dir).isEmpty)
+    IrcStream.rollupBatch(b1, 1L, dir)
+    assert(rollupView(dir) == Set(
+      ("#x", "2024-01-01 10:00:00", 1L, 5L),
+      ("#y", "2024-01-01 10:00:00", 1L, 6L)))
+    assert(graft.sinks.ManifestCommit.snapshots(spark, dir) == Seq(1L))
   }
 
   test("upsert anti-join reads only the batch's channel partitions (K1 at scale)") {

@@ -174,4 +174,35 @@ class VectorFunctionsSpec extends SparkSuite {
       .collect().head
     assert(edge.getInt(0) == 0 && edge.getInt(1) == 2 && edge.getInt(2) == 0)
   }
+
+  test("binary array kernels reject wrong-typed operands at analysis") {
+    val sqlSession = spark.newSession()
+    GraftCatalog.registerAll(sqlSession, sf)
+    val f = "array(cast(1 AS float), cast(2 AS float))"
+    val d = "array(1.0D, 2.0D)"
+    val l = "array(1L, 2L)"
+    val str = "array('a', 'b')"
+    // each kernel, a wrong element type on the right, on the left, and on
+    // both; a column operand analyzes the same way as a literal one
+    val wrong = Seq(
+      s"float_vec_dot($f, $d)", s"float_vec_dot($d, $f)", s"float_vec_dot($d, $d)",
+      "float_vec_dot(a, b) FROM VALUES (array(1.0D), array(2.0D)) AS t(a, b)",
+      s"double_vec_dot($d, $l)", s"double_vec_dot($l, $d)", s"double_vec_dot($l, $l)",
+      "double_vec_dot(a, b) FROM VALUES (array(1L), array(2L)) AS t(a, b)",
+      s"vec_l2sq($d, $l)", s"vec_l2sq($l, $f)", s"vec_l2sq($l, $l)",
+      s"vec_agree($l, $d)", s"vec_agree($d, $l)", s"vec_agree($str, $str)",
+      s"sorted_isect_count($str, $l)", s"sorted_isect_count($l, $str)",
+      "sorted_isect_count(1, 2)")
+    wrong.foreach { q =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](sqlSession.sql(s"SELECT $q"))
+      assert(e.getMessage.contains("requires array<"), s"$q: ${e.getMessage}")
+    }
+    // the accepted element types still analyze and run
+    val ok = sqlSession.sql(
+      s"""SELECT float_vec_dot($f, $f), double_vec_dot($d, $d), vec_l2sq($f, $d),
+         |       vec_agree($l, $l), sorted_isect_count($str, $str)""".stripMargin)
+      .collect().head
+    assert(ok.getDouble(0) == 5.0 && ok.getDouble(1) == 5.0 && ok.getDouble(2) == 0.0 &&
+      ok.getInt(3) == 2 && ok.getInt(4) == 2)
+  }
 }

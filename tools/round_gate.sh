@@ -1,10 +1,12 @@
 #!/usr/bin/env bash
 # One-command local round gate: everything the driver checks, in order.
 #
-#   tools/round_gate.sh           # full gate (sf0.01 verify, tests, bench
-#                                 # check, ingest exactly-once smoke, heap
-#                                 # canary, scale smoke)
-#   tools/round_gate.sh --quick   # sf0.001 verify + tests only (iteration loop)
+#   tools/round_gate.sh           # full gate, stages 1-9 (sf0.01 verify,
+#                                 # tests, bench artifact check, ingest
+#                                 # exactly-once smoke, heap canary, scale
+#                                 # smoke)
+#   tools/round_gate.sh --quick   # stages 1-5 on sf0.001: tool checks,
+#                                 # verify, oracle, smoke, tests (iteration loop)
 #
 # Exit non-zero on the first failing stage. Run it QUIET (no concurrent sbt/
 # tests) if you intend to trust bench numbers — see BASELINE.md round 9.
@@ -14,8 +16,17 @@ cd "$(dirname "$0")/.."
 SF=/root/testdata/sf0.01
 [[ "${1:-}" == "--quick" ]] && SF=/root/testdata/sf0.001
 
+# Seconds-cheap checks first, in every mode: the tools' fixture tests, the
+# knob census and perfbench's unit tests.
+echo "== 1/9 tool checks (fixture tests, knob census, perfbench unit tests)"
+python3 tools/test_check_bench.py
+python3 tools/test_plan_diff.py
+python3 tools/test_knob_census.py
+python3 tools/knob_census.py
+python3 -m unittest discover -s perfbench/tests
+
 out=$(mktemp -d /tmp/graft_gate.XXXXXX)
-echo "== 1/4 verify dump @ $SF"
+echo "== 2/9 verify dump @ $SF"
 # Capture sbt's own exit status before grepping for per-query failures: the
 # old `... | grep ... || true` masked a compile error / OOM behind pipefail,
 # so the gate only failed later when check_oracle couldn't read the dump.
@@ -26,30 +37,27 @@ fi
 if grep '\[verify\]' "$vlog"; then
   echo "verify had per-query failures"; exit 1
 fi
-echo "== 2/4 DuckDB differential"
+echo "== 3/9 DuckDB differential"
 python3 tools/check_oracle.py "$SF" "$out"
-echo "== 3/4 flagship smoke"
+echo "== 4/9 flagship smoke"
 sbt -batch "runMain graft.EntrySmoke" 2>&1 | grep -q 'ENTRY_ROWS=[1-9]' \
   || { echo "EntrySmoke returned 0 rows"; exit 1; }
-echo "== 4/4 scalatest"
+echo "== 5/9 scalatest"
 sbt -batch test
 
-if [[ "${1:-}" != "--quick" && -f BENCH_full.json ]]; then
-  echo "== bench artifact check (committed BENCH_full.json vs baseline)"
-  python3 tools/test_check_bench.py
-  python3 tools/test_plan_diff.py
-  python3 tools/test_knob_census.py
-  python3 tools/knob_census.py
-  python3 -m unittest discover -s perfbench/tests
-  python3 tools/check_bench.py BENCH_full.json
-fi
-
 if [[ "${1:-}" != "--quick" ]]; then
+  echo "== 6/9 bench artifact check (committed BENCH_full.json vs baseline)"
+  if [[ -f BENCH_full.json ]]; then
+    python3 tools/check_bench.py BENCH_full.json
+  else
+    echo "no BENCH_full.json: skipped"
+  fi
+
   # Ingest exactly-once smoke: one untraced perfbench ingest run through
   # IrcStream.start. Its own output check (sink rows = distinct ids = the
   # generator's distinct keys) is the ingest oracle; the stage fails unless
   # the result line reads correct with no failed operation.
-  echo "== ingest exactly-once smoke (perfbench ingest, seed 1)"
+  echo "== 7/9 ingest exactly-once smoke (perfbench ingest, seed 1)"
   ingest_out=$(mktemp /tmp/graft_ingest.XXXXXX.out)
   if ! python3 perfbench/run.py --workload ingest --seed 1 --seconds 12 --trace 0 \
        >"$ingest_out" 2>"$ingest_out.err"; then
@@ -68,12 +76,12 @@ PY
   # An all-reps-slow flag here means the spill cliff is back; catch it
   # BEFORE the driver's contended window does. --allow-missing because the
   # canary runs only the sensitive family, not all 233.
-  echo "== 5/5 constrained-heap canary (pair-stream family @ 2g, sf0.1)"
+  echo "== 8/9 constrained-heap canary (pair-stream family @ 2g, sf0.1)"
   # The BENCHED pressure-sensitive family: the banded/prefix scale paths.
   # The quadratic truth definitions (d2_jaccard_neardup / d3_dedup_groups /
   # d10_dedup_yield, and d12_containment since r16) left the benched set
   # (SparkEntry.benchExcluded, r14 verdict #2 / r15 verdict #1) — the
-  # correctness gate still runs them at stage 1/2.
+  # correctness gate still runs them at stages 2-3.
   FAMILY=d2_jaccard_prefix,d2_minhash_lsh,d2_minhash_md5,d3_dedup_groups_lsh,d10_dedup_yield_lsh,d12_containment_prefix,d13_incremental_minhash,m3_phash_pairs_distinct
   canary_out=$(mktemp /tmp/graft_canary.XXXXXX.json)
   if ! SPARK_GRAFT_BENCH_ONLY="$FAMILY" SPARK_GRAFT_BENCH_HEAP=2g \
@@ -92,7 +100,7 @@ PY
   # registry entry or kept shape that stops running at scale fails here
   # instead of rotting until the next full probe. One rep per scale: the
   # stage checks that entries run, not their timings.
-  echo "== scale smoke (ScaleProbe xf=2, sf0.001)"
+  echo "== 9/9 scale smoke (ScaleProbe xf=2, sf0.001)"
   scale_out=$(mktemp /tmp/graft_scale.XXXXXX.json)
   if ! SPARK_GRAFT_SCALE_X=2 SPARK_GRAFT_SF_DIR="$(dirname "$SF")/sf0.001" \
        SPARK_GRAFT_CPUS=4 SPARK_GRAFT_BENCH_REPS=1 \
