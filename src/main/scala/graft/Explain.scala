@@ -286,13 +286,16 @@ object Explain {
       // (names as args) rewrites just those queries' files and rebuilds the
       // index from the on-disk dumps, so iterating on one operator doesn't
       // force a 267-query full regen to keep PLANS.md consistent; only the
-      // full run prunes stale files.
+      // full run prunes stale files. A query's committed alternate final
+      // plans (`<name>.alt<N>.txt`, read by tools/plan_diff.py) are kept
+      // while the query exists.
       val pd = new java.io.File(planDir)
       pd.mkdirs()
       if (all) {
         val keep = names.map(n => s"$n.txt").toSet
         Option(pd.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.endsWith(".txt") && !keep(f.getName))
+          .filter(f => f.getName.endsWith(".txt") &&
+            !keep(f.getName.replaceFirst("\\.alt\\d+\\.txt$", ".txt")))
           .foreach { f => f.delete(); () }
       }
       sections.foreach { case (n, txt) =>

@@ -25,4 +25,21 @@ abstract class SparkSuite extends AnyFunSuite {
   lazy val classic: org.apache.spark.sql.classic.SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `f` runs, with its result. */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = f
+      org.apache.spark.ListenerBusDrain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
 }

@@ -277,23 +277,6 @@ class StreamingSpec extends SparkSuite {
     assert(spark.read.parquet(dir).count() == 4)
   }
 
-  /** Spark jobs started while `f` runs, with its result. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      val r = f
-      org.apache.spark.ListenerBusDrain(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(l)
-  }
-
   /** Every file under `dir` (relative paths), sorted. */
   private def filesUnder(dir: String): Seq[String] = {
     val root = java.nio.file.Paths.get(dir)

@@ -7,9 +7,26 @@ Explain already renumbers expression, plan, codegen-stage and query-stage
 ids per plan, in order of first appearance. Two ids still churn between two
 runs of the SAME commit, because AQE assigns them in stage-completion order:
 the codegen-stage id (`[codegen id : N]`) and the query-stage id (the bare
-`Arguments: N` line of a *QueryStage node). Both are masked; every other
-byte of each `<query>.txt` must match. The PLANS.md index is not compared
-(it embeds its own directory and the unmasked hashes).
+`Arguments: N` line of a *QueryStage node). Both are masked. Two more come
+from session-wide counters that Explain leaves as they are, so they shift
+with every job or expression an earlier query of the session made: RDD ids
+(`MapPartitionsRDD[N]` of a checkpointed scan) and the expression id after
+a backquoted alias (`` `count(1)`#N `` of a pivot). Both are renumbered per
+plan in order of first appearance, so a plan that names one RDD twice still
+differs from one that names two. A read of a ManifestCommit snapshot (s17)
+hands Spark an explicit file list, so its `Location: InMemoryFileIndex
+[...]` line names the staging directory's per-attempt nonce
+(`snap_<id>_<8 hex>`) and the part file's UUID, which are new on every
+run; on those lines only, those two are masked too. Every other byte of
+each `<query>.txt` must match. The PLANS.md index is not compared (it
+embeds its own directory and the unmasked hashes).
+
+A query on which AQE picks between final plans from run to run keeps its
+other shapes next to its plan as `<query>.alt<N>.txt` in PARENT_DIR (the
+committed `plans/` holds `d2_jaccard_prefix.alt1.txt`). A change plan
+passes when it matches the parent's plan or one of those shapes; the
+alternates are not plans of their own, so they are never reported as
+missing from CHANGE_DIR.
 
 Prints each plan file that differs or exists on one side only, then a
 summary line; exits 1 on any difference, 0 when the plans are identical.
@@ -22,6 +39,19 @@ MASKS = [
     (re.compile(r"codegen id : \d+"), "codegen id : N"),
     (re.compile(r"(?m)^Arguments: \d+$"), "Arguments: N"),
 ]
+LOCATION = re.compile(r"(?m)^Location: InMemoryFileIndex \[.*$")
+LOCATION_MASKS = [
+    (re.compile(r"\b(snap_\d+)_[0-9a-f]{8}\b"), r"\1_NONCE"),
+    (re.compile(r"\b(part-\d+)-[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}\b"),
+     r"\1-UUID"),
+]
+RENUMBER = [re.compile(r"(?<=RDD\[)\d+(?=\])"), re.compile(r"(?<=`#)\d+")]
+ALT = re.compile(r"\.alt\d+\.txt$")
+
+
+def renumbered(rx, txt):
+    ids = {}
+    return rx.sub(lambda m: str(ids.setdefault(m.group(0), len(ids) + 1)), txt)
 
 
 def masked(path):
@@ -29,11 +59,27 @@ def masked(path):
         txt = f.read()
     for rx, rep in MASKS:
         txt = rx.sub(rep, txt)
-    return txt
+    for rx in RENUMBER:
+        txt = renumbered(rx, txt)
+
+    def location(m):
+        line = m.group(0)
+        for rx, rep in LOCATION_MASKS:
+            line = rx.sub(rep, line)
+        return line
+    return LOCATION.sub(location, txt)
 
 
 def plans(d):
-    return {f for f in os.listdir(d) if f.endswith(".txt")}
+    return {f for f in os.listdir(d) if f.endswith(".txt") and not ALT.search(f)}
+
+
+def shapes(d, plan):
+    """Masked texts of a plan file and of its `.alt<N>.txt` alternates."""
+    stem = plan[:-len(".txt")]
+    alts = [f for f in os.listdir(d)
+            if ALT.search(f) and ALT.sub("", f) == stem]
+    return {masked(os.path.join(d, f)) for f in [plan] + alts}
 
 
 def diff(parent, change):
@@ -42,7 +88,7 @@ def diff(parent, change):
     out = [(f, "only in " + parent) for f in a - b]
     out += [(f, "only in " + change) for f in b - a]
     out += [(f, "differs") for f in a & b
-            if masked(os.path.join(parent, f)) != masked(os.path.join(change, f))]
+            if masked(os.path.join(change, f)) not in shapes(parent, f)]
     return sorted(out)
 
 

@@ -4,6 +4,16 @@
   1. same-commit churn (codegen-stage and query-stage ids) -> exit 0
   2. a changed operator                                      -> exit 1
   3. a plan present on one side only                         -> exit 1
+  4. a snapshot read whose staging nonce and part-file UUID
+     differ (s17)                                            -> exit 0
+  5. a snapshot read of another snapshot id                  -> exit 1
+  6. a snapshot read from another directory                  -> exit 1
+  7. a change plan that matches a committed alternate
+     (`<query>.alt1.txt`, d2)                                -> exit 0
+  8. a change plan that matches no committed shape of its
+     query (only another query's alternate)                  -> exit 1
+  9. session-counter churn (RDD ids, backquoted-alias ids)   -> exit 0
+ 10. one RDD named twice against two RDDs                    -> exit 1
 
 Run: python3 tools/test_plan_diff.py   (also wired into round_gate.sh)
 """
@@ -33,6 +43,33 @@ Arguments: {st}
 (4) HashAggregate [codegen id : {cg2}]
 Keys [1]: [doc_id#1L]
 """
+
+
+SNAPSHOT = """== Physical Plan ==
+* ColumnarToRow (2)
++- Scan parquet  (1)
+
+
+(1) Scan parquet
+Output [2]: [doc_id#1L, lang#2]
+Batched: true
+Location: InMemoryFileIndex [file:/tmp/graft_manifest_{tag}_pPID/snap_{snap}_{nonce}/part-00000-{uuid}-c000.snappy.parquet]
+ReadSchema: struct<doc_id:bigint,lang:string>
+"""
+
+
+COUNTERS = """(3) Scan ExistingRDD
+Arguments: [label#3, cvec#4], MapPartitionsRDD[{r1}] at localCheckpoint, ExistingRDD
+(5) Scan ExistingRDD
+Arguments: [label#5, cvec#6], MapPartitionsRDD[{r2}] at localCheckpoint, ExistingRDD
+(7) HashAggregate
+Results [2]: [user_id#1L, pivotfirst(count(1)#6L) AS `count(1)`#{e}]
+"""
+
+
+def snapshot(tag=1947788907, snap=1, nonce="0a65d80e",
+             uuid="5b32cb17-3f0b-42ef-8be6-d17ff14da01c"):
+    return SNAPSHOT.format(tag=tag, snap=snap, nonce=nonce, uuid=uuid)
 
 
 def write(d, name, txt):
@@ -75,9 +112,56 @@ def main():
     write(extra, "r.txt", PLAN.format(cg1=1, cg2=2, st=1))
     expect("plan on one side only", extra, 1, "r.txt: only in " + extra)
 
+    write(parent, "s.txt", snapshot())
+    rerun = os.path.join(tmp, "rerun")
+    write(rerun, "q.txt", PLAN.format(cg1=1, cg2=2, st=1))
+    write(rerun, "s.txt", snapshot(nonce="9f31c2b7",
+                                   uuid="e0c4a1d2-77b0-4a5e-9c1d-03f2ab45c6e8"))
+    expect("snapshot nonce and part UUID", rerun, 0, "2 identical, 0 different")
+
+    other_snap = os.path.join(tmp, "other_snap")
+    write(other_snap, "q.txt", PLAN.format(cg1=1, cg2=2, st=1))
+    write(other_snap, "s.txt", snapshot(snap=2, nonce="9f31c2b7"))
+    expect("another snapshot id", other_snap, 1, "s.txt: differs")
+
+    other_dir = os.path.join(tmp, "other_dir")
+    write(other_dir, "q.txt", PLAN.format(cg1=1, cg2=2, st=1))
+    write(other_dir, "s.txt", snapshot(tag=1947788908))
+    expect("another snapshot directory", other_dir, 1, "s.txt: differs")
+
+    # d2: the parent's committed alternate is the shape the change ran
+    alt = PLAN.replace("BroadcastHashJoin", "SortMergeJoin")
+    write(parent, "q.alt1.txt", alt.format(cg1=1, cg2=2, st=1))
+    second = os.path.join(tmp, "second")
+    write(second, "q.txt", alt.format(cg1=2, cg2=1, st=3))
+    write(second, "s.txt", snapshot())
+    expect("committed alternate", second, 0, "2 identical, 0 different")
+
+    # another query's alternate is no shape of q
+    shj = PLAN.replace("BroadcastHashJoin", "ShuffledHashJoin")
+    write(parent, "s.alt1.txt", shj.format(cg1=1, cg2=2, st=1))
+    third = os.path.join(tmp, "third")
+    write(third, "q.txt", shj.format(cg1=1, cg2=2, st=1))
+    write(third, "s.txt", snapshot())
+    expect("no committed shape", third, 1, "q.txt: differs")
+
+    counters = os.path.join(tmp, "counters")
+    write(counters, "c.txt", COUNTERS.format(r1=6362, r2=6362, e=34063))
+    moved = os.path.join(tmp, "moved")
+    write(moved, "c.txt", COUNTERS.format(r1=5851, r2=5851, e=34295))
+    code, out = run(counters, moved)
+    if code != 0 or "1 identical, 0 different" not in out:
+        failures.append(f"session-counter churn: exit {code}\n{out}")
+
+    split = os.path.join(tmp, "split")
+    write(split, "c.txt", COUNTERS.format(r1=5851, r2=5852, e=34295))
+    code, out = run(counters, split)
+    if code != 1 or "c.txt: differs" not in out:
+        failures.append(f"one RDD against two: exit {code}\n{out}")
+
     for f in failures:
         print("FAIL", f)
-    print(f"test_plan_diff: {3 - len(failures)}/3 ok")
+    print(f"test_plan_diff: {10 - len(failures)}/10 ok")
     return 1 if failures else 0
 
 
