@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftShim
 
-import graft.functions.{LongVecAgree, MinHashFromHashes, MinHashSignature, TextFunctions}
+import graft.functions.{HashFunctions, LongVecAgree, MinHashFromHashes, MinHashSignature,
+  TextFunctions}
 
 /** MinHash + LSH near-duplicate detection (SURVEY.md D2): the standard
   * shingle → minhash → band → bucket-join pipeline (Broder resemblance),
@@ -66,7 +67,7 @@ object MinHashDedup {
     * default stays xxhash64; this family backs the oracle-paired query.
     */
   def md5Fold(t: Column): Column =
-    pmod(conv(substring(md5(t), 1, 15), 16, 10).cast("long"), lit(Prime))
+    pmod(HashFunctions.md5Hash60(t), lit(Prime))
 
   /** k-minhash signature with the md5 hash family (oracle-mirrorable). The
     * affine expansion + min fold runs in the native

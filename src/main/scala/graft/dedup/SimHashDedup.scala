@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftShim
 
-import graft.functions.{SimHash64, SimHashFromHashes, TextFunctions}
+import graft.functions.{HashFunctions, SimHash64, SimHashFromHashes, TextFunctions}
 
 /** SimHash near-duplicate fingerprinting (Charikar's rounding scheme as used
   * for web-scale dedup): 64-bit signature where bit j is the sign of the sum
@@ -59,7 +59,7 @@ object SimHashDedup {
   def simhashMd5(text: Column): Column =
     GraftShim.column(SimHashFromHashes(GraftShim.expression(
       transform(TextFunctions.tokens(text),
-        t => conv(substring(md5(t), 1, 15), 16, 10).cast("long")))))
+        HashFunctions.md5Hash60(_)))))
 
   /** Hamming distance between two 64-bit signatures. */
   def hamming(a: Column, b: Column): Column =

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-row character-entropy kernel for x16: one tight JVM pass over the
@@ -31,8 +31,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * null divergence explicitly).
   */
 case class CharEntropySum(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with NativeKernel {
 
+  override protected def operandTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StructType(Seq(
     StructField("n_chars", LongType, nullable = false),
     StructField("s_micro", LongType, nullable = false)))

@@ -23,6 +23,13 @@ object HashFunctions {
   def contentKey(cols: Column*): Column =
     md5(concat_ws("|", cols.map(_.cast("string")): _*))
 
+  /** The top 60 bits of md5(`x`) as a non-negative bigint: the hash the
+    * sampling, splitting and md5-family dedup code shares because DuckDB
+    * mirrors it exactly (`CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)`).
+    */
+  def md5Hash60(x: Column): Column =
+    conv(substring(md5(x), 1, 15), 16, 10).cast("long")
+
   /** v1-shaped key: fields including the (second-truncated) event time. */
   def keyV1(channel: Column, nick: Column, posted: Column, remark: Column): Column =
     contentKey(channel, nick, date_format(posted, "yyyy-MM-dd'T'HH:mm:ss"), remark)

@@ -14,12 +14,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * (equality asserted in TextFunctionsSpec).
   */
 case class WordNGrams(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with NativeKernel {
 
   require(n >= 1)
 
   private val space = UTF8String.fromString(" ")
 
+  override protected def operandTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_ngrams"
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -28,15 +27,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * as regexp_extract's null → null.
   */
 case class RegexpGroups(child: Expression, pattern: String)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with NativeKernel {
 
+  override protected def operandTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "regexp_groups"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string operand, got ${child.dataType.simpleString}")
 
   @transient private lazy val compiled: java.util.regex.Pattern =
     java.util.regex.Pattern.compile(pattern)

@@ -77,6 +77,21 @@ object TextFunctions {
     graft.Caches.track(
       docs.select(id.as("doc_id"), explode(tokens(text)).as("term")))
 
+  /** BM25 inverse document frequency of a term in `df` of `n` documents,
+    * in the form that never goes negative: ln((n − df + 0.5)/(df + 0.5) + 1).
+    */
+  def bm25Idf(n: Column, df: Column): Column =
+    log((n - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0))
+
+  /** BM25 score of a term with frequency `tf` in a document of `dl` terms
+    * (k1 = 1.2, b = 0.75; the average length is `totalDl` / `n`). The op
+    * order is fixed: the oracle SQL of the registry queries that call it
+    * (h8_bm25, v14_hybrid_rrf, t7_text_search) spells out the same sequence.
+    */
+  def bm25TermScore(idf: Column, tf: Column, dl: Column, n: Column, totalDl: Column): Column =
+    idf * (tf * lit(2.2)) /
+      (tf + lit(1.2) * (lit(0.25) + lit(0.75) * (dl * n.cast("double") / totalDl)))
+
   val stopwords: Seq[String] =
     Seq("the", "a", "of", "and", "to", "in", "is", "for", "on", "with")
 

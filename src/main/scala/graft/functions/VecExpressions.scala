@@ -1,32 +1,34 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StringType}
 
-/** The binary array kernels: both operands must be arrays whose element
-  * type is one of `elementTypes`. Each kernel reads elements at a fixed
-  * width (`getFloat`, `getDouble`, `getLong`, `getUTF8String`), so an
-  * operand of another element type must fail analysis; left unchecked, it
-  * passes analysis and the kernel fails at run time (a
+/** The operand check every graft kernel shares: each operand's type must be
+  * one of `operandTypes`, where an array type matches an array of that
+  * element type whatever its `containsNull`. A kernel reads its operand at a
+  * fixed type (`getFloat`, `getDouble`, `getLong`, `getUTF8String`, a
+  * UTF8String cast), so an operand of another type must fail analysis; left
+  * unchecked, it passes analysis and the kernel either fails at run time (a
   * NullPointerException in generated code over a columnar scan, a
-  * ClassCastException over literal arrays). Serializable, so a kernel that
-  * ships to an executor carries `elementTypes` along (Java deserialization
-  * needs a no-argument constructor on the first non-serializable parent).
+  * ClassCastException over literal arrays) or returns numbers read from the
+  * wrong bytes (a string hash over an array<int>).
   */
-abstract class BinaryArrayKernel(elementTypes: DataType*)
-    extends BinaryExpression with Serializable {
+trait NativeKernel extends Expression {
+  protected def operandTypes: Seq[DataType]
+
   override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(e: Expression): Boolean = e.dataType match {
-      case ArrayType(t, _) => elementTypes.contains(t)
-      case _ => false
+    def loose(t: DataType): DataType = t match {
+      case ArrayType(e, _) => ArrayType(e)
+      case other => other
     }
-    if (ok(left) && ok(right)) TypeCheckResult.TypeCheckSuccess
+    if (children.forall(c => operandTypes.contains(loose(c.dataType))))
+      TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<${elementTypes.map(_.simpleString).mkString("|")}> " +
-        s"operands, got ${left.dataType.simpleString} and ${right.dataType.simpleString}")
+      s"$prettyName requires ${operandTypes.map(_.simpleString).mkString(" or ")} " +
+        s"operands, got ${children.map(_.dataType.simpleString).mkString(" and ")}")
   }
 }
 
@@ -43,8 +45,9 @@ abstract class BinaryArrayKernel(elementTypes: DataType*)
   * non-null (embedding fixtures and any sane vector column satisfy this).
   */
 case class FloatVecDot(left: Expression, right: Expression)
-    extends BinaryArrayKernel(FloatType) {
+    extends BinaryExpression with NativeKernel {
 
+  override protected def operandTypes: Seq[DataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "float_vec_dot"
 
@@ -100,8 +103,10 @@ case class FloatVecDot(left: Expression, right: Expression)
   * handled symmetrically on either side.
   */
 case class DoubleVecL2Sq(left: Expression, right: Expression)
-    extends BinaryArrayKernel(DoubleType, FloatType) {
+    extends BinaryExpression with NativeKernel {
 
+  override protected def operandTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_l2sq"
 
@@ -169,8 +174,9 @@ case class DoubleVecL2Sq(left: Expression, right: Expression)
   * (`containsNull = false`) keep the guard-free loop.
   */
 case class LongVecAgree(left: Expression, right: Expression)
-    extends BinaryArrayKernel(LongType) {
+    extends BinaryExpression with NativeKernel {
 
+  override protected def operandTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
   override def prettyName: String = "vec_agree"
 
@@ -224,8 +230,9 @@ case class LongVecAgree(left: Expression, right: Expression)
   * the fold yields NULL — the contracts deliberately diverge there.
   */
 case class DoubleVecDot(left: Expression, right: Expression)
-    extends BinaryArrayKernel(DoubleType) {
+    extends BinaryExpression with NativeKernel {
 
+  override protected def operandTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "double_vec_dot"
 
@@ -280,13 +287,14 @@ case class DoubleVecDot(left: Expression, right: Expression)
   * elimination, and plan/exchange reuse for identical projections.
   */
 case class FloatVecProject(child: Expression, matrix: Seq[Seq[Double]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends UnaryExpression with NativeKernel {
 
   private val dOut = matrix.length
   private val dIn = if (dOut == 0) 0 else matrix.head.length
   require(matrix.forall(_.length == dIn), "ragged projection matrix")
   @transient private lazy val flat: Array[Double] = matrix.flatten.toArray
 
+  override protected def operandTypes: Seq[DataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType =
     ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "float_vec_project"
@@ -358,8 +366,9 @@ case class FloatVecProject(child: Expression, matrix: Seq[Seq[Double]])
   * array_distinct composition).
   */
 case class SortedStringIntersectCount(left: Expression, right: Expression)
-    extends BinaryArrayKernel(StringType) {
+    extends BinaryExpression with NativeKernel {
 
+  override protected def operandTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
   override def prettyName: String = "sorted_isect_count"
 

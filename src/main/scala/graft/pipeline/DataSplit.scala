@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashFunctions.md5Hash60
 import graft.functions.TextFunctions
 
 /** Deterministic dataset-preparation operators for training pipelines:
@@ -21,12 +22,11 @@ import graft.functions.TextFunctions
 object DataSplit {
 
   /** Uniform [0, 100) bucket from the md5 of (salt, id) — the same 60-bit
-    * fold the dedup family uses ([[graft.dedup.MinHashDedup.md5Fold]] uses
-    * mod P; here mod 100 for percentages).
+    * hash the md5 dedup family uses ([[graft.dedup.MinHashDedup.md5Fold]]
+    * reduces it mod P; here mod 100 for percentages).
     */
   def hashBucket(id: Column, salt: String): Column =
-    pmod(conv(substring(md5(concat(lit(s"$salt:"), id.cast("string"))), 1, 15),
-      16, 10).cast("long"), lit(100L))
+    pmod(md5Hash60(concat(lit(s"$salt:"), id.cast("string"))), lit(100L))
 
   /** Keep ~pct% of rows, deterministically, by id hash. */
   def sample(df: DataFrame, id: Column, pct: Int, salt: String = "sample"): DataFrame =
@@ -52,8 +52,7 @@ object DataSplit {
 
   /** Finer-grained [0, 10000) bucket for per-mille-level mixture rates. */
   def hashBucket10k(id: Column, salt: String): Column =
-    pmod(conv(substring(md5(concat(lit(s"$salt:"), id.cast("string"))), 1, 15),
-      16, 10).cast("long"), lit(10000L))
+    pmod(md5Hash60(concat(lit(s"$salt:"), id.cast("string"))), lit(10000L))
 
   /** Mixture sampling — the data-mixing step that weights sources into a
     * target training blend (e.g. wiki ×1.0, CC ×0.1): keep each row with its
@@ -114,8 +113,7 @@ object DataSplit {
     require(nShards >= 1, s"shuffleShard: nShards must be >= 1, got $nShards")
     val ord = md5(concat(lit(s"$salt-ord:"), id.cast("string")))
     df.withColumn("shard",
-        pmod(conv(substring(md5(concat(lit(s"$salt:"), id.cast("string"))),
-          1, 15), 16, 10).cast("long"), lit(nShards.toLong)))
+        pmod(md5Hash60(concat(lit(s"$salt:"), id.cast("string"))), lit(nShards.toLong)))
       .withColumn("pos",
         row_number().over(Window.partitionBy(col("shard")).orderBy(ord, id)))
   }
@@ -146,8 +144,7 @@ object DataSplit {
     val idS = id.cast("string")
     val base = df.select(
       Seq(
-        pmod(conv(substring(md5(concat(lit(s"$salt:"), idS)), 1, 15), 16, 10)
-          .cast("long"), lit(nShards.toLong)).as("shard"),
+        pmod(md5Hash60(concat(lit(s"$salt:"), idS)), lit(nShards.toLong)).as("shard"),
         md5(concat(lit(s"$salt-ord:"), idS)).as("__ord"),
         idS.as("__id")) ++ sums.map { case (n, c) => c.as(n) }: _*)
     // md5 over the values of (sortKey, value) pairs in sortKey order. The

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.HashFunctions
 
 /** Aggregations — SURVEY.md §2.5 (A1-A8): the Elasticsearch query surface
   * (terms / date_histogram / cardinality / top_hits) re-expressed as Spark
@@ -2133,9 +2134,8 @@ object AggQueries extends QueryGroup {
     // sums × 8; EngineSpec bounds them against the exact twin.
     Q("a50_random_sampler",
       (s, d) => {
-        val bucket = pmod(conv(substring(
-          md5(concat(lit("rs:"), col("event_id").cast("string"))), 1, 15),
-          16, 10).cast("long"), lit(8L))
+        val bucket = pmod(HashFunctions.md5Hash60(
+          concat(lit("rs:"), col("event_id").cast("string"))), lit(8L))
         Tables(s, d, "events")
           .filter(bucket === 0L)
           .groupBy(col("event_type"))

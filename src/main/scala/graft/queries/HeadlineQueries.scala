@@ -193,12 +193,11 @@ object HeadlineQueries extends QueryGroup {
           .crossJoin(dl.agg(sum(col("dl")).as("total_dl")))
         val idf = df.crossJoin(broadcast(stats))
           .select(col("term"), col("n"), col("total_dl"), col("df"),
-            log((col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)).as("idf"))
+            graft.functions.TextFunctions.bm25Idf(col("n"), col("df")).as("idf"))
         tf.join(dl, "doc_id").join(idf, "term")
           .select(col("doc_id"), col("term"),
-            round(col("idf") * (col("tf") * lit(2.2)) /
-              (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) *
-                (col("dl") * col("n").cast("double") / col("total_dl")))), 6).as("bm25"))
+            round(graft.functions.TextFunctions.bm25TermScore(
+              col("idf"), col("tf"), col("dl"), col("n"), col("total_dl")), 6).as("bm25"))
           .filter(col("term") === "merge")
           .orderBy(col("bm25").desc, col("doc_id"))
           .limit(20)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.TextFunctions
+import graft.functions.{HashFunctions, TextFunctions}
 import graft.pipeline.DataSplit
 
 /** Dataset-preparation operators (the training-pipeline north star):
@@ -1112,8 +1112,7 @@ object PipelineQueries extends QueryGroup {
     // tests the RAW key — round(…, 9) is display only.
     Q("x32_weighted_sample",
       (s, d) => {
-        val h = conv(substring(md5(col("doc_id").cast("string")), 1, 15),
-          16, 10).cast("long")
+        val h = HashFunctions.md5Hash60(col("doc_id").cast("string"))
         val u = (h + lit(1L)).cast("double") / lit(1.152921504606846976e18)
         Tables(s, d, "documents")
           .select(col("doc_id"), col("n_chars"),
@@ -1159,9 +1158,8 @@ object PipelineQueries extends QueryGroup {
               .as("nw"))
           .filter(col("nw") > 0)
         val b = docs.select(col("source").as("domain"),
-          (conv(substring(md5(concat(lit("shard:"),
-            col("doc_id").cast("string"))), 1, 15), 16, 10)
-            .cast("long") % 3).as("sh"),
+          (HashFunctions.md5Hash60(concat(lit("shard:"),
+            col("doc_id").cast("string"))) % 3).as("sh"),
           floor(col("n_chars").cast("double") / col("nw") * lit(1000000.0)
             + lit(0.5)).cast("long").as("xm"))
         // one corpus aggregate; the per-shard means AND the domain

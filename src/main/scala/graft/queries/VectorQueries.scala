@@ -806,13 +806,12 @@ object VectorQueries extends QueryGroup {
           .crossJoin(dl.agg(sum(col("dl")).as("total_dl")))
         val idf = df.crossJoin(broadcast(stats))
           .select(col("term"), col("n"), col("total_dl"), col("df"),
-            log((col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)).as("idf"))
+            graft.functions.TextFunctions.bm25Idf(col("n"), col("df")).as("idf"))
         val lex = tf.join(dl, "doc_id").join(idf, "term")
           .filter(col("term") === "merge" && col("doc_id") =!= 0)
           .select(col("doc_id"),
-            (col("idf") * (col("tf") * lit(2.2)) /
-              (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) *
-                (col("dl") * col("n").cast("double") / col("total_dl"))))).as("bm25"))
+            graft.functions.TextFunctions.bm25TermScore(
+              col("idf"), col("tf"), col("dl"), col("n"), col("total_dl")).as("bm25"))
           .orderBy(col("bm25").desc, col("doc_id")).limit(100)
           .withColumn("r_lex", row_number()
             .over(Window.orderBy(col("bm25").desc, col("doc_id"))).cast("long"))

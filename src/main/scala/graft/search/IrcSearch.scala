@@ -62,14 +62,11 @@ object IrcSearch {
     val stats = docs.agg(count(lit(1)).as("n"))
       .crossJoin(dl.agg(sum(col("dl")).as("total_dl")))
     val idf = df.crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log((col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)))
+      .withColumn("idf", TextFunctions.bm25Idf(col("n"), col("df")))
     val scored = tf.join(dl, "__id")
       .join(broadcast(idf), "term")
-      .withColumn("term_score",
-        col("idf") * (col("tf") * lit(2.2)) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) *
-            (col("dl") * col("n").cast("double") / col("total_dl")))))
+      .withColumn("term_score", TextFunctions.bm25TermScore(
+        col("idf"), col("tf"), col("dl"), col("n"), col("total_dl")))
     // Pivot columns are named positionally (s_0, s_1, … in sorted-term
     // order), never from the term text: a query term containing '.' or '`'
     // would otherwise make col("s_$t") parse as a nested-field reference.

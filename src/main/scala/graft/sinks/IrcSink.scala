@@ -17,23 +17,32 @@ object IrcSink {
 
   /** Append records (schema: channel, nick, remark, posted, id) with
     * day-partition column derived from `posted`: one parquet file per
-    * (channel, day) per call.
+    * (channel, day) per call. The one writer of the (channel × day) layout,
+    * shared with [[graft.streaming.IrcStream.upsertBatch]].
+    *
+    * A non-null `posted` and a non-empty `channel` are hard preconditions:
+    * either one null or empty would write under __HIVE_DEFAULT_PARTITION__,
+    * which no channel probe ever re-reads (isin never matches null), making
+    * the row permanently un-dedupable. The call fails (it indicates an
+    * upstream stamping bug) before any file is written, rather than
+    * corrupt the table.
+    *
+    * The records are hash-repartitioned on the partition columns so each
+    * (channel, day) lands in exactly one write task, hence one file.
+    * Without it every write task emits a file for each (channel, day) it
+    * holds. The count is explicit (`spark.sql.shuffle.partitions`): AQE
+    * would coalesce a column-only repartition of a small batch into one
+    * task that writes every file serially.
     */
-  def append(records: DataFrame, path: String): Unit =
-    appendPartitioned(records.withColumn("day", date_format(col("posted"), "yyyy-MM-dd")), path)
-
-  /** The one writer of the (channel × day) layout, shared with
-    * [[graft.streaming.IrcStream.upsertBatch]]: hash-repartition on the
-    * partition columns so each (channel, day) lands in exactly one write
-    * task, hence one file. Without it every write task emits a file for
-    * each (channel, day) it holds. The count is explicit
-    * (`spark.sql.shuffle.partitions`): AQE would coalesce a column-only
-    * repartition of a small batch into one task that writes every file
-    * serially.
-    */
-  private[graft] def appendPartitioned(records: DataFrame, path: String): Unit = {
+  def append(records: DataFrame, path: String): Unit = {
     val tasks = records.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     records
+      .withColumn("day",
+        when(col("posted").isNotNull && col("channel").isNotNull && col("channel") =!= "",
+          date_format(col("posted"), "yyyy-MM-dd"))
+          .otherwise(raise_error(lit(
+            "IrcSink.append: null `posted` or null/empty `channel` — every record " +
+              "must carry a non-null timestamp and a non-empty channel"))))
       .repartition(tasks, col("channel"), col("day"))
       .write
       .partitionBy("channel", "day")
@@ -91,7 +100,7 @@ object IrcSink {
     * partition; ids never collide across channels (channel is hashed into
     * the id), so compaction parallelizes per partition with no global
     * shuffle barrier. It keeps its own write rather than
-    * [[appendPartitioned]]'s: its input is the whole table, and one task per
+    * [[append]]'s: its input is the whole table, and one task per
     * (channel, day) would serialize the largest partition.
     */
   def compact(spark: SparkSession, path: String, outPath: String): Unit = {

@@ -155,35 +155,6 @@ object IrcStream {
       .toDF("nick", "n")
   }
 
-  /** ST6 on the Spark 4-native state API: the same running per-nick counts
-    * via `transformWithState` — typed per-key `ValueState` managed by the
-    * state-store provider (the forward path; flatMapGroupsWithState above is
-    * the stable classic form). Requires a column-family-capable store:
-    * `spark.sql.streaming.stateStore.providerClass = ...RocksDBStateStoreProvider`.
-    */
-  def runningNickCountsTws(recs: DataFrame): DataFrame = {
-    val spark = recs.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, ValueState}
-    class CountProcessor extends StatefulProcessor[String, String, (String, Long)] {
-      @transient private var state: ValueState[Long] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        state = getHandle.getValueState[Long]("n",
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.streaming.TTLConfig.NONE)
-      override def handleInputRows(key: String, rows: Iterator[String],
-          timers: org.apache.spark.sql.streaming.TimerValues): Iterator[(String, Long)] = {
-        val n = (if (state.exists()) state.get() else 0L) + rows.size
-        state.update(n)
-        Iterator((key, n))
-      }
-    }
-    recs.select(col("nick")).as[String]
-      .groupByKey(identity)
-      .transformWithState(new CountProcessor, TimeMode.None(), OutputMode.Update())
-      .toDF("nick", "n")
-  }
-
   /** Streaming heavy hitters (ST6 × A12): per-channel trending terms via a
     * Misra-Gries sketch held in keyed state — the streaming form of
     * [[graft.operators.HeavyHitters]]. Each micro-batch folds its tokens
@@ -238,31 +209,20 @@ object IrcStream {
     * every touched channel holds at most
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` days (one
     * per batch past that), and the write
-    * ([[graft.sinks.IrcSink.appendPartitioned]]) adds one file per touched
+    * ([[graft.sinks.IrcSink.append]]) adds one file per touched
     * (channel, day). What still grows: the probe reads every file
     * of each touched channel, all days, so its cost grows with the number
     * of batches that wrote to the channel. [[graft.sinks.IrcSink.compact]]
     * is the storage-side sweep; the correctness of THIS path does not
     * depend on it.
-    * Batch schema must carry `channel` and a NON-NULL `posted` (the
-    * partition keys' sources — a null `posted` would land in the Hive
-    * default partition and is enforced fatal below, since every source
-    * stamps `posted` from current_timestamp or wire time).
+    * Batch schema must carry a non-empty `channel` and a NON-NULL `posted`
+    * (the partition keys' sources; the write fails the batch otherwise,
+    * since every source stamps `posted` from current_timestamp or wire
+    * time).
     */
   def upsertBatch(batch: DataFrame, batchId: Long, targetDir: String): Unit = {
     val spark = batch.sparkSession
     val fresh = batch.dropDuplicates("id")
-      // Non-null `posted` AND non-empty `channel` are hard preconditions:
-      // either one null/empty would write under __HIVE_DEFAULT_PARTITION__,
-      // which no channel probe ever re-reads (isin never matches null),
-      // making the row permanently un-dedupable. Fail the batch loudly
-      // (it indicates an upstream stamping bug) rather than corrupt the sink.
-      .withColumn("day",
-        when(col("posted").isNotNull && col("channel").isNotNull && col("channel") =!= "",
-          date_format(col("posted"), "yyyy-MM-dd"))
-          .otherwise(raise_error(lit(
-            "upsertBatch: null `posted` or null/empty `channel` — every record " +
-              "must carry a non-null timestamp and a non-empty channel"))))
     // persisted: the channel collect below materializes the micro-batch
     // once; the anti-join and the write read it back
     fresh.persist()
@@ -276,7 +236,7 @@ object IrcStream {
         .mapPartitions(_.toSet.iterator)(str)
         .collect().distinct.toSeq
       if (channels.nonEmpty)
-        graft.sinks.IrcSink.appendPartitioned(
+        graft.sinks.IrcSink.append(
           fresh.join(existingIds(spark, targetDir, channels), Seq("id"), "left_anti"),
           targetDir)
     } finally fresh.unpersist()

@@ -84,6 +84,36 @@ object GraftProps extends Properties("graft") {
         minhash(Nil).forall(_ == 2147483647L)
     }
 
+  // Each hash-kernel family shares one fold: a string kernel equals its
+  // pre-hashed twin over the strings' xxhash64(seed 42), folded into [0, P)
+  // for minhash (nulls skipped) and kept as is for simhash (a null stays a
+  // null, so it still counts in the majority denominator). The arrays
+  // include empty ones, null elements and non-BMP code points.
+  private val kernelStr: Gen[String] = Gen.listOf(Gen.oneOf(
+      Gen.alphaNumChar.map(_.toString), Gen.oneOf("é", "中", " "),
+      Gen.choose(0x10000, 0x10FFFF).map(cp => new String(Character.toChars(cp)))))
+    .map(_.mkString)
+  private val strArrays: Gen[List[String]] =
+    Gen.listOf(Gen.frequency(1 -> Gen.const(null: String), 6 -> kernelStr))
+  private def xxhash(s: String): Long =
+    org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+      UTF8String.fromString(s), org.apache.spark.sql.types.StringType, 42L)
+
+  property("minhash_sig equals minhash_sig_h over xxhash64 folded into [0, P)") =
+    forAll(strArrays) { xs =>
+      val direct = graft.functions.MinHashSignature(null, 16).nullSafeEval(utf8Arr(xs))
+        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray().toSeq
+      direct == minhash(xs.filter(_ != null).map(s => Math.floorMod(xxhash(s), 2147483647L)))
+    }
+
+  property("simhash64 equals simhash_h over xxhash64, nulls kept") =
+    forAll(strArrays) { xs =>
+      val hashed = new GenericArrayData(
+        xs.map(s => if (s == null) null else xxhash(s)).toArray[Any])
+      simhash(xs) ==
+        graft.functions.SimHashFromHashes(null).nullSafeEval(hashed).asInstanceOf[Long]
+    }
+
   // ---- ES sink JSON escaping (pure string kernel) ----
 
   private val jackson = new com.fasterxml.jackson.databind.ObjectMapper()

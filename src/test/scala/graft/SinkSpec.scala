@@ -47,6 +47,26 @@ class SinkSpec extends SparkSuite {
     assert(back.columns.toSet == Set("channel", "nick", "remark", "posted", "id", "day"))
   }
 
+  test("append rejects a null posted or an empty channel and commits no parquet file") {
+    // either key would otherwise land in __HIVE_DEFAULT_PARTITION__, which
+    // no channel probe re-reads
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    def parquetFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(parquetFiles)
+      else Seq(f).filter(_.getName.endsWith(".parquet"))
+    val bad = Seq(
+      "null posted" -> records(("#x", "alice", "m1", null, "id1")),
+      "empty channel" -> records(("", "alice", "m1", "2024-01-01 10:00:00", "id1")))
+    for ((what, recs) <- bad) {
+      val path = Files.createTempDirectory("graft_sink_bad").toString + "/t"
+      val e = intercept[Exception](IrcSink.append(recs, path))
+      assert(messages(e).exists(_.contains("null `posted` or null/empty `channel`")),
+        s"$what: expected the partition-key precondition error, got: $e")
+      assert(parquetFiles(new java.io.File(path)).isEmpty, s"$what: a parquet file was committed")
+    }
+  }
+
   test("K2: poisoned record drops after bounded retries without failing the batch " +
     "(irclogbot.py:46-59)") {
     K2Probe.reset()

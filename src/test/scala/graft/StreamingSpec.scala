@@ -583,26 +583,6 @@ class StreamingSpec extends SparkSuite {
     assert(line.endsWith(s" state[${op.operatorName}]=2rows/${op.memoryUsedBytes}B"), line)
   }
 
-  test("transformWithState keeps per-nick running counts (ST6, Spark-4 state API)") {
-    implicit val ctx = sqlCtx
-    // transformWithState needs a column-family-capable state store
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ms = MemoryStream[String]
-    val q = IrcStream.runningNickCountsTws(IrcStream.records(ms.toDF()))
-      .writeStream.format("memory").queryName("tws_out")
-      .outputMode("update").start()
-    ms.addData(":alice!~a@h PRIVMSG #x :m1", ":bob!~b@h PRIVMSG #x :m2")
-    q.processAllAvailable()
-    ms.addData(":alice!~a@h PRIVMSG #x :m3")
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("tws_out").select(col("nick"), col("n"))
-      .as[(String, Long)].collect()
-    assert(rows.filter(_._1 == "alice").map(_._2).max == 2L)
-    assert(rows.filter(_._1 == "bob").map(_._2).max == 1L)
-  }
-
   test("stream-stream correlate joins events within the time window only") {
     implicit val ctx = sqlCtx
     val clicks = MemoryStream[(Long, String)]

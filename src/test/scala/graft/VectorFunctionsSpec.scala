@@ -205,4 +205,39 @@ class VectorFunctionsSpec extends SparkSuite {
     assert(ok.getDouble(0) == 5.0 && ok.getDouble(1) == 5.0 && ok.getDouble(2) == 0.0 &&
       ok.getInt(3) == 2 && ok.getInt(4) == 2)
   }
+
+  test("unary kernels reject wrong-typed operands at analysis") {
+    val sqlSession = spark.newSession()
+    GraftCatalog.registerAll(sqlSession, sf)
+    val m = "array(array(1.0D, 2.0D))"
+    // one wrong-typed operand per kernel: unchecked, each of these analyzed
+    // and then either returned numbers read from the wrong bytes or failed
+    // only at run time
+    val wrong = Seq(
+      "minhash_sig(array(1, 2), 4)", "minhash_sig_h(array('a', 'b'), 4)",
+      "simhash64(array(1L, 2L))", "simhash_h(array('a', 'b'))",
+      "word_ngrams(array(1, 2), 2)", "char_entropy_sum(1)",
+      s"float_vec_project(array(1.0D, 2.0D), $m)")
+    wrong.foreach { q =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](sqlSession.sql(s"SELECT $q"))
+      assert(e.getMessage.contains(" requires "), s"$q: ${e.getMessage}")
+    }
+    // every accepted operand type still analyzes and runs; SQL's xxhash64
+    // is the string kernels' per-element hash (seed 42)
+    val ok = sqlSession.sql(
+      s"""SELECT minhash_sig(array('a', NULL, 'b'), 4)
+         |         = minhash_sig_h(array(pmod(xxhash64('a'), 2147483647L), NULL,
+         |                               pmod(xxhash64('b'), 2147483647L)), 4),
+         |       simhash64(array('a', NULL, 'b'))
+         |         = simhash_h(array(xxhash64('a'), NULL, xxhash64('b'))),
+         |       word_ngrams(array('a', 'b', 'c'), 2),
+         |       char_entropy_sum('aab').n_chars,
+         |       float_vec_project(array(cast(1 AS float), cast(2 AS float)), $m)[0],
+         |       regexp_groups('ab', '(a)(b)')""".stripMargin)
+      .collect().head
+    assert(ok.getBoolean(0) && ok.getBoolean(1))
+    assert(ok.getSeq[String](2) == Seq("a b", "b c"))
+    assert(ok.getLong(3) == 3L && ok.getDouble(4) == 5.0)
+    assert(ok.getSeq[String](5) == Seq("a", "b"))
+  }
 }
