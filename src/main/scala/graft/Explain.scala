@@ -189,11 +189,12 @@ object Explain {
   private[graft] def normalizeIds(txt: String): String = {
     val ids = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     // Anchored to the expression-id shape (r16 ADVICE #3): `name#123` /
-    // `name#123L` (after a word char, closing paren or bracket) and
-    // `[id=#45]` (after `=`). A bare `#\d+` would also renumber digits
-    // inside literal VALUES in plan text — e.g. a pushed-filter string
-    // literal containing '#5' — silently altering audited predicates.
-    val idRe = "(?<=[\\w=)\\]])#(\\d+)".r
+    // `name#123L` (after a word char, closing paren or bracket), a
+    // backquoted alias's `` `count(1)`#123 `` (a pivot's) and `[id=#45]`
+    // (after `=`). A bare `#\d+` would also renumber digits inside literal
+    // VALUES in plan text — e.g. a pushed-filter string literal containing
+    // '#5' — silently altering audited predicates.
+    val idRe = "(?<=[\\w=)\\]`])#(\\d+)".r
     val t1 = idRe.replaceAllIn(txt, m =>
       "#" + ids.getOrElseUpdate(m.group(1), ids.size + 1))
     val addrRe = "@[0-9a-fA-F]{6,}".r
@@ -238,11 +239,19 @@ object Explain {
     // storage-query dump.
     val pidRe = "((?:graft|bkt)_[a-z0-9_]*?_\\d+)_p\\d+".r
     val t7 = pidRe.replaceAllIn(t6, m => m.group(1) + "_pPID")
+    // RDD ids (`MapPartitionsRDD[6148]` of a checkpointed scan) come from
+    // the SparkContext-wide RDD counter, so they shift with every job an
+    // earlier query ran. Same per-plan renumbering: a plan that names one
+    // RDD twice still reads differently from one that names two.
+    val rddIds = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    val rddRe = "(?<=RDD\\[)(\\d+)(?=\\])".r
+    val t8 = rddRe.replaceAllIn(t7, m =>
+      rddIds.getOrElseUpdate(m.group(1), rddIds.size + 1).toString)
     // Object-plan lambdas print their JVM-assigned hidden-class name
     // (`$$Lambda$8342/0x7f..`); both numbers are per-JVM allocation order —
     // mask like @ADDR (the m1/m4 MapPartitions dumps churned on this).
     val lamClsRe = "\\$\\$Lambda\\$\\d+/0x[0-9a-fA-F]+".r
-    lamClsRe.replaceAllIn(t7, _ => java.util.regex.Matcher
+    lamClsRe.replaceAllIn(t8, _ => java.util.regex.Matcher
       .quoteReplacement("$$Lambda$N/0xADDR"))
   }
 

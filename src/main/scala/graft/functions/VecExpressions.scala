@@ -32,6 +32,40 @@ trait NativeKernel extends Expression {
   }
 }
 
+/** The null-element contract of the numeric fold kernels ([[FloatVecDot]],
+  * [[DoubleVecDot]], [[DoubleVecL2Sq]]): a null element among the first
+  * min(len) positions of either operand makes the result null, as it does
+  * in the higher-order fold each kernel replaces (`zip_with` yields null
+  * there and `aggregate`'s sum stays null). Only an operand whose
+  * `ArrayType.containsNull` is true is checked, so vectors typed non-null
+  * keep the guard-free loop, and the result is nullable only when an
+  * operand or an operand's element can be null.
+  */
+trait NullElementFold extends BinaryExpression {
+  private def elementsNullable(e: Expression): Boolean = e.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
+  }
+  private lazy val checkLeft: Boolean = elementsNullable(left)
+  private lazy val checkRight: Boolean = elementsNullable(right)
+
+  override def nullable: Boolean = super.nullable || checkLeft || checkRight
+
+  /** Interpreted check: a checked operand holds a null at position `i`. */
+  protected def nullElementAt(x: ArrayData, y: ArrayData, i: Int): Boolean =
+    (checkLeft && x.isNullAt(i)) || (checkRight && y.isNullAt(i))
+
+  /** Generated check for the loop over `i`: marks the result null and
+    * leaves the loop; empty when neither operand can hold a null. */
+  protected def nullElementGuard(ev: ExprCode, a: String, b: String,
+      i: String): String = {
+    val checks = Seq(a -> checkLeft, b -> checkRight)
+      .collect { case (v, true) => s"$v.isNullAt($i)" }
+    if (checks.isEmpty) ""
+    else s"if (${checks.mkString(" || ")}) { ${ev.isNull} = true; break; }"
+  }
+}
+
 /** Native Catalyst expressions for the vector hot path (SURVEY.md §7.3's
   * optional perf tier): whole-stage-codegen'd float-array dot product
   * (squared L2 is [[DoubleVecL2Sq]] below). ~100× faster than the
@@ -41,11 +75,11 @@ trait NativeKernel extends Expression {
   * double accumulation in index order — the same IEEE op sequence the DuckDB
   * oracle replicates.
   *
-  * Null contract: null array input → null result; elements are assumed
-  * non-null (embedding fixtures and any sane vector column satisfy this).
+  * Null contract: a null array, or a null element within the first
+  * min(len) positions, gives a null result ([[NullElementFold]]).
   */
 case class FloatVecDot(left: Expression, right: Expression)
-    extends BinaryExpression with NativeKernel {
+    extends NullElementFold with NativeKernel {
 
   override protected def operandTypes: Seq[DataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = DoubleType
@@ -58,6 +92,7 @@ case class FloatVecDot(left: Expression, right: Expression)
     var acc = 0.0
     var i = 0
     while (i < n) {
+      if (nullElementAt(x, y, i)) return null
       acc += (x.getFloat(i) * y.getFloat(i)).toDouble
       i += 1
     }
@@ -73,6 +108,7 @@ case class FloatVecDot(left: Expression, right: Expression)
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $acc = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
+         |  ${nullElementGuard(ev, a, b, i)}
          |  $acc += (double) ($a.getFloat($i) * $b.getFloat($i));
          |}
          |${ev.value} = $acc;
@@ -94,7 +130,8 @@ case class FloatVecDot(left: Expression, right: Expression)
   * acc += d·d. Note d² = (−d)², so left/right orientation cannot change a
   * bit. Length mismatch truncates to min(len) like [[DoubleVecDot]] (the
   * HOF fold would yield NULL there — contracts deliberately diverge, and
-  * every call site feeds fixed-width vectors).
+  * every call site feeds fixed-width vectors). A null element within
+  * min(len) gives null, like the fold ([[NullElementFold]]).
   *
   * Registered session-wide as SQL `vec_l2sq`, so the input contract is
   * enforced (r21 ADVICE #1): both sides must be array<double|float> —
@@ -103,7 +140,7 @@ case class FloatVecDot(left: Expression, right: Expression)
   * handled symmetrically on either side.
   */
 case class DoubleVecL2Sq(left: Expression, right: Expression)
-    extends BinaryExpression with NativeKernel {
+    extends NullElementFold with NativeKernel {
 
   override protected def operandTypes: Seq[DataType] =
     Seq(ArrayType(DoubleType), ArrayType(FloatType))
@@ -124,6 +161,7 @@ case class DoubleVecL2Sq(left: Expression, right: Expression)
     var acc = 0.0
     var i = 0
     while (i < n) {
+      if (nullElementAt(x, y, i)) return null
       val d = (if (rightIsFloat) y.getFloat(i).toDouble else y.getDouble(i)) -
         (if (leftIsFloat) x.getFloat(i).toDouble else x.getDouble(i))
       acc += d * d
@@ -144,6 +182,7 @@ case class DoubleVecL2Sq(left: Expression, right: Expression)
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $acc = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
+         |  ${nullElementGuard(ev, a, b, i)}
          |  double $d = $getR - $getL;
          |  $acc += $d * $d;
          |}
@@ -227,10 +266,11 @@ case class LongVecAgree(left: Expression, right: Expression)
   * EQUAL-LENGTH inputs only. On length mismatch the kernel truncates to
   * min(len(a), len(b)) and returns a number (the same n = min(...) rule as
   * [[FloatVecProject]]), while `zip_with` null-pads the shorter side and
-  * the fold yields NULL — the contracts deliberately diverge there.
+  * the fold yields NULL — the contracts deliberately diverge there. A null
+  * element within min(len) gives null, like the fold ([[NullElementFold]]).
   */
 case class DoubleVecDot(left: Expression, right: Expression)
-    extends BinaryExpression with NativeKernel {
+    extends NullElementFold with NativeKernel {
 
   override protected def operandTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
@@ -243,6 +283,7 @@ case class DoubleVecDot(left: Expression, right: Expression)
     var acc = 0.0
     var i = 0
     while (i < n) {
+      if (nullElementAt(x, y, i)) return null
       acc += x.getDouble(i) * y.getDouble(i)
       i += 1
     }
@@ -258,6 +299,7 @@ case class DoubleVecDot(left: Expression, right: Expression)
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $acc = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
+         |  ${nullElementGuard(ev, a, b, i)}
          |  $acc += $a.getDouble($i) * $b.getDouble($i);
          |}
          |${ev.value} = $acc;

@@ -27,12 +27,6 @@ object TopK {
       if (!exp.extraStrategies.contains(TopKStrategy)) {
         exp.extraStrategies = TopKStrategy +: exp.extraStrategies
       }
-      // the conf-gated declarative-idiom rewrite rides along (inert unless
-      // spark.graft.rewriteRankLimit=true — see RankLimitToTopK's scaladoc)
-      if (!exp.extraOptimizations.contains(graft.plans.RankLimitToTopK)) {
-        exp.extraOptimizations =
-          graft.plans.RankLimitToTopK +: exp.extraOptimizations
-      }
     }
   }
 

@@ -76,9 +76,6 @@ object TopKStrategy extends SparkStrategy {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => TopKStrategy)
-    // conf-gated (spark.graft.rewriteRankLimit, default off) — see the
-    // rule's scaladoc for why it is opt-in
-    ext.injectOptimizerRule(_ => RankLimitToTopK)
   }
 }
 

@@ -292,15 +292,7 @@ object AggQueries extends QueryGroup {
         stage(v, "1_view").union(stage(c, "2_click")).union(stage(p, "3_purchase"))
           .orderBy(col("stage"))
       },
-      Some("""WITH v AS (
-             |  SELECT user_id, min(ts) AS tv FROM events
-             |  WHERE event_type = 'view' GROUP BY 1),
-             |c AS (
-             |  SELECT e.user_id, min(ts) AS tc FROM events e JOIN v USING (user_id)
-             |  WHERE event_type = 'click' AND ts > tv GROUP BY 1),
-             |p AS (
-             |  SELECT e.user_id, min(ts) AS tp FROM events e JOIN c USING (user_id)
-             |  WHERE event_type = 'purchase' AND ts > tc GROUP BY 1)
+      Some(s"""WITH $funnelSql
              |SELECT '1_view' AS stage, count(*) AS n_users FROM v
              |UNION ALL SELECT '2_click', count(*) FROM c
              |UNION ALL SELECT '3_purchase', count(*) FROM p
@@ -339,15 +331,7 @@ object AggQueries extends QueryGroup {
               .as("conv_rate"))
           .orderBy(col("stage"))
       },
-      Some("""WITH v AS (
-             |  SELECT user_id, min(ts) AS tv FROM events
-             |  WHERE event_type = 'view' GROUP BY 1),
-             |c AS (
-             |  SELECT e.user_id, min(ts) AS tc FROM events e JOIN v USING (user_id)
-             |  WHERE event_type = 'click' AND ts > tv GROUP BY 1),
-             |p AS (
-             |  SELECT e.user_id, min(ts) AS tp FROM events e JOIN c USING (user_id)
-             |  WHERE event_type = 'purchase' AND ts > tc GROUP BY 1),
+      Some(s"""WITH $funnelSql,
              |s AS (
              |  SELECT '1_view' AS stage, count(*) AS n_users FROM v
              |  UNION ALL SELECT '2_click', count(*) FROM c
@@ -1692,7 +1676,37 @@ object AggQueries extends QueryGroup {
           .drop("g")
         vwHistogramLloyd(ev, init)
       },
-      Some("""WITH e AS (SELECT event_id,
+      Some {
+        // Lloyd round r over the previous centroids `prev` (c0..c4):
+        // nearest-centroid assignment `a<r>` (ties to the lower cid), then
+        // integer-mean recentering to `k<r>` (an empty cluster keeps its
+        // centroid). The last pass assigns only.
+        def assign(r: Int, prev: String): String =
+          s"""a$r AS (SELECT v, CASE
+             |         WHEN abs(v-c0) <= abs(v-c1) AND abs(v-c0) <= abs(v-c2)
+             |          AND abs(v-c0) <= abs(v-c3) AND abs(v-c0) <= abs(v-c4) THEN 0
+             |         WHEN abs(v-c1) <= abs(v-c2) AND abs(v-c1) <= abs(v-c3)
+             |          AND abs(v-c1) <= abs(v-c4) THEN 1
+             |         WHEN abs(v-c2) <= abs(v-c3) AND abs(v-c2) <= abs(v-c4) THEN 2
+             |         WHEN abs(v-c3) <= abs(v-c4) THEN 3
+             |         ELSE 4 END AS cid
+             |       FROM e CROSS JOIN $prev)""".stripMargin
+        def round(r: Int, prev: String): String =
+          s"""${assign(r, prev)},
+             |s$r AS (SELECT cid, CAST(sum(v) // count(*) AS BIGINT) AS c
+             |       FROM a$r GROUP BY 1),
+             |p$r AS (SELECT
+             |         min(CASE WHEN cid = 0 THEN c END) AS n0,
+             |         min(CASE WHEN cid = 1 THEN c END) AS n1,
+             |         min(CASE WHEN cid = 2 THEN c END) AS n2,
+             |         min(CASE WHEN cid = 3 THEN c END) AS n3,
+             |         min(CASE WHEN cid = 4 THEN c END) AS n4
+             |       FROM s$r),
+             |k$r AS (SELECT COALESCE(n0, c0) AS c0, COALESCE(n1, c1) AS c1,
+             |              COALESCE(n2, c2) AS c2, COALESCE(n3, c3) AS c3,
+             |              COALESCE(n4, c4) AS c4
+             |       FROM $prev CROSS JOIN p$r)""".stripMargin
+        s"""WITH e AS (SELECT event_id,
              |                  CAST(round(value * 100) AS BIGINT) AS v
              |           FROM events),
              |r AS (SELECT v, row_number() OVER (ORDER BY v, event_id) AS rn,
@@ -1712,59 +1726,9 @@ object AggQueries extends QueryGroup {
              |     OR rn = CAST(floor((n-1) * 2 / 4.0) AS BIGINT) + 1
              |     OR rn = CAST(floor((n-1) * 3 / 4.0) AS BIGINT) + 1
              |     OR rn = n),
-             |a1 AS (SELECT v, CASE
-             |         WHEN abs(v-c0) <= abs(v-c1) AND abs(v-c0) <= abs(v-c2)
-             |          AND abs(v-c0) <= abs(v-c3) AND abs(v-c0) <= abs(v-c4) THEN 0
-             |         WHEN abs(v-c1) <= abs(v-c2) AND abs(v-c1) <= abs(v-c3)
-             |          AND abs(v-c1) <= abs(v-c4) THEN 1
-             |         WHEN abs(v-c2) <= abs(v-c3) AND abs(v-c2) <= abs(v-c4) THEN 2
-             |         WHEN abs(v-c3) <= abs(v-c4) THEN 3
-             |         ELSE 4 END AS cid
-             |       FROM e CROSS JOIN init),
-             |s1 AS (SELECT cid, CAST(sum(v) // count(*) AS BIGINT) AS c
-             |       FROM a1 GROUP BY 1),
-             |p1 AS (SELECT
-             |         min(CASE WHEN cid = 0 THEN c END) AS n0,
-             |         min(CASE WHEN cid = 1 THEN c END) AS n1,
-             |         min(CASE WHEN cid = 2 THEN c END) AS n2,
-             |         min(CASE WHEN cid = 3 THEN c END) AS n3,
-             |         min(CASE WHEN cid = 4 THEN c END) AS n4
-             |       FROM s1),
-             |k1 AS (SELECT COALESCE(n0, c0) AS c0, COALESCE(n1, c1) AS c1,
-             |              COALESCE(n2, c2) AS c2, COALESCE(n3, c3) AS c3,
-             |              COALESCE(n4, c4) AS c4
-             |       FROM init CROSS JOIN p1),
-             |a2 AS (SELECT v, CASE
-             |         WHEN abs(v-c0) <= abs(v-c1) AND abs(v-c0) <= abs(v-c2)
-             |          AND abs(v-c0) <= abs(v-c3) AND abs(v-c0) <= abs(v-c4) THEN 0
-             |         WHEN abs(v-c1) <= abs(v-c2) AND abs(v-c1) <= abs(v-c3)
-             |          AND abs(v-c1) <= abs(v-c4) THEN 1
-             |         WHEN abs(v-c2) <= abs(v-c3) AND abs(v-c2) <= abs(v-c4) THEN 2
-             |         WHEN abs(v-c3) <= abs(v-c4) THEN 3
-             |         ELSE 4 END AS cid
-             |       FROM e CROSS JOIN k1),
-             |s2 AS (SELECT cid, CAST(sum(v) // count(*) AS BIGINT) AS c
-             |       FROM a2 GROUP BY 1),
-             |p2 AS (SELECT
-             |         min(CASE WHEN cid = 0 THEN c END) AS n0,
-             |         min(CASE WHEN cid = 1 THEN c END) AS n1,
-             |         min(CASE WHEN cid = 2 THEN c END) AS n2,
-             |         min(CASE WHEN cid = 3 THEN c END) AS n3,
-             |         min(CASE WHEN cid = 4 THEN c END) AS n4
-             |       FROM s2),
-             |k2 AS (SELECT COALESCE(n0, c0) AS c0, COALESCE(n1, c1) AS c1,
-             |              COALESCE(n2, c2) AS c2, COALESCE(n3, c3) AS c3,
-             |              COALESCE(n4, c4) AS c4
-             |       FROM k1 CROSS JOIN p2),
-             |a3 AS (SELECT v, CASE
-             |         WHEN abs(v-c0) <= abs(v-c1) AND abs(v-c0) <= abs(v-c2)
-             |          AND abs(v-c0) <= abs(v-c3) AND abs(v-c0) <= abs(v-c4) THEN 0
-             |         WHEN abs(v-c1) <= abs(v-c2) AND abs(v-c1) <= abs(v-c3)
-             |          AND abs(v-c1) <= abs(v-c4) THEN 1
-             |         WHEN abs(v-c2) <= abs(v-c3) AND abs(v-c2) <= abs(v-c4) THEN 2
-             |         WHEN abs(v-c3) <= abs(v-c4) THEN 3
-             |         ELSE 4 END AS cid
-             |       FROM e CROSS JOIN k2),
+             |${round(1, "init")},
+             |${round(2, "k1")},
+             |${assign(3, "k2")},
              |cents AS (SELECT 0 AS cid, c0 AS centroid FROM k2
              |          UNION ALL SELECT 1, c1 FROM k2
              |          UNION ALL SELECT 2, c2 FROM k2
@@ -1773,7 +1737,8 @@ object AggQueries extends QueryGroup {
              |SELECT a.cid, count(*) AS n, min(v) AS min_cents,
              |       max(v) AS max_cents, min(centroid) AS centroid
              |FROM a3 a JOIN cents USING (cid)
-             |GROUP BY a.cid ORDER BY a.cid""".stripMargin)),
+             |GROUP BY a.cid ORDER BY a.cid""".stripMargin
+      }),
 
     // A41 scale twin (r20 verdict #1): the SAME two-iteration Lloyd
     // machinery, seeded from approx_percentile instead of the exact global
@@ -2392,6 +2357,21 @@ object AggQueries extends QueryGroup {
              |WHERE st.idx = nd.n_days
              |ORDER BY event_type""".stripMargin))
   )
+
+  /** DuckDB mirror of the ordered view → click → purchase funnel shared by
+    * a10_funnel and a11_funnel_rate: each stage's users with their first
+    * qualifying timestamp strictly after the previous stage's (`v`, `c`,
+    * `p`). */
+  private val funnelSql: String =
+    """v AS (
+      |  SELECT user_id, min(ts) AS tv FROM events
+      |  WHERE event_type = 'view' GROUP BY 1),
+      |c AS (
+      |  SELECT e.user_id, min(ts) AS tc FROM events e JOIN v USING (user_id)
+      |  WHERE event_type = 'click' AND ts > tv GROUP BY 1),
+      |p AS (
+      |  SELECT e.user_id, min(ts) AS tp FROM events e JOIN c USING (user_id)
+      |  WHERE event_type = 'purchase' AND ts > tc GROUP BY 1)""".stripMargin
 
   /** Shared oracle for both heavy-hitter formulations (they are required to
     * agree bit-for-bit — that is the MG containment guarantee under test).

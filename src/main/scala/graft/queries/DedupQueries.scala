@@ -68,51 +68,213 @@ object DedupQueries extends QueryGroup {
       |               list_filter(string_split(text, ' '), t -> t <> '') AS toks
       |        FROM documents WHERE doc_id % 31 = 1))""".stripMargin
 
-  /** Shared DuckDB mirror of the md5-family minhash-LSH pipeline over
+  /** DuckDB tokens of each `documents` row, binding `tk` (doc_id, toks). */
+  private val docTokensSql: String =
+    """tk AS (
+      |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks
+      |  FROM documents)""".stripMargin
+
+  /** Shared DuckDB mirror of the md5-family minhash-LSH candidate chain over
     * `documents`: shingle -> md5-fold -> 64-hash signature -> 8-band string
-    * keys -> candidate pairs -> estimated Jaccard. CTE chain binding `est`
-    * (da, db, est_jaccard; da < db; threshold NOT yet applied). Used by
+    * keys -> candidate pairs. CTE chain binding `sigs` (doc_id, sig) and
+    * `cand` (da, db; da < db; no threshold applied).
+    */
+  private val md5LshCandSql: String =
+    s"""$docTokensSql,
+       |sh AS (
+       |  SELECT DISTINCT doc_id, term FROM (
+       |    SELECT doc_id,
+       |           unnest(CASE WHEN len(toks) >= 3
+       |             THEN list_transform(generate_series(1, len(toks) - 2),
+       |                  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
+       |             ELSE [] END) AS term
+       |    FROM tk)),
+       |hv AS (
+       |  SELECT doc_id, list(CAST(('0x' || substr(md5(term), 1, 15)) AS BIGINT) % 2147483647) AS hs
+       |  FROM sh GROUP BY 1),
+       |sigs AS (
+       |  SELECT t.doc_id,
+       |         list_transform(generate_series(0, 63), i -> coalesce(
+       |           list_min(list_transform(h.hs,
+       |             v -> (v * ((i * 2654435761) % 1048573 + 1) + i * 40503) % 2147483647)),
+       |           2147483647)) AS sig
+       |  FROM tk t LEFT JOIN hv h USING (doc_id)),
+       |banded AS (
+       |  SELECT doc_id, b AS band,
+       |         list_aggregate(list_transform(sig[b*8+1 : b*8+8],
+       |           v -> CAST(v AS VARCHAR)), 'string_agg', ',') AS band_hash
+       |  FROM sigs, (SELECT unnest(generate_series(0, 7)) AS b)),
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
+       |  FROM banded a JOIN banded b
+       |    ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id)""".stripMargin
+
+  /** [[md5LshCandSql]] plus each candidate's estimated Jaccard, binding
+    * `est` (da, db, est_jaccard; threshold NOT yet applied). Used by
     * d2_minhash_md5 / i3_incremental_minhash / d13_incremental_minhash —
     * the three queries differ only in their final SELECT.
     */
   private val md5LshEstSql: String =
+    s"""$md5LshCandSql,
+       |est AS (
+       |  SELECT da, db,
+       |         round(CAST(len(list_filter(generate_series(1, 64),
+       |           k -> sa.sig[k] = sb.sig[k])) AS DOUBLE) / 64, 6) AS est_jaccard
+       |  FROM cand
+       |  JOIN sigs sa ON sa.doc_id = cand.da
+       |  JOIN sigs sb ON sb.doc_id = cand.db)""".stripMargin
+
+  /** [[md5LshCandSql]] cut at estimated Jaccard >= 0.5, binding `pairs`
+    * (da, db): the graph of the d3/d5/d10 LSH twins. */
+  private val md5LshPairsSql: String =
+    s"""$md5LshCandSql,
+       |pairs AS (
+       |  SELECT da, db
+       |  FROM cand
+       |  JOIN sigs sa ON sa.doc_id = cand.da
+       |  JOIN sigs sb ON sb.doc_id = cand.db
+       |  WHERE CAST(len(list_filter(generate_series(1, 64),
+       |          k -> sa.sig[k] = sb.sig[k])) AS DOUBLE) / 64 >= 0.5)""".stripMargin
+
+  /** DuckDB mirror of the blocked bigram-postings core over `src` (doc_id,
+    * lang, source, text): binds `tokd` (distinct bigram shingles), `sizes`
+    * (doc_id, sz) and `inter` (da < db within one (lang, source) block,
+    * i = |A∩B|). Jaccard and containment differ only in what follows.
+    */
+  private def bigramInterSql(src: String): String =
+    s"""tk AS (
+       |  SELECT doc_id, lang, source,
+       |         list_filter(string_split(text, ' '), t -> t <> '') AS toks
+       |  FROM $src),
+       |tokd AS (
+       |  SELECT DISTINCT doc_id, lang, source, term
+       |  FROM (SELECT doc_id, lang, source,
+       |               unnest(CASE WHEN len(toks) >= 2
+       |                 THEN list_transform(generate_series(1, len(toks) - 1),
+       |                                     i -> toks[i] || ' ' || toks[i + 1])
+       |                 ELSE [] END) AS term
+       |        FROM tk)),
+       |sizes AS (SELECT doc_id, count(*) AS sz FROM tokd GROUP BY 1),
+       |inter AS (
+       |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
+       |  FROM tokd a JOIN tokd b
+       |    ON a.term = b.term AND a.lang = b.lang AND a.source = b.source
+       |   AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** Exact bigram Jaccard >= 0.5 over `documents`, binding `pairs` (da, db):
+    * the graph of d3/d10's truth definitions. */
+  private val jaccardPairsSql: String =
+    s"""${bigramInterSql("documents")},
+       |pairs AS (
+       |  SELECT da, db
+       |  FROM inter
+       |  JOIN sizes sa ON sa.doc_id = da
+       |  JOIN sizes sb ON sb.doc_id = db
+       |  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5)""".stripMargin
+
+  /** The one oracle of d2_jaccard_neardup and d2_jaccard_prefix: bigram
+    * Jaccard >= 0.8 pairs over [[denseDocs]]. */
+  private val denseJaccardSql: String =
+    s"""WITH $denseSql,
+       |${bigramInterSql("dense")}
+       |SELECT da, db,
+       |       round(CAST(i AS DOUBLE) / (sa.sz + sb.sz - i), 6) AS jaccard
+       |FROM inter
+       |JOIN sizes sa ON sa.doc_id = da
+       |JOIN sizes sb ON sb.doc_id = db
+       |WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.8
+       |ORDER BY da, db""".stripMargin
+
+  /** The one oracle of d12_containment and d12_containment_prefix: bigram
+    * containment >= 0.6 pairs over [[denseDocs]], Jaccard alongside. */
+  private val denseContainmentSql: String =
+    s"""WITH $denseSql,
+       |${bigramInterSql("dense")}
+       |SELECT da, db, i, sa.sz AS sa, sb.sz AS sb,
+       |       round(CAST(i AS DOUBLE) / least(sa.sz, sb.sz), 6)
+       |         AS containment,
+       |       round(CAST(i AS DOUBLE) / (sa.sz + sb.sz - i), 6) AS jaccard
+       |FROM inter
+       |JOIN sizes sa ON sa.doc_id = da
+       |JOIN sizes sb ON sb.doc_id = db
+       |WHERE CAST(i AS DOUBLE) / least(sa.sz, sb.sz)
+       |        >= CAST(0.6 AS DOUBLE)
+       |ORDER BY da, db""".stripMargin
+
+  /** Connected components of the `pairs` graph by recursive min-label
+    * propagation over `documents`: the `WITH RECURSIVE` head binding
+    * `edges` (both directions) and `reach(node, r)`; a node's component
+    * is min(r).
+    */
+  private def reachSql(pairsSql: String): String =
+    s"""WITH RECURSIVE
+       |$pairsSql,
+       |edges AS (SELECT da AS a, db AS b FROM pairs
+       |          UNION ALL SELECT db, da FROM pairs),
+       |reach(node, r) AS (
+       |  SELECT doc_id, doc_id FROM documents
+       |  UNION
+       |  SELECT reach.node, edges.b FROM reach JOIN edges ON reach.r = edges.a)""".stripMargin
+
+  /** d3's report over [[reachSql]]: each doc's component and whether it is
+    * the component's representative. */
+  private def groupsSql(pairsSql: String): String =
+    s"""${reachSql(pairsSql)}
+       |SELECT node AS doc_id, min(r) AS comp, (min(r) = node) AS is_rep
+       |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
+
+  /** d10's yield report over [[reachSql]]: the cluster-size histogram. */
+  private def yieldSql(pairsSql: String): String =
+    s"""${reachSql(pairsSql)},
+       |comp AS (SELECT node, min(r) AS comp FROM reach GROUP BY node),
+       |cs AS (SELECT comp, count(*) AS sz FROM comp GROUP BY 1),
+       |h AS (SELECT sz, count(*) AS n_clusters FROM cs GROUP BY 1)
+       |SELECT sz AS cluster_size, n_clusters,
+       |       sz * n_clusters AS n_docs,
+       |       (sz - 1) * n_clusters AS n_removed
+       |FROM h ORDER BY sz""".stripMargin
+
+  /** Distinct trigram shingles of every `documents` row with its source,
+    * binding `tk` and `sh` (doc_id, source, term): d4/d11's split of the
+    * corpus into the train side and the src0 eval slice. */
+  private val sourceTrigramsSql: String =
     """tk AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks
-             |  FROM documents),
-             |sh AS (
-             |  SELECT DISTINCT doc_id, term FROM (
-             |    SELECT doc_id,
-             |           unnest(CASE WHEN len(toks) >= 3
-             |             THEN list_transform(generate_series(1, len(toks) - 2),
-             |                  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-             |             ELSE [] END) AS term
-             |    FROM tk)),
-             |hv AS (
-             |  SELECT doc_id, list(CAST(('0x' || substr(md5(term), 1, 15)) AS BIGINT) % 2147483647) AS hs
-             |  FROM sh GROUP BY 1),
-             |sigs AS (
-             |  SELECT t.doc_id,
-             |         list_transform(generate_series(0, 63), i -> coalesce(
-             |           list_min(list_transform(h.hs,
-             |             v -> (v * ((i * 2654435761) % 1048573 + 1) + i * 40503) % 2147483647)),
-             |           2147483647)) AS sig
-             |  FROM tk t LEFT JOIN hv h USING (doc_id)),
-             |banded AS (
-             |  SELECT doc_id, b AS band,
-             |         list_aggregate(list_transform(sig[b*8+1 : b*8+8],
-             |           v -> CAST(v AS VARCHAR)), 'string_agg', ',') AS band_hash
-             |  FROM sigs, (SELECT unnest(generate_series(0, 7)) AS b)),
-             |cand AS (
-             |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-             |  FROM banded a JOIN banded b
-             |    ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-             |est AS (
-             |  SELECT da, db,
-             |         round(CAST(len(list_filter(generate_series(1, 64),
-             |           k -> sa.sig[k] = sb.sig[k])) AS DOUBLE) / 64, 6) AS est_jaccard
-             |  FROM cand
-             |  JOIN sigs sa ON sa.doc_id = cand.da
-             |  JOIN sigs sb ON sb.doc_id = cand.db)""".stripMargin
+      |  SELECT doc_id, source,
+      |         list_filter(string_split(text, ' '), t -> t <> '') AS toks
+      |  FROM documents),
+      |sh AS (
+      |  SELECT DISTINCT doc_id, source, term FROM (
+      |    SELECT doc_id, source,
+      |           unnest(CASE WHEN len(toks) >= 3
+      |             THEN list_transform(generate_series(1, len(toks) - 2),
+      |                  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
+      |             ELSE [] END) AS term
+      |    FROM tk))""".stripMargin
+
+  /** The 8-token span CTEs of d6/d14/d15: tokens (`t`), non-empty docs
+    * (`z`: doc_id, toks, n), every span with its start (`sp`) and the spans
+    * that occur in more than one doc (`dup`). */
+  private val dupSpansSql: String =
+    """t AS (SELECT doc_id,
+      |                  list_filter(string_split(text, ' '), x -> x <> '') AS toks
+      |           FROM documents),
+      |     z AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0),
+      |     s AS (SELECT doc_id, n, unnest(range(0, n - 8 + 1)) AS pos, toks
+      |           FROM z WHERE n >= 8),
+      |     sp AS (SELECT doc_id, pos,
+      |                   array_to_string(toks[pos + 1 : pos + 8], ' ') AS span
+      |            FROM s),
+      |     dup AS (SELECT span FROM sp GROUP BY span
+      |             HAVING min(doc_id) <> max(doc_id))""".stripMargin
+
+  /** [[dupSpansSql]] plus `rem` (doc_id, p): the distinct token positions a
+    * duplicated span covers — d14 excises them, d15 merges them into runs. */
+  private val dupPositionsSql: String =
+    s"""$dupSpansSql,
+       |     rem AS (SELECT DISTINCT doc_id, p FROM
+       |             (SELECT sp.doc_id, unnest(range(pos, pos + 8)) AS p
+       |              FROM sp JOIN dup USING (span)))""".stripMargin
 
   def all: Seq[Q] = Seq(
 
@@ -149,33 +311,7 @@ object DedupQueries extends QueryGroup {
           Seq(col("lang"), col("source")))
         .select(col("da"), col("db"), round(col("jaccard"), 6).as("jaccard"))
         .orderBy(col("da"), col("db")),
-      Some(s"""WITH $denseSql,
-             |tk AS (
-             |  SELECT doc_id, lang, source,
-             |         list_filter(string_split(text, ' '), t -> t <> '') AS toks
-             |  FROM dense),
-             |tokd AS (
-             |  SELECT DISTINCT doc_id, lang, source, term
-             |  FROM (SELECT doc_id, lang, source,
-             |               unnest(CASE WHEN len(toks) >= 2
-             |                 THEN list_transform(generate_series(1, len(toks) - 1),
-             |                                     i -> toks[i] || ' ' || toks[i + 1])
-             |                 ELSE [] END) AS term
-             |        FROM tk)),
-             |sizes AS (SELECT doc_id, count(*) AS sz FROM tokd GROUP BY 1),
-             |inter AS (
-             |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             |  FROM tokd a JOIN tokd b
-             |    ON a.term = b.term AND a.lang = b.lang AND a.source = b.source
-             |   AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2)
-             |SELECT da, db,
-             |       round(CAST(i AS DOUBLE) / (sa.sz + sb.sz - i), 6) AS jaccard
-             |FROM inter
-             |JOIN sizes sa ON sa.doc_id = da
-             |JOIN sizes sb ON sb.doc_id = db
-             |WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.8
-             |ORDER BY da, db""".stripMargin)),
+      Some(denseJaccardSql)),
 
     // D2 prefix-filtered twin — same oracle SHAPE as d2_jaccard_neardup at
     // the technique's DESIGN POINT t=0.8: exact AllPairs prefix filtering
@@ -198,33 +334,7 @@ object DedupQueries extends QueryGroup {
           Seq(col("lang"), col("source")))
         .select(col("da"), col("db"), round(col("jaccard"), 6).as("jaccard"))
         .orderBy(col("da"), col("db")),
-      Some(s"""WITH $denseSql,
-             |tk AS (
-             |  SELECT doc_id, lang, source,
-             |         list_filter(string_split(text, ' '), t -> t <> '') AS toks
-             |  FROM dense),
-             |tokd AS (
-             |  SELECT DISTINCT doc_id, lang, source, term
-             |  FROM (SELECT doc_id, lang, source,
-             |               unnest(CASE WHEN len(toks) >= 2
-             |                 THEN list_transform(generate_series(1, len(toks) - 1),
-             |                                     i -> toks[i] || ' ' || toks[i + 1])
-             |                 ELSE [] END) AS term
-             |        FROM tk)),
-             |sizes AS (SELECT doc_id, count(*) AS sz FROM tokd GROUP BY 1),
-             |inter AS (
-             |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             |  FROM tokd a JOIN tokd b
-             |    ON a.term = b.term AND a.lang = b.lang AND a.source = b.source
-             |   AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2)
-             |SELECT da, db,
-             |       round(CAST(i AS DOUBLE) / (sa.sz + sb.sz - i), 6) AS jaccard
-             |FROM inter
-             |JOIN sizes sa ON sa.doc_id = da
-             |JOIN sizes sb ON sb.doc_id = db
-             |WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.8
-             |ORDER BY da, db""".stripMargin)),
+      Some(denseJaccardSql)),
 
     // D2 — MinHash+LSH candidate pairs, engine default (xxhash64 shingle
     // fold; rows-only since DuckDB has no xxhash64 — recall vs exact Jaccard
@@ -341,40 +451,7 @@ object DedupQueries extends QueryGroup {
         graft.dedup.Dedup.dedupGroups(docs, col("doc_id"), pairs)
           .orderBy(col("doc_id"))
       },
-      Some("""WITH RECURSIVE
-             |tk AS (
-             |  SELECT doc_id, lang, source,
-             |         list_filter(string_split(text, ' '), t -> t <> '') AS toks
-             |  FROM documents),
-             |tokd AS (
-             |  SELECT DISTINCT doc_id, lang, source, term
-             |  FROM (SELECT doc_id, lang, source,
-             |               unnest(CASE WHEN len(toks) >= 2
-             |                 THEN list_transform(generate_series(1, len(toks) - 1),
-             |                                     i -> toks[i] || ' ' || toks[i + 1])
-             |                 ELSE [] END) AS term
-             |        FROM tk)),
-             |sizes AS (SELECT doc_id, count(*) AS sz FROM tokd GROUP BY 1),
-             |inter AS (
-             |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             |  FROM tokd a JOIN tokd b
-             |    ON a.term = b.term AND a.lang = b.lang AND a.source = b.source
-             |   AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2),
-             |pairs AS (
-             |  SELECT da, db
-             |  FROM inter
-             |  JOIN sizes sa ON sa.doc_id = da
-             |  JOIN sizes sb ON sb.doc_id = db
-             |  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5),
-             |edges AS (SELECT da AS a, db AS b FROM pairs
-             |          UNION ALL SELECT db, da FROM pairs),
-             |reach(node, r) AS (
-             |  SELECT doc_id, doc_id FROM documents
-             |  UNION
-             |  SELECT reach.node, edges.b FROM reach JOIN edges ON reach.r = edges.a)
-             |SELECT node AS doc_id, min(r) AS comp, (min(r) = node) AS is_rep
-             |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin)),
+      Some(groupsSql(jaccardPairsSql))),
 
     // D3 — the SCALE-SAFE end-to-end pipeline: connected components over the
     // MinHash-LSH candidate pairs (md5 family, oracle-mirrored) instead of
@@ -390,52 +467,7 @@ object DedupQueries extends QueryGroup {
         graft.dedup.Dedup.dedupGroups(docs, col("doc_id"), pairs)
           .orderBy(col("doc_id"))
       },
-      Some("""WITH RECURSIVE
-             |tk AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks
-             |  FROM documents),
-             |sh AS (
-             |  SELECT DISTINCT doc_id, term FROM (
-             |    SELECT doc_id,
-             |           unnest(CASE WHEN len(toks) >= 3
-             |             THEN list_transform(generate_series(1, len(toks) - 2),
-             |                  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-             |             ELSE [] END) AS term
-             |    FROM tk)),
-             |hv AS (
-             |  SELECT doc_id, list(CAST(('0x' || substr(md5(term), 1, 15)) AS BIGINT) % 2147483647) AS hs
-             |  FROM sh GROUP BY 1),
-             |sigs AS (
-             |  SELECT t.doc_id,
-             |         list_transform(generate_series(0, 63), i -> coalesce(
-             |           list_min(list_transform(h.hs,
-             |             v -> (v * ((i * 2654435761) % 1048573 + 1) + i * 40503) % 2147483647)),
-             |           2147483647)) AS sig
-             |  FROM tk t LEFT JOIN hv h USING (doc_id)),
-             |banded AS (
-             |  SELECT doc_id, b AS band,
-             |         list_aggregate(list_transform(sig[b*8+1 : b*8+8],
-             |           v -> CAST(v AS VARCHAR)), 'string_agg', ',') AS band_hash
-             |  FROM sigs, (SELECT unnest(generate_series(0, 7)) AS b)),
-             |cand AS (
-             |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-             |  FROM banded a JOIN banded b
-             |    ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-             |pairs AS (
-             |  SELECT da, db
-             |  FROM cand
-             |  JOIN sigs sa ON sa.doc_id = cand.da
-             |  JOIN sigs sb ON sb.doc_id = cand.db
-             |  WHERE CAST(len(list_filter(generate_series(1, 64),
-             |          k -> sa.sig[k] = sb.sig[k])) AS DOUBLE) / 64 >= 0.5),
-             |edges AS (SELECT da AS a, db AS b FROM pairs
-             |          UNION ALL SELECT db, da FROM pairs),
-             |reach(node, r) AS (
-             |  SELECT doc_id, doc_id FROM documents
-             |  UNION
-             |  SELECT reach.node, edges.b FROM reach JOIN edges ON reach.r = edges.a)
-             |SELECT node AS doc_id, min(r) AS comp, (min(r) = node) AS is_rep
-             |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin)),
+      Some(groupsSql(md5LshPairsSql))),
 
     // D5 — the dedup APPLIED: the surviving corpus after LSH near-dup
     // clustering (keep each cluster's min-id representative, full rows).
@@ -450,50 +482,7 @@ object DedupQueries extends QueryGroup {
           .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH RECURSIVE
-             |tk AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks
-             |  FROM documents),
-             |sh AS (
-             |  SELECT DISTINCT doc_id, term FROM (
-             |    SELECT doc_id,
-             |           unnest(CASE WHEN len(toks) >= 3
-             |             THEN list_transform(generate_series(1, len(toks) - 2),
-             |                  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-             |             ELSE [] END) AS term
-             |    FROM tk)),
-             |hv AS (
-             |  SELECT doc_id, list(CAST(('0x' || substr(md5(term), 1, 15)) AS BIGINT) % 2147483647) AS hs
-             |  FROM sh GROUP BY 1),
-             |sigs AS (
-             |  SELECT t.doc_id,
-             |         list_transform(generate_series(0, 63), i -> coalesce(
-             |           list_min(list_transform(h.hs,
-             |             v -> (v * ((i * 2654435761) % 1048573 + 1) + i * 40503) % 2147483647)),
-             |           2147483647)) AS sig
-             |  FROM tk t LEFT JOIN hv h USING (doc_id)),
-             |banded AS (
-             |  SELECT doc_id, b AS band,
-             |         list_aggregate(list_transform(sig[b*8+1 : b*8+8],
-             |           v -> CAST(v AS VARCHAR)), 'string_agg', ',') AS band_hash
-             |  FROM sigs, (SELECT unnest(generate_series(0, 7)) AS b)),
-             |cand AS (
-             |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-             |  FROM banded a JOIN banded b
-             |    ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-             |pairs AS (
-             |  SELECT da, db
-             |  FROM cand
-             |  JOIN sigs sa ON sa.doc_id = cand.da
-             |  JOIN sigs sb ON sb.doc_id = cand.db
-             |  WHERE CAST(len(list_filter(generate_series(1, 64),
-             |          k -> sa.sig[k] = sb.sig[k])) AS DOUBLE) / 64 >= 0.5),
-             |edges AS (SELECT da AS a, db AS b FROM pairs
-             |          UNION ALL SELECT db, da FROM pairs),
-             |reach(node, r) AS (
-             |  SELECT doc_id, doc_id FROM documents
-             |  UNION
-             |  SELECT reach.node, edges.b FROM reach JOIN edges ON reach.r = edges.a)
+      Some(s"""${reachSql(md5LshPairsSql)}
              |SELECT d.doc_id, d.lang, d.source, d.n_chars
              |FROM documents d
              |JOIN (SELECT node FROM reach GROUP BY node HAVING min(r) = node) k
@@ -519,45 +508,7 @@ object DedupQueries extends QueryGroup {
             ((col("sz") - 1) * col("n_clusters")).as("n_removed"))
           .orderBy(col("sz"))
       },
-      Some("""WITH RECURSIVE
-             |tk AS (
-             |  SELECT doc_id, lang, source,
-             |         list_filter(string_split(text, ' '), t -> t <> '') AS toks
-             |  FROM documents),
-             |tokd AS (
-             |  SELECT DISTINCT doc_id, lang, source, term
-             |  FROM (SELECT doc_id, lang, source,
-             |               unnest(CASE WHEN len(toks) >= 2
-             |                 THEN list_transform(generate_series(1, len(toks) - 1),
-             |                                     i -> toks[i] || ' ' || toks[i + 1])
-             |                 ELSE [] END) AS term
-             |        FROM tk)),
-             |sizes AS (SELECT doc_id, count(*) AS sz FROM tokd GROUP BY 1),
-             |inter AS (
-             |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             |  FROM tokd a JOIN tokd b
-             |    ON a.term = b.term AND a.lang = b.lang AND a.source = b.source
-             |   AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2),
-             |pairs AS (
-             |  SELECT da, db
-             |  FROM inter
-             |  JOIN sizes sa ON sa.doc_id = da
-             |  JOIN sizes sb ON sb.doc_id = db
-             |  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5),
-             |edges AS (SELECT da AS a, db AS b FROM pairs
-             |          UNION ALL SELECT db, da FROM pairs),
-             |reach(node, r) AS (
-             |  SELECT doc_id, doc_id FROM documents
-             |  UNION
-             |  SELECT reach.node, edges.b FROM reach JOIN edges ON reach.r = edges.a),
-             |comp AS (SELECT node, min(r) AS comp FROM reach GROUP BY node),
-             |cs AS (SELECT comp, count(*) AS sz FROM comp GROUP BY 1),
-             |h AS (SELECT sz, count(*) AS n_clusters FROM cs GROUP BY 1)
-             |SELECT sz AS cluster_size, n_clusters,
-             |       sz * n_clusters AS n_docs,
-             |       (sz - 1) * n_clusters AS n_removed
-             |FROM h ORDER BY sz""".stripMargin)),
+      Some(yieldSql(jaccardPairsSql))),
 
     // D10-LSH — the same yield report over the BANDED MinHash pair set:
     // the benched scale path (r14 verdict #2 — the quadratic-postings d10
@@ -577,57 +528,7 @@ object DedupQueries extends QueryGroup {
             ((col("sz") - 1) * col("n_clusters")).as("n_removed"))
           .orderBy(col("sz"))
       },
-      Some("""WITH RECURSIVE
-             |tk AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks
-             |  FROM documents),
-             |sh AS (
-             |  SELECT DISTINCT doc_id, term FROM (
-             |    SELECT doc_id,
-             |           unnest(CASE WHEN len(toks) >= 3
-             |             THEN list_transform(generate_series(1, len(toks) - 2),
-             |                  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-             |             ELSE [] END) AS term
-             |    FROM tk)),
-             |hv AS (
-             |  SELECT doc_id, list(CAST(('0x' || substr(md5(term), 1, 15)) AS BIGINT) % 2147483647) AS hs
-             |  FROM sh GROUP BY 1),
-             |sigs AS (
-             |  SELECT t.doc_id,
-             |         list_transform(generate_series(0, 63), i -> coalesce(
-             |           list_min(list_transform(h.hs,
-             |             v -> (v * ((i * 2654435761) % 1048573 + 1) + i * 40503) % 2147483647)),
-             |           2147483647)) AS sig
-             |  FROM tk t LEFT JOIN hv h USING (doc_id)),
-             |banded AS (
-             |  SELECT doc_id, b AS band,
-             |         list_aggregate(list_transform(sig[b*8+1 : b*8+8],
-             |           v -> CAST(v AS VARCHAR)), 'string_agg', ',') AS band_hash
-             |  FROM sigs, (SELECT unnest(generate_series(0, 7)) AS b)),
-             |cand AS (
-             |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-             |  FROM banded a JOIN banded b
-             |    ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-             |pairs AS (
-             |  SELECT da, db
-             |  FROM cand
-             |  JOIN sigs sa ON sa.doc_id = cand.da
-             |  JOIN sigs sb ON sb.doc_id = cand.db
-             |  WHERE CAST(len(list_filter(generate_series(1, 64),
-             |          k -> sa.sig[k] = sb.sig[k])) AS DOUBLE) / 64 >= 0.5),
-             |edges AS (SELECT da AS a, db AS b FROM pairs
-             |          UNION ALL SELECT db, da FROM pairs),
-             |reach(node, r) AS (
-             |  SELECT doc_id, doc_id FROM documents
-             |  UNION
-             |  SELECT reach.node, edges.b FROM reach JOIN edges ON reach.r = edges.a),
-             |comp AS (SELECT node, min(r) AS comp FROM reach GROUP BY node),
-             |cs AS (SELECT comp, count(*) AS sz FROM comp GROUP BY 1),
-             |h AS (SELECT sz, count(*) AS n_clusters FROM cs GROUP BY 1)
-             |SELECT sz AS cluster_size, n_clusters,
-             |       sz * n_clusters AS n_docs,
-             |       (sz - 1) * n_clusters AS n_removed
-             |FROM h ORDER BY sz""".stripMargin)),
+      Some(yieldSql(md5LshPairsSql))),
 
     // D4 — decontamination: corpus docs sharing ≥5 distinct trigram shingles
     // with the eval/benchmark slice (source src0 stands in for the benchmark
@@ -641,18 +542,7 @@ object DedupQueries extends QueryGroup {
           col("doc_id"), col("text"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH tk AS (
-             |  SELECT doc_id, source,
-             |         list_filter(string_split(text, ' '), t -> t <> '') AS toks
-             |  FROM documents),
-             |sh AS (
-             |  SELECT DISTINCT doc_id, source, term FROM (
-             |    SELECT doc_id, source,
-             |           unnest(CASE WHEN len(toks) >= 3
-             |             THEN list_transform(generate_series(1, len(toks) - 2),
-             |                  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-             |             ELSE [] END) AS term
-             |    FROM tk)),
+      Some(s"""WITH $sourceTrigramsSql,
              |ev AS (SELECT DISTINCT term FROM sh WHERE source = 'src0'),
              |shared AS (
              |  SELECT s.doc_id, count(*) AS n_shared
@@ -680,9 +570,7 @@ object DedupQueries extends QueryGroup {
       (s, d) => Tables(s, d, "documents")
         .select(col("doc_id"), SimHashDedup.simhashMd5(col("text")).as("simhash"))
         .orderBy(col("doc_id")),
-      Some("""WITH tk AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks
-             |  FROM documents),
+      Some(s"""WITH $docTokensSql,
              |hs AS (
              |  SELECT doc_id,
              |         list_transform(toks,
@@ -707,17 +595,7 @@ object DedupQueries extends QueryGroup {
       (s, d) => Dedup.dupSpanCoverage(
         Tables(s, d, "documents"), col("doc_id"), col("text"), k = 8)
         .orderBy(col("doc_id")),
-      Some("""WITH t AS (SELECT doc_id,
-             |                  list_filter(string_split(text, ' '), x -> x <> '') AS toks
-             |           FROM documents),
-             |     z AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0),
-             |     s AS (SELECT doc_id, n, unnest(range(0, n - 8 + 1)) AS pos, toks
-             |           FROM z WHERE n >= 8),
-             |     sp AS (SELECT doc_id, pos,
-             |                   array_to_string(toks[pos + 1 : pos + 8], ' ') AS span
-             |            FROM s),
-             |     dup AS (SELECT span FROM sp GROUP BY span
-             |             HAVING min(doc_id) <> max(doc_id)),
+      Some(s"""WITH $dupSpansSql,
              |     cov AS (SELECT doc_id, count(DISTINCT p) AS ndp
              |             FROM (SELECT sp.doc_id, unnest(range(pos, pos + 8)) AS p
              |                   FROM sp JOIN dup USING (span))
@@ -740,20 +618,7 @@ object DedupQueries extends QueryGroup {
       (s, d) => Dedup.dupSpanRemoval(
         Tables(s, d, "documents"), col("doc_id"), col("text"), k = 8)
         .orderBy(col("doc_id")),
-      Some("""WITH t AS (SELECT doc_id,
-             |                  list_filter(string_split(text, ' '), x -> x <> '') AS toks
-             |           FROM documents),
-             |     z AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0),
-             |     s AS (SELECT doc_id, n, unnest(range(0, n - 8 + 1)) AS pos, toks
-             |           FROM z WHERE n >= 8),
-             |     sp AS (SELECT doc_id, pos,
-             |                   array_to_string(toks[pos + 1 : pos + 8], ' ') AS span
-             |            FROM s),
-             |     dup AS (SELECT span FROM sp GROUP BY span
-             |             HAVING min(doc_id) <> max(doc_id)),
-             |     rem AS (SELECT DISTINCT doc_id, p FROM
-             |             (SELECT sp.doc_id, unnest(range(pos, pos + 8)) AS p
-             |              FROM sp JOIN dup USING (span))),
+      Some(s"""WITH $dupPositionsSql,
              |     remc AS (SELECT doc_id, count(*) AS nrem FROM rem GROUP BY doc_id),
              |     posn AS (SELECT doc_id, unnest(range(0, n)) AS p, toks FROM z),
              |     kept AS (SELECT doc_id, p, toks[p + 1] AS tok FROM posn
@@ -784,20 +649,7 @@ object DedupQueries extends QueryGroup {
       (s, d) => Dedup.dupMaximalSpans(
         Tables(s, d, "documents"), col("doc_id"), col("text"), k = 8)
         .orderBy(col("doc_id"), col("span_start")),
-      Some("""WITH t AS (SELECT doc_id,
-             |                  list_filter(string_split(text, ' '), x -> x <> '') AS toks
-             |           FROM documents),
-             |     z AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0),
-             |     s AS (SELECT doc_id, n, unnest(range(0, n - 8 + 1)) AS pos, toks
-             |           FROM z WHERE n >= 8),
-             |     sp AS (SELECT doc_id, pos,
-             |                   array_to_string(toks[pos + 1 : pos + 8], ' ') AS span
-             |            FROM s),
-             |     dup AS (SELECT span FROM sp GROUP BY span
-             |             HAVING min(doc_id) <> max(doc_id)),
-             |     rem AS (SELECT DISTINCT doc_id, p FROM
-             |             (SELECT sp.doc_id, unnest(range(pos, pos + 8)) AS p
-             |              FROM sp JOIN dup USING (span))),
+      Some(s"""WITH $dupPositionsSql,
              |     isl AS (SELECT doc_id, p,
              |                    p - row_number() OVER (PARTITION BY doc_id
              |                                           ORDER BY p) AS grp
@@ -931,18 +783,7 @@ object DedupQueries extends QueryGroup {
           col("doc_id"), col("text"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH tk AS (
-             |  SELECT doc_id, source,
-             |         list_filter(string_split(text, ' '), t -> t <> '') AS toks
-             |  FROM documents),
-             |sh AS (
-             |  SELECT DISTINCT doc_id, source, term FROM (
-             |    SELECT doc_id, source,
-             |           unnest(CASE WHEN len(toks) >= 3
-             |             THEN list_transform(generate_series(1, len(toks) - 2),
-             |                  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-             |             ELSE [] END) AS term
-             |    FROM tk)),
+      Some(s"""WITH $sourceTrigramsSql,
              |tr AS (SELECT DISTINCT term FROM sh WHERE source <> 'src0'),
              |ev AS (SELECT doc_id, term FROM sh WHERE source = 'src0'),
              |agg AS (
@@ -984,36 +825,7 @@ object DedupQueries extends QueryGroup {
           round(col("containment"), 6).as("containment"),
           round(col("jaccard"), 6).as("jaccard"))
         .orderBy(col("da"), col("db")),
-      Some(s"""WITH $denseSql,
-             |tk AS (
-             |  SELECT doc_id, lang, source,
-             |         list_filter(string_split(text, ' '), t -> t <> '') AS toks
-             |  FROM dense),
-             |tokd AS (
-             |  SELECT DISTINCT doc_id, lang, source, term
-             |  FROM (SELECT doc_id, lang, source,
-             |               unnest(CASE WHEN len(toks) >= 2
-             |                 THEN list_transform(generate_series(1, len(toks) - 1),
-             |                                     i -> toks[i] || ' ' || toks[i + 1])
-             |                 ELSE [] END) AS term
-             |        FROM tk)),
-             |sizes AS (SELECT doc_id, count(*) AS sz FROM tokd GROUP BY 1),
-             |inter AS (
-             |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             |  FROM tokd a JOIN tokd b
-             |    ON a.term = b.term AND a.lang = b.lang AND a.source = b.source
-             |   AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2)
-             |SELECT da, db, i, sa.sz AS sa, sb.sz AS sb,
-             |       round(CAST(i AS DOUBLE) / least(sa.sz, sb.sz), 6)
-             |         AS containment,
-             |       round(CAST(i AS DOUBLE) / (sa.sz + sb.sz - i), 6) AS jaccard
-             |FROM inter
-             |JOIN sizes sa ON sa.doc_id = da
-             |JOIN sizes sb ON sb.doc_id = db
-             |WHERE CAST(i AS DOUBLE) / least(sa.sz, sb.sz)
-             |        >= CAST(0.6 AS DOUBLE)
-             |ORDER BY da, db""".stripMargin)),
+      Some(denseContainmentSql)),
 
     // D12 prefix-filtered twin — the BENCHED scale path for containment
     // (r15 verdict #1): Dedup.containmentPairsPrefix indexes only each
@@ -1032,35 +844,6 @@ object DedupQueries extends QueryGroup {
           round(col("containment"), 6).as("containment"),
           round(col("jaccard"), 6).as("jaccard"))
         .orderBy(col("da"), col("db")),
-      Some(s"""WITH $denseSql,
-             |tk AS (
-             |  SELECT doc_id, lang, source,
-             |         list_filter(string_split(text, ' '), t -> t <> '') AS toks
-             |  FROM dense),
-             |tokd AS (
-             |  SELECT DISTINCT doc_id, lang, source, term
-             |  FROM (SELECT doc_id, lang, source,
-             |               unnest(CASE WHEN len(toks) >= 2
-             |                 THEN list_transform(generate_series(1, len(toks) - 1),
-             |                                     i -> toks[i] || ' ' || toks[i + 1])
-             |                 ELSE [] END) AS term
-             |        FROM tk)),
-             |sizes AS (SELECT doc_id, count(*) AS sz FROM tokd GROUP BY 1),
-             |inter AS (
-             |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             |  FROM tokd a JOIN tokd b
-             |    ON a.term = b.term AND a.lang = b.lang AND a.source = b.source
-             |   AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2)
-             |SELECT da, db, i, sa.sz AS sa, sb.sz AS sb,
-             |       round(CAST(i AS DOUBLE) / least(sa.sz, sb.sz), 6)
-             |         AS containment,
-             |       round(CAST(i AS DOUBLE) / (sa.sz + sb.sz - i), 6) AS jaccard
-             |FROM inter
-             |JOIN sizes sa ON sa.doc_id = da
-             |JOIN sizes sb ON sb.doc_id = db
-             |WHERE CAST(i AS DOUBLE) / least(sa.sz, sb.sz)
-             |        >= CAST(0.6 AS DOUBLE)
-             |ORDER BY da, db""".stripMargin))
+      Some(denseContainmentSql))
   )
 }

@@ -14,6 +14,38 @@ import graft.multimodal.{MediaRecord, Multimodal}
   */
 object MultimodalQueries extends QueryGroup {
 
+  /** DuckDB mirror of [[Multimodal.perceptualHash]] on the stub-decoded
+    * fixture (text bytes as luma): the 8×8 nearest-neighbor grid (`samp`)
+    * and its above-mean bits as two 32-bit halves (`ph`: doc_id, phash_hi,
+    * phash_lo). Shared by m3_phash_pairs and m3_phash_pairs_distinct. */
+  private val phashSql: String =
+    """WITH m AS (SELECT doc_id, strlen(text) AS n,
+      |                  list_transform(string_split(text, ''), c -> ascii(c)) AS px
+      |           FROM documents),
+      |g AS (SELECT doc_id, px,
+      |             greatest(1, least(64, n)) AS w,
+      |             greatest(1, n // greatest(1, least(64, n))) AS h
+      |      FROM m),
+      |samp AS (SELECT doc_id,
+      |                list_transform(generate_series(0, 63),
+      |                  j -> CAST(px[((j // 8) * h) // 8 * w + ((j % 8) * w) // 8 + 1]
+      |                            AS BIGINT)) AS s
+      |         FROM g),
+      |ph AS (SELECT doc_id,
+      |              list_reduce(list_prepend(CAST(0 AS BIGINT),
+      |                list_transform(generate_series(32, 63), j ->
+      |                  CASE WHEN s[j + 1] * 64 > list_sum(s)
+      |                       THEN CAST(1 AS BIGINT) << (j - 32)
+      |                       ELSE CAST(0 AS BIGINT) END)),
+      |                (a, v) -> a + v) AS phash_hi,
+      |              list_reduce(list_prepend(CAST(0 AS BIGINT),
+      |                list_transform(generate_series(0, 31), j ->
+      |                  CASE WHEN s[j + 1] * 64 > list_sum(s)
+      |                       THEN CAST(1 AS BIGINT) << j
+      |                       ELSE CAST(0 AS BIGINT) END)),
+      |                (a, v) -> a + v) AS phash_lo
+      |       FROM samp)""".stripMargin
+
   def all: Seq[Q] = Seq(
 
     // M1 — binary ingestion + batched feature extraction (decode stub).
@@ -116,32 +148,7 @@ object MultimodalQueries extends QueryGroup {
         Multimodal.phashPairs(Multimodal.perceptualHash(media), maxHamming = 6)
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      Some("""WITH m AS (SELECT doc_id, strlen(text) AS n,
-             |                  list_transform(string_split(text, ''), c -> ascii(c)) AS px
-             |           FROM documents),
-             |g AS (SELECT doc_id, px,
-             |             greatest(1, least(64, n)) AS w,
-             |             greatest(1, n // greatest(1, least(64, n))) AS h
-             |      FROM m),
-             |samp AS (SELECT doc_id,
-             |                list_transform(generate_series(0, 63),
-             |                  j -> CAST(px[((j // 8) * h) // 8 * w + ((j % 8) * w) // 8 + 1]
-             |                            AS BIGINT)) AS s
-             |         FROM g),
-             |ph AS (SELECT doc_id,
-             |              list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |                list_transform(generate_series(32, 63), j ->
-             |                  CASE WHEN s[j + 1] * 64 > list_sum(s)
-             |                       THEN CAST(1 AS BIGINT) << (j - 32)
-             |                       ELSE CAST(0 AS BIGINT) END)),
-             |                (a, v) -> a + v) AS phash_hi,
-             |              list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |                list_transform(generate_series(0, 31), j ->
-             |                  CASE WHEN s[j + 1] * 64 > list_sum(s)
-             |                       THEN CAST(1 AS BIGINT) << j
-             |                       ELSE CAST(0 AS BIGINT) END)),
-             |                (a, v) -> a + v) AS phash_lo
-             |       FROM samp),
+      Some(s"""$phashSql,
              |bands AS (SELECT doc_id, b,
              |                 CASE WHEN b < 4 THEN (phash_lo >> (8 * b)) & 255
              |                      ELSE (phash_hi >> (8 * (b - 4))) & 255 END AS bandv
@@ -174,32 +181,7 @@ object MultimodalQueries extends QueryGroup {
           Multimodal.perceptualHash(media), maxHamming = 6)
           .orderBy(col("ha_hi"), col("ha_lo"), col("hb_hi"), col("hb_lo"))
       },
-      Some("""WITH m AS (SELECT doc_id, strlen(text) AS n,
-             |                  list_transform(string_split(text, ''), c -> ascii(c)) AS px
-             |           FROM documents),
-             |g AS (SELECT doc_id, px,
-             |             greatest(1, least(64, n)) AS w,
-             |             greatest(1, n // greatest(1, least(64, n))) AS h
-             |      FROM m),
-             |samp AS (SELECT doc_id,
-             |                list_transform(generate_series(0, 63),
-             |                  j -> CAST(px[((j // 8) * h) // 8 * w + ((j % 8) * w) // 8 + 1]
-             |                            AS BIGINT)) AS s
-             |         FROM g),
-             |ph AS (SELECT doc_id,
-             |              list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |                list_transform(generate_series(32, 63), j ->
-             |                  CASE WHEN s[j + 1] * 64 > list_sum(s)
-             |                       THEN CAST(1 AS BIGINT) << (j - 32)
-             |                       ELSE CAST(0 AS BIGINT) END)),
-             |                (a, v) -> a + v) AS phash_hi,
-             |              list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |                list_transform(generate_series(0, 31), j ->
-             |                  CASE WHEN s[j + 1] * 64 > list_sum(s)
-             |                       THEN CAST(1 AS BIGINT) << j
-             |                       ELSE CAST(0 AS BIGINT) END)),
-             |                (a, v) -> a + v) AS phash_lo
-             |       FROM samp),
+      Some(s"""$phashSql,
              |dh AS (SELECT DISTINCT phash_hi, phash_lo FROM ph),
              |bands AS (SELECT phash_hi, phash_lo, b,
              |                 CASE WHEN b < 4 THEN (phash_lo >> (8 * b)) & 255

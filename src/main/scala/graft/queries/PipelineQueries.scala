@@ -20,6 +20,97 @@ object PipelineQueries extends QueryGroup {
   private def duckBucket(salt: String): String =
     s"CAST(('0x' || substr(md5('$salt:' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100"
 
+  /** x29/x30's α = 1/2 language mixture: `l` (lang, n_docs, integer sqrt
+    * weight w) and its totals `t` (n_tot, w_tot). */
+  private val langMixtureSql: String =
+    """WITH l AS (SELECT lang, count(*) AS n_docs,
+      |                  CAST(floor(sqrt(CAST(count(*) AS DOUBLE))
+      |                             * 1000000.0) AS BIGINT) AS w
+      |           FROM documents GROUP BY lang),
+      |t AS (SELECT CAST(sum(n_docs) AS BIGINT) AS n_tot,
+      |             CAST(sum(w) AS BIGINT) AS w_tot FROM l)""".stripMargin
+
+  /** DuckDB mirror of [[graft.pipeline.Bpe]]'s 3-round trainer over the
+    * corpus word vocabulary: `w` (word, c) and its spaced symbol sequences
+    * `s0`, then one CTE block per round r — pair counts over round r-1
+    * sequences (`pc<r>`), the 1-row winner (`b<r>`), merged sequences
+    * (`s<r>`). s3 holds every word's post-merge sequence, which is exactly
+    * its segmentation. Shared by x13_bpe_merges and x13_bpe_apply.
+    */
+  private val bpeTrainSql: String = {
+    def round(r: Int): String = {
+      val prev = s"s${r - 1}"
+      s"""pc$r AS (SELECT p[1] AS a, p[2] AS b, CAST(sum(c) AS BIGINT) AS cnt FROM (
+         |    SELECT c, unnest(list_transform(generate_series(1, len(sy) - 1),
+         |                                    i -> [sy[i], sy[i + 1]])) AS p
+         |    FROM (SELECT c, list_filter(string_split(seq, ' '), x -> x <> '') AS sy
+         |          FROM $prev))
+         |  GROUP BY 1, 2),
+         |b$r AS (SELECT a, b, cnt FROM pc$r ORDER BY cnt DESC, a, b LIMIT 1),
+         |s$r AS (SELECT word, c,
+         |               replace(seq, ' ' || b$r.a || '  ' || b$r.b || ' ',
+         |                            ' ' || b$r.a || b$r.b || ' ') AS seq
+         |        FROM $prev CROSS JOIN b$r)""".stripMargin
+    }
+    s"""WITH w AS (SELECT term AS word, count(*) AS c
+       |           FROM (SELECT unnest(list_filter(string_split(text, ' '),
+       |                                           x -> x <> '')) AS term
+       |                 FROM documents)
+       |           GROUP BY 1),
+       |s0 AS (SELECT word, c,
+       |              '  ' || array_to_string(string_split(word, ''), '  ') || '  ' AS seq
+       |       FROM w),
+       |${round(1)},
+       |${round(2)},
+       |${round(3)}""".stripMargin
+  }
+
+  /** DuckDB mirror of [[graft.pipeline.HtmlExtract]]'s fixture page and
+    * block segmentation, every CTE keyed by `keys`: tokens (`tk`), the
+    * synthesized page (`h`: nav, the text in two paragraphs, variant
+    * '<p>ok</p>', ad block, footer) and its non-empty block-level segments
+    * (`seg`: txt, nl = anchor-text tokens). Shared by x34/x35 (keyed by
+    * doc_id) and x36 (doc_id, source).
+    */
+  private def htmlSegSql(keys: String): String =
+    s"""WITH tk AS (SELECT $keys,
+       |                   list_filter(string_split(text, ' '), t -> t <> '') AS toks
+       |            FROM documents),
+       |h AS (SELECT $keys,
+       |  '<html><body><nav><a href="/">home</a> <a href="/about">about</a> <a href="/login">login</a></nav><p>' ||
+       |  coalesce(array_to_string(toks[1 : (len(toks) + 1) // 2], ' '), '') || '</p>' ||
+       |  CASE WHEN doc_id % 3 = 2 THEN '<p>ok</p>' ELSE '' END ||
+       |  '<p>' || coalesce(array_to_string(toks[(len(toks) + 1) // 2 + 1 : len(toks)], ' '), '') || '</p>' ||
+       |  CASE WHEN doc_id % 3 >= 1 THEN '<div><a href="/buy">buy now</a> <a href="/sub">subscribe today</a> limited offer click here</div>' ELSE '' END ||
+       |  '<footer>copyright 2026 <a href="/terms">terms</a> <a href="/privacy">privacy</a> all rights reserved</footer></body></html>' AS html
+       |  FROM tk),
+       |seg AS (SELECT $keys,
+       |  list_filter(
+       |    list_transform(
+       |      string_split_regex(html,
+       |        '(?i)</?(?:p|div|nav|footer|header|section|article|aside|ul|ol|li|h[1-6]|table|tr|td|br|title|head|body|html)[^>]*>'),
+       |      s -> struct_pack(
+       |        txt := trim(regexp_replace(regexp_replace(s, '<[^>]*>', ' ', 'g'), ' +', ' ', 'g')),
+       |        nl := len(list_filter(string_split(coalesce(array_to_string(
+       |                regexp_extract_all(s, '(?i)<a[^>]*>([^<]*)</a>', 1), ' '), ''), ' '),
+       |              t -> t <> '')))),
+       |    f -> f.txt <> '') AS segs
+       |  FROM h)""".stripMargin
+
+  /** [[htmlSegSql]] by doc_id plus each block's integer features (`feat`:
+    * txt, nt tokens, nl anchor tokens, ns stopword tokens): the input of
+    * x34's classifier and x35's smoothing pass. */
+  private val htmlFeaturesSql: String =
+    s"""${htmlSegSql("doc_id")},
+       |feat AS (SELECT doc_id,
+       |  list_transform(segs, f -> struct_pack(
+       |    txt := f.txt,
+       |    nt := len(list_filter(string_split(f.txt, ' '), t -> t <> '')),
+       |    nl := f.nl,
+       |    ns := len(list_filter(string_split(f.txt, ' '),
+       |           t -> t IN ('the','a','of','and','to','in','is','for','on','with'))))) AS fs
+       |  FROM seg)""".stripMargin
+
   def all: Seq[Q] = Seq(
 
     // x5 — deterministic ~10% sample by id hash (map-side, no shuffle; the
@@ -294,41 +385,13 @@ object PipelineQueries extends QueryGroup {
           .groupBy(col("word")).agg(count(lit(1)).as("c"))
         graft.pipeline.Bpe.merges(vocab, rounds = 3)
       },
-      Some {
-        // One CTE block per round: pair counts over round r-1 sequences,
-        // 1-row winner, merged sequences for round r.
-        def round(r: Int): String = {
-          val prev = s"s${r - 1}"
-          s"""pc$r AS (SELECT p[1] AS a, p[2] AS b, CAST(sum(c) AS BIGINT) AS cnt FROM (
-             |    SELECT c, unnest(list_transform(generate_series(1, len(sy) - 1),
-             |                                    i -> [sy[i], sy[i + 1]])) AS p
-             |    FROM (SELECT c, list_filter(string_split(seq, ' '), x -> x <> '') AS sy
-             |          FROM $prev))
-             |  GROUP BY 1, 2),
-             |b$r AS (SELECT a, b, cnt FROM pc$r ORDER BY cnt DESC, a, b LIMIT 1),
-             |s$r AS (SELECT word, c,
-             |               replace(seq, ' ' || b$r.a || '  ' || b$r.b || ' ',
-             |                            ' ' || b$r.a || b$r.b || ' ') AS seq
-             |        FROM $prev CROSS JOIN b$r)""".stripMargin
-        }
-        s"""WITH w AS (SELECT term AS word, count(*) AS c
-           |           FROM (SELECT unnest(list_filter(string_split(text, ' '),
-           |                                           x -> x <> '')) AS term
-           |                 FROM documents)
-           |           GROUP BY 1),
-           |s0 AS (SELECT word, c,
-           |              '  ' || array_to_string(string_split(word, ''), '  ') || '  ' AS seq
-           |       FROM w),
-           |${round(1)},
-           |${round(2)},
-           |${round(3)}
-           |SELECT * FROM (
-           |  SELECT CAST(1 AS BIGINT) AS round, a AS sym_a, b AS sym_b,
-           |         a || b AS merged, cnt FROM b1
-           |  UNION ALL SELECT 2, a, b, a || b, cnt FROM b2
-           |  UNION ALL SELECT 3, a, b, a || b, cnt FROM b3)
-           |ORDER BY round""".stripMargin
-      }),
+      Some(s"""$bpeTrainSql
+             |SELECT * FROM (
+             |  SELECT CAST(1 AS BIGINT) AS round, a AS sym_a, b AS sym_b,
+             |         a || b AS merged, cnt FROM b1
+             |  UNION ALL SELECT 2, a, b, a || b, cnt FROM b2
+             |  UNION ALL SELECT 3, a, b, a || b, cnt FROM b3)
+             |ORDER BY round""".stripMargin)),
 
     // x13 apply — the tokenization half of the BPE trainer: segment every
     // vocabulary word with the 3 learned merges, then tokenize the corpus
@@ -355,44 +418,16 @@ object PipelineQueries extends QueryGroup {
             sum(col("n_sub")).cast("long").as("n_bpe"))
           .orderBy(col("doc_id"))
       },
-      Some {
-        // same learned-merge CTE chain as x13_bpe_merges; s3 holds every
-        // word's post-merge sequence, which is exactly the segmentation
-        def round(r: Int): String = {
-          val prev = s"s${r - 1}"
-          s"""pc$r AS (SELECT p[1] AS a, p[2] AS b, CAST(sum(c) AS BIGINT) AS cnt FROM (
-             |    SELECT c, unnest(list_transform(generate_series(1, len(sy) - 1),
-             |                                    i -> [sy[i], sy[i + 1]])) AS p
-             |    FROM (SELECT c, list_filter(string_split(seq, ' '), x -> x <> '') AS sy
-             |          FROM $prev))
-             |  GROUP BY 1, 2),
-             |b$r AS (SELECT a, b, cnt FROM pc$r ORDER BY cnt DESC, a, b LIMIT 1),
-             |s$r AS (SELECT word, c,
-             |               replace(seq, ' ' || b$r.a || '  ' || b$r.b || ' ',
-             |                            ' ' || b$r.a || b$r.b || ' ') AS seq
-             |        FROM $prev CROSS JOIN b$r)""".stripMargin
-        }
-        s"""WITH w AS (SELECT term AS word, count(*) AS c
-           |           FROM (SELECT unnest(list_filter(string_split(text, ' '),
-           |                                           x -> x <> '')) AS term
-           |                 FROM documents)
-           |           GROUP BY 1),
-           |s0 AS (SELECT word, c,
-           |              '  ' || array_to_string(string_split(word, ''), '  ') || '  ' AS seq
-           |       FROM w),
-           |${round(1)},
-           |${round(2)},
-           |${round(3)},
-           |seg AS (SELECT word,
-           |               len(list_filter(string_split(seq, ' '), x -> x <> '')) AS n_sub
-           |        FROM s3),
-           |t AS (SELECT doc_id, unnest(list_filter(string_split(text, ' '),
-           |                                        x -> x <> '')) AS word
-           |      FROM documents)
-           |SELECT doc_id, count(*) AS n_words, CAST(sum(n_sub) AS BIGINT) AS n_bpe
-           |FROM t JOIN seg USING (word)
-           |GROUP BY 1 ORDER BY doc_id""".stripMargin
-      }),
+      Some(s"""$bpeTrainSql,
+             |seg AS (SELECT word,
+             |               len(list_filter(string_split(seq, ' '), x -> x <> '')) AS n_sub
+             |        FROM s3),
+             |t AS (SELECT doc_id, unnest(list_filter(string_split(text, ' '),
+             |                                        x -> x <> '')) AS word
+             |      FROM documents)
+             |SELECT doc_id, count(*) AS n_words, CAST(sum(n_sub) AS BIGINT) AS n_bpe
+             |FROM t JOIN seg USING (word)
+             |GROUP BY 1 ORDER BY doc_id""".stripMargin)),
 
     // x15 — DSIR importance weight (Xie et al. 2023): per-doc
     // log(p_target/p_raw) under two Laplace-smoothed unigram models,
@@ -969,12 +1004,7 @@ object PipelineQueries extends QueryGroup {
             expr("(w * 10000) div w_tot").as("alloc_10k"))
           .orderBy(col("lang"))
       },
-      Some("""WITH l AS (SELECT lang, count(*) AS n_docs,
-             |                  CAST(floor(sqrt(CAST(count(*) AS DOUBLE))
-             |                             * 1000000.0) AS BIGINT) AS w
-             |           FROM documents GROUP BY lang),
-             |t AS (SELECT CAST(sum(n_docs) AS BIGINT) AS n_tot,
-             |             CAST(sum(w) AS BIGINT) AS w_tot FROM l)
+      Some(s"""$langMixtureSql
              |SELECT lang, n_docs,
              |       (n_docs * 1000000) // n_tot AS raw_ppm,
              |       (w * 1000000) // w_tot AS temp_ppm,
@@ -1012,12 +1042,7 @@ object PipelineQueries extends QueryGroup {
             (col("p") > col("q")).as("overrepresented"))
           .orderBy(col("lang"))
       },
-      Some("""WITH l AS (SELECT lang, count(*) AS n_docs,
-             |                  CAST(floor(sqrt(CAST(count(*) AS DOUBLE))
-             |                             * 1000000.0) AS BIGINT) AS w
-             |           FROM documents GROUP BY lang),
-             |t AS (SELECT CAST(sum(n_docs) AS BIGINT) AS n_tot,
-             |             CAST(sum(w) AS BIGINT) AS w_tot FROM l),
+      Some(s"""$langMixtureSql,
              |r AS (SELECT lang, n_docs,
              |             CAST(n_docs AS DOUBLE) / CAST(n_tot AS DOUBLE) AS p,
              |             CAST(w AS DOUBLE) / CAST(w_tot AS DOUBLE) AS q
@@ -1272,37 +1297,7 @@ object PipelineQueries extends QueryGroup {
               .as("main_md5"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH tk AS (SELECT doc_id,
-             |                   list_filter(string_split(text, ' '), t -> t <> '') AS toks
-             |            FROM documents),
-             |h AS (SELECT doc_id,
-             |  '<html><body><nav><a href="/">home</a> <a href="/about">about</a> <a href="/login">login</a></nav><p>' ||
-             |  coalesce(array_to_string(toks[1 : (len(toks) + 1) // 2], ' '), '') || '</p>' ||
-             |  CASE WHEN doc_id % 3 = 2 THEN '<p>ok</p>' ELSE '' END ||
-             |  '<p>' || coalesce(array_to_string(toks[(len(toks) + 1) // 2 + 1 : len(toks)], ' '), '') || '</p>' ||
-             |  CASE WHEN doc_id % 3 >= 1 THEN '<div><a href="/buy">buy now</a> <a href="/sub">subscribe today</a> limited offer click here</div>' ELSE '' END ||
-             |  '<footer>copyright 2026 <a href="/terms">terms</a> <a href="/privacy">privacy</a> all rights reserved</footer></body></html>' AS html
-             |  FROM tk),
-             |seg AS (SELECT doc_id,
-             |  list_filter(
-             |    list_transform(
-             |      string_split_regex(html,
-             |        '(?i)</?(?:p|div|nav|footer|header|section|article|aside|ul|ol|li|h[1-6]|table|tr|td|br|title|head|body|html)[^>]*>'),
-             |      s -> struct_pack(
-             |        txt := trim(regexp_replace(regexp_replace(s, '<[^>]*>', ' ', 'g'), ' +', ' ', 'g')),
-             |        nl := len(list_filter(string_split(coalesce(array_to_string(
-             |                regexp_extract_all(s, '(?i)<a[^>]*>([^<]*)</a>', 1), ' '), ''), ' '),
-             |              t -> t <> '')))),
-             |    f -> f.txt <> '') AS segs
-             |  FROM h),
-             |feat AS (SELECT doc_id,
-             |  list_transform(segs, f -> struct_pack(
-             |    txt := f.txt,
-             |    nt := len(list_filter(string_split(f.txt, ' '), t -> t <> '')),
-             |    nl := f.nl,
-             |    ns := len(list_filter(string_split(f.txt, ' '),
-             |           t -> t IN ('the','a','of','and','to','in','is','for','on','with'))))) AS fs
-             |  FROM seg),
+      Some(s"""$htmlFeaturesSql,
              |cls AS (SELECT doc_id, fs,
              |  list_filter(fs, f -> f.nt >= 5 AND f.nl * 3 <= f.nt AND f.ns * 40 >= f.nt) AS good
              |  FROM feat)
@@ -1341,37 +1336,7 @@ object PipelineQueries extends QueryGroup {
             md5(HtmlExtract.mainContentSmoothed(col("fs"))).as("main_md5"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH tk AS (SELECT doc_id,
-             |                   list_filter(string_split(text, ' '), t -> t <> '') AS toks
-             |            FROM documents),
-             |h AS (SELECT doc_id,
-             |  '<html><body><nav><a href="/">home</a> <a href="/about">about</a> <a href="/login">login</a></nav><p>' ||
-             |  coalesce(array_to_string(toks[1 : (len(toks) + 1) // 2], ' '), '') || '</p>' ||
-             |  CASE WHEN doc_id % 3 = 2 THEN '<p>ok</p>' ELSE '' END ||
-             |  '<p>' || coalesce(array_to_string(toks[(len(toks) + 1) // 2 + 1 : len(toks)], ' '), '') || '</p>' ||
-             |  CASE WHEN doc_id % 3 >= 1 THEN '<div><a href="/buy">buy now</a> <a href="/sub">subscribe today</a> limited offer click here</div>' ELSE '' END ||
-             |  '<footer>copyright 2026 <a href="/terms">terms</a> <a href="/privacy">privacy</a> all rights reserved</footer></body></html>' AS html
-             |  FROM tk),
-             |seg AS (SELECT doc_id,
-             |  list_filter(
-             |    list_transform(
-             |      string_split_regex(html,
-             |        '(?i)</?(?:p|div|nav|footer|header|section|article|aside|ul|ol|li|h[1-6]|table|tr|td|br|title|head|body|html)[^>]*>'),
-             |      s -> struct_pack(
-             |        txt := trim(regexp_replace(regexp_replace(s, '<[^>]*>', ' ', 'g'), ' +', ' ', 'g')),
-             |        nl := len(list_filter(string_split(coalesce(array_to_string(
-             |                regexp_extract_all(s, '(?i)<a[^>]*>([^<]*)</a>', 1), ' '), ''), ' '),
-             |              t -> t <> '')))),
-             |    f -> f.txt <> '') AS segs
-             |  FROM h),
-             |feat AS (SELECT doc_id,
-             |  list_transform(segs, f -> struct_pack(
-             |    txt := f.txt,
-             |    nt := len(list_filter(string_split(f.txt, ' '), t -> t <> '')),
-             |    nl := f.nl,
-             |    ns := len(list_filter(string_split(f.txt, ' '),
-             |           t -> t IN ('the','a','of','and','to','in','is','for','on','with'))))) AS fs
-             |  FROM seg),
+      Some(s"""$htmlFeaturesSql,
              |gd AS (SELECT doc_id, fs,
              |  list_transform(fs, f -> f.nt >= 5 AND f.nl * 3 <= f.nt AND f.ns * 40 >= f.nt) AS g
              |  FROM feat),
@@ -1447,29 +1412,7 @@ object PipelineQueries extends QueryGroup {
           .agg(count(lit(1)).as("n_docs"))
           .orderBy(col("source"), col("stage"))
       },
-      Some("""WITH tk AS (SELECT doc_id, source,
-             |                   list_filter(string_split(text, ' '), t -> t <> '') AS toks
-             |            FROM documents),
-             |h AS (SELECT doc_id, source,
-             |  '<html><body><nav><a href="/">home</a> <a href="/about">about</a> <a href="/login">login</a></nav><p>' ||
-             |  coalesce(array_to_string(toks[1 : (len(toks) + 1) // 2], ' '), '') || '</p>' ||
-             |  CASE WHEN doc_id % 3 = 2 THEN '<p>ok</p>' ELSE '' END ||
-             |  '<p>' || coalesce(array_to_string(toks[(len(toks) + 1) // 2 + 1 : len(toks)], ' '), '') || '</p>' ||
-             |  CASE WHEN doc_id % 3 >= 1 THEN '<div><a href="/buy">buy now</a> <a href="/sub">subscribe today</a> limited offer click here</div>' ELSE '' END ||
-             |  '<footer>copyright 2026 <a href="/terms">terms</a> <a href="/privacy">privacy</a> all rights reserved</footer></body></html>' AS html
-             |  FROM tk),
-             |seg AS (SELECT doc_id, source,
-             |  list_filter(
-             |    list_transform(
-             |      string_split_regex(html,
-             |        '(?i)</?(?:p|div|nav|footer|header|section|article|aside|ul|ol|li|h[1-6]|table|tr|td|br|title|head|body|html)[^>]*>'),
-             |      s -> struct_pack(
-             |        txt := trim(regexp_replace(regexp_replace(s, '<[^>]*>', ' ', 'g'), ' +', ' ', 'g')),
-             |        nl := len(list_filter(string_split(coalesce(array_to_string(
-             |                regexp_extract_all(s, '(?i)<a[^>]*>([^<]*)</a>', 1), ' '), ''), ' '),
-             |              t -> t <> '')))),
-             |    f -> f.txt <> '') AS segs
-             |  FROM h),
+      Some(s"""${htmlSegSql("doc_id, source")},
              |ex AS (SELECT doc_id, source,
              |  coalesce(array_to_string(list_transform(list_filter(
              |    list_transform(segs, f -> struct_pack(

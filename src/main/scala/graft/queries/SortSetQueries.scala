@@ -16,6 +16,17 @@ object SortSetQueries extends QueryGroup {
 
   private def cents(c: Column): Column = round(c * 100).cast("long")
 
+  /** The per-priority ranking window `r` shared by the o3 (window) and o4
+    * (native top-k) oracles. */
+  private val rankedOrdersSql: String =
+    """r AS (
+      |  SELECT o_orderpriority, o_orderkey,
+      |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
+      |         row_number() OVER (PARTITION BY o_orderpriority
+      |                            ORDER BY CAST(round(o_totalprice * 100) AS BIGINT) DESC,
+      |                                     o_orderkey) AS rn
+      |  FROM orders)""".stripMargin
+
   def all: Seq[Q] = Seq(
 
     Q("o1_global_sort",
@@ -44,13 +55,7 @@ object SortSetQueries extends QueryGroup {
           .filter(col("rn") <= 3)
           .orderBy(col("o_orderpriority"), col("rn"))
       },
-      Some("""WITH r AS (
-             |  SELECT o_orderpriority, o_orderkey,
-             |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-             |         row_number() OVER (PARTITION BY o_orderpriority
-             |                            ORDER BY CAST(round(o_totalprice * 100) AS BIGINT) DESC,
-             |                                     o_orderkey) AS rn
-             |  FROM orders)
+      Some(s"""WITH $rankedOrdersSql
              |SELECT o_orderpriority, o_orderkey, price_cents, rn
              |FROM r WHERE rn <= 3 ORDER BY o_orderpriority, rn""".stripMargin)),
 
@@ -71,13 +76,7 @@ object SortSetQueries extends QueryGroup {
           .orderBy(col("o_orderpriority"), col("price_cents").desc,
             col("o_orderkey"))
       },
-      Some("""WITH r AS (
-             |  SELECT o_orderpriority, o_orderkey,
-             |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-             |         row_number() OVER (PARTITION BY o_orderpriority
-             |                            ORDER BY CAST(round(o_totalprice * 100) AS BIGINT) DESC,
-             |                                     o_orderkey) AS rn
-             |  FROM orders)
+      Some(s"""WITH $rankedOrdersSql
              |SELECT o_orderpriority, o_orderkey, price_cents
              |FROM r WHERE rn <= 3
              |ORDER BY o_orderpriority, price_cents DESC, o_orderkey""".stripMargin)),

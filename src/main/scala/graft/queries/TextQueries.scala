@@ -20,6 +20,30 @@ object TextQueries extends QueryGroup {
   private val tok =
     "list_filter(string_split(text, ' '), t -> t <> '')"
 
+  /** DuckDB mirror of the percolator query store shared by t23/t31: the
+    * top-20 terms by frequency (freq desc, term) paired into 10 two-term
+    * AND queries, binding `tokd` (doc_id, term) and `q` (query_id, term).
+    */
+  private val percolateStoreSql: String =
+    s"""tokd AS (SELECT doc_id, unnest($tok) AS term
+       |              FROM documents),
+       |v AS (SELECT term, count(*) AS freq FROM tokd GROUP BY 1),
+       |r AS (SELECT term, row_number() OVER (
+       |        ORDER BY freq DESC, term) AS rn FROM v),
+       |q AS (SELECT CAST(floor((rn + 1) / 2.0) AS BIGINT) AS query_id,
+       |             term
+       |      FROM r WHERE rn <= 20)""".stripMargin
+
+  /** The one oracle of t31_percolate_row and t31_percolate_selective: every
+    * (query_id, doc_id) pair whose doc holds both of the query's terms. */
+  private val percolateRowSql: String =
+    s"""WITH $percolateStoreSql,
+       |p AS (SELECT DISTINCT doc_id, term FROM tokd)
+       |SELECT query_id, doc_id
+       |FROM p JOIN q USING (term)
+       |GROUP BY 1, 2 HAVING count(*) = 2
+       |ORDER BY query_id, doc_id""".stripMargin
+
   def all: Seq[Q] = Seq(
 
     // T1 — tokenization; per-doc token counts.
@@ -950,14 +974,7 @@ object TextQueries extends QueryGroup {
             col("first_doc"))
           .orderBy(col("query_id"))
       },
-      Some(s"""WITH tokd AS (SELECT doc_id, unnest($tok) AS term
-              |              FROM documents),
-              |v AS (SELECT term, count(*) AS freq FROM tokd GROUP BY 1),
-              |r AS (SELECT term, row_number() OVER (
-              |        ORDER BY freq DESC, term) AS rn FROM v),
-              |q AS (SELECT CAST(floor((rn + 1) / 2.0) AS BIGINT) AS query_id,
-              |             term
-              |      FROM r WHERE rn <= 20),
+      Some(s"""WITH $percolateStoreSql,
               |p AS (SELECT DISTINCT doc_id, term FROM tokd),
               |hits AS (SELECT query_id, doc_id
               |         FROM p JOIN q USING (term)
@@ -1239,19 +1256,7 @@ object TextQueries extends QueryGroup {
           .matchDocs(Tables(s, d, "documents"), store)
           .orderBy(col("query_id"), col("doc_id"))
       },
-      Some(s"""WITH tokd AS (SELECT doc_id, unnest($tok) AS term
-              |              FROM documents),
-              |v AS (SELECT term, count(*) AS freq FROM tokd GROUP BY 1),
-              |r AS (SELECT term, row_number() OVER (
-              |        ORDER BY freq DESC, term) AS rn FROM v),
-              |q AS (SELECT CAST(floor((rn + 1) / 2.0) AS BIGINT) AS query_id,
-              |             term
-              |      FROM r WHERE rn <= 20),
-              |p AS (SELECT DISTINCT doc_id, term FROM tokd)
-              |SELECT query_id, doc_id
-              |FROM p JOIN q USING (term)
-              |GROUP BY 1, 2 HAVING count(*) = 2
-              |ORDER BY query_id, doc_id""".stripMargin)),
+      Some(percolateRowSql)),
 
     // T31b — percolate, RAREST-TERM-ANCHORED form (the large-fleet scale
     // path the r20 dispatch selects past the store dial): each registered
@@ -1277,19 +1282,7 @@ object TextQueries extends QueryGroup {
           .matchDocsSelective(Tables(s, d, "documents"), store)
           .orderBy(col("query_id"), col("doc_id"))
       },
-      Some(s"""WITH tokd AS (SELECT doc_id, unnest($tok) AS term
-              |              FROM documents),
-              |v AS (SELECT term, count(*) AS freq FROM tokd GROUP BY 1),
-              |r AS (SELECT term, row_number() OVER (
-              |        ORDER BY freq DESC, term) AS rn FROM v),
-              |q AS (SELECT CAST(floor((rn + 1) / 2.0) AS BIGINT) AS query_id,
-              |             term
-              |      FROM r WHERE rn <= 20),
-              |p AS (SELECT DISTINCT doc_id, term FROM tokd)
-              |SELECT query_id, doc_id
-              |FROM p JOIN q USING (term)
-              |GROUP BY 1, 2 HAVING count(*) = 2
-              |ORDER BY query_id, doc_id""".stripMargin)),
+      Some(percolateRowSql)),
 
     // A42 — rare_terms (ES's long-tail dual of `terms`: buckets for terms
     // with doc_count AT OR BELOW a ceiling, which a terms agg's size-N cut

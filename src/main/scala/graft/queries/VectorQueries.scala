@@ -56,6 +56,29 @@ object VectorQueries extends QueryGroup {
        |    i -> ($a[i] - $b[i]) * ($a[i] - $b[i]))),
        |  (acc, v) -> acc + v)""".stripMargin
 
+  /** DuckDB mirror of [[graft.similarity.Ann.pairsLshMd5]]'s 4-hyperplane
+    * md5 sign buckets with each vector's norm (`bk`: vec_id, embedding,
+    * bucket, nrm) and its two join sides `a` (va, ea, na) and `b` (vb, eb,
+    * nb). Shared by v6_ann_md5 and v9_knn_join_md5. */
+  private val signBucketsSql: String =
+    s"""bk AS (
+       |  SELECT vec_id, embedding,
+       |         list_reduce(list_prepend(CAST(0 AS BIGINT),
+       |           list_transform(generate_series(0, 3), i ->
+       |             CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
+       |               list_transform(generate_series(1, len(embedding)), j ->
+       |                 CAST(embedding[j] AS DOUBLE) *
+       |                 ((CAST(('0x' || substr(md5(CAST(i AS VARCHAR) || ',' ||
+       |                     CAST(j - 1 AS VARCHAR)), 1, 15)) AS BIGINT)
+       |                   % 2000001) / 1000000.0 - 1.0))),
+       |               (acc, v) -> acc + v) >= 0
+       |             THEN CAST(1 AS BIGINT) << i ELSE CAST(0 AS BIGINT) END)),
+       |           (acc2, v2) -> acc2 + v2) AS bucket,
+       |         sqrt(${duckDot("embedding", "embedding")}) AS nrm
+       |  FROM embeddings),
+       |a AS (SELECT bucket, vec_id AS va, embedding AS ea, nrm AS na FROM bk),
+       |b AS (SELECT bucket AS bucket_b, vec_id AS vb, embedding AS eb, nrm AS nb FROM bk)""".stripMargin
+
   /** Embeddings fixture densified with deterministic near-copies (r17
     * verdict #1: the natural fixture has no pair ≥ 0.8 cosine, so
     * v5_cosine_neardup verified on 0 rows — the [[DedupQueries.denseDocs]]
@@ -131,6 +154,25 @@ object VectorQueries extends QueryGroup {
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("v")))),
         _.getField("v")).as("cvec"))
   }
+
+  /** DuckDB mirror of [[pqOracleCodebook]] over the subvector CTE `s`
+    * (vec_id, sub, svec): init from the first 4 vectors (`c0`), one
+    * (distance, cid)-ranked assignment (`a1`), round-6 per-dim means
+    * (`d1`), binding the codebook `c1` (sub, cid, cvec). Shared by
+    * v11_pq_codes and v11_pq_adc_oracle. */
+  private val pqCodebookSql: String =
+    s"""c0 AS (SELECT sub, vec_id AS cid, svec AS cvec FROM s WHERE vec_id < 4),
+       |a1 AS (
+       |  SELECT sub, cid, svec FROM (
+       |    SELECT s.vec_id, s.sub, c.cid, s.svec,
+       |           row_number() OVER (PARTITION BY s.vec_id, s.sub
+       |             ORDER BY ${duckL2("c.cvec", "s.svec")} ASC, c.cid) AS rk
+       |    FROM s JOIN c0 c ON c.sub = s.sub) WHERE rk = 1),
+       |d1 AS (
+       |  SELECT sub, cid, i AS dim, round(avg(svec[i]), 6) AS v
+       |  FROM a1 CROSS JOIN unnest(generate_series(1, 16)) AS t(i)
+       |  GROUP BY 1, 2, 3),
+       |c1 AS (SELECT sub, cid, list(v ORDER BY dim) AS cvec FROM d1 GROUP BY 1, 2)""".stripMargin
 
   def all: Seq[Q] = Seq(
 
@@ -225,23 +267,7 @@ object VectorQueries extends QueryGroup {
         threshold = 0.4, nBits = 4)
         .select(col("va"), col("vb"), round(col("cos"), 6).as("cos"))
         .orderBy(col("va"), col("vb")),
-      Some(s"""WITH bk AS (
-              |  SELECT vec_id, embedding,
-              |         list_reduce(list_prepend(CAST(0 AS BIGINT),
-              |           list_transform(generate_series(0, 3), i ->
-              |             CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              |               list_transform(generate_series(1, len(embedding)), j ->
-              |                 CAST(embedding[j] AS DOUBLE) *
-              |                 ((CAST(('0x' || substr(md5(CAST(i AS VARCHAR) || ',' ||
-              |                     CAST(j - 1 AS VARCHAR)), 1, 15)) AS BIGINT)
-              |                   % 2000001) / 1000000.0 - 1.0))),
-              |               (acc, v) -> acc + v) >= 0
-              |             THEN CAST(1 AS BIGINT) << i ELSE CAST(0 AS BIGINT) END)),
-              |           (acc2, v2) -> acc2 + v2) AS bucket,
-              |         sqrt(${duckDot("embedding", "embedding")}) AS nrm
-              |  FROM embeddings),
-              |a AS (SELECT bucket, vec_id AS va, embedding AS ea, nrm AS na FROM bk),
-              |b AS (SELECT bucket AS bucket_b, vec_id AS vb, embedding AS eb, nrm AS nb FROM bk),
+      Some(s"""WITH $signBucketsSql,
               |p AS (SELECT va, vb, (${duckDot("ea", "eb")}) / (na * nb) AS cos_raw
               |      FROM a JOIN b ON bucket = bucket_b AND va < vb)
               |SELECT va, vb, round(cos_raw, 6) AS cos
@@ -303,23 +329,7 @@ object VectorQueries extends QueryGroup {
         nBits = 4) // pinned: the oracle SQL hard-codes the 4-bit bucket expr
         .select(col("va"), col("vb"), round(col("cos"), 6).as("cos"), col("rk"))
         .orderBy(col("va"), col("rk")),
-      Some(s"""WITH bk AS (
-              |  SELECT vec_id, embedding,
-              |         list_reduce(list_prepend(CAST(0 AS BIGINT),
-              |           list_transform(generate_series(0, 3), i ->
-              |             CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              |               list_transform(generate_series(1, len(embedding)), j ->
-              |                 CAST(embedding[j] AS DOUBLE) *
-              |                 ((CAST(('0x' || substr(md5(CAST(i AS VARCHAR) || ',' ||
-              |                     CAST(j - 1 AS VARCHAR)), 1, 15)) AS BIGINT)
-              |                   % 2000001) / 1000000.0 - 1.0))),
-              |               (acc, v) -> acc + v) >= 0
-              |             THEN CAST(1 AS BIGINT) << i ELSE CAST(0 AS BIGINT) END)),
-              |           (acc2, v2) -> acc2 + v2) AS bucket,
-              |         sqrt(${duckDot("embedding", "embedding")}) AS nrm
-              |  FROM embeddings),
-              |a AS (SELECT bucket, vec_id AS va, embedding AS ea, nrm AS na FROM bk),
-              |b AS (SELECT bucket AS bucket_b, vec_id AS vb, embedding AS eb, nrm AS nb FROM bk),
+      Some(s"""WITH $signBucketsSql,
               |p AS (SELECT va, vb, (${duckDot("ea", "eb")}) / (na * nb) AS cos_raw
               |      FROM a JOIN b ON bucket = bucket_b AND va <> vb),
               |r AS (SELECT va, vb, cos_raw,
@@ -553,36 +563,18 @@ object VectorQueries extends QueryGroup {
           .select(col("vec_id"), col("sub"), col("cid").as("code"))
           .orderBy(col("vec_id"), col("sub"))
       },
-      Some {
-        val l2D =
-          """list_reduce(list_prepend(CAST(0 AS DOUBLE),
-            |  list_transform(generate_series(1, len(c.cvec)),
-            |    i -> (c.cvec[i] - s.svec[i]) * (c.cvec[i] - s.svec[i]))),
-            |  (acc, v) -> acc + v)""".stripMargin
-        s"""WITH s AS (
-           |  SELECT vec_id, g.sub,
-           |         list_transform(embedding[g.sub * 16 + 1 : g.sub * 16 + 16],
-           |                        x -> CAST(x AS DOUBLE)) AS svec
-           |  FROM embeddings CROSS JOIN (SELECT unnest(range(0, 4)) AS sub) g),
-           |c0 AS (SELECT sub, vec_id AS cid, svec AS cvec FROM s WHERE vec_id < 4),
-           |a1 AS (
-           |  SELECT sub, cid, svec FROM (
-           |    SELECT s.vec_id, s.sub, c.cid, s.svec,
-           |           row_number() OVER (PARTITION BY s.vec_id, s.sub
-           |             ORDER BY $l2D ASC, c.cid) AS rk
-           |    FROM s JOIN c0 c ON c.sub = s.sub) WHERE rk = 1),
-           |d1 AS (
-           |  SELECT sub, cid, i AS dim, round(avg(svec[i]), 6) AS v
-           |  FROM a1 CROSS JOIN unnest(generate_series(1, 16)) AS t(i)
-           |  GROUP BY 1, 2, 3),
-           |c1 AS (SELECT sub, cid, list(v ORDER BY dim) AS cvec FROM d1 GROUP BY 1, 2)
-           |SELECT vec_id, sub, code FROM (
-           |  SELECT s.vec_id, s.sub, c.cid AS code,
-           |         row_number() OVER (PARTITION BY s.vec_id, s.sub
-           |           ORDER BY $l2D ASC, c.cid) AS rk
-           |  FROM s JOIN c1 c ON c.sub = s.sub) WHERE rk = 1
-           |ORDER BY vec_id, sub""".stripMargin
-      }),
+      Some(s"""WITH s AS (
+              |  SELECT vec_id, g.sub,
+              |         list_transform(embedding[g.sub * 16 + 1 : g.sub * 16 + 16],
+              |                        x -> CAST(x AS DOUBLE)) AS svec
+              |  FROM embeddings CROSS JOIN (SELECT unnest(range(0, 4)) AS sub) g),
+              |$pqCodebookSql
+              |SELECT vec_id, sub, code FROM (
+              |  SELECT s.vec_id, s.sub, c.cid AS code,
+              |         row_number() OVER (PARTITION BY s.vec_id, s.sub
+              |           ORDER BY ${duckL2("c.cvec", "s.svec")} ASC, c.cid) AS rk
+              |  FROM s JOIN c1 c ON c.sub = s.sub) WHERE rk = 1
+              |ORDER BY vec_id, sub""".stripMargin)),
 
     // V11 — the ENGINE path (rows-only: float kmeans training isn't
     // DuckDB-mirrorable; grid-exactness / recall / reconstruction error are
@@ -636,18 +628,7 @@ object VectorQueries extends QueryGroup {
         s"""WITH s AS (
            |  SELECT vec_id, g.sub, $qslice AS svec
            |  FROM embeddings CROSS JOIN (SELECT unnest(range(0, 4)) AS sub) g),
-           |c0 AS (SELECT sub, vec_id AS cid, svec AS cvec FROM s WHERE vec_id < 4),
-           |a1 AS (
-           |  SELECT sub, cid, svec FROM (
-           |    SELECT s.vec_id, s.sub, c.cid, s.svec,
-           |           row_number() OVER (PARTITION BY s.vec_id, s.sub
-           |             ORDER BY ${duckL2("c.cvec", "s.svec")} ASC, c.cid) AS rk
-           |    FROM s JOIN c0 c ON c.sub = s.sub) WHERE rk = 1),
-           |d1 AS (
-           |  SELECT sub, cid, i AS dim, round(avg(svec[i]), 6) AS v
-           |  FROM a1 CROSS JOIN unnest(generate_series(1, 16)) AS t(i)
-           |  GROUP BY 1, 2, 3),
-           |c1 AS (SELECT sub, cid, list(v ORDER BY dim) AS cvec FROM d1 GROUP BY 1, 2),
+           |$pqCodebookSql,
            |codes AS (
            |  SELECT vec_id, sub, code FROM (
            |    SELECT s.vec_id, s.sub, c.cid AS code,

@@ -45,9 +45,4 @@ object GraftShim {
   def plannerStrategies(
       ext: SparkSessionExtensions, spark: SparkSession): Seq[SparkStrategy] =
     ext.buildPlannerStrategies(spark)
-
-  /** Same, for injected optimizer rules. */
-  def optimizerRules(ext: SparkSessionExtensions, spark: SparkSession)
-      : Seq[org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]] =
-    ext.buildOptimizerRules(spark)
 }

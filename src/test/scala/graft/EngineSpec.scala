@@ -21,6 +21,23 @@ class EngineSpec extends SparkSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("oracle digest: SparkEntry.oracleSql text is byte-identical to the pinned dump") {
+    // The DuckDB text is the correctness check, so a refactor of how it is
+    // composed must not move one byte. Starts no Spark job: SHA-256 over the
+    // entries sorted by name, each `name \u0000 sql`, joined by \u0001.
+    // Re-pin only after graft.Verify + tools/check_oracle.py read 274/274.
+    val oracle = SparkEntry.oracleSql
+    val dump = oracle.toSeq.sortBy(_._1)
+      .map { case (name, sql) => name + '\u0000' + sql }
+      .mkString("\u0001")
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(dump.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"$b%02x").mkString
+    assert(oracle.size == 274, s"oracle entry count changed: ${oracle.size}")
+    assert(digest == "79d1d4ab5aa40d62562ed43a2d5e23630d9a75b1aaaeb5c7a03f7ba02f562e58",
+      s"oracle text changed: re-verify 274/274 before re-pinning (digest $digest)")
+  }
+
   test("every query runs at sf0.001 and is deterministic across runs") {
     // two runs of the same plan must produce identical collected output —
     // catches accidental nondeterminism (unordered limits, RNG, time).

@@ -124,47 +124,4 @@ class TopKNativeSpec extends SparkSuite {
       TopK.perGroup(orders, 3, Seq.empty, Seq(col("o_orderkey")))
     }
   }
-
-  test("rank-limit rewrite: the declarative idiom plans as TopKPerGroup when enabled") {
-    TopK.ensureRegistered(spark)
-    spark.conf.set(graft.plans.RankLimitToTopK.ConfKey, "true")
-    try {
-      val df = windowTopK(3)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("TopKPerGroup(partial)"),
-        s"rewrite did not fire:\n$plan")
-      assert(!plan.contains("row_number"),
-        s"a Window survived the rewrite:\n$plan")
-      val got = df.collect().map(_.toSeq).toSet
-      spark.conf.set(graft.plans.RankLimitToTopK.ConfKey, "false")
-      val exp = windowTopK(3).collect().map(_.toSeq).toSet
-      assert(got === exp, "rewritten plan changed the result")
-    } finally spark.conf.unset(graft.plans.RankLimitToTopK.ConfKey)
-  }
-
-  test("rank-limit rewrite: inert by default, and never fires when the rank is kept") {
-    TopK.ensureRegistered(spark)
-    // default-off: the ordinary window plan
-    assert(!windowTopK(3).queryExecution.executedPlan.toString
-      .contains("TopKPerGroup"))
-    spark.conf.set(graft.plans.RankLimitToTopK.ConfKey, "true")
-    try {
-      // rank column kept in the output → eliminating the Window would be
-      // unsound, the rule must decline (this is o3's shape)
-      val w = Window.partitionBy(col("o_orderpriority"))
-        .orderBy(col("price_cents").desc, col("o_orderkey"))
-      val kept = orders.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-      val plan = kept.queryExecution.executedPlan.toString
-      assert(!plan.contains("TopKPerGroup"), plan)
-      assert(plan.contains("row_number"), plan)
-    } finally spark.conf.unset(graft.plans.RankLimitToTopK.ConfKey)
-  }
-
-  test("SparkSessionExtensions route also injects the rewrite rule") {
-    val ext = new SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    val rules = GraftShim.optimizerRules(ext, spark)
-    assert(rules.contains(graft.plans.RankLimitToTopK))
-  }
 }

@@ -83,10 +83,11 @@ class VectorFunctionsSpec extends SparkSuite {
     assert(counts(rows) == want.map(k => (k, k)))
   }
 
-  // Seeded generated vectors for the FloatVecDot / DoubleVecL2Sq contracts:
-  // null arrays, empty and ragged arrays, and NaN / ±0.0 / ±Inf among
-  // ordinary values. Elements are never null — the kernels' documented
-  // input contract.
+  // Seeded generated vectors for the FloatVecDot / DoubleVecDot /
+  // DoubleVecL2Sq contracts: null arrays, empty and ragged arrays, and NaN /
+  // ±0.0 / ±Inf among ordinary values. fa/fb/da/db are typed with non-null
+  // elements (the guard-free loop); fn/dn also hold null elements, so their
+  // type has containsNull and the kernel checks each position.
   private lazy val kernelRows = {
     import spark.implicits._
     val rng = new scala.util.Random(11)
@@ -97,16 +98,20 @@ class VectorFunctionsSpec extends SparkSuite {
       else (rng.nextGaussian() * 3).toFloat
     def vec(len: Int): Option[Seq[Float]] =
       if (rng.nextInt(10) == 0) None else Some(Seq.fill(len)(elem()))
+    def withNulls(v: Option[Seq[Float]]): Option[Seq[Option[Float]]] =
+      v.map(_.map(x => if (rng.nextInt(8) == 0) None else Some(x)))
     Seq.tabulate(400) { i =>
       val len = rng.nextInt(6)
       def other() = if (rng.nextBoolean()) len else rng.nextInt(6)
       (i, vec(len), vec(other()), vec(other()).map(_.map(_.toDouble)),
-        vec(other()).map(_.map(_.toDouble)))
-    }.toDF("i", "fa", "fb", "da", "db")
+        vec(other()).map(_.map(_.toDouble)), withNulls(vec(other())),
+        withNulls(vec(other())).map(_.map(_.map(_.toDouble))))
+    }.toDF("i", "fa", "fb", "da", "db", "fn", "dn")
   }
 
   /** Kernel vs its interpreted fold over the first min(len) elements (the
-    * kernels' documented truncation); null when either array is null.
+    * kernels' documented truncation); null when either array is null or
+    * holds a null element there.
     */
   private def kernelVsFold(kernel: (Column, Column) => Column,
       fold: (Column, Column) => Column, a: String, b: String) = {
@@ -136,6 +141,12 @@ class VectorFunctionsSpec extends SparkSuite {
   test("float_vec_dot kernel contract on generated vectors: bit-equal to " +
       "the fold, ragged truncates, null array → null") {
     kernelVsFold(dotNative, dot, "fa", "fb")
+    // a null element within min(len) gives null like the fold, either side
+    kernelVsFold(dotNative, dot, "fa", "fn")
+    kernelVsFold(dotNative, dot, "fn", "fn")
+    assert(kernelRows.filter(col("fa").isNotNull && col("fn").isNotNull &&
+      dotNative(col("fa"), col("fn")).isNull).count() > 0,
+      "the generator never put a null element inside min(len)")
   }
 
   test("vec_l2sq kernel contract on generated vectors: bit-equal to the " +
@@ -148,6 +159,18 @@ class VectorFunctionsSpec extends SparkSuite {
     // centroid assignment's orientation: double codebook left, float vector right
     kernelVsFold(l2sqNative, fold, "da", "fa")
     kernelVsFold(l2sqNative, fold, "da", "db")
+    kernelVsFold(l2sqNative, fold, "da", "fn")
+    kernelVsFold(l2sqNative, fold, "dn", "fa")
+    kernelVsFold(l2sqNative, fold, "dn", "fn")
+  }
+
+  test("double_vec_dot kernel contract on generated vectors: bit-equal to " +
+      "the fold, ragged truncates, null array or element → null") {
+    val fold = (a: Column, b: Column) =>
+      aggregate(zip_with(a, b, _ * _), lit(0.0), (acc, v) => acc + v)
+    kernelVsFold(dotNativeD, fold, "da", "db")
+    kernelVsFold(dotNativeD, fold, "dn", "db")
+    kernelVsFold(dotNativeD, fold, "dn", "dn")
   }
 
   test("sorted_isect_count on sorted distinct arrays equals array_intersect") {

@@ -15,9 +15,7 @@ import re
 import sys
 
 ALLOWLIST = {
-    # conf keys
-    "spark.graft.rewriteRankLimit",
-    # env names
+    # env names (no spark.graft.* conf key is read)
     "SPARK_GRAFT_BENCH_ALL",
     "SPARK_GRAFT_BENCH_HEAP",
     "SPARK_GRAFT_BENCH_ONLY",

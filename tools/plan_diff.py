@@ -3,17 +3,13 @@
 
 Usage: python3 tools/plan_diff.py PARENT_DIR CHANGE_DIR
 
-Explain already renumbers expression, plan, codegen-stage and query-stage
-ids per plan, in order of first appearance. Two ids still churn between two
-runs of the SAME commit, because AQE assigns them in stage-completion order:
-the codegen-stage id (`[codegen id : N]`) and the query-stage id (the bare
-`Arguments: N` line of a *QueryStage node). Both are masked. Two more come
-from session-wide counters that Explain leaves as they are, so they shift
-with every job or expression an earlier query of the session made: RDD ids
-(`MapPartitionsRDD[N]` of a checkpointed scan) and the expression id after
-a backquoted alias (`` `count(1)`#N `` of a pivot). Both are renumbered per
-plan in order of first appearance, so a plan that names one RDD twice still
-differs from one that names two. A read of a ManifestCommit snapshot (s17)
+Explain already renumbers every session counter per plan, in order of
+first appearance: expression ids (a backquoted alias's `` `count(1)`#N ``
+too), plan, codegen-stage, query-stage and RDD ids. Two ids still churn
+between two runs of the SAME commit, because AQE assigns them in
+stage-completion order: the codegen-stage id (`[codegen id : N]`) and the
+query-stage id (the bare `Arguments: N` line of a *QueryStage node). Both
+are masked. A read of a ManifestCommit snapshot (s17)
 hands Spark an explicit file list, so its `Location: InMemoryFileIndex
 [...]` line names the staging directory's per-attempt nonce
 (`snap_<id>_<8 hex>`) and the part file's UUID, which are new on every
@@ -45,13 +41,7 @@ LOCATION_MASKS = [
     (re.compile(r"\b(part-\d+)-[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}\b"),
      r"\1-UUID"),
 ]
-RENUMBER = [re.compile(r"(?<=RDD\[)\d+(?=\])"), re.compile(r"(?<=`#)\d+")]
 ALT = re.compile(r"\.alt\d+\.txt$")
-
-
-def renumbered(rx, txt):
-    ids = {}
-    return rx.sub(lambda m: str(ids.setdefault(m.group(0), len(ids) + 1)), txt)
 
 
 def masked(path):
@@ -59,8 +49,6 @@ def masked(path):
         txt = f.read()
     for rx, rep in MASKS:
         txt = rx.sub(rep, txt)
-    for rx in RENUMBER:
-        txt = renumbered(rx, txt)
 
     def location(m):
         line = m.group(0)

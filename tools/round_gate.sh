@@ -1,11 +1,11 @@
 #!/usr/bin/env bash
 # One-command local round gate: everything the driver checks, in order.
 #
-#   tools/round_gate.sh           # full gate, stages 1-11 (sf0.01 verify,
-#                                 # tests, bench artifact check, ingest
-#                                 # exactly-once smoke, search and curate
-#                                 # correctness smokes, heap canary, scale
-#                                 # smoke)
+#   tools/round_gate.sh           # full gate, stages 1-12 (sf0.01 verify,
+#                                 # tests, interpreted-path oracle, bench
+#                                 # artifact check, ingest exactly-once
+#                                 # smoke, search and curate correctness
+#                                 # smokes, heap canary, scale smoke)
 #   tools/round_gate.sh --quick   # stages 1-5 on sf0.001: tool checks,
 #                                 # verify, oracle, smoke, tests (iteration loop)
 #
@@ -19,7 +19,7 @@ SF=/root/testdata/sf0.01
 
 # Seconds-cheap checks first, in every mode: the tools' fixture tests, the
 # knob census and perfbench's unit tests.
-echo "== 1/11 tool checks (fixture tests, knob census, perfbench unit tests)"
+echo "== 1/12 tool checks (fixture tests, knob census, perfbench unit tests)"
 python3 tools/test_check_bench.py
 python3 tools/test_plan_diff.py
 python3 tools/test_knob_census.py
@@ -27,7 +27,7 @@ python3 tools/knob_census.py
 python3 -m unittest discover -s perfbench/tests
 
 out=$(mktemp -d /tmp/graft_gate.XXXXXX)
-echo "== 2/11 verify dump @ $SF"
+echo "== 2/12 verify dump @ $SF"
 # Capture sbt's own exit status before grepping for per-query failures: the
 # old `... | grep ... || true` masked a compile error / OOM behind pipefail,
 # so the gate only failed later when check_oracle couldn't read the dump.
@@ -38,16 +38,33 @@ fi
 if grep '\[verify\]' "$vlog"; then
   echo "verify had per-query failures"; exit 1
 fi
-echo "== 3/11 DuckDB differential"
+echo "== 3/12 DuckDB differential"
 python3 tools/check_oracle.py "$SF" "$out"
-echo "== 4/11 flagship smoke"
+echo "== 4/12 flagship smoke"
 sbt -batch "runMain graft.EntrySmoke" 2>&1 | grep -q 'ENTRY_ROWS=[1-9]' \
   || { echo "EntrySmoke returned 0 rows"; exit 1; }
-echo "== 5/11 scalatest"
+echo "== 5/12 scalatest"
 sbt -batch test
 
 if [[ "${1:-}" != "--quick" ]]; then
-  echo "== 6/11 bench artifact check (committed BENCH_full.json vs baseline)"
+  # Interpreted-path oracle: the stage 2-3 dump again with whole-stage
+  # codegen off and every expression evaluated interpreted (NO_CODEGEN), so
+  # a kernel whose eval and generated code disagree fails the DuckDB compare
+  # even while the codegen'd stages are green. sf0.001 keeps it to minutes.
+  echo "== 6/12 interpreted-path oracle (verify + DuckDB @ sf0.001, NO_CODEGEN)"
+  isf="$(dirname "$SF")/sf0.001"
+  iout=$(mktemp -d /tmp/graft_gate_interp.XXXXXX)
+  ilog=$(mktemp /tmp/graft_verify_interp.XXXXXX.log)
+  if ! JAVA_TOOL_OPTIONS="-Dspark.sql.codegen.factoryMode=NO_CODEGEN -Dspark.sql.codegen.wholeStage=false" \
+       SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify $isf $iout" >"$ilog" 2>&1; then
+    tail -40 "$ilog"; echo "interpreted graft.Verify FAILED (see $ilog)"; exit 1
+  fi
+  if grep '\[verify\]' "$ilog"; then
+    echo "interpreted verify had per-query failures"; exit 1
+  fi
+  python3 tools/check_oracle.py "$isf" "$iout"
+
+  echo "== 7/12 bench artifact check (committed BENCH_full.json vs baseline)"
   if [[ -f BENCH_full.json ]]; then
     python3 tools/check_bench.py BENCH_full.json
   else
@@ -58,7 +75,7 @@ if [[ "${1:-}" != "--quick" ]]; then
   # IrcStream.start. Its own output check (sink rows = distinct ids = the
   # generator's distinct keys) is the ingest oracle; the stage fails unless
   # the result line reads correct with no failed operation.
-  echo "== 7/11 ingest exactly-once smoke (perfbench ingest, seed 1)"
+  echo "== 8/12 ingest exactly-once smoke (perfbench ingest, seed 1)"
   ingest_out=$(mktemp /tmp/graft_ingest.XXXXXX.out)
   if ! python3 perfbench/run.py --workload ingest --seed 1 --seconds 12 --trace 0 \
        >"$ingest_out" 2>"$ingest_out.err"; then
@@ -74,7 +91,7 @@ PY
   # Search correctness smoke: one untraced perfbench search run. Its output
   # check compares each request's warm-up result with DuckDB; the warm-up
   # already reads every table a second time, through Tables' cached schema.
-  echo "== 8/11 search correctness smoke (perfbench search, seed 1)"
+  echo "== 9/12 search correctness smoke (perfbench search, seed 1)"
   search_out=$(mktemp /tmp/graft_search.XXXXXX.out)
   if ! python3 perfbench/run.py --workload search --seed 1 --seconds 12 --trace 0 \
        >"$search_out" 2>"$search_out.err"; then
@@ -90,7 +107,7 @@ PY
   # Curate correctness smoke: one untraced perfbench curate run. It is the
   # only perfbench workload that evaluates a hash kernel (d10_dedup_yield_lsh
   # runs minhash_sig_h under its oracle), so a fold that drifts fails here.
-  echo "== 9/11 curate correctness smoke (perfbench curate, seed 1)"
+  echo "== 10/12 curate correctness smoke (perfbench curate, seed 1)"
   curate_out=$(mktemp /tmp/graft_curate.XXXXXX.out)
   if ! python3 perfbench/run.py --workload curate --seed 1 --seconds 12 --trace 0 \
        >"$curate_out" 2>"$curate_out.err"; then
@@ -109,7 +126,7 @@ PY
   # An all-reps-slow flag here means the spill cliff is back; catch it
   # BEFORE the driver's contended window does. --allow-missing because the
   # canary runs only the sensitive family, not all 233.
-  echo "== 10/11 constrained-heap canary (pair-stream family @ 2g, sf0.1)"
+  echo "== 11/12 constrained-heap canary (pair-stream family @ 2g, sf0.1)"
   # The BENCHED pressure-sensitive family: the banded/prefix scale paths.
   # The quadratic truth definitions (d2_jaccard_neardup / d3_dedup_groups /
   # d10_dedup_yield, and d12_containment since r16) left the benched set
@@ -133,7 +150,7 @@ PY
   # registry entry or kept shape that stops running at scale fails here
   # instead of rotting until the next full probe. One rep per scale: the
   # stage checks that entries run, not their timings.
-  echo "== 11/11 scale smoke (ScaleProbe xf=2, sf0.001)"
+  echo "== 12/12 scale smoke (ScaleProbe xf=2, sf0.001)"
   scale_out=$(mktemp /tmp/graft_scale.XXXXXX.json)
   if ! SPARK_GRAFT_SCALE_X=2 SPARK_GRAFT_SF_DIR="$(dirname "$SF")/sf0.001" \
        SPARK_GRAFT_CPUS=4 SPARK_GRAFT_BENCH_REPS=1 \

@@ -12,8 +12,9 @@
      (`<query>.alt1.txt`, d2)                                -> exit 0
   8. a change plan that matches no committed shape of its
      query (only another query's alternate)                  -> exit 1
-  9. session-counter churn (RDD ids, backquoted-alias ids)   -> exit 0
- 10. one RDD named twice against two RDDs                    -> exit 1
+
+Session counters (RDD ids, backquoted-alias ids) are renumbered by
+Explain.normalizeIds itself; ExplainSpec holds those fixtures.
 
 Run: python3 tools/test_plan_diff.py   (also wired into round_gate.sh)
 """
@@ -55,15 +56,6 @@ Output [2]: [doc_id#1L, lang#2]
 Batched: true
 Location: InMemoryFileIndex [file:/tmp/graft_manifest_{tag}_pPID/snap_{snap}_{nonce}/part-00000-{uuid}-c000.snappy.parquet]
 ReadSchema: struct<doc_id:bigint,lang:string>
-"""
-
-
-COUNTERS = """(3) Scan ExistingRDD
-Arguments: [label#3, cvec#4], MapPartitionsRDD[{r1}] at localCheckpoint, ExistingRDD
-(5) Scan ExistingRDD
-Arguments: [label#5, cvec#6], MapPartitionsRDD[{r2}] at localCheckpoint, ExistingRDD
-(7) HashAggregate
-Results [2]: [user_id#1L, pivotfirst(count(1)#6L) AS `count(1)`#{e}]
 """
 
 
@@ -145,23 +137,9 @@ def main():
     write(third, "s.txt", snapshot())
     expect("no committed shape", third, 1, "q.txt: differs")
 
-    counters = os.path.join(tmp, "counters")
-    write(counters, "c.txt", COUNTERS.format(r1=6362, r2=6362, e=34063))
-    moved = os.path.join(tmp, "moved")
-    write(moved, "c.txt", COUNTERS.format(r1=5851, r2=5851, e=34295))
-    code, out = run(counters, moved)
-    if code != 0 or "1 identical, 0 different" not in out:
-        failures.append(f"session-counter churn: exit {code}\n{out}")
-
-    split = os.path.join(tmp, "split")
-    write(split, "c.txt", COUNTERS.format(r1=5851, r2=5852, e=34295))
-    code, out = run(counters, split)
-    if code != 1 or "c.txt: differs" not in out:
-        failures.append(f"one RDD against two: exit {code}\n{out}")
-
     for f in failures:
         print("FAIL", f)
-    print(f"test_plan_diff: {10 - len(failures)}/10 ok")
+    print(f"test_plan_diff: {8 - len(failures)}/8 ok")
     return 1 if failures else 0
 
 
