@@ -247,11 +247,15 @@ object Explain {
     val rddRe = "(?<=RDD\\[)(\\d+)(?=\\])".r
     val t8 = rddRe.replaceAllIn(t7, m =>
       rddIds.getOrElseUpdate(m.group(1), rddIds.size + 1).toString)
+    // Such an RDD also names its call site (`localCheckpoint at
+    // VectorQueries.scala:369`); keep the file, mask the line, so an edit
+    // above the call does not read as a plan change.
+    val t9 = "(\\bat \\w+\\.scala):\\d+".r.replaceAllIn(t8, "$1:N")
     // Object-plan lambdas print their JVM-assigned hidden-class name
     // (`$$Lambda$8342/0x7f..`); both numbers are per-JVM allocation order —
     // mask like @ADDR (the m1/m4 MapPartitions dumps churned on this).
     val lamClsRe = "\\$\\$Lambda\\$\\d+/0x[0-9a-fA-F]+".r
-    lamClsRe.replaceAllIn(t8, _ => java.util.regex.Matcher
+    lamClsRe.replaceAllIn(t9, _ => java.util.regex.Matcher
       .quoteReplacement("$$Lambda$N/0xADDR"))
   }
 

@@ -35,9 +35,16 @@ object IrcStream {
     * e.g. from the socket or file source). `eventTime` defaults to
     * processing time like the reference (irclogbot.py:41); sources that
     * carry wire time can pass their own column.
+    *
+    * The lines are coalesced to one partition per core first: a
+    * `MemoryStream` makes one partition per `addData` and the file source
+    * one per file, so a batch of 100 small chunks would otherwise run 100
+    * map tasks before [[deduped]]'s state exchange. That exchange's
+    * partition count comes from the checkpoint and does not change.
     */
   def records(lines: DataFrame): DataFrame =
-    IrcParser.record(IrcParser.parse(IrcParser.splitLines(lines, "value")))
+    IrcParser.record(IrcParser.parse(IrcParser.splitLines(
+      lines.coalesce(lines.sparkSession.sparkContext.defaultParallelism), "value")))
 
   /** File-drop source (S1 stand-in for the TCP socket in a zero-egress
     * environment): each file dropped into `dir` is one recv chunk.
@@ -204,13 +211,17 @@ object IrcStream {
     * and the probe never scans other channels' data.
     *
     * Cost per batch: one job collects the batch's channels and fills the
-    * persisted batch that the anti-join and the write reuse; a batch with
-    * no record stops there. [[existingIds]] starts no listing job while
-    * every touched channel holds at most
+    * persisted batch that the anti-join and the write reuse; its map side
+    * runs one task per core ([[records]] coalesces the source). A batch
+    * with no record stops there. [[existingIds]] starts no listing job
+    * while every touched channel holds at most
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` days (one
     * per batch past that), and the write
     * ([[graft.sinks.IrcSink.append]]) adds one file per touched
-    * (channel, day). What still grows: the probe reads every file
+    * (channel, day) and starts no process on a local sink. The streaming
+    * checkpoint's own files (offset and commit logs, state-store deltas)
+    * still go through the session's filesystem, which forks per file
+    * without libhadoop. What still grows: the probe reads every file
     * of each touched channel, all days, so its cost grows with the number
     * of batches that wrote to the channel. [[graft.sinks.IrcSink.compact]]
     * is the storage-side sweep; the correctness of THIS path does not

@@ -40,4 +40,13 @@ class ExplainSpec extends AnyFunSuite {
     assert(two.contains("MapPartitionsRDD[2]"))
     assert(two !== Explain.normalizeIds(dump(5851, 5851, 34295)))
   }
+
+  test("normalizeIds: a call site keeps its file and loses its line number") {
+    def scan(file: String, line: Int) =
+      s"Arguments: [a#1, b#2], MapPartitionsRDD[7] at localCheckpoint at $file.scala:$line, ExistingRDD\n"
+    val want = "Arguments: [a#1, b#2], MapPartitionsRDD[1] at localCheckpoint at VectorQueries.scala:N, ExistingRDD\n"
+    assert(Explain.normalizeIds(scan("VectorQueries", 369)) === want)
+    assert(Explain.normalizeIds(scan("VectorQueries", 359)) === want)
+    assert(Explain.normalizeIds(scan("Bpe", 112)) !== want)
+  }
 }

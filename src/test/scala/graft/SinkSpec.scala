@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.sinks.IrcSink
+import graft.sinks.{IrcSink, NioLocalFileSystem}
 
 /** JVM-static ES-client stand-in for the K2 retry tests: records every write
   * attempt per id; "POISON" always throws, "FLAKY<n>" throws on the first n
@@ -65,6 +65,96 @@ class SinkSpec extends SparkSuite {
         s"$what: expected the partition-key precondition error, got: $e")
       assert(parquetFiles(new java.io.File(path)).isEmpty, s"$what: a parquet file was committed")
     }
+  }
+
+  /** `f`'s result and the command line of every OS process the JVM started
+    * while it ran that names a path under `under` (a JFR recording, so
+    * processes started by other threads of this JVM for other paths do not
+    * count).
+    */
+  private def processStarts[T](under: String)(f: => T): (T, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val r = try f finally rec.stop()
+    val out = Files.createTempFile("graft_proc", ".jfr")
+    try {
+      rec.dump(out)
+      val cmds = jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala.toSeq
+        .map(_.getString("command")).filter(_.contains(under))
+      (r, cmds)
+    } finally { rec.close(); Files.delete(out) }
+  }
+
+  /** Every path under `root` (its part-file names masked, so two writes of
+    * the same rows compare) with its POSIX mode, sticky and setuid bits
+    * included.
+    */
+  private def modes(root: java.nio.file.Path): Set[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(root)
+    try walk.iterator.asScala.filter(_ != root).map { p =>
+      val rel = root.relativize(p).toString.replaceAll("part-[^.]+", "part-*")
+      val mode = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+      (rel, Integer.toOctalString(mode))
+    }.toSet
+    finally walk.close()
+  }
+
+  test("append starts no OS process and writes the stock local filesystem's " +
+    "modes and checksums") {
+    val base = Files.createTempDirectory("graft_sink_nofork").toRealPath()
+    val rows = for (c <- Seq("#a", "#b", "#c", "#d"); d <- Seq("01", "02"))
+      yield (c, "alice", s"m$c$d", s"2024-01-$d 10:00:00", s"id$c$d")
+    val recs = records(rows: _*)
+    val groups = rows.size
+    val (_, forks) = processStarts(base.toString)(IrcSink.append(recs, s"$base/sink"))
+    assert(forks.size == 0, s"append of $groups (channel, day) groups started " +
+      s"${forks.size} processes, e.g. ${forks.take(3).mkString("; ")}")
+    // the same rows, partitioned the same way, through the stock filesystem
+    val (_, stockForks) = processStarts(base.toString) {
+      recs.withColumn("day", date_format(col("posted"), "yyyy-MM-dd"))
+        .repartition(4, col("channel"), col("day"))
+        .write.partitionBy("channel", "day").parquet(s"$base/stock")
+    }
+    // without libhadoop the stock write forks per file and dir, so the
+    // recording above did see this write's processes
+    if (!org.apache.hadoop.io.nativeio.NativeIO.isAvailable)
+      assert(stockForks.size >= groups, s"stock write: ${stockForks.size} processes")
+    val sink = modes(base.resolve("sink"))
+    assert(sink === modes(base.resolve("stock")))
+    val parquet = sink.map(_._1).filter(_.endsWith(".parquet"))
+    assert(parquet.size == groups)
+    parquet.foreach { f =>
+      val (dir, name) = f.splitAt(f.lastIndexOf('/') + 1)
+      assert(sink.exists(_._1 == s"$dir.$name.crc"), s"$f has no .crc")
+    }
+    assert(spark.read.parquet(s"$base/sink").count() == groups)
+  }
+
+  test("NioLocalFileSystem sets plain rwx modes in-process and hands a " +
+    "sticky mode to Hadoop's own chmod") {
+    val dir = Files.createTempDirectory("graft_perm").toRealPath()
+    val fs = new NioLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+    def modeOf(p: java.nio.file.Path) =
+      Integer.toOctalString(Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff)
+    def chmod(p: java.nio.file.Path, octal: String) = processStarts(dir.toString) {
+      fs.setPermission(new org.apache.hadoop.fs.Path(p.toUri),
+        new org.apache.hadoop.fs.permission.FsPermission(Integer.parseInt(octal, 8).toShort))
+    }._2
+    for (octal <- Seq("600", "640", "644", "700", "750", "755", "777")) {
+      val f = Files.createFile(dir.resolve(s"f$octal"))
+      val forks = chmod(f, octal)
+      assert(modeOf(f) == octal)
+      assert(forks.size == 0, s"$octal: ${forks.mkString("; ")}")
+    }
+    val sticky = Files.createDirectory(dir.resolve("sticky"))
+    val forks = chmod(sticky, "1755")
+    assert(modeOf(sticky) == "1755")
+    if (!org.apache.hadoop.io.nativeio.NativeIO.isAvailable)
+      assert(forks.exists(_.contains("chmod")), s"sticky mode: ${forks.mkString("; ")}")
   }
 
   test("K2: poisoned record drops after bounded retries without failing the batch " +
