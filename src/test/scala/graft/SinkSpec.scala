@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.sinks.{IrcSink, NioLocalFileSystem}
@@ -67,37 +69,34 @@ class SinkSpec extends SparkSuite {
     }
   }
 
-  /** `f`'s result and the command line of every OS process the JVM started
-    * while it ran that names a path under `under` (a JFR recording, so
-    * processes started by other threads of this JVM for other paths do not
-    * count).
+  /** The command line of every OS process the JVM started while `f` ran
+    * that names a path under `under` (a JFR recording, so processes started
+    * by other threads of this JVM for other paths do not count).
     */
-  private def processStarts[T](under: String)(f: => T): (T, Seq[String]) = {
-    import scala.jdk.CollectionConverters._
+  private def processStarts(under: String)(f: => Unit): Seq[String] = {
     val rec = new jdk.jfr.Recording()
     rec.enable("jdk.ProcessStart")
     rec.start()
-    val r = try f finally rec.stop()
+    try f finally rec.stop()
     val out = Files.createTempFile("graft_proc", ".jfr")
     try {
       rec.dump(out)
-      val cmds = jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala.toSeq
+      jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala.toSeq
         .map(_.getString("command")).filter(_.contains(under))
-      (r, cmds)
     } finally { rec.close(); Files.delete(out) }
   }
 
+  /** `p`'s POSIX mode in octal, sticky and setuid bits included. */
+  private def modeOf(p: java.nio.file.Path): String =
+    Integer.toOctalString(Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff)
+
   /** Every path under `root` (its part-file names masked, so two writes of
-    * the same rows compare) with its POSIX mode, sticky and setuid bits
-    * included.
+    * the same rows compare) with its [[modeOf]].
     */
   private def modes(root: java.nio.file.Path): Set[(String, String)] = {
-    import scala.jdk.CollectionConverters._
     val walk = Files.walk(root)
     try walk.iterator.asScala.filter(_ != root).map { p =>
-      val rel = root.relativize(p).toString.replaceAll("part-[^.]+", "part-*")
-      val mode = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
-      (rel, Integer.toOctalString(mode))
+      (root.relativize(p).toString.replaceAll("part-[^.]+", "part-*"), modeOf(p))
     }.toSet
     finally walk.close()
   }
@@ -109,11 +108,11 @@ class SinkSpec extends SparkSuite {
       yield (c, "alice", s"m$c$d", s"2024-01-$d 10:00:00", s"id$c$d")
     val recs = records(rows: _*)
     val groups = rows.size
-    val (_, forks) = processStarts(base.toString)(IrcSink.append(recs, s"$base/sink"))
+    val forks = processStarts(base.toString)(IrcSink.append(recs, s"$base/sink"))
     assert(forks.size == 0, s"append of $groups (channel, day) groups started " +
       s"${forks.size} processes, e.g. ${forks.take(3).mkString("; ")}")
     // the same rows, partitioned the same way, through the stock filesystem
-    val (_, stockForks) = processStarts(base.toString) {
+    val stockForks = processStarts(base.toString) {
       recs.withColumn("day", date_format(col("posted"), "yyyy-MM-dd"))
         .repartition(4, col("channel"), col("day"))
         .write.partitionBy("channel", "day").parquet(s"$base/stock")
@@ -138,12 +137,10 @@ class SinkSpec extends SparkSuite {
     val dir = Files.createTempDirectory("graft_perm").toRealPath()
     val fs = new NioLocalFileSystem
     fs.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
-    def modeOf(p: java.nio.file.Path) =
-      Integer.toOctalString(Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff)
     def chmod(p: java.nio.file.Path, octal: String) = processStarts(dir.toString) {
       fs.setPermission(new org.apache.hadoop.fs.Path(p.toUri),
         new org.apache.hadoop.fs.permission.FsPermission(Integer.parseInt(octal, 8).toShort))
-    }._2
+    }
     for (octal <- Seq("600", "640", "644", "700", "750", "755", "777")) {
       val f = Files.createFile(dir.resolve(s"f$octal"))
       val forks = chmod(f, octal)
